@@ -28,6 +28,11 @@ from pyspark.sql import functions as F
 from dagster_etl_spark.functions import xdialect as x
 from dagster_etl_spark.plans.cache import pin, track
 from dagster_etl_spark.plans.layout import spread
+from dagster_etl_spark.streaming.slicestore import (
+    StandingState,
+    slice_file_budget,
+    union_all,
+)
 
 
 # -- exact dedup -------------------------------------------------------------
@@ -1668,7 +1673,16 @@ def semantic_dedup(
 
 # -- incremental near-dup index ------------------------------------------------
 
-class IncrementalNearDupIndex:
+def _join_parts(left: DataFrame, parts: list[DataFrame], on: str) -> DataFrame:
+    """``left`` ⋈ (p1 ∪ p2 ∪ ..) on ``on``, evaluated part by part. A
+    join distributes over UNION ALL, so the rows are the same; but a
+    union reports no output partitioning, so joining it would shuffle
+    the whole bucketed base, where joining the base alone reads it
+    co-located and shuffles only ``left``."""
+    return union_all(*(left.join(p, on=on) for p in parts))
+
+
+class IncrementalNearDupIndex(StandingState):
     """Daily-cadence MinHash+LSH near-dup (the dedup analog of
     sources/bucketed.BucketedPipeline): a 100 TB crawl doesn't re-pair
     the whole corpus per ingest — it bands the NEW slice once, probes
@@ -1720,6 +1734,11 @@ class IncrementalNearDupIndex:
         self.num_hashes = num_hashes
         self.bands = bands
         self.num_buckets = num_buckets
+        self.components = {
+            "bands": (self.bands_table, ["bkey"]),
+            "hashes": (self.hashes_table, [id_col]),
+            "pairs": (self.pairs_table, None),
+        }
 
     # -- encoding (same expression chain as minhash_neardup_pairs) --
 
@@ -1777,121 +1796,15 @@ class IncrementalNearDupIndex:
         hashed = self._hashes(docs)
         return self._bands_from_hashes(hashed), hashed
 
-    def ingest(self, docs: DataFrame, threshold: float = 0.2) -> None:
-        """One day's slice: append its bands/hashes to the index, then
-        probe the slice against the (now-complete) index and append
-        the verified new pairs. Eager — each step materializes, the
-        realistic shape of a daily job (and what makes the pairs table
-        a stable record rather than a lazily-shifting view).
-
-        The hashes write and the bands side each execute the shared
-        tokenize+shingle+md5 chain (no cross-action CSE). r19 measured
-        pinning the HASHES frame so every consumer reads one cache:
-        net SLOWER in interleaved A/B pairs (persisting the wide hs
-        arrays costs more than recomputing the chain), and the
-        staged-derivation trick that fixed the same double-execute in
-        ingest_slice needs the slice store, which this batch-grain
-        path deliberately does not use. What IS pinned (r19) is the
-        melted BANDS frame — narrow (id, bkey) rows, the same idiom as
-        minhash_neardup_pairs' self-join pin — because two actions
-        consume it (the index append and the probe): the probe then
-        reads ~4 cached rows/doc instead of re-running the whole
-        chain, cutting the per-ingest chain executions from 3 to 2."""
-        from dagster_etl_spark.sources.bucketed import (
-            append_bucketed,
-            write_bucketed,
-        )
-
-        new_bands, new_hashes = self._encode(docs)
-        new_bands = pin(new_bands)
-        first = not self.spark.catalog.tableExists(self.bands_table)
-        if first:
-            # fresh index: clear any previous-session leftovers for
-            # ALL THREE tables (write_bucketed cleans its own two; the
-            # plain pairs table needs the same orphaned-location
-            # treatment — the round driver restarts the session, so
-            # the catalog forgets tables whose directories survive)
-            from dagster_etl_spark.sources.lake import delete_path
-
-            self.drop()
-            warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-            delete_path(
-                self.spark, f"{warehouse}/{self.pairs_table.lower()}"
-            )
-            write_bucketed(
-                new_bands, self.bands_table, ["bkey"], num_buckets=self.num_buckets
-            )
-            write_bucketed(
-                new_hashes,
-                self.hashes_table,
-                [self.id_col],
-                num_buckets=self.num_buckets,
-            )
-        else:
-            append_bucketed(new_bands, self.bands_table)
-            append_bucketed(new_hashes, self.hashes_table)
-
-        pairs = self._probe_pairs(new_bands, threshold)
-        pairs.write.mode("append" if not first else "overwrite").saveAsTable(
-            self.pairs_table
-        )
-
-    def _slice_store(self):
-        """Slice region for exactly-once streaming ingest (see
-        streaming/slicestore.py)."""
-        from dagster_etl_spark.streaming.slicestore import SliceStore
-
-        warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-        return SliceStore(f"{warehouse}/{self.bands_table.lower()}__slices")
-
-    def _merged(
-        self, spark, component: str, table: str, extra: DataFrame | None = None
-    ) -> DataFrame | None:
-        """Base table ∪ committed slices (∪ ``extra``, the current
-        slice's own staged rows during an ingest probe)."""
-        store = self._slice_store()
-        parts: list[DataFrame] = []
-        if spark.catalog.tableExists(table):
-            spark.catalog.refreshTable(table)
-            parts.append(spark.table(table))
-        delta = store.read(spark, component)
-        if delta is not None:
-            parts.append(delta)
-        if extra is not None:
-            parts.append(extra)
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def ingest_slice(
-        self,
-        docs: DataFrame,
-        slice_id: int,
-        threshold: float = 0.2,
-        fault_hook=None,
-    ) -> bool:
-        """Exactly-once ingest of one checkpoint-identified micro-batch
-        (``slice_id`` = the foreachBatch batch id). Crash-safe at any
-        point (see streaming/slicestore.py): bands/hashes/pairs land in
-        overwrite-mode slice directories and become visible only at the
-        atomic manifest commit; a replay of a committed slice is a
-        no-op. The probe view is committed state ∪ this slice's own
-        staged bands — identical on a replay, because the crashed
-        attempt never committed — so the pair-completeness invariant
-        (every pair found on the batch where its later member arrives,
-        never re-found) survives a kill at any point.
-        tests/test_streaming_recovery.py kills and restarts for real.
-
-        ``fault_hook(label)`` is a test-only injection point."""
-        from dagster_etl_spark.streaming.slicestore import slice_file_budget
-
-        store = self._slice_store()
-        if store.is_committed(slice_id):
-            return False
-        hook = fault_hook or (lambda _label: None)
+    def _stage(
+        self, store, docs: DataFrame, slice_id: int, threshold: float = 0.2
+    ):
+        """Stage one slice's hashes, bands and new pairs. The probe view
+        is committed state ∪ this slice's own staged bands — identical
+        on a replay, because the crashed attempt never committed — so
+        the pair-completeness invariant (every pair found on the slice
+        where its later member arrives, never re-found) survives a kill
+        at any point."""
         spark = docs.sparkSession
         n_files = slice_file_budget(docs)
         # r19 (guide §1.2): stage hashes FIRST — the tokenize+shingle+
@@ -1901,98 +1814,38 @@ class IncrementalNearDupIndex:
         # rewrites the same deterministic hashes, and the band tail is
         # a pure function of them.
         store.write("hashes", slice_id, self._hashes(docs), files=n_files)
-        hook("staged_hashes")
-        new_bands = self._bands_from_hashes(
-            store.read_slice(spark, "hashes", slice_id)
-        )
-        store.write("bands", slice_id, new_bands, files=n_files)
-        hook("staged_bands")
-        slice_bands = store.read_slice(spark, "bands", slice_id)
-        index_bands = self._merged(
-            spark, "bands", self.bands_table, extra=slice_bands
-        )
-        index_hashes = self._merged(
-            spark,
-            "hashes",
-            self.hashes_table,
-            extra=store.read_slice(spark, "hashes", slice_id),
-        )
-        pairs = self._probe_pairs(
-            slice_bands,
-            threshold,
-            index_bands=index_bands,
-            index_hashes=index_hashes,
-        )
+        yield "hashes"
+        hashes = store.read_slice(spark, "hashes", slice_id)
+        bands = self._bands_from_hashes(hashes)
+        store.write("bands", slice_id, bands, files=n_files)
+        yield "bands"
         # pairs is a shuffle (dropDuplicates/join) output — AQE already
         # coalesces its write to slice-sized files, no budget needed
+        bands = store.read_slice(spark, "bands", slice_id)
+        pairs = self._probe_pairs(bands, threshold, slice_hashes=hashes)
         store.write("pairs", slice_id, pairs)
-        hook("staged_pairs")
-        store.commit(slice_id)
-        hook("post_commit")
-        return True
-
-    def compact_slices(self) -> int:
-        """Fold committed slice deltas into the bucketed base tables and
-        clear the region, restoring the pure co-located probe plan.
-        Returns the number of slices folded. Same crash-window caveat
-        as IncrementalBM25Index.compact_slices: production = one ACID
-        table commit; locally run once, post-stream."""
-        from dagster_etl_spark.sources.bucketed import (
-            append_bucketed,
-            write_bucketed,
-        )
-
-        store = self._slice_store()
-        n = len(store.committed())
-        if n == 0:
-            return 0
-        spark = self.spark
-        bands = store.read(spark, "bands")
-        hashes = store.read(spark, "hashes")
-        pairs = store.read(spark, "pairs")
-        first = not spark.catalog.tableExists(self.bands_table)
-        if first:
-            from dagster_etl_spark.sources.lake import delete_path
-
-            warehouse = spark.conf.get("spark.sql.warehouse.dir")
-            delete_path(spark, f"{warehouse}/{self.pairs_table.lower()}")
-            write_bucketed(
-                bands, self.bands_table, ["bkey"], num_buckets=self.num_buckets
-            )
-            write_bucketed(
-                hashes,
-                self.hashes_table,
-                [self.id_col],
-                num_buckets=self.num_buckets,
-            )
-            if pairs is not None:
-                pairs.write.mode("overwrite").saveAsTable(self.pairs_table)
-        else:
-            append_bucketed(bands, self.bands_table)
-            append_bucketed(hashes, self.hashes_table)
-            if pairs is not None:
-                pairs.write.mode("append").saveAsTable(self.pairs_table)
-        store.clear()
-        return n
+        yield "pairs"
 
     def _probe_pairs(
         self,
         new_bands: DataFrame,
         threshold: float,
-        index_bands: DataFrame | None = None,
-        index_hashes: DataFrame | None = None,
+        slice_hashes: DataFrame | None = None,
     ) -> DataFrame:
         """Pairs touching >= 1 doc of ``new_bands``, probed against the
         standing index. Split out so tests can assert the plan shape
         (the index sides read bucketed; only probe/candidate rows
         shuffle).
 
-        The probe is new slice vs the FULL index (which includes the
-        slice after the append, so new-new pairs surface too).
+        With ``slice_hashes`` the probe is ingest_slice's staged slice,
+        which joins the index too (so new-new pairs surface).
         Normalizing with least/greatest + dropDuplicates folds the two
         orders a new-new pair produces; a new-old pair appears in one
-        order only. The probe side re-runs the (batch-sized) band
-        chain — cheaper than persisting arrays through the exchange.
+        order only.
+
+        Each join runs part by part (:func:`_join_parts`): the bucketed
+        base stays co-located, and only the small part — committed
+        deltas ∪ the slice — is joined unbucketed.
 
         Session binding: every read here goes through the SLICE's own
         session (new_bands.sparkSession), not self.spark. Under
@@ -2001,47 +1854,50 @@ class IncrementalNearDupIndex:
         invalidated by another session's append — reading the index
         via self.spark from inside batch N would serve batch 0's file
         listing and silently drop every cross-batch pair (r11: 2 pairs
-        found instead of 28 before this fix).
-
-        ``index_bands`` / ``index_hashes`` override the standing-table
-        reads with an explicit state view — ingest_slice passes its
-        committed-slices ∪ current-slice view so a checkpoint replay
-        probes exactly the state the crashed attempt saw."""
+        found instead of 28 before this fix)."""
         spark = new_bands.sparkSession
         id_c = self.id_col
+        in_index = slice_hashes is not None
         probe = new_bands.select(F.col(id_c).alias("__pid"), "bkey")
-        index = (
-            index_bands
-            if index_bands is not None
-            else spark.table(self.bands_table)
-        )
+        bands = self._parts("bands", spark, new_bands if in_index else None)
         cands = (
-            probe.join(
-                index,
-                (probe["bkey"] == index["bkey"])
-                & (probe["__pid"] != index[id_c]),
-            )
+            _join_parts(probe, bands, "bkey")
+            .filter(F.col("__pid") != F.col(id_c))
             .select(
                 F.least("__pid", id_c).alias("id_a"),
                 F.greatest("__pid", id_c).alias("id_b"),
             )
             .dropDuplicates(["id_a", "id_b"])
         )
-        hs = (
-            index_hashes
-            if index_hashes is not None
-            else spark.table(self.hashes_table)
-        )
-        ha = hs.select(F.col(id_c).alias("id_a"), F.col("hs").alias("hs_a"))
-        hb = hs.select(F.col(id_c).alias("id_b"), F.col("hs").alias("hs_b"))
+        hashes = self._parts("hashes", spark, slice_hashes)
+        return self._verify(cands, hashes, hashes, "id_a", "id_b", threshold)
+
+    def _verify(
+        self,
+        cands: DataFrame,
+        left_hashes: list[DataFrame],
+        right_hashes: list[DataFrame],
+        left: str,
+        right: str,
+        threshold: float,
+    ) -> DataFrame:
+        """Exact-Jaccard verify of (``left``, ``right``) candidate id
+        pairs against the hash parts of each side, part by part."""
+
+        def side(parts: list[DataFrame], col: str, hs: str) -> list[DataFrame]:
+            return [
+                p.select(F.col(self.id_col).alias(col), F.col("hs").alias(hs))
+                for p in parts
+            ]
+
         jac = (
             "CAST(size(array_intersect(hs_a, hs_b)) AS DOUBLE) / "
             "size(array_distinct(concat(hs_a, hs_b)))"
         )
+        with_a = _join_parts(cands, side(left_hashes, left, "hs_a"), left)
+        both = _join_parts(with_a, side(right_hashes, right, "hs_b"), right)
         return (
-            cands.join(ha, on="id_a")
-            .join(hb, on="id_b")
-            .selectExpr("id_a", "id_b", f"{jac} AS jaccard")
+            both.selectExpr(left, right, f"{jac} AS jaccard")
             .filter(F.col("jaccard") >= threshold)
         )
 
@@ -2056,7 +1912,7 @@ class IncrementalNearDupIndex:
         time an eval suite updates. Work is O(external x density): the
         external side bands once and shuffles into the index's bkey
         bucketing; the index side reads co-located (same plan shape as
-        ingest's probe, pinned by the ingest plan test).
+        ingest's probe).
 
         Returns (left_id, right_id, jaccard): left = index member,
         right = external doc, exact-Jaccard verified — identical
@@ -2064,74 +1920,33 @@ class IncrementalNearDupIndex:
         over (indexed corpus, external corpus)."""
         spark = docs.sparkSession
         ext_bands, ext_hashes = self._encode(docs)
-        probe = ext_bands.select(F.col(self.id_col).alias("__pid"), "bkey")
-        index = spark.table(self.bands_table)
+        probe = ext_bands.select(F.col(self.id_col).alias("right_id"), "bkey")
         cands = (
-            probe.join(index, probe["bkey"] == index["bkey"])
-            .select(
-                F.col(self.id_col).alias("left_id"),
-                F.col("__pid").alias("right_id"),
-            )
+            _join_parts(probe, self._parts("bands", spark), "bkey")
+            .select(F.col(self.id_col).alias("left_id"), "right_id")
             .dropDuplicates(["left_id", "right_id"])
         )
-        ha = spark.table(self.hashes_table).select(
-            F.col(self.id_col).alias("left_id"), F.col("hs").alias("hs_a")
+        return self._verify(
+            cands, self._parts("hashes", spark), [ext_hashes],
+            "left_id", "right_id", threshold,
         )
-        hb = ext_hashes.select(
-            F.col(self.id_col).alias("right_id"), F.col("hs").alias("hs_b")
-        )
-        jac = (
-            "CAST(size(array_intersect(hs_a, hs_b)) AS DOUBLE) / "
-            "size(array_distinct(concat(hs_a, hs_b)))"
-        )
-        return (
-            cands.join(ha, on="left_id")
-            .join(hb, on="right_id")
-            .selectExpr("left_id", "right_id", f"{jac} AS jaccard")
-            .filter(F.col("jaccard") >= threshold)
-        )
-
-    def compact(self) -> dict[str, tuple[int, int]]:
-        """Maintenance cadence: every ingest appends up to num_buckets
-        files to each bucketed table (a streaming deployment appends
-        per MICRO-BATCH — fragmentation is fastest exactly where this
-        index earns its keep); collapse them without touching the
-        bucket spec, so the probe join stays co-located. Returns
-        {table: (files_before, files_after)}."""
-        from dagster_etl_spark.sources.bucketed import compact_bucketed
-
-        return {
-            t: compact_bucketed(self.spark, t)
-            for t in (self.bands_table, self.hashes_table)
-        }
 
     def pairs(self) -> DataFrame:
-        """All pairs found so far (id_a < id_b, exact Jaccard).
-
-        Refreshed first: appends made by OTHER sessions (foreachBatch
-        micro-batch clones) don't invalidate this session's relation
-        cache, so a stale file listing would under-report.
+        """All pairs found so far (id_a < id_b, exact Jaccard): base
+        table ∪ committed slice deltas, refreshed first (appends made by
+        OTHER sessions, such as foreachBatch clones, don't invalidate
+        this session's relation cache).
 
         If no ingest ever created the table (e.g. a stream whose
         micro-batches were all empty — ingest_batch returns early on
         isEmpty), returns an EMPTY (id_a, id_b, jaccard) frame instead
-        of raising table-not-found.
-
-        State view = base table ∪ committed slice deltas (exactly the
-        base read when no slice region exists — the batch-built plan
-        is unchanged); ingest_slice-built state is fully visible
-        before any compact_slices fold."""
-        merged = self._merged(self.spark, "pairs", self.pairs_table)
-        if merged is None:
+        of raising table-not-found."""
+        parts = self._parts("pairs")
+        if not parts:
             return self.spark.createDataFrame(
                 [], "id_a BIGINT, id_b BIGINT, jaccard DOUBLE"
             )
-        return merged
-
-    def drop(self) -> None:
-        for t in (self.bands_table, self.hashes_table, self.pairs_table):
-            self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-        self._slice_store().clear()
+        return union_all(*parts)
 
 
 def dedup_self_repeats(

@@ -20,6 +20,7 @@ from pyspark.sql.window import Window
 
 from dagster_etl_spark.functions import xdialect as x
 from dagster_etl_spark.plans.layout import spread
+from dagster_etl_spark.streaming.slicestore import StandingState, slice_file_budget
 
 
 def cosine_topk(
@@ -822,7 +823,7 @@ def ivf_pq_topk(
 
 # -- incremental ANN index -------------------------------------------------
 
-class IncrementalANNIndex:
+class IncrementalANNIndex(StandingState):
     """Daily-cadence IVF (the ANN member of the r11 incremental
     trilogy, next to sources/bucketed.BucketedPipeline and
     dedup.IncrementalNearDupIndex): an embedding store grows by a
@@ -882,6 +883,8 @@ class IncrementalANNIndex:
         self.id_col = id_col
         self.vec_col = vec_col
         self.num_buckets = num_buckets
+        self.components = {"vectors": (self.vectors_table, ["bucket"])}
+        self.extra_tables = (self.centroids_table,)
 
     # -- state --
 
@@ -897,7 +900,6 @@ class IncrementalANNIndex:
 
     def init(self, vectors: DataFrame) -> None:
         """Freeze the quantizer on the first slice and ingest it."""
-        from dagster_etl_spark.sources.bucketed import write_bucketed
         from dagster_etl_spark.sources.lake import delete_path
 
         self.drop()
@@ -912,73 +914,21 @@ class IncrementalANNIndex:
             [(i, c) for i, c in enumerate(cents)], ["cidx", "cv"]
         ).selectExpr("cidx", f"CAST(cv AS array<float>) AS cv")
         cent_df.write.saveAsTable(self.centroids_table)
-        assigned = self._assign(vectors, cents)
-        write_bucketed(
-            assigned,
-            self.vectors_table,
-            ["bucket"],
-            num_buckets=self.num_buckets,
-        )
+        self.ingest(vectors)
 
-    def _assign(self, vectors: DataFrame, cents: list[list[float]]) -> DataFrame:
+    def _stage(self, store, vectors: DataFrame, slice_id: int):
+        """Assign one slice against the FROZEN centroids (one pass over
+        the new rows only; :meth:`init` must have frozen them). A pure
+        function of the quantizer, so a replay rewrites identical rows.
+        Scan-local with no spread: the partitioning is the slice's own
+        splits, already slice-sized — no file budget."""
+        cents = self._centroids()
         bucket = f"{_topn_centroid_buckets_expr(self.vec_col, cents, 1)}[0]"
-        return vectors.selectExpr(
+        assigned = vectors.selectExpr(
             self.id_col, self.vec_col, f"{bucket} AS bucket"
         )
-
-    def append(self, vectors: DataFrame) -> None:
-        """Ingest a slice: assign against the FROZEN centroids (one
-        pass over the new rows only) and append into the bucketed
-        layout. Batch-grain path — inside foreachBatch use
-        :meth:`ingest_slice`, which is idempotent under replay."""
-        from dagster_etl_spark.sources.bucketed import append_bucketed
-
-        append_bucketed(
-            self._assign(vectors, self._centroids()), self.vectors_table
-        )
-
-    def _slice_store(self):
-        """Slice region for exactly-once streaming ingest (see
-        streaming/slicestore.py)."""
-        from dagster_etl_spark.streaming.slicestore import SliceStore
-
-        warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-        return SliceStore(f"{warehouse}/{self.vectors_table.lower()}__slices")
-
-    def ingest_slice(self, vectors: DataFrame, slice_id: int, fault_hook=None) -> bool:
-        """Exactly-once ingest of one checkpoint-identified micro-batch
-        (r17 — with this the ENTIRE incremental-index family is slice-
-        store-backed: BM25, near-dup, unigram-LM, DSIR, IVF-PQ, and the
-        float IVF here). Requires :meth:`init` to have frozen the
-        quantizer first; assignment is a pure function of it, so a
-        replay rewrites identical rows. Committed replays return False
-        and apply nothing."""
-        store = self._slice_store()
-        if store.is_committed(slice_id):
-            return False
-        hook = fault_hook or (lambda _label: None)
-        # _assign is scan-local with no spread: partitioning = the
-        # micro-batch's own splits, already slice-sized — no budget
-        assigned = self._assign(vectors, self._centroids())
         store.write("vectors", slice_id, assigned)
-        hook("staged_vectors")
-        store.commit(slice_id)
-        hook("post_commit")
-        return True
-
-    def compact_slices(self) -> int:
-        """Fold committed slice deltas into the bucketed vectors table
-        and clear the region (post-stream, one fold — see the BM25
-        compact_slices caveat). Returns the number of slices folded."""
-        from dagster_etl_spark.sources.bucketed import append_bucketed
-
-        store = self._slice_store()
-        n = len(store.committed())
-        if n == 0:
-            return 0
-        append_bucketed(store.read(self.spark, "vectors"), self.vectors_table)
-        store.clear()
-        return n
+        yield "vectors"
 
     def topk(
         self, queries: DataFrame, k: int = 10, nprobe: int = 8
@@ -987,14 +937,7 @@ class IncrementalANNIndex:
         nprobe nearest lists per query, cosine-rank within them.
         Same result columns and tie-breaks as ivf_cosine_topk."""
         cents = self._centroids()
-        # refresh: appends from other sessions (foreachBatch clones)
-        # don't invalidate this session's relation cache
-        self.spark.catalog.refreshTable(self.vectors_table)
-        standing = self.spark.table(self.vectors_table)
-        delta = self._slice_store().read(self.spark, "vectors")
-        if delta is not None:
-            standing = standing.unionByName(delta)
-        c = standing.select(
+        c = self._state("vectors").select(
             F.col(self.id_col).alias("neighbor_id"),
             F.col(self.vec_col).alias("cv"),
             "bucket",
@@ -1017,18 +960,6 @@ class IncrementalANNIndex:
             "rank", F.row_number().over(w)
         ).filter(F.col("rank") <= k)
 
-    def compact(self) -> dict[str, tuple[int, int]]:
-        """Maintenance cadence: collapse the per-append vector files
-        (spec preserved). Returns {table: (files_before, files_after)}."""
-        from dagster_etl_spark.sources.bucketed import compact_bucketed
-
-        return {self.vectors_table: compact_bucketed(self.spark, self.vectors_table)}
-
-    def drop(self) -> None:
-        for t in (self.centroids_table, self.vectors_table):
-            self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-        self._slice_store().clear()
-
 
 def ivf_nlist_for(n_vectors: int) -> int:
     """The measured IVF sizing rule as a function: nlist ~ n/1000,
@@ -1044,7 +975,7 @@ def ivf_nlist_for(n_vectors: int) -> int:
     return nlist
 
 
-class IncrementalIVFPQIndex:
+class IncrementalIVFPQIndex(StandingState):
     """Daily-cadence IVF-PQ — the incremental form of :func:`ivf_pq_topk`
     and the fourth member of the incremental family (next to
     BucketedPipeline, IncrementalNearDupIndex, IncrementalANNIndex):
@@ -1117,6 +1048,8 @@ class IncrementalIVFPQIndex:
         self.id_col = id_col
         self.vec_col = vec_col
         self.num_buckets = num_buckets
+        self.components = {"codes": (self.codes_table, ["bucket"])}
+        self.extra_tables = (self.centroids_table, self.codebooks_table)
 
     @classmethod
     def sized_for(
@@ -1171,7 +1104,6 @@ class IncrementalIVFPQIndex:
 
     def init(self, vectors: DataFrame) -> None:
         """Freeze both quantizers on the first slice and ingest it."""
-        from dagster_etl_spark.sources.bucketed import write_bucketed
         from dagster_etl_spark.sources.lake import delete_path
 
         self.drop()
@@ -1196,12 +1128,7 @@ class IncrementalIVFPQIndex:
         ).selectExpr(
             "j", "cidx", "CAST(subvec AS array<float>) AS subvec"
         ).write.saveAsTable(self.codebooks_table)
-        write_bucketed(
-            self._encode(vectors, cents, books),
-            self.codes_table,
-            ["bucket"],
-            num_buckets=self.num_buckets,
-        )
+        self.ingest(vectors)
 
     def _encode(self, vectors: DataFrame, cents, books) -> DataFrame:
         """List assignment + m PQ codes for a slice — one scan-local
@@ -1225,86 +1152,26 @@ class IncrementalIVFPQIndex:
             "*", f"{x.norm_fold(f'({recon})', x.SPARK)} AS rn"
         )
 
-    def append(self, vectors: DataFrame) -> None:
-        """Ingest a slice: encode ONLY the new rows against the frozen
-        quantizers and append into the bucketed codes layout.
-
-        Pre-r16 codes tables (written before encode-time ``rn``) are
-        handled in place: the encoded slice drops its rn column so the
-        append schema matches, and :meth:`topk` recomputes rn in-plan
-        for such tables (r16 ADVICE — no forced rebuild). Batch-grain
-        path — inside foreachBatch use :meth:`ingest_slice`, which is
-        idempotent under checkpoint replay."""
-        from dagster_etl_spark.sources.bucketed import append_bucketed
-
-        self.recover_rebucket()  # don't append onto a half-swapped index
-        coded = self._encode(vectors, self._centroids(), self._books())
-        if "rn" not in self.spark.table(self.codes_table).columns:
-            coded = coded.drop("rn")
-        append_bucketed(coded, self.codes_table)
-
-    def _slice_store(self):
-        """Slice region for exactly-once streaming ingest (see
-        streaming/slicestore.py)."""
-        from dagster_etl_spark.streaming.slicestore import SliceStore
-
-        warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-        return SliceStore(f"{warehouse}/{self.codes_table.lower()}__slices")
-
-    def ingest_slice(self, vectors: DataFrame, slice_id: int, fault_hook=None) -> bool:
-        """Exactly-once ingest of one checkpoint-identified micro-batch
-        — the ANN member of the slice-store family (r17; BM25, near-dup,
-        unigram-LM and DSIR got theirs in r16-r17): a standing embedding
-        store fed by a stream must not double-encode a checkpoint-
-        replayed batch. Requires :meth:`init` to have frozen the
-        quantizers first (encode is a pure function of them, so a replay
-        rewrites identical code rows). Same protocol as the others:
-        overwrite-mode slice staging, atomic manifest commit, committed
-        replays return False and apply nothing."""
-        self.recover_rebucket()  # uniform self-heal (see append/topk)
-        store = self._slice_store()
-        if store.is_committed(slice_id):
-            return False
-        from dagster_etl_spark.streaming.slicestore import slice_file_budget
-
-        hook = fault_hook or (lambda _label: None)
+    def _stage(self, store, vectors: DataFrame, slice_id: int):
+        """Encode ONLY the slice's rows against the frozen quantizers
+        (:meth:`init` must have frozen them) — a pure function of them,
+        so a replay rewrites identical code rows. A codes table written
+        before encode-time ``rn`` keeps its schema: reads and the fold
+        take the base table's columns, and :meth:`topk` recomputes rn
+        in-plan for such tables (r16 ADVICE — no forced rebuild)."""
         coded = self._encode(vectors, self._centroids(), self._books())
         store.write("codes", slice_id, coded, files=slice_file_budget(vectors))
-        hook("staged_codes")
-        store.commit(slice_id)
-        hook("post_commit")
-        return True
+        yield "codes"
+
+    def ingest_slice(
+        self, vectors: DataFrame, slice_id: int, fault_hook=None, **opts
+    ) -> bool:
+        self.recover_rebucket()  # never stage onto a half-swapped index
+        return super().ingest_slice(vectors, slice_id, fault_hook, **opts)
 
     def compact_slices(self) -> int:
-        """Fold committed slice deltas into the bucketed codes table
-        and clear the region (post-stream, one fold — see the BM25
-        compact_slices caveat). Returns the number of slices folded."""
-        from dagster_etl_spark.sources.bucketed import append_bucketed
-
-        self.recover_rebucket()  # uniform self-heal (see append/topk)
-        store = self._slice_store()
-        n = len(store.committed())
-        if n == 0:
-            return 0
-        delta = store.read(self.spark, "codes")
-        if "rn" not in self.spark.table(self.codes_table).columns:
-            delta = delta.drop("rn")
-        append_bucketed(delta, self.codes_table)
-        store.clear()
-        return n
-
-    def _codes(self) -> DataFrame:
-        """Standing codes = bucketed base table ∪ committed slice
-        deltas (plain refreshed read when no slice region exists —
-        the pre-slice co-located plan is unchanged)."""
-        self.spark.catalog.refreshTable(self.codes_table)
-        base = self.spark.table(self.codes_table)
-        delta = self._slice_store().read(self.spark, "codes")
-        if delta is None:
-            return base
-        if "rn" not in base.columns:
-            delta = delta.drop("rn")
-        return base.unionByName(delta)
+        self.recover_rebucket()  # never fold onto a half-swapped index
+        return super().compact_slices()
 
     def topk(
         self,
@@ -1327,7 +1194,7 @@ class IncrementalIVFPQIndex:
         self.recover_rebucket()  # self-heal an interrupted swap (one stat)
         cents = self._centroids()
         books = self._books()
-        all_codes = self._codes()  # base ∪ committed slice deltas
+        all_codes = self._state("codes")
         if rerank is None and rerank_source is not None:
             rerank = max(500, all_codes.count() // 200)
         recon = pq_reconstruct_expr(
@@ -1407,12 +1274,6 @@ class IncrementalIVFPQIndex:
         return rescored.withColumn("rank", F.row_number().over(w)).filter(
             F.col("rank") <= k
         )
-
-    def compact(self) -> dict[str, tuple[int, int]]:
-        """Collapse the per-append code files (spec preserved)."""
-        from dagster_etl_spark.sources.bucketed import compact_bucketed
-
-        return {self.codes_table: compact_bucketed(self.spark, self.codes_table)}
 
     def rebucket(
         self, vectors: DataFrame, nlist: int, fault_hook=None
@@ -1625,7 +1486,7 @@ class IncrementalIVFPQIndex:
         The 2x threshold gives hysteresis: the trigger fires only after
         a full doubling past the rule, so daily calls never thrash."""
         self.recover_rebucket()
-        n = self._codes().count()
+        n = self._state("codes").count()
         if n <= self.nlist * max_per_list:
             return None
         target = ivf_nlist_for(n)
@@ -1635,9 +1496,7 @@ class IncrementalIVFPQIndex:
         return target
 
     def drop(self) -> None:
-        for t in (self.centroids_table, self.codebooks_table, self.codes_table):
-            self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-        self._slice_store().clear()
+        super().drop()
         self._clear_rb_marker()
 
 

@@ -716,8 +716,8 @@ def q_ivf_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     idx = IncrementalANNIndex(spark, f"ann_inc_{sfx}", dim=EMB_DIM)
     idx.init(emb.filter("vec_id % 3 = 0"))
-    idx.append(emb.filter("vec_id % 3 = 1"))
-    idx.append(emb.filter("vec_id % 3 = 2"))
+    idx.ingest(emb.filter("vec_id % 3 = 1"))
+    idx.ingest(emb.filter("vec_id % 3 = 2"))
     return idx.topk(emb.filter("vec_id < 5"), k=10, nprobe=8)
 
 
@@ -964,8 +964,8 @@ def q_ivf_pq_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, f"ivfpq_inc_{sfx}", dim=EMB_DIM, nlist=16, m=8, ksub=16
     )
     idx.init(emb.filter("vec_id % 3 = 0"))
-    idx.append(emb.filter("vec_id % 3 = 1"))
-    idx.append(emb.filter("vec_id % 3 = 2"))
+    idx.ingest(emb.filter("vec_id % 3 = 1"))
+    idx.ingest(emb.filter("vec_id % 3 = 2"))
     return idx.topk(
         emb.filter("vec_id < 5"), k=10, nprobe=8, rerank=50, rerank_source=emb
     )

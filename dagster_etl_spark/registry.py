@@ -65,168 +65,6 @@ def oracle_sql() -> dict[str, str]:
 
 _LOADED = False
 
-# The correctness driver checks the FIRST 50 registry entries in
-# iteration order. Names listed here are moved to the front (in list
-# order) after module load; everything else keeps registration order
-# behind them. Rotated per round so every registered query accumulates
-# a driver-green row across rounds: round 4 fronts packed_sequences
-# (oracle HUGEINT cast fixed this round — needs its first green driver
-# row) plus the 37 queries whose last driver row is round 2, especially
-# the round-3-rewritten ones (pricing_summary, cycle_time_stats,
-# sessionize, priority_wip_join). Round-4 additions append below and
-# must stay within the 50-slot window.
-_DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
-    # round 19: generated FROM the artifacts, not memory — exactly the
-    # first 50 of the 60 pre-declared r19 heads in _NEXT_ROTATION_HEADS
-    # as checked at the r18 boundary (the 10 r18 overflow names, then
-    # the registered names with no row in CORRECTNESS_r17.json and
-    # outside the r18 window, in registry order). Includes both queries
-    # still awaiting their first driver row (ivf_pq_ann_rebucket,
-    # streaming_dsir_ingest). The 10 overflow names front the r20
-    # rotation: see _NEXT_ROTATION_HEADS below, which
-    # tests/test_plans.py::test_next_rotation_heads_derive_from_artifacts
-    # derives from the artifacts instead of trusting a comment.
-    # Disjointness vs CORRECTNESS_r18.json (the newest artifact) is
-    # enforced by tests/test_plans.py::test_driver_window_rotates_vs_last_round
-    # (verified: intersection empty). Invariant that keeps perfect
-    # disjointness provable as the registry grows: len(registry) - 50
-    # >= 50 (pinned by tests/test_plans.py::test_registry_keeps_rotation_headroom).
-    # NOTE: since r19 the bench's timed order is PINNED (bench.py sorts
-    # its query names), so this rotation no longer reorders the timed
-    # sequence — the r18 false-regression mechanism (VERDICT r18 §perf)
-    # cannot recur.
-    "dsir_select",
-    "corpus_drift_tv",
-    "surprisal_incremental",
-    "corpus_drift_incremental",
-    "bigram_surprisal_buckets",
-    "dsir_incremental",
-    "bpe_segment",
-    "token_budget_mixture_bpe",
-    "ivf_pq_ann_rebucket",
-    "streaming_dsir_ingest",
-    "dbt_incremental_orders",
-    "compacted_scan",
-    "ngram_jaccard_pairs",
-    "minhash_neardup",
-    "simhash_neardup",
-    "ann_cosine_topk",
-    "embedding_neardup",
-    "semantic_dedup",
-    "pq_ann_rerank",
-    "pq_ann_topk",
-    "ivf_pq_ann_incremental",
-    "ivf_pq_ann_topk",
-    "quantized_ann_topk",
-    "media_decode_stats",
-    "audio_feature_stats",
-    "media_resize_stats",
-    "image_dhash_groups",
-    "priority_wip",
-    "cycle_time_stats_bucketed",
-    "equipment_unpivot",
-    "top_customers",
-    "large_order_customers",
-    "supplier_diversity",
-    "rich_customers_without_low_orders",
-    "events_json_flatten",
-    "customer_priority_baskets",
-    "funnel_conversion",
-    "cohort_retention",
-    "table_diff_reconcile",
-    "value_percentiles_exact",
-    "streaming_windowed_counts",
-    "streaming_user_sessions",
-    "streaming_dedup_counts",
-    "streaming_segment_stats",
-    "streaming_attribution_join",
-    "streaming_decontaminate",
-    "asof_purchase_prior_view",
-    "doc_stats",
-    "exact_dedup",
-    "clean_corpus",
-)
-
-# Pre-declared rotation heads for the NEXT round (r14), in
-# CORRECTNESS_r11.json artifact order: the 23 r11 names that did not
-# fit the 50-slot r13 window above, so once CORRECTNESS_r13 lands their
-# most recent driver row (r11) will be the oldest in the fleet. This
-# tuple is CHECKED, not advisory:
-# tests/test_plans.py::test_next_rotation_heads_derive_from_artifacts
-# recomputes it as registry - (newest CORRECTNESS file UNION the
-# current 50-slot window) -- any query registered mid-round without
-# being appended here fails the suite, turning the manual
-# pre-declaration discipline into an invariant. Mid-round registrations
-# must be APPENDED here (and swept via ALLCHECK) so they front the next
-# rotation too.
-_NEXT_ROTATION_HEADS: tuple[str, ...] = (
-    # r20 heads: the 10 r19 overflow names that did not fit the 50-slot
-    # r19 window above, then the remaining registered names with no row
-    # in CORRECTNESS_r18.json and not in the current window, in registry
-    # order. Mid-r19 registrations must be APPENDED here (and swept via
-    # ALLCHECK) so they front the next rotation too.
-    "contamination_score",
-    "decontaminate_bloom_gate",
-    "epoch_shuffle_order",
-    "packed_sequences",
-    "curation_pipeline",
-    "duplicate_ngram_spans",
-    "curation_pipeline_v2",
-    "quality_classifier_score",
-    "subword_segment",
-    "token_budget_mixture_subword",
-    "minhash_neardup_incremental",
-    "filtered_ann_topk",
-    "minhash_estimate_gate",
-    "cross_corpus_neardup",
-    "cross_corpus_neardup_incremental",
-    "filtered_ivf_ann_topk",
-    "ivf_ann_incremental",
-    "scrub_benchmark_spans",
-    "audio_fingerprint_groups",
-    "cycle_time_stats_incremental",
-    "user_event_type_map",
-    "fuzzy_part_pairs",
-    "major_suppliers",
-    "order_price_window_stats",
-    "lineitem_moment_stats",
-    "streaming_error_bursts",
-    "streaming_media_decode",
-    "streaming_neardup_ingest",
-    "streaming_weighted_sample",
-    "streaming_quality_score",
-    "value_band_range_join",
-    "event_rollup_multigrain",
-    "incremental_event_rollup",
-    "gap_filled_user_timeline",
-    "lang_id",
-    "doc_fingerprints",
-    "dedup_clusters",
-    "tfidf_top_terms",
-    "null_profile_orders",
-    "redact_pii",
-    "decontaminate_vs_benchmark",
-    "train_val_test_split",
-    "corpus_mixture",
-    "quality_deciles",
-    "corpus_bigram_counts",
-    "gopher_quality_flags",
-    "doc_chunks",
-    "stratified_event_sample",
-    "bigram_novelty",
-    "vocab_oov",
-    "winnow_fingerprints",
-    "weighted_corpus_sample",
-    "training_order_pipeline",
-    "token_budget_mixture",
-    "cm_heavy_hitters",
-    "temperature_mixture",
-    "kn_bigram_surprisal",
-    "quality_gate_composite",
-    "packed_sequences_subword",
-    "lang_classifier_scores",
-)
-
 
 def _ensure_loaded() -> None:
     """Import all query-defining modules exactly once."""
@@ -242,9 +80,4 @@ def _ensure_loaded() -> None:
     from dagster_etl_spark import queries_temporal  # noqa: F401
     from dagster_etl_spark import queries_text  # noqa: F401
 
-    fronted = [n for n in _DRIVER_WINDOW_PRIORITY if n in _REGISTRY]
-    rest = [n for n in _REGISTRY if n not in set(fronted)]
-    reordered = {n: _REGISTRY[n] for n in (*fronted, *rest)}
-    _REGISTRY.clear()
-    _REGISTRY.update(reordered)
     _LOADED = True

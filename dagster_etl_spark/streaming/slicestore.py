@@ -1,14 +1,17 @@
 """Manifest-committed slice store: the exactly-once substrate for
-streaming index ingest.
+the incremental indexes.
 
-Problem (r15 verdict, "What's missing" #2): the incremental indexes
-(``IncrementalBM25Index``, ``IncrementalNearDupIndex``) append to their
-standing tables inside ``foreachBatch``. Structured Streaming's
-checkpoint gives at-least-once delivery to ``foreachBatch`` — after a
-crash mid-batch, the SAME batch id is replayed on restart, and a plain
-append would re-append whatever portion of the slice already landed.
-The docstrings promised "the checkpointed batch id gates re-execution";
-this module is that gate, made crash-safe for a fault at ANY point:
+Every standing index — ``IncrementalBM25Index``, ``IncrementalUnigramLM``
+and ``IncrementalDSIRModel`` (operators/text.py),
+``IncrementalNearDupIndex`` (operators/dedup.py), and
+``IncrementalANNIndex`` and ``IncrementalIVFPQIndex``
+(operators/similarity.py) — is a :class:`StandingState`: bucketed base
+tables plus a slice region, written only through ``ingest_slice``.
+Structured Streaming's checkpoint gives at-least-once delivery to
+``foreachBatch`` — after a crash mid-batch, the SAME batch id is
+replayed on restart, and a plain append would re-append whatever
+portion of the slice already landed. This module is the gate that
+makes ingest crash-safe for a fault at ANY point:
 
 * each micro-batch's state lands in a **slice directory keyed by the
   checkpointed batch id**, written with ``mode("overwrite")`` — a
@@ -27,12 +30,13 @@ this module is that gate, made crash-safe for a fault at ANY point:
 Net effect: ingest is idempotent under replay from any crash point, so
 the recovered standing state is bit-identical to an uninterrupted run
 — the property tests/test_streaming_recovery.py proves by killing a
-stream mid-batch and restarting it from the checkpoint.
+stream mid-batch and restarting it from the checkpoint. Batch-grain
+``ingest`` is the same write path: one slice, then the fold.
 
 Scale posture: the slice region is the index's write-ahead delta (an
-LSM level-0); ``compact_slices`` on the owning index folds committed
-slices into the bucketed base tables to restore the pure co-located
-query plan. On a real cluster the manifest's atomic replace maps to a
+LSM level-0); ``StandingState.compact_slices`` folds committed slices
+into the bucketed base tables to restore the pure co-located query
+plan. On a real cluster the manifest's atomic replace maps to a
 conditional put / metastore transaction (Iceberg & Delta implement
 exactly this commit protocol); on the local filesystem ``os.replace``
 is the honest equivalent.
@@ -49,6 +53,9 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from collections.abc import Iterator
+from contextlib import closing, contextmanager
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -77,12 +84,14 @@ def slice_file_budget(batch_df: DataFrame) -> int:
 
     Do NOT use it for aggregate/join outputs: their trailing shuffle is
     AQE-coalesced already (measured 1 part-file as-is) and the
-    repartition would only add a shuffle."""
-    try:
-        n = len(batch_df.inputFiles())
-    except Exception:
-        n = 0
-    if n <= 0:
+    repartition would only add a shuffle.
+
+    ``inputFiles()`` does not raise for sources without files: it
+    returns an empty list, for a ``createDataFrame`` frame and for a
+    ``foreachBatch`` micro-batch alike (a streaming file source's batch
+    reports no input files either)."""
+    n = len(batch_df.inputFiles())
+    if n == 0:
         n = batch_df.rdd.getNumPartitions()
     par = batch_df.sparkSession.sparkContext.defaultParallelism
     return max(1, min(n, par))
@@ -214,3 +223,185 @@ class SliceStore:
         import shutil
 
         shutil.rmtree(_local(self.root), ignore_errors=True)
+
+
+def union_all(*dfs: DataFrame | None) -> DataFrame | None:
+    """UNION ALL by name of the frames that are not None (None if none
+    are)."""
+    present = [d for d in dfs if d is not None]
+    return reduce(DataFrame.unionByName, present) if present else None
+
+
+@contextmanager
+def persisted(df: DataFrame) -> Iterator[DataFrame]:
+    """``df`` cached for the body of the ``with`` only — for a frame
+    that two staged components of one eager ``ingest_slice`` consume.
+    Unlike ``plans.cache.pin`` nothing outlives the call."""
+    df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+class StandingState:
+    """Lifecycle shared by every incremental index: bucketed base
+    tables, a :class:`SliceStore` region of committed deltas, and one
+    write path into them.
+
+    A subclass declares ``components`` — component name -> (catalog
+    table, bucket columns or None for a plain table) — sets ``spark``
+    and ``num_buckets``, and implements :meth:`_stage`. Tables outside
+    the slice protocol that :meth:`drop` must also remove (frozen
+    quantizers) go in ``extra_tables``. The region lives next to the
+    first component's table in the warehouse, so drop/rebuild
+    semantics match.
+
+    Reads see base ∪ committed deltas (:meth:`_state`); with no slice
+    region that is exactly the plain refreshed table read, so the
+    co-located plan over a folded index is unchanged. :meth:`_parts`
+    keeps the two apart for joins that must stay co-located with a
+    bucketed base."""
+
+    spark: SparkSession
+    num_buckets: int
+    components: dict[str, tuple[str, list[str] | None]]
+    extra_tables: tuple[str, ...] = ()
+
+    def _stage(
+        self, store: SliceStore, data: DataFrame, slice_id: int, **opts
+    ) -> Iterator[str]:
+        """Write every component of one slice with ``store.write``,
+        yielding each component's name once it is staged (the fault
+        hook then sees ``staged_<name>``). The rows must be a
+        deterministic function of ``data`` and the committed state, so
+        a replay rewrites them identically."""
+        raise NotImplementedError
+
+    def _slice_store(self) -> SliceStore:
+        table = next(iter(self.components.values()))[0]
+        warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
+        return SliceStore(f"{warehouse}/{table.lower()}__slices")
+
+    def ingest_slice(
+        self, data: DataFrame, slice_id: int, fault_hook=None, **opts
+    ) -> bool:
+        """Exactly-once ingest of one checkpoint-identified slice
+        (``slice_id`` = the foreachBatch batch id). A replay of a
+        committed slice returns False and applies nothing; otherwise
+        every component is staged, then the manifest commit makes the
+        slice visible at once. ``fault_hook(label)`` is a test-only
+        injection point called after each staged component and after
+        the commit. Frames cached while staging are released before
+        this returns, also when it raises."""
+        store = self._slice_store()
+        if store.is_committed(slice_id):
+            return False
+        hook = fault_hook or (lambda _label: None)
+        with closing(self._stage(store, data, slice_id, **opts)) as staged:
+            for component in staged:
+                hook(f"staged_{component}")
+        store.commit(slice_id)
+        hook("post_commit")
+        return True
+
+    def ingest(self, data: DataFrame, **opts) -> None:
+        """Batch-grain ingest: one slice at the next free id, then the
+        fold. The same exactly-once write path as a stream uses."""
+        ids = self._slice_store().committed()
+        self.ingest_slice(data, max(ids, default=-1) + 1, **opts)
+        self.compact_slices()
+
+    def _parts(
+        self,
+        component: str,
+        spark: SparkSession | None = None,
+        extra: DataFrame | None = None,
+    ) -> list[DataFrame]:
+        """The standing rows of ``component`` as at most two frames:
+        the refreshed base table, and the committed deltas ∪ ``extra``.
+        ``spark`` is the reading session: a foreachBatch clone does not
+        see another session's appends through its own relation cache.
+        Deltas take the base's columns, so a base written before a
+        column was added stays readable."""
+        spark = spark or self.spark
+        table = self.components[component][0]
+        base = None
+        if spark.catalog.tableExists(table):
+            spark.catalog.refreshTable(table)
+            base = spark.table(table)
+        delta = union_all(self._slice_store().read(spark, component), extra)
+        if base is not None and delta is not None:
+            delta = delta.select(*base.columns)
+        return [p for p in (base, delta) if p is not None]
+
+    def _state(self, component: str, spark: SparkSession | None = None) -> DataFrame:
+        """Base table ∪ committed deltas of ``component``."""
+        parts = self._parts(component, spark)
+        if not parts:
+            raise ValueError(
+                f"{type(self).__name__}: no state for "
+                f"{self.components[component][0]} — neither a base table "
+                "nor a committed slice exists"
+            )
+        return union_all(*parts)
+
+    def compact_slices(self) -> int:
+        """Fold the committed deltas into the base tables and clear the
+        region, restoring the pure co-located plan. Returns the number
+        of slices folded. A missing bucketed table is created with
+        ``write_bucketed`` and an existing one appended to under its
+        own spec; a plain table is overwritten (after removing any
+        orphaned location) or appended to.
+
+        NOT crash-safe: a crash between the first append and the region
+        clear leaves slices both folded and committed, and a rerun
+        would fold them twice. In production the fold is one ACID table
+        commit (Iceberg/Delta); locally run it once, outside a stream."""
+        from dagster_etl_spark.sources.bucketed import (
+            append_bucketed,
+            write_bucketed,
+        )
+        from dagster_etl_spark.sources.lake import delete_path
+
+        store = self._slice_store()
+        n = len(store.committed())
+        if n == 0:
+            return 0
+        spark = self.spark
+        for component, (table, bucket_cols) in self.components.items():
+            delta = store.read(spark, component)
+            if spark.catalog.tableExists(table):
+                delta = delta.select(*spark.table(table).columns)
+                if bucket_cols:
+                    append_bucketed(delta, table)
+                else:
+                    delta.write.mode("append").saveAsTable(table)
+            elif bucket_cols:
+                write_bucketed(
+                    delta, table, bucket_cols, num_buckets=self.num_buckets
+                )
+            else:
+                warehouse = spark.conf.get("spark.sql.warehouse.dir")
+                delete_path(spark, f"{warehouse}/{table.lower()}")
+                delta.write.mode("overwrite").saveAsTable(table)
+        store.clear()
+        return n
+
+    def compact(self) -> dict[str, tuple[int, int]]:
+        """Collapse the per-append files of the bucketed base tables;
+        bucket specs survive, so probe joins stay co-located. Returns
+        {table: (files_before, files_after)}."""
+        from dagster_etl_spark.sources.bucketed import compact_bucketed
+
+        return {
+            table: compact_bucketed(self.spark, table)
+            for table, bucket_cols in self.components.values()
+            if bucket_cols
+        }
+
+    def drop(self) -> None:
+        tables = [t for t, _ in self.components.values()]
+        for t in (*self.extra_tables, *tables):
+            self.spark.sql(f"DROP TABLE IF EXISTS {t}")
+        self._slice_store().clear()

@@ -12,15 +12,6 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
-def pytest_configure(config):
-    config.addinivalue_line(
-        "markers",
-        "rotation_tripwire: deliberately red at round boundary until the "
-        "driver window rotates; run `-m 'not rotation_tripwire'` to audit "
-        "everything else (see README)",
-    )
-
-
 @pytest.fixture(scope="session")
 def spark():
     from dagster_etl_spark.session import get_spark

@@ -62,15 +62,15 @@ def test_ingest_order_is_irrelevant(ann_env):
     q = emb.filter("vec_id < 5")
 
     idx.init(s[0])
-    idx.append(s[1])
-    idx.append(s[2])
+    idx.ingest(s[1])
+    idx.ingest(s[2])
     a = _rows(idx.topk(q, k=10, nprobe=8))
 
     idx2 = IncrementalANNIndex(spark, "t_inc_ann2", dim=DIM)
     try:
         idx2.init(s[0])
-        idx2.append(s[2])
-        idx2.append(s[1])
+        idx2.ingest(s[2])
+        idx2.ingest(s[1])
         assert _rows(idx2.topk(q, k=10, nprobe=8)) == a
     finally:
         idx2.drop()
@@ -86,8 +86,8 @@ def test_vectors_table_bucketed_and_appends_keep_spec(ann_env):
     emb = load_table(spark, SF_SMALL, "embeddings")
     idx.init(emb.filter("vec_id % 3 = 0"))
     assert bucket_spec(spark, idx.vectors_table) == (8, ["bucket"], [])
-    idx.append(emb.filter("vec_id % 3 = 1"))
-    idx.append(emb.filter("vec_id % 3 = 2"))
+    idx.ingest(emb.filter("vec_id % 3 = 1"))
+    idx.ingest(emb.filter("vec_id % 3 = 2"))
     assert bucket_spec(spark, idx.vectors_table) == (8, ["bucket"], [])
     assert spark.table(idx.vectors_table).count() == emb.count()
     # every vector assigned to a valid frozen list
@@ -111,8 +111,8 @@ def test_recall_floor_vs_exact(ann_env):
     spark, idx = ann_env
     emb = load_table(spark, SF_SMALL, "embeddings")
     idx.init(emb.filter("vec_id % 3 = 0"))
-    idx.append(emb.filter("vec_id % 3 = 1"))
-    idx.append(emb.filter("vec_id % 3 = 2"))
+    idx.ingest(emb.filter("vec_id % 3 = 1"))
+    idx.ingest(emb.filter("vec_id % 3 = 2"))
     q = emb.filter("vec_id < 5")
     approx = {
         (r.query_id, r.neighbor_id)
@@ -147,7 +147,7 @@ def test_ivfpq_incremental_slicing_invariance(spark):
         idx = IncrementalIVFPQIndex(spark, name, m=8, ksub=16)
         idx.init(emb.filter("vec_id % 3 = 0"))
         for cond in slices:
-            idx.append(emb.filter(cond))
+            idx.ingest(emb.filter(cond))
         got = {
             (r.query_id, r.rank, r.neighbor_id, r.cosine)
             for r in idx.topk(q, k=10, rerank_source=emb).collect()
@@ -320,7 +320,7 @@ def test_ivfpq_rebucket_appended_index_invariants(spark):
     q = emb.filter("vec_id < 5")
     idx = IncrementalIVFPQIndex(spark, "ivfpq_rb_g", nlist=4, m=8, ksub=16)
     idx.init(emb.filter("vec_id % 3 = 0"))
-    idx.append(emb.filter("vec_id % 3 <> 0"))
+    idx.ingest(emb.filter("vec_id % 3 <> 0"))
 
     code_cols = [f"code_{j}" for j in range(idx.m)] + ["rn"]
     before_codes = sorted(
@@ -349,7 +349,7 @@ def test_ivfpq_rebucket_appended_index_invariants(spark):
     # the index keeps living: append encodes against the new centroids
     n0 = spark.table(idx.codes_table).count()
     extra = emb.selectExpr("vec_id + 1000000 AS vec_id", "embedding").limit(7)
-    idx.append(extra)
+    idx.ingest(extra)
     assert spark.table(idx.codes_table).count() == n0 + 7
     bad = (
         spark.table(idx.codes_table)
@@ -379,7 +379,7 @@ def test_ivfpq_pre_r16_codes_table_without_rn_still_works(spark):
 
     new = IncrementalIVFPQIndex(spark, "ivfpq_rn_new", m=8, ksub=16)
     new.init(init_slice)
-    new.append(rest)
+    new.ingest(rest)
     want = {
         (r.query_id, r.rank, r.neighbor_id, r.cosine)
         for r in new.topk(q, k=10, rerank_source=emb).collect()
@@ -393,7 +393,7 @@ def test_ivfpq_pre_r16_codes_table_without_rn_still_works(spark):
     spark.sql(f"DROP TABLE {old.codes_table}")
     write_bucketed(legacy, old.codes_table, ["bucket"], num_buckets=old.num_buckets)
     assert "rn" not in spark.table(old.codes_table).columns
-    old.append(rest)  # must match the legacy schema, not error
+    old.ingest(rest)  # must match the legacy schema, not error
     assert "rn" not in spark.table(old.codes_table).columns
     got = {
         (r.query_id, r.rank, r.neighbor_id, r.cosine)
@@ -454,7 +454,7 @@ def test_ivfpq_rebucket_crash_windows_roll_forward(spark):
             # the first thing to touch the index after a crash); an
             # empty slice exercises the recovery guard without
             # perturbing the expected result rows
-            fresh.append(emb.filter("vec_id < 0"))
+            fresh.ingest(emb.filter("vec_id < 0"))
             assert fresh.nlist == 16  # recovery ran before the encode
         got = sorted(
             tuple(r) for r in fresh.topk(q, k=10, nprobe=16).collect()

@@ -99,6 +99,70 @@ def test_probe_reads_index_bucketed(idx_env):
     assert "Bucketed: false" not in plan, plan[:2000]
 
 
+def _base_scans_behind_exchange(node, tables, exchanged=False, found=None):
+    """(scans of ``tables`` seen, those reaching their join through an
+    Exchange) in a physical plan tree."""
+    found = found if found is not None else ([], [])
+    name = node.nodeName()
+    if "Join" in name:
+        exchanged = False
+    elif "Exchange" in name:
+        exchanged = True
+    kids = node.children()
+    if kids.isEmpty() and any(t in name for t in tables):
+        found[0].append(name)
+        if exchanged:
+            found[1].append(name)
+    for i in range(kids.size()):
+        _base_scans_behind_exchange(kids.apply(i), tables, exchanged, found)
+    return found
+
+
+def test_ingest_slice_probe_keeps_base_colocated(idx_env, monkeypatch):
+    """The probe ingest_slice actually runs joins the bucketed base
+    tables on their own and the small part (committed deltas ∪ the
+    slice) beside them: no Exchange sits between a base
+    ``*_lsh_bands`` / ``*_lsh_hashes`` scan and its join. Probing the
+    union instead would shuffle the whole standing index."""
+    from pyspark.sql import functions as F
+
+    from dagster_etl_spark.sources.fixtures import load_table
+    from dagster_etl_spark.streaming.slicestore import SliceStore
+
+    spark, idx = idx_env
+    docs = load_table(spark, SF_SMALL, "documents")
+    idx.ingest(docs.filter(F.col("doc_id") % 3 == 0), threshold=THRESH)
+    assert idx.ingest_slice(docs.filter(F.col("doc_id") % 3 == 1), 5)
+
+    staged = {}
+    write = SliceStore.write
+
+    def record(self, component, slice_id, df, files=None):
+        staged[component] = df
+        return write(self, component, slice_id, df, files)
+
+    monkeypatch.setattr(SliceStore, "write", record)
+    assert idx.ingest_slice(docs.filter(F.col("doc_id") % 3 == 2), 6)
+
+    saved = {
+        k: spark.conf.get(k)
+        for k in ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.enabled")
+    }
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = staged["pairs"]._jdf.queryExecution().executedPlan()
+        tables = [f"default.{t}" for t in (idx.bands_table, idx.hashes_table)]
+        scans, behind = _base_scans_behind_exchange(plan, tables)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    # the bands probe and the hashes verify joins read the base
+    read = {s.rsplit(".", 1)[-1] for s in scans}
+    assert read == {idx.bands_table, idx.hashes_table}, plan.toString()[:3000]
+    assert not behind, (behind, plan.toString()[:3000])
+
+
 def test_reinit_after_drop_is_clean(idx_env):
     """A fresh index with the same name must not trip over leftovers
     (catalog entries or orphaned warehouse dirs) of the previous one —

@@ -609,84 +609,6 @@ def test_whole_stage_codegen_present(spark):
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
-def test_registry_fronts_driver_window_priority():
-    """The correctness driver checks the first 50 registry entries;
-    the priority list must actually front-load them and every priority
-    name must exist (a typo here would silently waste a window slot)."""
-    from dagster_etl_spark import registry
-
-    names = list(registry.all_queries())
-    pri = [n for n in registry._DRIVER_WINDOW_PRIORITY]
-    assert names[: len(pri)] == pri
-    # names past slot 50 are a DELIBERATE deferral (they ride on the
-    # builder's full ALLCHECK sweep and front the next round) — allow
-    # at most one so a bloated list can't silently starve the window
-    assert len(pri) <= 51
-
-
-@pytest.mark.rotation_tripwire
-def test_next_rotation_heads_derive_from_artifacts():
-    """r11 verdict task 6: the next round's rotation heads must be
-    COMPUTED from the artifacts, not hand-maintained. A registered
-    query has a driver-green row coming from either the newest
-    CORRECTNESS_r*.json (last round) or the current 50-slot window
-    (this round); anything in neither will be the stalest name in the
-    fleet next round and must be pre-declared in
-    registry._NEXT_ROTATION_HEADS. Set equality both ways: a missing
-    name means a mid-round registration was not pre-declared (the r10
-    and r11 process gap); an extra name means the tuple is stale.
-
-    r12 ADVICE: at round boundary the round driver writes
-    CORRECTNESS_rN.json for exactly the current window, which made
-    this test a SECOND deliberate red alongside
-    test_driver_window_rotates_vs_last_round. Only one tripwire needs
-    to force the rotation — when the newest artifact equals the
-    not-yet-rotated window, skip here and let the rotation test carry
-    the red."""
-    import json
-    import re
-    from pathlib import Path
-
-    from dagster_etl_spark import registry
-
-    root = Path(__file__).resolve().parents[1]
-    arts = sorted(
-        root.glob("CORRECTNESS_r*.json"),
-        key=lambda p: int(re.search(r"r(\d+)", p.name).group(1)),
-    )
-    if not arts:
-        pytest.skip("no correctness artifacts yet")
-    newest = set(json.loads(arts[-1].read_text()))
-    registered = list(registry.all_queries())
-    window = set(registered[:50])
-    if newest == window:
-        pytest.skip(
-            "round boundary: newest CORRECTNESS artifact is this window; "
-            "test_driver_window_rotates_vs_last_round forces the rotation"
-        )
-    expected = [n for n in registered if n not in newest and n not in window]
-    declared = list(registry._NEXT_ROTATION_HEADS)
-    assert sorted(declared) == sorted(expected), (
-        "registry._NEXT_ROTATION_HEADS out of sync with artifacts: "
-        f"missing={sorted(set(expected) - set(declared))} "
-        f"stale={sorted(set(declared) - set(expected))}"
-    )
-
-
-def test_registry_keeps_rotation_headroom():
-    """Perfect window disjointness round-over-round requires at least
-    50 queries OUTSIDE the 50-slot window (len(registry) - 50 >= 50).
-    If a round deletes queries below that line, the rotation test
-    above becomes unsatisfiable and rotation silently degrades to
-    partial — fail loudly here instead."""
-    from dagster_etl_spark import registry
-
-    n = len(registry.all_queries())
-    assert n - 50 >= 50, (
-        f"registry has {n} queries; need >= 100 for disjoint rotation"
-    )
-
-
 def test_allcheck_artifacts_cover_full_registry():
     """r10 process gap: three queries were registered AFTER the
     102-query ALLCHECK sweep, so they had no standing sweep row and
@@ -715,95 +637,6 @@ def test_allcheck_artifacts_cover_full_registry():
             f"{p.name} swept {total} queries but registry has {n}: "
             "re-run the ALLCHECK sweep after registering new queries"
         )
-
-
-@pytest.mark.rotation_tripwire
-def test_driver_window_rotates_vs_last_round():
-    """Rotation invariant (round-agnostic): the 50 names the driver
-    will check next must be disjoint from the most recent
-    CORRECTNESS_r*.json window — re-checking last round's set while
-    older queries age to 2+ rounds stale is exactly the r8 freshness
-    bug. Perfect disjointness is achievable iff
-    len(registry) - 50 >= 50; test_registry_keeps_rotation_headroom
-    pins that invariant so it stays provable as the registry grows
-    (115 registered queries at the r12 rotation; derive, don't trust:
-    test_registry_keeps_rotation_headroom pins the live count).
-
-    DELIBERATE lifecycle (r9 ADVICE adjudication): the newest artifact
-    is written by the round driver AT ROUND END, so the moment
-    CORRECTNESS_rN.json lands this test goes red and stays red until
-    the rN+1 rotation — that failure IS the tripwire that forces the
-    rotation to be the first commit of the next round. We keep the
-    strict compare-against-newest form on purpose: comparing against
-    arts[-2] whenever the head artifact equals the current window
-    would also pass for a never-rotated window at round N+1 (its set
-    equals artifact rN exactly), silently disarming the tripwire."""
-    import json
-    import re
-    from pathlib import Path
-
-    from dagster_etl_spark import registry
-
-    root = Path(__file__).resolve().parents[1]
-    arts = sorted(
-        root.glob("CORRECTNESS_r*.json"),
-        key=lambda p: int(re.search(r"r(\d+)", p.name).group(1)),
-    )
-    if not arts:
-        pytest.skip("no correctness artifacts yet")
-    last_window = set(json.loads(arts[-1].read_text()))
-    next_window = set(list(registry.all_queries())[:50])
-    overlap = next_window & last_window
-    assert not overlap, f"window repeats last round's queries: {sorted(overlap)}"
-
-
-def test_no_query_stale_beyond_three_rounds():
-    """r12 verdict task 7: staleness invariant. With 123 registered
-    queries and a 50-slot window the coverage cycle is ~3 rounds; as
-    the registry grows, a query could silently stop getting driver
-    rows. Pin the bound: every registered query must either be in the
-    CURRENT window (gets a row this round) or have a driver row in one
-    of the three newest CORRECTNESS artifacts (a row within the last
-    three rounds). A name in neither has gone >3 rounds without a
-    fresh oracle check — rotate it in or shrink the registry."""
-    import json
-    import re
-    from pathlib import Path
-
-    from dagster_etl_spark import registry
-
-    root = Path(__file__).resolve().parents[1]
-    arts = sorted(
-        root.glob("CORRECTNESS_r*.json"),
-        key=lambda p: int(re.search(r"r(\d+)", p.name).group(1)),
-    )
-    if len(arts) < 3:
-        pytest.skip("need >= 3 correctness artifacts to measure staleness")
-    recent: set[str] = set()
-    all_seen: set[str] = set()
-    for p in arts:
-        names = set(json.loads(p.read_text()))
-        all_seen |= names
-        if p in arts[-3:]:
-            recent |= names
-    registered = list(registry.all_queries())
-    window = set(registered[:50])
-    # names never seen in ANY artifact are mid-round registrations —
-    # the heads-derivation test forces them to front the NEXT window,
-    # so their first row lands within the bound by construction. A
-    # name seen before but in neither the window nor the last three
-    # artifacts has genuinely aged out — exactly the failure this
-    # test exists to catch (heads membership does NOT excuse it: an
-    # overflowing head set is the mechanism by which it would happen).
-    stale = [
-        n
-        for n in registered
-        if n not in window and n not in recent and n in all_seen
-    ]
-    assert not stale, (
-        f"{len(stale)} queries have no driver row in 3 rounds and are not "
-        f"in the current window: {sorted(stale)}"
-    )
 
 
 def test_session_conf_contract(spark):

@@ -152,6 +152,14 @@ def test_bm25_staged_df_equals_direct_count(spark, tmp_path):
     idx = IncrementalBM25Index(spark, "rcv_bm25_dfderive")
     idx.drop()
     store = idx._slice_store()
+
+    def kill(label):
+        if label == "staged_postings":
+            raise RuntimeError("injected kill")
+
+    with pytest.raises(RuntimeError, match="injected kill"):
+        idx.ingest_slice(docs, 0, fault_hook=kill)
+    assert store.committed() == []
     assert idx.ingest_slice(docs, 0) is True
     staged_df = store.read_slice(spark, "df", 0)
     direct = (
@@ -377,7 +385,7 @@ def test_float_ivf_kill_restart_equals_oneshot(spark, tmp_path, fail_at):
     want_idx = IncrementalANNIndex(spark, "rcv_fivf_want")
     want_idx.drop()
     want_idx.init(init_slice)
-    want_idx.append(rest)
+    want_idx.ingest(rest)
     want = _rows(want_idx.topk(q, k=10, nprobe=8))
     got = _rows(idx.topk(q, k=10, nprobe=8))
     assert got == want and len(want) == 50
@@ -422,7 +430,7 @@ def test_ivfpq_kill_restart_equals_oneshot(spark, tmp_path, fail_at):
     want_idx = IncrementalIVFPQIndex(spark, "rcv_ivfpq_want", m=8, ksub=16)
     want_idx.drop()
     want_idx.init(init_slice)
-    want_idx.append(rest)
+    want_idx.ingest(rest)
     want = _rows(want_idx.topk(q, k=10, rerank=50, rerank_source=emb))
     got = _rows(idx.topk(q, k=10, rerank=50, rerank_source=emb))
     assert got == want and len(want) == 50

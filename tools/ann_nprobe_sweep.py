@@ -117,7 +117,7 @@ def main() -> None:
             ]
             idx.init(slices[0])
             for sl in slices[1:]:
-                idx.append(sl)
+                idx.ingest(sl)
             points = []
             for nprobe in (1, 2, 4, 8, 16):
                 if nprobe > nlist:
@@ -178,7 +178,7 @@ def main() -> None:
             ]
             idx.init(slices[0])
             for sl in slices[1:]:
-                idx.append(sl)
+                idx.ingest(sl)
             points = []
             for nprobe in (1, 2, 4, 8, 16):
                 if nprobe > nlist:

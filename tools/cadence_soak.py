@@ -26,9 +26,9 @@ scale_trend_ingest.py):
   sliced by order key), dim side static;
 * IncrementalNearDupIndex.ingest — one ciphered documents copy per
   day (5k docs);
-* IncrementalANNIndex.append — one rotated embeddings copy per day
+* IncrementalANNIndex.ingest — one rotated embeddings copy per day
   (2k vectors);
-* IncrementalIVFPQIndex.append (r12, the 4th incremental surface) —
+* IncrementalIVFPQIndex.ingest (r12, the 4th incremental surface) —
   the same rotated embeddings slice encoded against the frozen
   IVF+PQ quantizers into the bucketed 8-byte-code table.
 
@@ -173,13 +173,13 @@ def main() -> None:
         if day == 0:
             s, _ = _timed(lambda: ann.init(esl))
         else:
-            s, _ = _timed(lambda: ann.append(esl))
+            s, _ = _timed(lambda: ann.ingest(esl))
         surfaces["ann"]["ingest_secs"].append(round(s, 3))
 
         if day == 0:
             s, _ = _timed(lambda: ivfpq.init(esl))
         else:
-            s, _ = _timed(lambda: ivfpq.append(esl))
+            s, _ = _timed(lambda: ivfpq.ingest(esl))
         surfaces["ivfpq"]["ingest_secs"].append(round(s, 3))
 
         print(

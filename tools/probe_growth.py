@@ -169,7 +169,7 @@ def _ivfpq_series(spark, sf_dir: str) -> tuple[list[dict], int]:
         if d == 0:
             idx.init(day_slice)  # freezes both quantizers on day 1
         else:
-            idx.append(day_slice)
+            idx.ingest(day_slice)
         append_s = time.perf_counter() - t0
         compacted = None
         if (d + 1) % COMPACT_EVERY == 0:

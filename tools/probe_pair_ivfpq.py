@@ -188,8 +188,8 @@ def main() -> None:
         )
         t0 = time.perf_counter()
         idx.init(emb.filter("vec_id % 3 = 0"))
-        idx.append(emb.filter("vec_id % 3 = 1"))
-        idx.append(emb.filter("vec_id % 3 = 2"))
+        idx.ingest(emb.filter("vec_id % 3 = 1"))
+        idx.ingest(emb.filter("vec_id % 3 = 2"))
         rebuild_s = time.perf_counter() - t0
         idx.compact()
 

@@ -128,7 +128,7 @@ def main() -> None:
                 "vec_id", F.col("vec_id") + r * n_emb * 200
             )
             t0 = time.perf_counter()
-            ann.append(sl)
+            ann.ingest(sl)
             appends.append(time.perf_counter() - t0)
         searches = []
         q = emb.filter("vec_id < 5")
