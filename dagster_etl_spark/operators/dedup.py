@@ -1093,7 +1093,6 @@ def connected_components(
     id_b: str = "id_b",
     max_iter: int = 20,
     checkpoint_every: int = 3,
-    precontract_trivial: bool = False,
 ) -> DataFrame:
     """Cluster near-dup pairs into groups: iterative min-label
     propagation to a fixpoint. Returns (doc_id, cluster_id) with
@@ -1111,30 +1110,6 @@ def connected_components(
     components) still exit on the fixpoint check after 2-3 rounds.
     If ``max_iter`` rounds pass without a fixpoint the function raises
     rather than return a wrong clustering.
-
-    TRIVIAL-COMPONENT PRE-CONTRACTION (r18, r17 verdict task 3;
-    default OFF — probe outcome below): a pair both of whose
-    endpoints have degree 1 IS its whole component and needs no
-    fixpoint — ``precontract_trivial`` labels those directly (one
-    degree aggregate + two semi-joins) and sends only the chained
-    core through the loop. The split is exact (property-tested
-    against the plain path): the trivial label — the smaller endpoint
-    — equals what propagation would assign, no trivial node can
-    appear in the core, and duplicate input pairs only inflate
-    degrees, which routes them to the loop (the safe direction).
-
-    PROBE OUTCOME (DEDUPABLATE_X200_r18, the honest-ablation sibling
-    of CCPROBE_r17): trivial pairs are REAL — 87% of the sf0.1 LSH
-    pair set (223/256) — but the wall win is not. Where the pair set
-    is small, the fixpoint is cheap with or without the split; on the
-    x200 cipher curation graph, where CC time IS material, pairs sit
-    in large cross-copy components (digit-heavy shingles match across
-    letter-translated copies) and the trivial fraction collapses —
-    the ablation measured precontract-only at 30.5 s vs 29.7 s
-    baseline (no win, the split machinery costs what it saves) while
-    the exact-dup collapse alone took the stage to 16.8 s. Default
-    False; turn it on for graphs known to be isolated-pair-heavy AT
-    VOLUME, a regime neither fixture axis produces.
 
     Lineage is truncated with ``localCheckpoint`` every
     ``checkpoint_every`` rounds: persist() alone keeps the full
@@ -1157,33 +1132,6 @@ def connected_components(
     # when the frame goes out of scope. At the 100 TB design point use
     # a reliable checkpoint() here for lost-executor recovery (same
     # trade documented above for the label chain).
-    trivial_labels = None
-    if precontract_trivial:
-        # checkpoint the PAIR LIST once (it is the expensive upstream
-        # lineage — LSH band join + exact-Jaccard verify) so the
-        # degree split and the loop both read a leaf scan
-        plist = (
-            pairs.selectExpr(f"{id_a} AS __pa", f"{id_b} AS __pb")
-            .localCheckpoint(eager=True)
-        )
-        deg = (
-            plist.selectExpr("explode(array(__pa, __pb)) AS __n")
-            .groupBy("__n")
-            .agg(F.count(F.lit(1)).alias("__d"))
-        )
-        d1 = deg.filter("__d = 1").select("__n")
-        triv = (
-            plist.join(d1.selectExpr("__n AS __pa"), on="__pa", how="left_semi")
-            .join(d1.selectExpr("__n AS __pb"), on="__pb", how="left_semi")
-        )
-        trivial_labels = triv.selectExpr(
-            "explode(array(__pa, __pb)) AS node",
-            "least(__pa, __pb) AS label",
-        )
-        pairs = (
-            plist.join(triv, on=["__pa", "__pb"], how="left_anti")
-            .selectExpr(f"__pa AS {id_a}", f"__pb AS {id_b}")
-        )
     edges = (
         pairs.selectExpr(f"{id_a} AS src", f"{id_b} AS dst")
         .unionByName(pairs.selectExpr(f"{id_b} AS src", f"{id_a} AS dst"))
@@ -1253,133 +1201,7 @@ def connected_components(
         # Bounded either way: one edge set + <= 2 label rounds live at a
         # time, and repeated CC calls in a long session drain on GC.
         edges.unpersist()
-    out = labels
-    if trivial_labels is not None:
-        # disjoint by construction: a degree-1-both node's only edge is
-        # the trivial pair, so it cannot appear in the core labels
-        out = out.unionByName(trivial_labels)
-    return track(out).selectExpr("node AS doc_id", "label AS cluster_id")
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-    checkpoint_every: int = 2,
-) -> DataFrame:
-    """Alternating large-star / small-star connected components
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) — the r16 verdict's task-6 challenger to
-    :func:`connected_components`' label-propagation + pointer-jumping.
-    Same contract: (doc_id, cluster_id) with cluster_id = min doc id
-    of the component, only over nodes that appear in ``pairs``.
-
-    PROBE OUTCOME (CCPROBE_r17, tools/cc_probe.py): on the realistic
-    near-dup graph (LSH pairs over the cipher corpus — many small
-    components) AND on a 2000-node chain (the diameter worst case),
-    label propagation WINS — the stars' per-round machinery (two
-    rewrite steps + a set-equality fixpoint probe) costs more jobs
-    than propagation's hop+jump, and near-dup graphs converge in 2-3
-    rounds either way, so round COUNT never differentiates them. The
-    propagation form stays the paired implementation inside
-    dedup_clusters / curation; this form is kept as the measured
-    alternative (its edge-contraction shape wins only when the edge
-    set dwarfs the node set — not the near-dup regime).
-
-    Per round, two edge-rewrite steps, each ONE aggregate + ONE
-    co-keyed join (no separate label table, no label self-join):
-
-    * LARGE-STAR: for every center c (edges symmetrized), connect each
-      strictly-larger neighbor to m = min(N(c) ∪ {c}). Strictly-larger
-      keeps it a contraction (no edge ping-pong) while m pulls whole
-      neighborhoods toward the component minimum.
-    * SMALL-STAR: direct edges larger -> smaller; for every center h,
-      connect h and all its smaller neighbors to their minimum.
-
-    Both steps preserve connectivity exactly (every rewritten edge
-    stays within its component, and reachability to the minimum is
-    monotone), and the fixpoint is the star forest rooted at component
-    minima — read the labels straight off the final edge set. The
-    edge set CONTRACTS as it goes (duplicate rewrites collapse in the
-    canonical-form distinct), which is the structural difference from
-    label propagation: propagation carries a row per NODE per round
-    plus the full static edge set through two joins; the stars carry
-    only the shrinking edge set.
-
-    Fixpoint = a round that changes nothing (edge count stable AND the
-    set unchanged — subtract-limit-1 probe, same discipline as the
-    propagation form's changed-count). Raises after ``max_iter``
-    rounds like its sibling. Lineage: localCheckpoint every
-    ``checkpoint_every`` rounds (same 100 TB reliable-checkpoint note
-    as :func:`connected_components`)."""
-    edges = (
-        pairs.selectExpr(f"{id_a} AS a", f"{id_b} AS b")
-        .filter("a <> b")
-        .selectExpr("least(a, b) AS u", "greatest(a, b) AS v")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    for it in range(max_iter):
-        # LARGE-STAR over the symmetrized view
-        sym = edges.selectExpr("u AS c", "v AS n").unionByName(
-            edges.selectExpr("v AS c", "u AS n")
-        )
-        mins = sym.groupBy("c").agg(
-            F.least(F.min("n"), F.col("c")).alias("m")
-        )
-        ls = (
-            sym.join(mins, on="c")
-            .filter("n > c")
-            .selectExpr("least(n, m) AS u", "greatest(n, m) AS v")
-            .filter("u <> v")
-            .distinct()
-        )
-        # SMALL-STAR over larger->smaller edges (canonical (u, v) has
-        # u < v, so v is the larger endpoint = the center)
-        smins = ls.groupBy("v").agg(F.min("u").alias("m"))
-        ss = (
-            ls.join(smins, on="v")
-            # one pass emits both rewrites: each smaller neighbor u and
-            # the center v both connect to the center's minimum
-            .selectExpr("explode(array(u, v)) AS n", "m")
-            .selectExpr("least(n, m) AS u", "greatest(n, m) AS v")
-            .filter("u <> v")
-            .distinct()
-        )
-        if (it + 1) % checkpoint_every == 0:
-            ss = ss.localCheckpoint(eager=True)
-        else:
-            ss = ss.persist()
-        changed = (
-            ss.exceptAll(edges).limit(1).count()
-            + edges.exceptAll(ss).limit(1).count()
-        )
-        edges.unpersist()
-        edges = ss
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not reach a fixpoint in "
-            f"{max_iter} rounds — raise max_iter"
-        )
-    # star forest: every edge is (root=u, node=v) with u the component
-    # min (roots never appear as v); label nodes off the edges, and
-    # every input node with no surviving edge (roots; self-loop-only
-    # nodes, which the propagation form also labels) labels itself
-    labeled = edges.selectExpr("v AS doc_id", "u AS cluster_id")
-    all_nodes = (
-        pairs.selectExpr(f"explode(array({id_a}, {id_b})) AS doc_id")
-        .distinct()
-    )
-    return track(
-        all_nodes.join(labeled, on="doc_id", how="left").selectExpr(
-            "doc_id", "coalesce(cluster_id, doc_id) AS cluster_id"
-        )
-    )
+    return track(labels).selectExpr("node AS doc_id", "label AS cluster_id")
 
 
 def dedup_clusters(
@@ -1388,7 +1210,6 @@ def dedup_clusters(
     id_col: str = "doc_id",
     threshold: float = 0.5,
     collapse_exact: bool = True,
-    precontract_trivial: bool = False,
     **minhash_kwargs,
 ) -> DataFrame:
     """End-to-end near-dup clustering: MinHash pairs -> connected
@@ -1408,11 +1229,8 @@ def dedup_clusters(
     identical texts have identical shingle-hash sets, so they always
     band together and verify at Jaccard 1.0 >= any threshold <= 1 —
     the collapsed clustering is the identical partition with
-    quadratic-in-g pair volume removed. The CC-side trivial-pair split
-    (``precontract_trivial``) is available but default-off — the
-    DEDUPABLATE_X200_r18 ablation measured the collapse as the whole
-    win (dedup stage 29.7 -> 16.8 s) and the split as a wash on the
-    corpora the fixtures produce (see connected_components)."""
+    quadratic-in-g pair volume removed (DEDUPABLATE_X200_r18: dedup
+    stage 29.7 -> 16.8 s on the x200 curation graph)."""
     if collapse_exact and threshold <= 1.0:
         k = minhash_kwargs.get("k", 3)
         tok_n = x.xsize(x.tokens(text_col, x.SPARK), x.SPARK)
@@ -1430,9 +1248,9 @@ def dedup_clusters(
             rep_docs, text_col=text_col, id_col=id_col,
             threshold=threshold, **minhash_kwargs,
         )
-        comp = connected_components(
-            pairs, precontract_trivial=precontract_trivial
-        ).selectExpr("doc_id AS __rep", "cluster_id")
+        comp = connected_components(pairs).selectExpr(
+            "doc_id AS __rep", "cluster_id"
+        )
         # expand: every doc inherits its representative's label; a rep
         # with no near-dup partner labels its whole exact group by
         # itself (= the group's min id — the clique's label)
@@ -1444,9 +1262,7 @@ def dedup_clusters(
             df, text_col=text_col, id_col=id_col,
             threshold=threshold, **minhash_kwargs,
         )
-        labels = connected_components(
-            pairs, precontract_trivial=precontract_trivial
-        )
+        labels = connected_components(pairs)
     all_docs = df.select(F.col(id_col).alias("doc_id"))
     clustered = all_docs.join(labels, on="doc_id", how="left").selectExpr(
         "doc_id", "coalesce(cluster_id, doc_id) AS cluster_id"

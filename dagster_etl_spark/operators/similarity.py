@@ -483,31 +483,6 @@ def pq_codebooks(
     return books
 
 
-def _pq_code_expr(vec_col: str, book: list[list[float]], j: int, ds: int) -> str:
-    """argmin-L2 codeword index for subspace ``j`` — explicit
-    per-codeword squared-distance chains into ONE primitive double
-    array; the code is the position of the array minimum
-    (array_position returns the FIRST match, so exact ties pick the
-    lower index, mirrored by the oracle's ORDER BY dd, cidx). A
-    struct-array sort computes the same thing but allocates and sorts
-    ksub objects per subspace per row — measured 66 us/row of pure
-    allocation churn at m=8, ksub=16; the primitive-array form stays
-    in codegen with two flat arrays."""
-    base = j * ds
-    chains = []
-    for w in book:
-        terms = " + ".join(
-            f"(CAST(element_at({vec_col}, {base + t + 1}) AS DOUBLE) - "
-            f"{w[t]!r}D) * "
-            f"(CAST(element_at({vec_col}, {base + t + 1}) AS DOUBLE) - "
-            f"{w[t]!r}D)"
-            for t in range(ds)
-        )
-        chains.append(f"({terms})")
-    arr = f"array({', '.join(chains)})"
-    return f"CAST(array_position({arr}, array_min({arr})) - 1 AS INT)"
-
-
 def _pq_dist_chain_exprs(
     vec_col: str, book: list[list[float]], j: int, ds: int
 ) -> list[str]:

@@ -1509,7 +1509,7 @@ class IncrementalUnigramLM(StandingState):
     def _stage(self, store, docs: DataFrame, slice_id: int):
         """Stage the term counts and the totals row of one slice — one
         tokenize pass (aggregate outputs: AQE already coalesces their
-        writes, no file budget). ``streaming/drift_monitor.py`` feeds
+        writes, no file budget). ``streaming/recovery.py`` feeds
         this from foreachBatch, where a plain append would double-count
         a checkpoint-replayed batch in the standing LM."""
         with persisted(self._tokenized(docs).filter("dl > 0")) as g:

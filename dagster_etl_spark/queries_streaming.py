@@ -233,11 +233,11 @@ from dagster_etl_spark.queries_llm import JACCARD_T, _minhash_oracle
     "is slicing-agnostic), so the same oracle verifies it bit-exactly.",
 )
 def q_streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dagster_etl_spark.streaming.neardup_ingest import (
-        streaming_neardup_ingest,
-    )
+    from dagster_etl_spark.operators.dedup import IncrementalNearDupIndex
+    from dagster_etl_spark.streaming.recovery import stream_documents
 
-    return streaming_neardup_ingest(spark, sf_dir)
+    idx = stream_documents(spark, sf_dir, IncrementalNearDupIndex, threshold=0.2)
+    return idx.pairs()
 
 
 def _ws_oracle() -> str:
@@ -326,9 +326,13 @@ def _bm25_stream_oracle() -> str:
     "integer-for-integer — same oracle, hash-exact.",
 )
 def q_streaming_bm25_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dagster_etl_spark.streaming.bm25_ingest import streaming_bm25_ingest
+    from dagster_etl_spark.operators.text import IncrementalBM25Index
+    from dagster_etl_spark.sources.fixtures import load_table
+    from dagster_etl_spark.streaming.recovery import stream_documents
 
-    return streaming_bm25_ingest(spark, sf_dir)
+    idx = stream_documents(spark, sf_dir, IncrementalBM25Index)
+    docs = load_table(spark, sf_dir, "documents")
+    return idx.topk(docs.filter("doc_id % 97 = 0").select("doc_id", "text"), k=10)
 
 
 def _drift_stream_oracle() -> str:
@@ -351,9 +355,12 @@ def _drift_stream_oracle() -> str:
     "is the alerting signal and is unit-tested for its invariants.",
 )
 def q_streaming_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dagster_etl_spark.streaming.drift_monitor import streaming_drift_ingest
+    from dagster_etl_spark.operators.text import IncrementalUnigramLM
+    from dagster_etl_spark.sources.fixtures import load_table
+    from dagster_etl_spark.streaming.recovery import stream_documents
 
-    return streaming_drift_ingest(spark, sf_dir)
+    lm = stream_documents(spark, sf_dir, IncrementalUnigramLM)
+    return lm.drift(load_table(spark, sf_dir, "documents"))
 
 
 def _qclf_stream_oracle() -> str:
@@ -407,6 +414,9 @@ def _dsir_stream_oracle() -> str:
     "same oracle, hash-exact.",
 )
 def q_streaming_dsir_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dagster_etl_spark.streaming.dsir_ingest import streaming_dsir_ingest
+    from dagster_etl_spark.operators.text import IncrementalDSIRModel
+    from dagster_etl_spark.sources.fixtures import load_table
+    from dagster_etl_spark.streaming.recovery import stream_documents
 
-    return streaming_dsir_ingest(spark, sf_dir)
+    m = stream_documents(spark, sf_dir, IncrementalDSIRModel)
+    return m.select(load_table(spark, sf_dir, "documents"), k=25)

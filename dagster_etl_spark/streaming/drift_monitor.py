@@ -1,18 +1,18 @@
-"""Streaming drift monitor: the IncrementalUnigramLM fed by a
-Structured Streaming source, one ingest per micro-batch via
-``foreachBatch``, with a per-batch drift probe — the production
-telemetry loop that catches a crawl feed going off-distribution the
-micro-batch it happens, not at the end of the day.
+"""Streaming drift monitor: the IncrementalUnigramLM fed by a stream,
+with a per-batch drift probe — the production telemetry loop that
+catches a crawl feed going off-distribution the micro-batch it
+happens, not at the end of the day.
 
 Two guarantees, split by surface:
 
 * The STANDING STATE is additive (term counts, totals) with
-  quantization deferred to probe time, so the post-stream
-  ``drift(full corpus)`` equals the one-shot
+  quantization deferred to probe time, so after the registered
+  ``streaming_drift_monitor`` query streams the corpus into the LM
+  (exactly once per batch, through the shared file-drop driver in
+  streaming/recovery.py) ``drift(full corpus)`` equals the one-shot
   :func:`~dagster_etl_spark.operators.text.corpus_drift_tv` over the
   union exactly, however the stream chops it — the registered query
-  reuses the one-shot oracle unchanged (the streaming_bm25_ingest
-  pattern).
+  reuses the one-shot oracle unchanged.
 * The PER-BATCH probes (each batch's slices vs the LM as of the
   PREVIOUS batch) are the monitoring signal: ``batch_drift_log``
   returns them as (batch_id, slice, n_tokens, tv_scaled, tv) rows.
@@ -21,17 +21,6 @@ Two guarantees, split by surface:
   for their invariants (exactness vs a replayed incremental model,
   [0,1] bounds) rather than oracle-hashed.
 
-foreachBatch is the boundary for the same reason as the BM25 ingest:
-an ingest is a multi-table append step and Structured Streaming gives
-at-least-once delivery to foreachBatch. Since r17 the batch body is
-``ingest_slice`` — the EXACTLY-ONCE slice-store path
-(streaming/slicestore.py): a replayed batch rewrites its own slice
-directory with identical rows and a replay of a committed slice is a
-no-op, so a crash at ANY point recovers to state bit-identical to an
-uninterrupted run (kill/restart-tested in
-tests/test_streaming_recovery.py — this closed the r16 verdict's
-"replay double-counts the standing LM" window).
-
 Reference parity note: the reference is batch-only (SURVEY §2.7); this
 generalizes its daily-reprocessing contract to a continuously fed
 quality monitor.
@@ -39,77 +28,7 @@ quality monitor.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
-
-
-def streaming_drift_ingest(
-    spark: SparkSession,
-    sf_dir: str,
-    n_files: int = 4,
-    slice_col: str = "lang",
-    work_dir: str | None = None,
-    fail_at: tuple[int, str] | None = None,
-) -> DataFrame:
-    """Stream the documents fixture through the incremental LM in
-    ``n_files`` micro-batches (exactly-once via ingest_slice), then
-    return the standing-state drift of the full corpus per slice —
-    exactly corpus_drift_tv's output.
-
-    ``work_dir`` pins the scratch root so a second call recovers from
-    the same checkpoint (freshness derives from {work}/docs being
-    fully committed — its parquet _SUCCESS marker,
-    the r16-ADVICE convention); ``fail_at=(batch_id, hook_label)``
-    injects a crash at that ingest_slice fault hook — hook labels:
-    staged_counts, staged_totals, post_commit."""
-    from dagster_etl_spark.operators.text import IncrementalUnigramLM
-    from dagster_etl_spark.scratch import scratch_dir
-    from dagster_etl_spark.sources.fixtures import load_table
-    from dagster_etl_spark.sources.lake import staged_complete
-
-    sfx = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    docs = load_table(spark, sf_dir, "documents")
-    work = scratch_dir(f"stream_drift_{sfx}") if work_dir is None else work_dir
-    in_dir = f"{work}/docs"
-    fresh = not staged_complete(spark, in_dir)
-    # LM identity follows the work dir: a pinned-work recovery call
-    # must find the crashed run's slice region, and two work dirs must
-    # never collide on leftover standing state
-    wid = hashlib.md5(work.encode()).hexdigest()[:8]
-    lm = IncrementalUnigramLM(spark, f"sdrift_{wid}")
-    if fresh:
-        docs.repartition(n_files).write.mode("overwrite").parquet(in_dir)
-        lm.drop()  # fresh rebuild (correctness surface)
-    schema = spark.read.parquet(in_dir).schema
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-
-        def hook(label: str) -> None:
-            if fail_at is not None and fail_at == (batch_id, label):
-                raise RuntimeError(
-                    f"injected kill at batch {batch_id} / {label}"
-                )
-
-        lm.ingest_slice(batch_df, batch_id, fault_hook=hook)
-
-    q = (
-        stream.writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    lm.compact_slices()
-    return lm.drift(docs, slice_col=slice_col)
 
 
 def batch_drift_log(

@@ -34,8 +34,6 @@ pattern (etl/common/validation.py) applied to model-gated quality.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,78 +41,52 @@ from pyspark.sql import functions as F
 def streaming_quality_score(
     spark: SparkSession,
     sf_dir: str,
-    n_files: int = 4,
     work_dir: str | None = None,
     fail_at: tuple[int, str] | None = None,
 ) -> DataFrame:
-    """Stream the documents fixture through the quality classifier in
-    ``n_files`` micro-batches, writing scored rows + per-batch keep
+    """Stream the documents fixture through the quality classifier as
+    micro-batches of the shared file-drop driver
+    (streaming/recovery.py), writing scored rows + per-batch keep
     rates; returns the scored table, which equals the one-shot
     :func:`~dagster_etl_spark.operators.text.quality_classifier_score`
     over the full corpus bit-for-bit (frozen model, per-doc scores —
     the registered query reuses the one-shot oracle unchanged).
 
-    ``work_dir`` pins the scratch root so a SECOND call recovers from
-    the same checkpoint instead of rebuilding (the kill/restart test's
-    lever — the default scratch_dir() wipes on re-request).
-    ``fail_at=(batch_id, 'scored'|'rates')`` injects a crash after
-    that write, the same harness pattern as streaming/recovery.py."""
+    ``work_dir`` pins the run so a second call recovers from the same
+    checkpoint; ``fail_at=(batch_id, 'scored'|'rates')`` injects a
+    crash after that write."""
     from dagster_etl_spark.operators.text import quality_classifier_score
-    from dagster_etl_spark.scratch import scratch_dir
     from dagster_etl_spark.sources.fixtures import load_table
-
-    sfx = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    docs = load_table(spark, sf_dir, "documents")
-    work = scratch_dir(f"stream_qclf_{sfx}") if work_dir is None else work_dir
-    in_dir = f"{work}/docs"
-    out_dir = f"{work}/scored"
-    obs_dir = f"{work}/keep_rates"
-    # Freshness is a property of the WORK DIR, not of who named it
-    # (r16 ADVICE): a pinned work_dir whose docs staging doesn't exist
-    # yet is a FIRST call and must stage, not fail reading {work}/docs;
-    # one whose staging exists is a recovery call and must not restage.
-    # (scratch_dir() wipes on re-request, so the default path is always
-    # fresh by construction.)
-    from dagster_etl_spark.sources.lake import staged_complete
-
-    fresh = not staged_complete(spark, in_dir)
-    if fresh:
-        docs.repartition(n_files).write.mode("overwrite").parquet(in_dir)
-        from dagster_etl_spark.sources.lake import delete_path
-
-        delete_path(spark, out_dir)
-        delete_path(spark, obs_dir)
-    schema = spark.read.parquet(in_dir).schema
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
+    from dagster_etl_spark.sources.lake import delete_path
+    from dagster_etl_spark.streaming.recovery import (
+        run_recoverable_ingest,
+        stage_drop,
+        work_root,
     )
 
-    def score_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    work = work_root("qclf", sf_dir, work_dir)
+    out_dir = f"{work}/scored"
+    obs_dir = f"{work}/keep_rates"
+
+    def reset() -> None:
+        delete_path(spark, out_dir)
+        delete_path(spark, obs_dir)
+
+    in_dir = stage_drop(spark, load_table(spark, sf_dir, "documents"), work, reset)
+
+    def score_batch(batch_df: DataFrame, batch_id: int, fault_hook) -> None:
         scored = quality_classifier_score(batch_df)
         # batch-keyed overwrite = idempotent on checkpoint replay (the
         # dir name is NOT key=value form so the read below stays a plain
         # recursive file scan, no inferred partition column)
         scored.write.mode("overwrite").parquet(f"{out_dir}/b{batch_id}")
-        if fail_at is not None and fail_at == (batch_id, "scored"):
-            raise RuntimeError(f"injected kill at batch {batch_id} / scored")
+        fault_hook("scored")
         scored.agg(
             F.lit(batch_id).alias("batch_id"),
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum(F.col("keep").cast("long")).cast("long").alias("n_keep"),
         ).write.mode("overwrite").parquet(f"{obs_dir}/b{batch_id}")
-        if fail_at is not None and fail_at == (batch_id, "rates"):
-            raise RuntimeError(f"injected kill at batch {batch_id} / rates")
+        fault_hook("rates")
 
-    q = (
-        stream.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_recoverable_ingest(spark, in_dir, f"{work}/ckpt", score_batch, fail_at)
     return spark.read.option("recursiveFileLookup", "true").parquet(out_dir)

@@ -31,14 +31,14 @@ def streaming_weighted_sample(
     k: int = 20,
     group_col: str = "source",
     seed: int = 7,
-    n_files: int = 4,
     work_dir: str | None = None,
-    fail_at_batch: int | None = None,
+    fail_at: tuple[int, str] | None = None,
 ) -> DataFrame:
-    """Stream the documents fixture in ``n_files`` micro-batches,
-    maintaining the per-group bottom-k ticket state in foreachBatch;
-    return the final state — the exact weighted sample of the full
-    corpus (same oracle as the batch weighted_corpus_sample).
+    """Stream the documents fixture as micro-batches of the shared
+    file-drop driver (streaming/recovery.py), maintaining the
+    per-group bottom-k ticket state in foreachBatch; return the final
+    state — the exact weighted sample of the full corpus (same oracle
+    as the batch weighted_corpus_sample).
 
     Replay safety (r16): the merge is IDEMPOTENT — tickets are pure
     functions of (seed, id, weight) and the union dedups on (group,
@@ -46,56 +46,42 @@ def streaming_weighted_sample(
     the state write, before Spark's checkpoint commit) re-merges its
     own rows into an identical bottom-k. Without the dedup a replayed
     row would enter the window TWICE and its duplicate could evict a
-    legitimate doc from the k. ``work_dir`` pins the scratch root so a
-    second call recovers from the same checkpoint;
-    ``fail_at_batch`` injects a crash in exactly that window
+    legitimate doc from the k. ``work_dir`` pins the run so a second
+    call recovers from the same checkpoint; ``fail_at=(batch_id,
+    'state')`` injects a crash in exactly that window
     (tests/test_streaming_recovery.py)."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     from dagster_etl_spark.operators.sampling import _ticket_expr
     from dagster_etl_spark.functions import xdialect as x
-    from dagster_etl_spark.scratch import scratch_dir
     from dagster_etl_spark.sources.fixtures import load_table
+    from dagster_etl_spark.sources.lake import delete_path
+    from dagster_etl_spark.streaming.recovery import (
+        run_recoverable_ingest,
+        stage_drop,
+        work_root,
+    )
 
-    sfx = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", group_col, "n_chars"
     )
-    import os
-
-    work = scratch_dir(f"stream_ws_{sfx}") if work_dir is None else work_dir
-    in_dir = f"{work}/docs"
-    # Freshness is a property of the WORK DIR, not of who named it
-    # (r16 ADVICE): a pinned work_dir with no docs staging yet is a
-    # FIRST call and must stage; one with staging present must not.
-    # Gate on the parquet _SUCCESS marker, not bare dir existence
-    # (r17 ADVICE): a crash mid-staging leaves a partial dir that a
-    # recovery call must re-stage, not trust. (scratch_dir() wipes on
-    # re-request, so the default path is always fresh by construction.)
-    fresh = not os.path.isfile(os.path.join(in_dir, "_SUCCESS"))
+    work = work_root("ws", sf_dir, work_dir)
     # the state identity follows the WORK DIR (not just sf_dir): a
     # pinned-work recovery call must find the same table the crashed
     # run wrote, and two different work dirs must never collide on a
     # leftover warehouse location
-    wid = hashlib.md5(work.encode()).hexdigest()[:8]
-    state_table = f"ws_state_{wid}"
-    recovering = os.path.isdir(f"{work}/ckpt")
-    if fresh:
-        docs.repartition(n_files).write.mode("overwrite").parquet(in_dir)
-    if not recovering:
-        spark.sql(f"DROP TABLE IF EXISTS {state_table}")
-        from dagster_etl_spark.sources.lake import delete_path
+    state_table = f"ws_state_{hashlib.md5(work.encode()).hexdigest()[:8]}"
 
+    def reset() -> None:
+        spark.sql(f"DROP TABLE IF EXISTS {state_table}")
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         delete_path(spark, f"{warehouse}/{state_table}")
-    schema = spark.read.parquet(in_dir).schema
 
+    in_dir = stage_drop(spark, docs, work, reset)
     key = _ticket_expr("doc_id", weight_expr, seed, x.SPARK)
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def merge_batch(batch_df: DataFrame, batch_id: int, fault_hook) -> None:
         s = batch_df.sparkSession  # fresh per batch: relation cache safe
         keyed = batch_df.selectExpr("*", f"{key} AS ticket").filter(
             F.col("ticket").isNotNull()
@@ -120,22 +106,10 @@ def streaming_weighted_sample(
         s.createDataFrame(rows, merged.schema).write.mode(
             "overwrite"
         ).saveAsTable(state_table)
-        if fail_at_batch is not None and batch_id == fail_at_batch:
-            # the at-least-once window: state written, checkpoint not
-            # committed — the restart replays this batch
-            raise RuntimeError(f"injected kill at batch {batch_id}")
+        # the at-least-once window: state written, checkpoint not
+        # committed — the restart replays this batch
+        fault_hook("state")
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_recoverable_ingest(spark, in_dir, f"{work}/ckpt", merge_batch, fail_at)
     spark.catalog.refreshTable(state_table)
     return spark.table(state_table)

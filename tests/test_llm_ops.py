@@ -212,9 +212,6 @@ def test_connected_components_bounded_lineage(spark):
     # off a scan of checkpointed data with at most ~2 rounds above it —
     # each round is 2 joins (hop + pointer-jump), so <= 4 of those plus
     # the edge symmetrization join layers, never `iterations` deep.
-    # (precontract_trivial would add a constant 3 — two degree
-    # semi-joins + the core anti-join — but it is default-off after
-    # the DEDUPABLATE_X200_r18 ablation)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "LogicalRDD" in plan or "Scan ExistingRDD" in plan
     assert plan.count("Join") <= 6
@@ -2000,37 +1997,3 @@ def test_dedup_clusters_exact_collapse_is_equivalence_preserving(spark):
     assert labels[6] == 1  # near-dup joined the group's component
     assert labels[2] == 2 and labels[5] == 5  # short identicals separate
     assert labels[3] == 3
-
-
-def test_connected_components_precontract_matches_plain(spark):
-    """The trivial-pair split must be invisible in the output: isolated
-    pairs, a chain, a clique sharing a node with an isolated-looking
-    pair, and duplicate input pairs (which inflate degrees — routed to
-    the loop, the safe direction)."""
-    from pyspark.sql import Row
-
-    from dagster_etl_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [
-            Row(id_a=1, id_b=2),    # isolated pair -> trivial
-            Row(id_a=3, id_b=4),    # duplicated below -> NOT trivial
-            Row(id_a=3, id_b=4),
-            Row(id_a=10, id_b=11),  # chain 10-11-12
-            Row(id_a=11, id_b=12),
-            Row(id_a=20, id_b=21),  # triangle
-            Row(id_a=21, id_b=22),
-            Row(id_a=20, id_b=22),
-        ]
-    )
-    fast = {
-        (r.doc_id, r.cluster_id)
-        for r in connected_components(pairs, precontract_trivial=True).collect()
-    }
-    plain = {
-        (r.doc_id, r.cluster_id)
-        for r in connected_components(pairs, precontract_trivial=False).collect()
-    }
-    assert fast == plain
-    assert (2, 1) in fast and (4, 3) in fast and (12, 10) in fast
-    assert (22, 20) in fast

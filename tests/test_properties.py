@@ -280,22 +280,6 @@ def test_connected_components_matches_union_find(spark, edges):
     assert got == _union_find_components(edges)
 
 
-@given(edges=edge_lists)
-@settings(**SETTINGS)
-def test_connected_components_star_matches_union_find(spark, edges):
-    """The alternating large-star/small-star form (r17, the task-6
-    challenger) must agree with the same union-find model on random
-    graphs — self-loops, duplicate and reversed edges included."""
-    from dagster_etl_spark.operators.dedup import connected_components_star
-
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {
-        r.doc_id: r.cluster_id
-        for r in connected_components_star(pairs, max_iter=40).collect()
-    }
-    assert got == _union_find_components(edges)
-
-
 def test_connected_components_large_random_graph(spark):
     """One ~1k-edge seeded graph (long path chains + dense pockets +
     isolated pairs) — exercises multi-round convergence and the
@@ -307,10 +291,7 @@ def test_connected_components_large_random_graph(spark):
     edges += [(rng.randrange(300, 340), rng.randrange(300, 340)) for _ in range(400)]
     edges += [(1000 + 2 * i, 1001 + 2 * i) for i in range(200)]  # isolated pairs
     edges += [(rng.randrange(0, 1500), rng.randrange(0, 1500)) for _ in range(200)]
-    from dagster_etl_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from dagster_etl_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     want = _union_find_components(edges)
@@ -319,11 +300,6 @@ def test_connected_components_large_random_graph(spark):
         for r in connected_components(pairs, max_iter=60).collect()
     }
     assert got == want
-    got_star = {
-        r.doc_id: r.cluster_id
-        for r in connected_components_star(pairs, max_iter=60).collect()
-    }
-    assert got_star == want
 
 
 # -- Morton interleave vs a bit-twiddling model -------------------------------

@@ -330,33 +330,6 @@ def test_dsir_kill_restart_equals_oneshot(spark, tmp_path, fail_at):
     m.drop()
 
 
-def test_streaming_drift_ingest_kill_restart_equals_oneshot(spark, tmp_path):
-    """End-to-end: the registered streaming drift monitor itself killed
-    inside foreachBatch (post-commit — the at-least-once window that
-    used to double-count the standing LM, r16 verdict defect #1) and
-    restarted from the same pinned work dir; the recovered drift table
-    equals the uninterrupted one-shot corpus_drift_tv exactly."""
-    import os
-
-    from dagster_etl_spark.operators.text import corpus_drift_tv
-    from dagster_etl_spark.sources.fixtures import load_table
-    from dagster_etl_spark.streaming.drift_monitor import (
-        streaming_drift_ingest,
-    )
-
-    work = str(tmp_path / "driftwork")
-    os.makedirs(work)
-    with pytest.raises(StreamingQueryException) as exc:
-        streaming_drift_ingest(
-            spark, SF_SMALL, work_dir=work, fail_at=(1, "post_commit")
-        )
-    assert "injected kill" in str(exc.value)
-
-    got = _rows(streaming_drift_ingest(spark, SF_SMALL, work_dir=work))
-    want = _rows(corpus_drift_tv(load_table(spark, SF_SMALL, "documents")))
-    assert got == want and len(want) > 0
-
-
 @pytest.mark.parametrize("fail_at", [(2, "staged_vectors"), (1, "post_commit")])
 def test_float_ivf_kill_restart_equals_oneshot(spark, tmp_path, fail_at):
     """r17: the float-IVF member of the slice-store family — same
@@ -443,27 +416,80 @@ def test_ivfpq_kill_restart_equals_oneshot(spark, tmp_path, fail_at):
     want_idx.drop()
 
 
-def test_streaming_dsir_ingest_kill_restart_equals_oneshot(spark, tmp_path):
-    """End-to-end for the registered streaming DSIR query: kill inside
-    foreachBatch post-commit, restart from the same pinned work dir;
-    the recovered selection equals the one-shot dsir_select exactly."""
-    import os
+def _streamed_surface(kind):
+    """(index class, ingest_slice options, the registered query's read,
+    the one-shot operator) for each document stream registered in
+    queries_streaming."""
+    from dagster_etl_spark.operators.dedup import (
+        IncrementalNearDupIndex,
+        minhash_neardup_pairs,
+    )
+    from dagster_etl_spark.operators.text import (
+        IncrementalBM25Index,
+        IncrementalDSIRModel,
+        IncrementalUnigramLM,
+        bm25_topk_docs,
+        corpus_drift_tv,
+        dsir_select,
+    )
 
-    from dagster_etl_spark.operators.text import dsir_select
+    return {
+        "bm25": (
+            IncrementalBM25Index,
+            {},
+            lambda idx, docs: idx.topk(
+                docs.filter("doc_id % 97 = 0").select("doc_id", "text"), k=10
+            ),
+            lambda docs: bm25_topk_docs(docs).select(
+                "query_id", "doc_id", "score_scaled", "score", "rank"
+            ),
+        ),
+        "neardup": (
+            IncrementalNearDupIndex,
+            {"threshold": 0.2},
+            lambda idx, docs: idx.pairs(),
+            lambda docs: minhash_neardup_pairs(docs, threshold=0.2),
+        ),
+        "drift": (
+            IncrementalUnigramLM,
+            {},
+            lambda lm, docs: lm.drift(docs),
+            corpus_drift_tv,
+        ),
+        "dsir": (
+            IncrementalDSIRModel,
+            {},
+            lambda m, docs: m.select(docs, k=25),
+            dsir_select,
+        ),
+    }[kind]
+
+
+@pytest.mark.parametrize("kind", ["bm25", "neardup", "drift", "dsir"])
+def test_streamed_index_kill_restart_equals_oneshot(spark, tmp_path, kind):
+    """End-to-end for each registered index stream: the shared file-drop
+    driver killed inside foreachBatch post-commit (the at-least-once
+    window where a replay would double-count the standing state) and
+    restarted from the same pinned work dir; the recovered read equals
+    the uninterrupted one-shot operator exactly."""
     from dagster_etl_spark.sources.fixtures import load_table
-    from dagster_etl_spark.streaming.dsir_ingest import streaming_dsir_ingest
+    from dagster_etl_spark.streaming.recovery import stream_documents
 
-    work = str(tmp_path / "dsirwork")
-    os.makedirs(work)
+    state_cls, opts, read, oneshot = _streamed_surface(kind)
+    work = str(tmp_path / f"{kind}work")
     with pytest.raises(StreamingQueryException) as exc:
-        streaming_dsir_ingest(
-            spark, SF_SMALL, work_dir=work, fail_at=(1, "post_commit")
+        stream_documents(
+            spark, SF_SMALL, state_cls, work_dir=work,
+            fail_at=(1, "post_commit"), **opts,
         )
     assert "injected kill" in str(exc.value)
 
-    got = _rows(streaming_dsir_ingest(spark, SF_SMALL, work_dir=work))
-    want = _rows(dsir_select(load_table(spark, SF_SMALL, "documents")))
+    idx = stream_documents(spark, SF_SMALL, state_cls, work_dir=work, **opts)
+    docs = load_table(spark, SF_SMALL, "documents")
+    got = _rows(read(idx, docs))
+    want = _rows(oneshot(docs))
     assert got == want and len(want) > 0
+    idx.drop()
 
 
 def test_streaming_quality_score_kill_restart_equals_oneshot(spark, tmp_path):
@@ -539,7 +565,7 @@ def test_streaming_weighted_sample_replay_does_not_evict(spark, tmp_path):
     # itself (r16 ADVICE fix — freshness derives from the dir existing)
     with pytest.raises(StreamingQueryException) as exc:
         streaming_weighted_sample(
-            spark, SF_SMALL, work_dir=work, fail_at_batch=1
+            spark, SF_SMALL, work_dir=work, fail_at=(1, "state")
         )
     assert "injected kill" in str(exc.value)
 
@@ -607,9 +633,9 @@ def test_partial_staging_dir_is_restaged_not_trusted(spark, tmp_path):
     no marker, then run the pinned-work-dir query end to end."""
     import os
 
-    from dagster_etl_spark.operators.text import dsir_select
+    from dagster_etl_spark.operators.text import IncrementalDSIRModel, dsir_select
     from dagster_etl_spark.sources.fixtures import load_table
-    from dagster_etl_spark.streaming.dsir_ingest import streaming_dsir_ingest
+    from dagster_etl_spark.streaming.recovery import stream_documents
 
     docs = load_table(spark, SF_SMALL, "documents")
     work = str(tmp_path / "tornwork")
@@ -623,7 +649,8 @@ def test_partial_staging_dir_is_restaged_not_trusted(spark, tmp_path):
     os.unlink(os.path.join(in_dir, "_SUCCESS"))
     assert not os.path.exists(os.path.join(in_dir, "_SUCCESS"))
 
-    got = _rows(streaming_dsir_ingest(spark, SF_SMALL, work_dir=work))
+    m = stream_documents(spark, SF_SMALL, IncrementalDSIRModel, work_dir=work)
+    got = _rows(m.select(docs))
     want = _rows(dsir_select(docs))
     assert got == want and len(want) > 0
     # and the re-staged dir is now fully committed

@@ -3,7 +3,12 @@ the reviewable evidence for the plan invariants tests/test_plans.py
 enforces mechanically (pushdown reaches the scan, small sides
 broadcast, no CartesianProduct, no row-wise Python in hot paths).
 
+Per-query mode: ``--into <dir> <tag> [sf_dir] [name ...]`` writes each
+plan to plans/<dir>/<query>_<tag>.txt instead (the bench-tagged
+queries by default, or the named ones), for before/after plan diffs.
+
 Usage: python tools/dump_plans.py [sf_dir]
+       python tools/dump_plans.py --into <dir> <before|after> [sf_dir] [name ...]
 """
 
 from __future__ import annotations
@@ -14,7 +19,12 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+_argv = sys.argv[1:]
+INTO = TAG = None
+if _argv[:1] == ["--into"]:
+    INTO, TAG, _argv = _argv[1], _argv[2], _argv[3:]
+SF_DIR = _argv[0] if _argv else "/root/testdata/sf0.1"
+ONLY = _argv[1:]
 
 HEADER = """# Physical plans (generated by tools/dump_plans.py)
 
@@ -59,16 +69,25 @@ def main() -> None:
     spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     specs = all_queries()
-    names = [n for n, s in specs.items() if "bench" in s.tags]
+    names = ONLY or [n for n, s in specs.items() if "bench" in s.tags]
+    out_dir = REPO / "plans" / INTO if INTO else None
+    if out_dir:
+        out_dir.mkdir(parents=True, exist_ok=True)
     out = [HEADER.format(sf=SF_DIR)]
     for name in names:
         df = specs[name].fn(spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        out.append(f"\n## {name}\n\n```\n{plan.strip()}\n```\n")
-    (REPO / "PLANS.md").write_text("".join(out))
-    print(f"wrote PLANS.md ({len(names)} plans)")
+        if out_dir:
+            (out_dir / f"{name}_{TAG}.txt").write_text(plan)
+            print(f"{name}: {plan.count('Exchange')} Exchange, "
+                  f"{plan.count('BatchEvalPython')} BatchEvalPython")
+        else:
+            out.append(f"\n## {name}\n\n```\n{plan.strip()}\n```\n")
+    if not out_dir:
+        (REPO / "PLANS.md").write_text("".join(out))
+        print(f"wrote PLANS.md ({len(names)} plans)")
     spark.stop()
 
 

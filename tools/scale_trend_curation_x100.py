@@ -209,21 +209,16 @@ def main() -> None:
     run_stage("classifier", "gopher_kept", "clf_kept", s_classifier)
 
     # 3 dedup: near-dup clusters, min-id canonical survivor.
-    # CURATION_DEDUP_COLLAPSE / CURATION_DEDUP_PRECONTRACT toggle the
-    # r18 contractions independently for the ablation artifact
-    # (DEDUPABLATE_X200_r18) — results are contraction-invariant
-    # (property-tested), only the walls move. Defaults FOLLOW the
-    # library defaults (collapse on, precontract off per the ablation).
+    # CURATION_DEDUP_COLLAPSE toggles the exact-dup collapse for the
+    # ablation artifact (DEDUPABLATE_X200_r18) — results are
+    # collapse-invariant (property-tested), only the walls move. The
+    # default follows the library default (collapse on).
     import os as _os
 
     _collapse = _os.environ.get("CURATION_DEDUP_COLLAPSE", "1") == "1"
-    _precontract = _os.environ.get("CURATION_DEDUP_PRECONTRACT", "0") == "1"
 
     def s_dedup(src):
-        cl = dedup_clusters(
-            src, threshold=0.5,
-            collapse_exact=_collapse, precontract_trivial=_precontract,
-        )
+        cl = dedup_clusters(src, threshold=0.5, collapse_exact=_collapse)
         return (
             src.join(cl.filter("is_canonical").select("doc_id"), on="doc_id")
             .select("doc_id", "text", "source")
