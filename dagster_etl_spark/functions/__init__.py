@@ -44,7 +44,7 @@ def money_sum_sql(expr_sql: str, scale: int = 2) -> str:
 
 
 def flag_sql(cond_sql: str) -> str:
-    """SQL-string twin of :func:`flag`."""
+    """Boolean SQL condition -> 1/0 int."""
     return f"(CASE WHEN {cond_sql} THEN 1 ELSE 0 END)"
 
 
@@ -204,35 +204,4 @@ def exact_avg(col: Column | str, alias: str | None = None, scale: int = 2) -> Co
         out = (
             F.sum(scaled_long(col, scale)).cast("double") / float(10 ** scale)
         ) / F.count(col)
-    return out.alias(alias) if alias else out
-
-
-def minutes_between(end: Column | str, start: Column | str) -> Column:
-    """Timestamp difference in fractional minutes.
-
-    Reference computes ``(end - start).dt.total_seconds() / 60``
-    (reference: etl/common/assets/transfer.py:92-94).
-    """
-    e = F.col(end) if isinstance(end, str) else end
-    s = F.col(start) if isinstance(start, str) else start
-    return (F.unix_timestamp(e) - F.unix_timestamp(s)) / F.lit(60.0)
-
-
-def flag(cond: Column, alias: str | None = None) -> Column:
-    """Boolean condition -> 1/0 int (reference: project_01/assets/
-    transfer.py:41-42 ``(priority=='HIGH').astype(int)``)."""
-    out = F.when(cond, F.lit(1)).otherwise(F.lit(0))
-    return out.alias(alias) if alias else out
-
-
-def count_if(cond: Column, alias: str | None = None) -> Column:
-    """Conditional count aggregate (SURVEY A7)."""
-    out = F.sum(flag(cond))
-    return out.alias(alias) if alias else out
-
-
-def null_count(col: Column | str, alias: str | None = None) -> Column:
-    """Aggregate: number of NULLs in ``col`` (SURVEY P12/A8)."""
-    c = F.col(col) if isinstance(col, str) else col
-    out = F.sum(c.isNull().cast("long"))
     return out.alias(alias) if alias else out

@@ -198,21 +198,6 @@ def shingle_hashes_expr(shingle_col: str, d: str) -> str:
     return x.xform(shingle_col, "s", x.h60("s", d), d)
 
 
-def minhash_signature_bodies(
-    hash_col: str, d: str, num_hashes: int = 16
-) -> list[str]:
-    """The alias-free signature expression bodies (r18 ADVICE: callers
-    that compose these into larger expressions used to strip the
-    ``AS sigN`` suffix by string-splitting on ' AS ', which would
-    silently truncate any future body containing its own ``AS`` — e.g.
-    a CAST(x AS BIGINT))."""
-    out = []
-    for i, (a, b) in enumerate(_affine_constants(num_hashes)):
-        body = f"(({a} * (h & 4294967295) + {b}) & 4294967295)"
-        out.append(x.xmin(x.xform(hash_col, "h", body, d), d))
-    return out
-
-
 def minhash_signature_exprs(
     hash_col: str, d: str, num_hashes: int = 16
 ) -> list[str]:
@@ -220,12 +205,11 @@ def minhash_signature_exprs(
     (a_i*h32 + b_i) & 0xFFFFFFFF. One md5 pass total instead of
     ``num_hashes`` — at 5k docs x 52 shingles this is the difference
     between 0.3M and 4M md5 evaluations per side."""
-    return [
-        f"{body} AS sig{i}"
-        for i, body in enumerate(
-            minhash_signature_bodies(hash_col, d, num_hashes)
-        )
-    ]
+    out = []
+    for i, (a, b) in enumerate(_affine_constants(num_hashes)):
+        body = f"(({a} * (h & 4294967295) + {b}) & 4294967295)"
+        out.append(f"{x.xmin(x.xform(hash_col, 'h', body, d), d)} AS sig{i}")
+    return out
 
 
 def band_exprs(d: str, num_hashes: int = 16, bands: int = 4) -> list[str]:
@@ -257,46 +241,16 @@ def minhash_neardup_pairs(
     hashes; the exact Jaccard pass removes false positives (false
     negatives are the documented LSH trade-off).
     """
-    # pre-filter on token count (cheap, no md5): equivalent to
-    # size(shingles) > 0 but avoids pushdown re-inlining the full
-    # shingle+md5 chain into the predicate
-    tok_n = x.xsize(x.tokens(text_col, x.SPARK), x.SPARK)
-    sh = shingled(
-        spread(df).filter(F.expr(f"{tok_n} >= {k}")), text_col, id_col, k
-    )
-    # hs: distinct shingle-hash sets — one md5 pass; reused for both the
-    # signatures and the exact-Jaccard verify (set semantics unchanged,
-    # md5 collisions at 60 bits are negligible)
-    #
-    hashed = sh.selectExpr(
-        id_col, f"{x.xform('shingles', 's', x.h60('s', x.SPARK), x.SPARK)} AS hs"
-    )
-    # sig/band/melt FUSED into one projection string (r18): the staged
-    # sigs->bands->posexplode selectExpr hops produced the identical
-    # post-CollapseProject tree (each sig is referenced exactly once, so
-    # inlining duplicates nothing) while paying two extra eager-analysis
-    # DataFrame hops per build — build cost only, plan unchanged.
-    sig_bodies = minhash_signature_bodies("hs", x.SPARK, num_hashes)
-    rows = num_hashes // bands
-    band_bodies = [
-        "md5(concat_ws(',', "
-        + ", ".join(sig_bodies[b * rows + r] for r in range(rows))
-        + "))"
-        for b in range(bands)
-    ]
-
+    hashed = minhash_hashes(df, text_col, id_col, k)
     # slim candidate join: one row per (doc, band), ids only — shingle
     # arrays are NOT shuffled through the pair join/dedup.
     # PERSISTED: both sides of the self-join would otherwise re-run the
     # tokenize/shingle/md5/signature chain (Spark has no cross-subtree
     # CSE). The melted rows are persisted — scalars cache an order of
     # magnitude faster than array columns through the columnar store,
-    # which is why (id, band) rows are cached rather than (id, hs); the
+    # which is why (id, bkey) rows are cached rather than (id, hs); the
     # verify stage recomputes the (cheap, let-bound) hash chain instead.
-    band_arr = "array(" + ", ".join(band_bodies) + ")"
-    melted = pin(
-        hashed.selectExpr(id_col, f"posexplode({band_arr}) AS (band_idx, bh)")
-    )
+    melted = pin(minhash_bands(hashed, id_col, num_hashes, bands))
     # join strategy DEFERRED to AQE (r8): the previous build-time
     # melted.count() paid an eager job — with cold whole-stage-codegen
     # compile of the 16-signature md5 chain, ~6 s per BUILD even on a
@@ -304,29 +258,105 @@ def minhash_neardup_pairs(
     # from actual byte sizes: broadcast the band table while it is
     # small, shuffle join in the 100 TB regime. Unhinted is both
     # cheaper (zero eager jobs at build) and better-informed.
+    return jaccard_verify(
+        _self_candidates(melted, id_col), [hashed], [hashed],
+        "id_a", "id_b", id_col, threshold,
+    )
+
+
+def _self_candidates(melted: DataFrame, id_col: str) -> DataFrame:
+    """(id_a, id_b), id_a < id_b: doc pairs of one banded corpus
+    sharing at least one band key."""
     a, b = melted.alias("a"), melted.alias("b")
-    cands = (
-        a.join(
-            b,
-            F.expr(
-                "a.band_idx = b.band_idx AND a.bh = b.bh"
-                f" AND a.`{id_col}` < b.`{id_col}`"
-            ),
-        )
+    return (
+        a.join(b, F.expr(f"a.bkey = b.bkey AND a.`{id_col}` < b.`{id_col}`"))
         .selectExpr(f"a.`{id_col}` AS id_a", f"b.`{id_col}` AS id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    # verify: re-attach hash sets for the (few) candidates only
-    ha = hashed.selectExpr(f"`{id_col}` AS id_a", "hs AS hs_a")
-    hb = hashed.selectExpr(f"`{id_col}` AS id_b", "hs AS hs_b")
-    jac = (
-        "CAST(size(array_intersect(hs_a, hs_b)) AS DOUBLE) / "
-        "size(array_distinct(concat(hs_a, hs_b)))"
+
+
+def minhash_hashes(
+    docs: DataFrame, text_col: str, id_col: str, k: int = 3
+) -> DataFrame:
+    """(doc_id, hs): each doc's distinct shingle-hash set — the
+    tokenize+shingle+md5 pass, the heaviest per-row work of the MinHash
+    encode and the ONLY md5 pass (signatures derive from hs with
+    integer arithmetic, and the exact-Jaccard verify reads hs too; md5
+    collisions at 60 bits are negligible). Docs with fewer than ``k``
+    tokens have no shingle and are dropped up front: the token-count
+    pre-filter is cheap (no md5) and avoids pushdown re-inlining the
+    whole shingle+md5 chain into the predicate."""
+    tok_n = x.xsize(x.tokens(text_col, x.SPARK), x.SPARK)
+    sh = shingled(
+        spread(docs).filter(F.expr(f"{tok_n} >= {k}")), text_col, id_col, k
     )
+    return sh.selectExpr(
+        id_col, f"{x.xform('shingles', 's', x.h60('s', x.SPARK), x.SPARK)} AS hs"
+    )
+
+
+def minhash_bands(
+    hashed: DataFrame, id_col: str, num_hashes: int = 16, bands: int = 4
+) -> DataFrame:
+    """(doc_id, bkey): one row per (doc, band) from an (doc_id, hs)
+    frame — the signature/band/melt tail of the MinHash encode. ONE
+    key column (band index folded into the band hash): a probe join on
+    it has exactly one equi-key == the standing index's bucket column,
+    so the index side's HashPartitioning(bkey) satisfies the join's
+    required distribution outright and only the probe shuffles (a
+    two-key (band_idx, bh) join over a bh-bucketed table would shuffle
+    BOTH sides)."""
+    sigs = hashed.selectExpr(
+        id_col, *minhash_signature_exprs("hs", x.SPARK, num_hashes)
+    )
+    banded = sigs.selectExpr(id_col, *band_exprs(x.SPARK, num_hashes, bands))
+    band_arr = "array(" + ", ".join(f"band{b}" for b in range(bands)) + ")"
+    return banded.selectExpr(
+        id_col, f"posexplode({band_arr}) AS (band_idx, bh)"
+    ).selectExpr(id_col, "concat(band_idx, ':', bh) AS bkey")
+
+
+def _join_parts(left: DataFrame, parts: list[DataFrame], on: str) -> DataFrame:
+    """``left`` ⋈ (p1 ∪ p2 ∪ ..) on ``on``, evaluated part by part. A
+    join distributes over UNION ALL, so the rows are the same; but a
+    union reports no output partitioning, so joining it would shuffle
+    the whole bucketed base, where joining the base alone reads it
+    co-located and shuffles only ``left``."""
+    return union_all(*(left.join(p, on=on) for p in parts))
+
+
+#: Exact Jaccard of two shingle-hash sets.
+_JACCARD = (
+    "CAST(size(array_intersect(hs_a, hs_b)) AS DOUBLE) / "
+    "size(array_distinct(concat(hs_a, hs_b)))"
+)
+
+
+def jaccard_verify(
+    cands: DataFrame,
+    left_hashes: list[DataFrame],
+    right_hashes: list[DataFrame],
+    left: str,
+    right: str,
+    id_col: str,
+    threshold: float,
+) -> DataFrame:
+    """Exact-Jaccard verify of (``left``, ``right``) candidate id pairs
+    against the (doc_id, hs) parts of each side, part by part
+    (:func:`_join_parts`) — shared by the one-shot near-dup operators
+    and :class:`IncrementalNearDupIndex`. Returns (left, right,
+    jaccard) with jaccard >= ``threshold``."""
+
+    def side(parts: list[DataFrame], col: str, hs: str) -> list[DataFrame]:
+        return [
+            p.select(F.col(id_col).alias(col), F.col("hs").alias(hs))
+            for p in parts
+        ]
+
+    with_a = _join_parts(cands, side(left_hashes, left, "hs_a"), left)
+    both = _join_parts(with_a, side(right_hashes, right, "hs_b"), right)
     return (
-        cands.join(ha, on="id_a")
-        .join(hb, on="id_b")
-        .selectExpr("id_a", "id_b", f"{jac} AS jaccard")
+        both.selectExpr(left, right, f"{_JACCARD} AS jaccard")
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -356,37 +386,11 @@ def minhash_estimate_accuracy(
     Returns ONE row ``(n_pairs, n_within_025, n_above_05)`` — a
     DuckDB oracle recomputes every stage bit-for-bit.
     """
-    tok_n = x.xsize(x.tokens(text_col, x.SPARK), x.SPARK)
-    sh = shingled(
-        spread(df).filter(F.expr(f"{tok_n} >= {k}")), text_col, id_col, k
-    )
-    hashed = sh.selectExpr(
-        id_col, f"{x.xform('shingles', 's', x.h60('s', x.SPARK), x.SPARK)} AS hs"
-    )
+    hashed = minhash_hashes(df, text_col, id_col, k)
     sigs = hashed.selectExpr(
         id_col, *minhash_signature_exprs("hs", x.SPARK, num_hashes)
     )
-    banded = sigs.selectExpr(id_col, *band_exprs(x.SPARK, num_hashes, bands))
-    band_arr = "array(" + ", ".join(f"band{b}" for b in range(bands)) + ")"
-    melted = pin(
-        banded.selectExpr(id_col, f"posexplode({band_arr}) AS (band_idx, bh)")
-    )
-    a, b = melted.alias("a"), melted.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    ha = hashed.select(F.col(id_col).alias("id_a"), F.col("hs").alias("hs_a"))
-    hb = hashed.select(F.col(id_col).alias("id_b"), F.col("hs").alias("hs_b"))
+    melted = pin(minhash_bands(hashed, id_col, num_hashes, bands))
     sa = sigs.select(
         F.col(id_col).alias("id_a"),
         *[F.col(f"sig{i}").alias(f"sa{i}") for i in range(num_hashes)],
@@ -398,22 +402,19 @@ def minhash_estimate_accuracy(
     m = " + ".join(
         f"(CASE WHEN sa{i} = sb{i} THEN 1 ELSE 0 END)" for i in range(num_hashes)
     )
-    jac = (
-        "CAST(size(array_intersect(hs_a, hs_b)) AS DOUBLE) / "
-        "size(array_distinct(concat(hs_a, hs_b)))"
-    )
     pairs = (
-        cands.join(ha, on="id_a")
-        .join(hb, on="id_b")
+        jaccard_verify(
+            _self_candidates(melted, id_col), [hashed], [hashed],
+            "id_a", "id_b", id_col, threshold,
+        )
         .join(sa, on="id_a")
         .join(sb, on="id_b")
         .selectExpr(
             "id_a",
             "id_b",
-            f"{jac} AS jaccard",
+            "jaccard",
             f"CAST(({m}) AS DOUBLE) / {num_hashes} AS est",
         )
-        .filter(F.col("jaccard") >= threshold)
     )
     return pairs.agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
@@ -459,53 +460,20 @@ def cross_corpus_neardup_pairs(
     Ids may coincide across corpora (different tables); no id
     ordering is imposed between sides.
     """
-    def _banded_melted(df: DataFrame):
-        tok_n = x.xsize(x.tokens(text_col, x.SPARK), x.SPARK)
-        sh = shingled(
-            spread(df).filter(F.expr(f"{tok_n} >= {k}")), text_col, id_col, k
-        )
-        hashed = sh.selectExpr(
-            id_col,
-            f"{x.xform('shingles', 's', x.h60('s', x.SPARK), x.SPARK)} AS hs",
-        )
-        sigs = hashed.selectExpr(
-            id_col, *minhash_signature_exprs("hs", x.SPARK, num_hashes)
-        )
-        banded = sigs.selectExpr(id_col, *band_exprs(x.SPARK, num_hashes, bands))
-        band_arr = "array(" + ", ".join(f"band{b}" for b in range(bands)) + ")"
-        melted = pin(
-            banded.selectExpr(
-                id_col, f"posexplode({band_arr}) AS (band_idx, bh)"
-            )
-        )
-        return hashed, melted
-
-    l_hashed, l_melt = _banded_melted(left)
-    r_hashed, r_melt = _banded_melted(right)
-    a, b = l_melt.alias("a"), r_melt.alias("b")
+    l_hashed = minhash_hashes(left, text_col, id_col, k)
+    r_hashed = minhash_hashes(right, text_col, id_col, k)
+    a = pin(minhash_bands(l_hashed, id_col, num_hashes, bands)).alias("a")
+    b = pin(minhash_bands(r_hashed, id_col, num_hashes, bands)).alias("b")
     cands = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.bh") == F.col("b.bh")),
-        )
+        a.join(b, F.col("a.bkey") == F.col("b.bkey"))
         .select(
             F.col(f"a.{id_col}").alias("left_id"),
             F.col(f"b.{id_col}").alias("right_id"),
         )
         .dropDuplicates(["left_id", "right_id"])
     )
-    ha = l_hashed.select(F.col(id_col).alias("left_id"), F.col("hs").alias("hs_a"))
-    hb = r_hashed.select(F.col(id_col).alias("right_id"), F.col("hs").alias("hs_b"))
-    jac = (
-        "CAST(size(array_intersect(hs_a, hs_b)) AS DOUBLE) / "
-        "size(array_distinct(concat(hs_a, hs_b)))"
-    )
-    return (
-        cands.join(ha, on="left_id")
-        .join(hb, on="right_id")
-        .selectExpr("left_id", "right_id", f"{jac} AS jaccard")
-        .filter(F.col("jaccard") >= threshold)
+    return jaccard_verify(
+        cands, [l_hashed], [r_hashed], "left_id", "right_id", id_col, threshold
     )
 
 
@@ -1489,15 +1457,6 @@ def semantic_dedup(
 
 # -- incremental near-dup index ------------------------------------------------
 
-def _join_parts(left: DataFrame, parts: list[DataFrame], on: str) -> DataFrame:
-    """``left`` ⋈ (p1 ∪ p2 ∪ ..) on ``on``, evaluated part by part. A
-    join distributes over UNION ALL, so the rows are the same; but a
-    union reports no output partitioning, so joining it would shuffle
-    the whole bucketed base, where joining the base alone reads it
-    co-located and shuffles only ``left``."""
-    return union_all(*(left.join(p, on=on) for p in parts))
-
-
 class IncrementalNearDupIndex(StandingState):
     """Daily-cadence MinHash+LSH near-dup (the dedup analog of
     sources/bucketed.BucketedPipeline): a 100 TB crawl doesn't re-pair
@@ -1556,61 +1515,13 @@ class IncrementalNearDupIndex(StandingState):
             "pairs": (self.pairs_table, None),
         }
 
-    # -- encoding (same expression chain as minhash_neardup_pairs) --
-
-    def _hashes(self, docs: DataFrame) -> DataFrame:
-        """(doc_id, hs) for a batch — THE tokenize+shingle+md5 pass,
-        the heaviest per-row work in the encode. Split out (r19) so
-        the bands side can be derived from it instead of re-running
-        the whole chain (guide §1.2: don't compute things twice)."""
-        tok_n = x.xsize(x.tokens(self.text_col, x.SPARK), x.SPARK)
-        sh = shingled(
-            spread(docs).filter(F.expr(f"{tok_n} >= {self.k}")),
-            self.text_col,
-            self.id_col,
-            self.k,
-        )
-        return sh.selectExpr(
-            self.id_col,
-            f"{x.xform('shingles', 's', x.h60('s', x.SPARK), x.SPARK)} AS hs",
-        )
-
-    def _bands_from_hashes(self, hashed: DataFrame) -> DataFrame:
-        """Banded (doc_id, bkey) rows from an (doc_id, hs) frame — the
-        signature/band/melt tail of the encode, usable over the live
-        hash frame (batch ingest) or the STAGED hashes slice
-        (ingest_slice), which is how the chain now runs once per slice
-        instead of twice. ``spread`` no-ops when the input is already
-        wide."""
-        sigs = spread(hashed).selectExpr(
-            self.id_col, *minhash_signature_exprs("hs", x.SPARK, self.num_hashes)
-        )
-        banded = sigs.selectExpr(
-            self.id_col, *band_exprs(x.SPARK, self.num_hashes, self.bands)
-        )
-        # ONE key column (band index folded into the hash string): the
-        # probe join then has exactly one equi-key == the bucket
-        # column, so the index side's HashPartitioning(bkey) satisfies
-        # the join's required distribution outright and only the probe
-        # shuffles. A two-key join (band_idx, bh) over a bh-bucketed
-        # table would make the planner shuffle BOTH sides.
-        band_arr = "array(" + ", ".join(
-            f"band{b}" for b in range(self.bands)
-        ) + ")"
-        melted = banded.selectExpr(
-            self.id_col,
-            f"posexplode({band_arr}) AS (band_idx, bh)",
-        ).selectExpr(
-            self.id_col, "concat(band_idx, ':', bh) AS bkey"
-        )
-        return melted
-
     def _encode(self, docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """(bands_df, hashes_df) for a batch (one LAZY plan each; see
-        the split halves above for how the eager paths avoid executing
-        the shared md5 chain twice)."""
-        hashed = self._hashes(docs)
-        return self._bands_from_hashes(hashed), hashed
+        """(bands_df, hashes_df) for a batch — :func:`minhash_bands` over
+        :func:`minhash_hashes`, one LAZY plan each."""
+        hashed = minhash_hashes(docs, self.text_col, self.id_col, self.k)
+        return minhash_bands(
+            hashed, self.id_col, self.num_hashes, self.bands
+        ), hashed
 
     def _stage(
         self, store, docs: DataFrame, slice_id: int, threshold: float = 0.2
@@ -1629,10 +1540,16 @@ class IncrementalNearDupIndex(StandingState):
         # each of the two component writes. Replay-identical: a replay
         # rewrites the same deterministic hashes, and the band tail is
         # a pure function of them.
-        store.write("hashes", slice_id, self._hashes(docs), files=n_files)
+        store.write(
+            "hashes", slice_id,
+            minhash_hashes(docs, self.text_col, self.id_col, self.k),
+            files=n_files,
+        )
         yield "hashes"
         hashes = store.read_slice(spark, "hashes", slice_id)
-        bands = self._bands_from_hashes(hashes)
+        bands = minhash_bands(
+            spread(hashes), self.id_col, self.num_hashes, self.bands
+        )
         store.write("bands", slice_id, bands, files=n_files)
         yield "bands"
         # pairs is a shuffle (dropDuplicates/join) output — AQE already
@@ -1686,35 +1603,8 @@ class IncrementalNearDupIndex(StandingState):
             .dropDuplicates(["id_a", "id_b"])
         )
         hashes = self._parts("hashes", spark, slice_hashes)
-        return self._verify(cands, hashes, hashes, "id_a", "id_b", threshold)
-
-    def _verify(
-        self,
-        cands: DataFrame,
-        left_hashes: list[DataFrame],
-        right_hashes: list[DataFrame],
-        left: str,
-        right: str,
-        threshold: float,
-    ) -> DataFrame:
-        """Exact-Jaccard verify of (``left``, ``right``) candidate id
-        pairs against the hash parts of each side, part by part."""
-
-        def side(parts: list[DataFrame], col: str, hs: str) -> list[DataFrame]:
-            return [
-                p.select(F.col(self.id_col).alias(col), F.col("hs").alias(hs))
-                for p in parts
-            ]
-
-        jac = (
-            "CAST(size(array_intersect(hs_a, hs_b)) AS DOUBLE) / "
-            "size(array_distinct(concat(hs_a, hs_b)))"
-        )
-        with_a = _join_parts(cands, side(left_hashes, left, "hs_a"), left)
-        both = _join_parts(with_a, side(right_hashes, right, "hs_b"), right)
-        return (
-            both.selectExpr(left, right, f"{jac} AS jaccard")
-            .filter(F.col("jaccard") >= threshold)
+        return jaccard_verify(
+            cands, hashes, hashes, "id_a", "id_b", self.id_col, threshold
         )
 
     def probe_external(
@@ -1742,9 +1632,9 @@ class IncrementalNearDupIndex(StandingState):
             .select(F.col(self.id_col).alias("left_id"), "right_id")
             .dropDuplicates(["left_id", "right_id"])
         )
-        return self._verify(
+        return jaccard_verify(
             cands, self._parts("hashes", spark), [ext_hashes],
-            "left_id", "right_id", threshold,
+            "left_id", "right_id", self.id_col, threshold,
         )
 
     def pairs(self) -> DataFrame:

@@ -23,6 +23,16 @@ from dagster_etl_spark.plans.layout import spread
 from dagster_etl_spark.streaming.slicestore import StandingState, slice_file_budget
 
 
+def _topk_rows(
+    scored: DataFrame, score: str, k: int, rank: str = "rank", nid: str = "neighbor_id"
+) -> DataFrame:
+    """Each query_id's top ``k`` rows of ``scored`` by ``score``, with
+    a 1-based ``rank`` column and the deterministic (score desc,
+    ``nid``) tiebreak — the ranking step of every top-k here."""
+    w = Window.partitionBy("query_id").orderBy(F.col(score).desc(), F.col(nid))
+    return scored.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -49,10 +59,7 @@ def cosine_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .selectExpr("query_id", "neighbor_id", f"{cos} AS cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk_rows(scored, "cosine", k)
 
 
 def filtered_cosine_topk(
@@ -109,12 +116,7 @@ def filtered_cosine_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .selectExpr("query_id", "neighbor_id", f"{cos} AS cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _topk_rows(scored, "cosine", k)
 
 
 def _hyperplane(plane: int, dim: int) -> list[float]:
@@ -259,24 +261,46 @@ def ivf_cosine_topk(
         assigned, centroids = ivf_index(
             corpus, dim, nlist, id_col=id_col, vec_col=vec_col
         )
-    c = assigned.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), "bucket"
+    return _ivf_probe_topk(
+        queries, assigned, centroids, nprobe, dim, k, id_col, vec_col
+    )
+
+
+def _ivf_probe_topk(
+    queries: DataFrame,
+    assigned: DataFrame,
+    centroids: list[list[float]],
+    nprobe: int,
+    dim: int,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    filter_col: str | None = None,
+) -> DataFrame:
+    """The IVF read shared by :func:`ivf_cosine_topk`,
+    :func:`filtered_ivf_topk` and :meth:`IncrementalANNIndex.topk`:
+    explode each query into its ``nprobe`` nearest lists, broadcast
+    that (bounded) probe side into an equi-join on the list id against
+    the ``assigned`` corpus (id, vec, bucket[, filter_col]), cosine-rank
+    within the probed lists. With ``filter_col`` the query's value of
+    it joins alongside the list id, so non-matching vectors are never
+    scored. Returns (query_id, neighbor_id, cosine, rank)."""
+    grp = [] if filter_col is None else [f"{filter_col} AS _grp"]
+    c = assigned.selectExpr(
+        f"{id_col} AS neighbor_id", f"{vec_col} AS cv", *grp, "bucket"
     )
     probe = _topn_centroid_buckets_expr("qv", centroids, nprobe)
     q = queries.selectExpr(
-        f"{id_col} AS query_id", f"{vec_col} AS qv"
-    ).selectExpr("query_id", "qv", f"explode({probe}) AS bucket")
+        f"{id_col} AS query_id", f"{vec_col} AS qv", *grp
+    ).selectExpr("*", f"explode({probe}) AS bucket")
     cos = x.cosine("qv", "cv", dim, x.SPARK)
     scored = (
         F.broadcast(q)
-        .join(c, on="bucket")
+        .join(c, on=["bucket"] + (["_grp"] if grp else []))
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .selectExpr("query_id", "neighbor_id", f"{cos} AS cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk_rows(scored, "cosine", k)
 
 
 def filtered_ivf_topk(
@@ -320,28 +344,8 @@ def filtered_ivf_topk(
     assigned = spread(corpus).selectExpr(
         id_col, vec_col, filter_col, f"{bucket} AS bucket"
     )
-    c = assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        F.col(filter_col).alias("_grp"),
-        "bucket",
-    )
-    probe = _topn_centroid_buckets_expr("qv", centroids, nprobe)
-    q = queries.selectExpr(
-        f"{id_col} AS query_id", f"{vec_col} AS qv", f"{filter_col} AS _grp"
-    ).selectExpr("query_id", "qv", "_grp", f"explode({probe}) AS bucket")
-    cos = x.cosine("qv", "cv", dim, x.SPARK)
-    scored = (
-        F.broadcast(q)
-        .join(c, on=["bucket", "_grp"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .selectExpr("query_id", "neighbor_id", f"{cos} AS cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return _ivf_probe_topk(
+        queries, assigned, centroids, nprobe, dim, k, id_col, vec_col, filter_col
     )
 
 
@@ -385,10 +389,7 @@ def lsh_cosine_topk(
         .dropDuplicates(["query_id", "neighbor_id"])
         .selectExpr("query_id", "neighbor_id", f"{cos} AS cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk_rows(scored, "cosine", k)
 
 
 def quantized_cosine_topk(
@@ -431,10 +432,7 @@ def quantized_cosine_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .selectExpr("query_id", "neighbor_id", f"{score} AS qcosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qcosine").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk_rows(scored, "qcosine", k)
 
 
 # -- product quantization (the 32x-memory ANN scale path) -------------------
@@ -650,12 +648,7 @@ def pq_cosine_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .selectExpr("query_id", "neighbor_id", f"{cos} AS pq_cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("pq_cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _topk_rows(scored, "pq_cosine", k)
 
 
 def pq_rerank_topk(
@@ -685,20 +678,33 @@ def pq_rerank_topk(
         queries, corpus, dim=dim, k=rerank, m=m, ksub=ksub,
         id_col=id_col, vec_col=vec_col,
     ).select("query_id", "neighbor_id")
-    full = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    q = queries.selectExpr(f"{id_col} AS query_id", f"{vec_col} AS qv")
-    cos = x.cosine("qv", "cv", dim, x.SPARK)
-    scored = (
+    return _exact_rerank(cands, corpus, queries, dim, k, id_col, vec_col)
+
+
+def _exact_rerank(
+    cands: DataFrame,
+    source: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Exact-cosine top-k over approximate candidates ``cands``
+    (query_id, neighbor_id): re-attach the full float vectors from
+    ``source`` for the candidates only, broadcast the query vectors,
+    rescore and rank. Returns (query_id, neighbor_id, cosine, rank)."""
+    full = source.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
+    )
+    qf = queries.selectExpr(f"{id_col} AS query_id", f"{vec_col} AS qv2")
+    cos = x.cosine("qv2", "cv", dim, x.SPARK)
+    rescored = (
         cands.join(full, on="neighbor_id")
-        .join(F.broadcast(q), on="query_id")
+        .join(F.broadcast(qf), on="query_id")
         .selectExpr("query_id", "neighbor_id", f"{cos} AS cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _topk_rows(rescored, "cosine", k)
 
 
 def ivf_pq_topk(
@@ -733,35 +739,79 @@ def ivf_pq_topk(
     EXACT cosines on the reranked top-k."""
     cents = hash_centroids(corpus, nlist, id_col=id_col, vec_col=vec_col)
     books = pq_codebooks(corpus, m=m, ksub=ksub, dim=dim, id_col=id_col, vec_col=vec_col)
-    ds = dim // m
+    codes = ivf_pq_encode(corpus, cents, books, dim, id_col, vec_col)
+    return _ivf_pq_search(
+        queries, codes, cents, books, nprobe, k, rerank, corpus, dim, id_col, vec_col
+    )
+
+
+def ivf_pq_encode(
+    vectors: DataFrame,
+    cents: list[list[float]],
+    books: list[list[list[float]]],
+    dim: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(id, bucket, code_0..code_{m-1}, rn): list assignment + m PQ
+    codes + reconstruction norm — one scan-local projection against
+    the quantizer literals, shared by :func:`ivf_pq_topk` and
+    :class:`IncrementalIVFPQIndex`."""
     bucket = f"{_topn_centroid_buckets_expr(vec_col, cents, 1)}[0]"
-    codes = pq_codes_staged(
-        spread(corpus), books, ds, vec_col,
+    coded = pq_codes_staged(
+        spread(vectors), books, dim // len(books), vec_col,
         [(id_col, id_col), (bucket, "bucket")],
     )
-    recon = pq_reconstruct_expr([f"code_{j}" for j in range(m)], books)
+    # Reconstruction norm PRE-COMPUTED at encode time (r16, the
+    # ivfpq half of the BM25-pushdown lesson): rn is a pure function
+    # of the codes, so paying the norm fold once per vector at ingest
+    # — instead of once per vector PER PROBE — removes a dim-length
+    # fold from the search hot path without changing a single float
+    # (same rv, same fold, same value).
+    recon = pq_reconstruct_expr([f"code_{j}" for j in range(len(books))], books)
+    return coded.selectExpr("*", f"{x.norm_fold(f'({recon})', x.SPARK)} AS rn")
+
+
+def _ivf_pq_search(
+    queries: DataFrame,
+    codes: DataFrame,
+    cents: list[list[float]],
+    books: list[list[list[float]]],
+    nprobe: int,
+    k: int,
+    rerank: int,
+    rerank_source: DataFrame | None,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The IVF-PQ read shared by :func:`ivf_pq_topk` and
+    :meth:`IncrementalIVFPQIndex.topk`: probe each query's ``nprobe``
+    nearest lists of ``codes`` (:func:`ivf_pq_encode`'s schema),
+    ADC-score the reconstructions, and — with ``rerank_source`` —
+    exact-rerank the top ``rerank`` candidates (:func:`_exact_rerank`).
+    Without it the ADC ranking itself is returned (query_id,
+    neighbor_id, adc, rank)."""
+    recon = pq_reconstruct_expr([f"code_{j}" for j in range(len(books))], books)
     probe = _topn_centroid_buckets_expr("qv", cents, nprobe)
     q = (
         queries.selectExpr(f"{id_col} AS query_id", f"{vec_col} AS qv")
         .selectExpr("query_id", "qv", f"{x.norm_fold('qv', x.SPARK)} AS qn")
         .selectExpr("query_id", "qv", "qn", f"explode({probe}) AS bucket")
     )
-    # PROBE PUSHDOWN (r16, same as IncrementalIVFPQIndex.topk): the
-    # probed bucket set is bounded (<= min(nlist, n_queries * nprobe));
-    # filtering the codes BEFORE the reconstruction projection keeps
-    # the dim-length ADC recon + norm fold off never-probed lists —
-    # at production shapes (nlist ~ 1024, nprobe ~ 32) that is the
-    # difference between reconstructing the corpus and reconstructing
-    # nprobe/nlist of it. Semantics-preserving: the bucket equi-join
-    # discards every filtered row anyway, and no float changes.
+    # PROBE PUSHDOWN (r16, the BM25-term-pushdown analog): the probed
+    # bucket set is bounded (<= min(nlist, n_queries * nprobe) values;
+    # the collect is a bounded job on the tiny query side), and
+    # pushing it into the codes scan as an IN filter BEFORE the
+    # reconstruction projection means the dim-length ADC
+    # reconstruction runs only on probed lists and the bucketed scan
+    # prunes never-probed buckets — probe cost tracks nprobe/nlist of
+    # the corpus, not the corpus. Semantics-preserving: the bucket
+    # equi-join discards every filtered row anyway, and no float
+    # changes. rn comes precomputed from encode time.
     probed = sorted(r.bucket for r in q.select("bucket").distinct().collect())
-    c = (
-        codes.filter(F.col("bucket").isin(probed))
-        .selectExpr(f"{id_col} AS neighbor_id", "bucket", f"{recon} AS rv")
-        .selectExpr(
-            "neighbor_id", "bucket", "rv",
-            f"{x.norm_fold('rv', x.SPARK)} AS rn",
-        )
+    c = codes.filter(F.col("bucket").isin(probed)).selectExpr(
+        f"{id_col} AS neighbor_id", "bucket", f"{recon} AS rv", "rn"
     )
     adc = f"({x.dot_fold('qv', 'rv', x.SPARK)} / nullif(qn * rn, 0.0d))"
     scored = (
@@ -770,30 +820,39 @@ def ivf_pq_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .selectExpr("query_id", "neighbor_id", f"{adc} AS adc")
     )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
+    if rerank_source is None:
+        return _topk_rows(scored, "adc", k)
+    cands = _topk_rows(scored, "adc", rerank, rank="crank").select(
+        "query_id", "neighbor_id"
     )
-    cands = (
-        scored.withColumn("crank", F.row_number().over(wc))
-        .filter(F.col("crank") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    full = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    qf = queries.selectExpr(f"{id_col} AS query_id", f"{vec_col} AS qv2")
-    cos = x.cosine("qv2", "cv", dim, x.SPARK)
-    rescored = (
-        cands.join(full, on="neighbor_id")
-        .join(F.broadcast(qf), on="query_id")
-        .selectExpr("query_id", "neighbor_id", f"{cos} AS cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return rescored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _exact_rerank(cands, rerank_source, queries, dim, k, id_col, vec_col)
+
+
+def _save_centroids(spark, table: str, cents: list[list[float]]) -> None:
+    """Write a frozen quantizer's centroids as (cidx, cv) rows."""
+    spark.createDataFrame(
+        [(i, c) for i, c in enumerate(cents)], ["cidx", "cv"]
+    ).selectExpr("cidx", "CAST(cv AS array<float>) AS cv").write.saveAsTable(table)
+
+
+def _load_centroids(spark, table: str) -> list[list[float]]:
+    """Bounded collect of :func:`_save_centroids`' table: nlist rows
+    (the same bounded-driver-side exception as hash_centroids / the
+    nlist KMeans centers)."""
+    rows = spark.table(table).orderBy("cidx").collect()
+    return [[float(v) for v in r["cv"]] for r in rows]
+
+
+def _clear_frozen(index: StandingState) -> None:
+    """Drop ``index`` and the warehouse directories of its frozen
+    quantizer tables (``extra_tables``) — the fresh start of an
+    ``init``."""
+    from dagster_etl_spark.sources.lake import delete_path
+
+    index.drop()
+    warehouse = index.spark.conf.get("spark.sql.warehouse.dir")
+    for t in index.extra_tables:
+        delete_path(index.spark, f"{warehouse}/{t.lower()}")
 
 
 # -- incremental ANN index -------------------------------------------------
@@ -861,34 +920,16 @@ class IncrementalANNIndex(StandingState):
         self.components = {"vectors": (self.vectors_table, ["bucket"])}
         self.extra_tables = (self.centroids_table,)
 
-    # -- state --
-
     def _centroids(self) -> list[list[float]]:
-        """Bounded collect: nlist rows (the same bounded-driver-side
-        exception as hash_centroids / the nlist KMeans centers)."""
-        rows = (
-            self.spark.table(self.centroids_table)
-            .orderBy("cidx")
-            .collect()
-        )
-        return [[float(v) for v in r["cv"]] for r in rows]
+        return _load_centroids(self.spark, self.centroids_table)
 
     def init(self, vectors: DataFrame) -> None:
         """Freeze the quantizer on the first slice and ingest it."""
-        from dagster_etl_spark.sources.lake import delete_path
-
-        self.drop()
-        warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-        delete_path(
-            self.spark, f"{warehouse}/{self.centroids_table.lower()}"
-        )
+        _clear_frozen(self)
         cents = hash_centroids(
             vectors, self.nlist, id_col=self.id_col, vec_col=self.vec_col
         )
-        cent_df = self.spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)], ["cidx", "cv"]
-        ).selectExpr("cidx", f"CAST(cv AS array<float>) AS cv")
-        cent_df.write.saveAsTable(self.centroids_table)
+        _save_centroids(self.spark, self.centroids_table, cents)
         self.ingest(vectors)
 
     def _stage(self, store, vectors: DataFrame, slice_id: int):
@@ -908,32 +949,13 @@ class IncrementalANNIndex(StandingState):
     def topk(
         self, queries: DataFrame, k: int = 10, nprobe: int = 8
     ) -> DataFrame:
-        """IVF search over everything ingested so far: probe the
-        nprobe nearest lists per query, cosine-rank within them.
-        Same result columns and tie-breaks as ivf_cosine_topk."""
-        cents = self._centroids()
-        c = self._state("vectors").select(
-            F.col(self.id_col).alias("neighbor_id"),
-            F.col(self.vec_col).alias("cv"),
-            "bucket",
+        """IVF search over everything ingested so far: the read of
+        :func:`ivf_cosine_topk` (:func:`_ivf_probe_topk`) over the
+        standing vectors."""
+        return _ivf_probe_topk(
+            queries, self._state("vectors"), self._centroids(), nprobe,
+            self.dim, k, self.id_col, self.vec_col,
         )
-        probe = _topn_centroid_buckets_expr("qv", cents, nprobe)
-        q = queries.selectExpr(
-            f"{self.id_col} AS query_id", f"{self.vec_col} AS qv"
-        ).selectExpr("query_id", "qv", f"explode({probe}) AS bucket")
-        cos = x.cosine("qv", "cv", self.dim, x.SPARK)
-        scored = (
-            F.broadcast(q)
-            .join(c, on="bucket")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .selectExpr("query_id", "neighbor_id", f"{cos} AS cosine")
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id")
-        )
-        return scored.withColumn(
-            "rank", F.row_number().over(w)
-        ).filter(F.col("rank") <= k)
 
 
 def ivf_nlist_for(n_vectors: int) -> int:
@@ -1063,8 +1085,7 @@ class IncrementalIVFPQIndex(StandingState):
     # -- frozen state (bounded collects: nlist + m*ksub rows) --
 
     def _centroids(self) -> list[list[float]]:
-        rows = self.spark.table(self.centroids_table).orderBy("cidx").collect()
-        return [[float(v) for v in r["cv"]] for r in rows]
+        return _load_centroids(self.spark, self.centroids_table)
 
     def _books(self) -> list[list[list[float]]]:
         rows = (
@@ -1079,20 +1100,11 @@ class IncrementalIVFPQIndex(StandingState):
 
     def init(self, vectors: DataFrame) -> None:
         """Freeze both quantizers on the first slice and ingest it."""
-        from dagster_etl_spark.sources.lake import delete_path
-
-        self.drop()
-        warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-        for t in (self.centroids_table, self.codebooks_table):
-            delete_path(self.spark, f"{warehouse}/{t.lower()}")
+        _clear_frozen(self)
         cents = hash_centroids(
             vectors, self.nlist, id_col=self.id_col, vec_col=self.vec_col
         )
-        self.spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)], ["cidx", "cv"]
-        ).selectExpr("cidx", "CAST(cv AS array<float>) AS cv").write.saveAsTable(
-            self.centroids_table
-        )
+        _save_centroids(self.spark, self.centroids_table, cents)
         books = pq_codebooks(
             vectors, m=self.m, ksub=self.ksub, dim=self.dim,
             id_col=self.id_col, vec_col=self.vec_col,
@@ -1105,36 +1117,15 @@ class IncrementalIVFPQIndex(StandingState):
         ).write.saveAsTable(self.codebooks_table)
         self.ingest(vectors)
 
-    def _encode(self, vectors: DataFrame, cents, books) -> DataFrame:
-        """List assignment + m PQ codes for a slice — one scan-local
-        projection against the frozen-state literals."""
-        ds = self.dim // self.m
-        bucket = f"{_topn_centroid_buckets_expr(self.vec_col, cents, 1)}[0]"
-        coded = pq_codes_staged(
-            spread(vectors), books, ds, self.vec_col,
-            [(self.id_col, self.id_col), (bucket, "bucket")],
-        )
-        # Reconstruction norm PRE-COMPUTED at encode time (r16, the
-        # ivfpq half of the BM25-pushdown lesson): rn is a pure
-        # function of the codes, so paying the norm fold once per
-        # vector at ingest — instead of once per vector PER PROBE —
-        # removes a dim-length fold from the search hot path without
-        # changing a single float (same rv, same fold, same value).
-        recon = pq_reconstruct_expr(
-            [f"code_{j}" for j in range(self.m)], books
-        )
-        return coded.selectExpr(
-            "*", f"{x.norm_fold(f'({recon})', x.SPARK)} AS rn"
-        )
-
     def _stage(self, store, vectors: DataFrame, slice_id: int):
         """Encode ONLY the slice's rows against the frozen quantizers
-        (:meth:`init` must have frozen them) — a pure function of them,
-        so a replay rewrites identical code rows. A codes table written
-        before encode-time ``rn`` keeps its schema: reads and the fold
-        take the base table's columns, and :meth:`topk` recomputes rn
-        in-plan for such tables (r16 ADVICE — no forced rebuild)."""
-        coded = self._encode(vectors, self._centroids(), self._books())
+        (:func:`ivf_pq_encode`; :meth:`init` must have frozen them) — a
+        pure function of them, so a replay rewrites identical code
+        rows."""
+        coded = ivf_pq_encode(
+            vectors, self._centroids(), self._books(), self.dim,
+            self.id_col, self.vec_col,
+        )
         store.write("codes", slice_id, coded, files=slice_file_budget(vectors))
         yield "codes"
 
@@ -1167,87 +1158,12 @@ class IncrementalIVFPQIndex(StandingState):
         one bounded count agg on the codes table, paid only when a
         rerank_source is given. Pass an explicit int to pin it."""
         self.recover_rebucket()  # self-heal an interrupted swap (one stat)
-        cents = self._centroids()
-        books = self._books()
-        all_codes = self._state("codes")
+        codes = self._state("codes")
         if rerank is None and rerank_source is not None:
-            rerank = max(500, all_codes.count() // 200)
-        recon = pq_reconstruct_expr(
-            [f"code_{j}" for j in range(self.m)], books
-        )
-        probe = _topn_centroid_buckets_expr("qv", cents, nprobe)
-        q = (
-            queries.selectExpr(f"{self.id_col} AS query_id", f"{self.vec_col} AS qv")
-            .selectExpr("query_id", "qv", f"{x.norm_fold('qv', x.SPARK)} AS qn")
-            .selectExpr("query_id", "qv", "qn", f"explode({probe}) AS bucket")
-        )
-        # PROBE PUSHDOWN (r16, the BM25-term-pushdown analog): the
-        # probed bucket set is bounded (<= min(nlist, n_queries *
-        # nprobe) values; the collect is a bounded job on the tiny
-        # query side), and pushing it into the codes scan as an IN
-        # filter BEFORE the reconstruction projection means the
-        # dim-length ADC reconstruction runs only on probed lists and
-        # the bucketed scan prunes never-probed buckets — probe cost
-        # tracks nprobe/nlist of the corpus, not the corpus. rn comes
-        # precomputed from encode time (see _encode).
-        probed = sorted(
-            r.bucket for r in q.select("bucket").distinct().collect()
-        )
-        codes = all_codes
-        # Pre-r16 codes tables lack the encode-time rn column (r16
-        # ADVICE): recompute it in-plan from the same reconstruction —
-        # identical fold, identical value, just paid per probe instead
-        # of once at ingest.
-        rn_expr = (
-            "rn" if "rn" in codes.columns
-            else x.norm_fold(f"({recon})", x.SPARK)
-        )
-        c = (
-            codes
-            .filter(F.col("bucket").isin(probed))
-            .selectExpr(
-                f"{self.id_col} AS neighbor_id", "bucket",
-                f"{recon} AS rv", f"{rn_expr} AS rn",
-            )
-        )
-        adc = f"({x.dot_fold('qv', 'rv', x.SPARK)} / nullif(qn * rn, 0.0d))"
-        scored = (
-            F.broadcast(q)
-            .join(c, on="bucket")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .selectExpr("query_id", "neighbor_id", f"{adc} AS adc")
-        )
-        wc = Window.partitionBy("query_id").orderBy(
-            F.col("adc").desc(), F.col("neighbor_id")
-        )
-        if rerank_source is None:
-            return (
-                scored.withColumn("rank", F.row_number().over(wc))
-                .filter(F.col("rank") <= k)
-            )
-        cands = (
-            scored.withColumn("crank", F.row_number().over(wc))
-            .filter(F.col("crank") <= rerank)
-            .select("query_id", "neighbor_id")
-        )
-        full = rerank_source.select(
-            F.col(self.id_col).alias("neighbor_id"),
-            F.col(self.vec_col).alias("cv"),
-        )
-        qf = queries.selectExpr(
-            f"{self.id_col} AS query_id", f"{self.vec_col} AS qv2"
-        )
-        cos = x.cosine("qv2", "cv", self.dim, x.SPARK)
-        rescored = (
-            cands.join(full, on="neighbor_id")
-            .join(F.broadcast(qf), on="query_id")
-            .selectExpr("query_id", "neighbor_id", f"{cos} AS cosine")
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id")
-        )
-        return rescored.withColumn("rank", F.row_number().over(w)).filter(
-            F.col("rank") <= k
+            rerank = max(500, codes.count() // 200)
+        return _ivf_pq_search(
+            queries, codes, self._centroids(), self._books(), nprobe, k,
+            rerank, rerank_source, self.dim, self.id_col, self.vec_col,
         )
 
     def rebucket(
@@ -1347,11 +1263,7 @@ class IncrementalIVFPQIndex(StandingState):
                 "ids — pass the full accumulated vector table"
             )
         cstaging = f"{self.centroids_table}__rb_{tag}"
-        self.spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)], ["cidx", "cv"]
-        ).selectExpr("cidx", "CAST(cv AS array<float>) AS cv").write.saveAsTable(
-            cstaging
-        )
+        _save_centroids(self.spark, cstaging, cents)
         hook("staged")
         self._write_rb_marker(
             {
@@ -1554,6 +1466,15 @@ def hybrid_rrf_topk(
         F.col("neighbor_id").alias("doc_id"),
         F.col("rank").alias("sem_rank"),
     )
+    return _rrf_fuse(lex, sem, k, rrf_k, scale)
+
+
+def _rrf_fuse(
+    lex: DataFrame, sem: DataFrame, k: int, rrf_k: int, scale: int
+) -> DataFrame:
+    """Integer Reciprocal Rank Fusion of two ranked lists, (query_id,
+    doc_id, lex_rank) and (query_id, doc_id, sem_rank), shared by both
+    hybrid retrievers (schema: see :func:`hybrid_rrf_topk`)."""
     fused = lex.join(sem, on=["query_id", "doc_id"], how="full_outer").selectExpr(
         "query_id",
         "doc_id",
@@ -1563,21 +1484,14 @@ def hybrid_rrf_topk(
         f" + COALESCE(CAST({scale} AS BIGINT) DIV ({rrf_k} + sem_rank), CAST(0 AS BIGINT))"
         " AS rrf_scaled",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_scaled").desc(), F.col("doc_id")
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .selectExpr(
-            "query_id",
-            "doc_id",
-            "lex_rank",
-            "sem_rank",
-            "rrf_scaled",
-            f"CAST(rrf_scaled AS DOUBLE) / CAST({scale} AS DOUBLE) AS rrf",
-            "rank",
-        )
+    return _topk_rows(fused, "rrf_scaled", k, nid="doc_id").selectExpr(
+        "query_id",
+        "doc_id",
+        "lex_rank",
+        "sem_rank",
+        "rrf_scaled",
+        f"CAST(rrf_scaled AS DOUBLE) / CAST({scale} AS DOUBLE) AS rrf",
+        "rank",
     )
 
 
@@ -1681,28 +1595,4 @@ def hybrid_rrf_ivf_topk(
         F.col("neighbor_id").alias("doc_id"),
         F.col("rank").alias("sem_rank"),
     )
-    fused = lex.join(sem, on=["query_id", "doc_id"], how="full_outer").selectExpr(
-        "query_id",
-        "doc_id",
-        "lex_rank",
-        "sem_rank",
-        f"COALESCE(CAST({scale} AS BIGINT) DIV ({rrf_k} + lex_rank), CAST(0 AS BIGINT))"
-        f" + COALESCE(CAST({scale} AS BIGINT) DIV ({rrf_k} + sem_rank), CAST(0 AS BIGINT))"
-        " AS rrf_scaled",
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_scaled").desc(), F.col("doc_id")
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .selectExpr(
-            "query_id",
-            "doc_id",
-            "lex_rank",
-            "sem_rank",
-            "rrf_scaled",
-            f"CAST(rrf_scaled AS DOUBLE) / CAST({scale} AS DOUBLE) AS rrf",
-            "rank",
-        )
-    )
+    return _rrf_fuse(lex, sem, k, rrf_k, scale)

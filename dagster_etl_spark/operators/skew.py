@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -95,9 +95,3 @@ def salted_groupby(
         .agg(F.sum(agg_col).alias("_partial"))
     )
     return partial.groupBy(*keys).agg(F.sum("_partial").alias(f"sum_{agg_col}"))
-
-
-def broadcast_threshold_hint(df: DataFrame, size_bytes_estimate: int) -> Column | DataFrame:
-    """Explicit broadcast for dims the stats underestimate (JDBC
-    sources report unknown sizes, defeating auto-broadcast)."""
-    return F.broadcast(df) if size_bytes_estimate < 512 * 1024 * 1024 else df

@@ -618,6 +618,14 @@ FROM ranked WHERE rank <= {k}
 BM25_SCALE = 1_000_000
 
 
+def _tokenized(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, dl, _t): each doc's token array and its length — the one
+    tokenize pass of the BM25 and unigram-LM families."""
+    return df.selectExpr(
+        id_col, f"{x.tokens(text_col, x.SPARK)} AS _t"
+    ).selectExpr(id_col, f"CAST({x.xsize('_t', x.SPARK)} AS BIGINT) AS dl", "_t")
+
+
 def bm25_topk_docs(
     df: DataFrame,
     k: int = 10,
@@ -657,23 +665,12 @@ def bm25_topk_docs(
     deterministic (score_scaled desc, doc_id) tiebreak on the EXACT
     integer score, never the double.
     """
-    from pyspark.sql.window import Window
-
-    g = df.selectExpr(
-        id_col, f"{x.tokens(text_col, x.SPARK)} AS _t"
-    ).selectExpr(id_col, f"CAST({x.xsize('_t', x.SPARK)} AS BIGINT) AS dl", "_t")
+    g = _tokenized(df, text_col, id_col)
     ex = pin(
         g.select(id_col, "dl", F.explode("_t").alias("term"))
     )
-    tf = ex.groupBy(id_col, "dl", "term").agg(
-        F.count(F.lit(1)).cast("long").alias("tf")
-    )
     dfq = ex.groupBy("term").agg(
         F.countDistinct(id_col).cast("long").alias("df")
-    )
-    tot = g.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_tokens"),
     )
     # q_id_cap bounds the QUERY set independently of corpus size
     # (ids % seed_mod == 0 AND id < q_id_cap => at most
@@ -687,6 +684,44 @@ def bm25_topk_docs(
         .select(F.col(id_col).alias("query_id"), "term")
         .distinct()
     )
+    return _bm25_rank(
+        _postings(ex, id_col), dfq, _bm25_totals(g), qt, k, id_col, scale
+    )
+
+
+def _postings(ex: DataFrame, id_col: str) -> DataFrame:
+    """(term, doc_id, dl, tf) from exploded (doc_id, dl, term) rows —
+    the BM25 inverted index."""
+    return ex.groupBy("term", id_col, "dl").agg(
+        F.count(F.lit(1)).cast("long").alias("tf")
+    )
+
+
+def _bm25_totals(g: DataFrame) -> DataFrame:
+    """1-row (n_docs, total_tokens) of a :func:`_tokenized` frame."""
+    return g.agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("dl").cast("long").alias("total_tokens"),
+    )
+
+
+def _bm25_rank(
+    postings: DataFrame,
+    dfq: DataFrame,
+    tot: DataFrame,
+    qt: DataFrame,
+    k: int,
+    id_col: str,
+    scale: int,
+) -> DataFrame:
+    """The BM25 read shared by :func:`bm25_topk_docs` and
+    :meth:`IncrementalBM25Index.topk`: score every doc of ``postings``
+    (term, doc_id, dl, tf) sharing a term with a query of ``qt``
+    (query_id, term), with per-term ``dfq`` (term, df) and the 1-row
+    ``tot`` (n_docs, total_tokens), and keep each query's top ``k``
+    (schema: see :func:`bm25_topk_docs`)."""
+    from pyspark.sql.window import Window
+
     avgdl = "(total_tokens DIV n_docs)"
     num = f"(CAST({scale} AS BIGINT) * 44 * {avgdl} * tf * (2*n_docs - 2*df + 1))"
     den = f"((2*df + 1) * (20*{avgdl}*tf + 6*{avgdl} + 18*dl))"
@@ -698,7 +733,7 @@ def bm25_topk_docs(
     # also skips the SMJ's corpus-sized sort. Same reasoning for qt
     # (the query term set grows with the corpus under id % seed_mod).
     scored = (
-        tf.join(dfq.hint("shuffle_hash"), on="term")
+        postings.join(dfq.hint("shuffle_hash"), on="term")
         .join(qt.hint("shuffle_hash"), on="term")
         .filter(F.col("query_id") != F.col(id_col))
         .crossJoin(F.broadcast(tot))
@@ -834,7 +869,7 @@ class IncrementalBM25Index(StandingState):
 
     def _stage(self, store, docs: DataFrame, slice_id: int):
         """Stage postings, per-term df and the totals row of one slice
-        — one tokenize pass, same expressions as the one-shot operator.
+        — one tokenize pass, the same encoders as the one-shot operator.
         No explicit file budget: all three are aggregate outputs, whose
         trailing shuffle AQE already coalesces to slice-sized files
         (measured: 1 part-file as-is; see slice_file_budget).
@@ -842,11 +877,7 @@ class IncrementalBM25Index(StandingState):
         doc_id must be unique within a slice — the df derivation below
         relies on it — so a duplicated id raises ValueError before
         anything is staged."""
-        g = docs.selectExpr(
-            self.id_col, f"{x.tokens(self.text_col, x.SPARK)} AS _t"
-        ).selectExpr(
-            self.id_col, f"CAST({x.xsize('_t', x.SPARK)} AS BIGINT) AS dl", "_t"
-        )
+        g = _tokenized(docs, self.text_col, self.id_col)
         with persisted(g):
             dup = (
                 g.groupBy(self.id_col).count().filter("count > 1").limit(1)
@@ -858,10 +889,7 @@ class IncrementalBM25Index(StandingState):
                     f"occurs more than once in slice {slice_id}"
                 )
             ex = g.select(self.id_col, "dl", F.explode("_t").alias("term"))
-            postings = ex.groupBy("term", self.id_col, "dl").agg(
-                F.count(F.lit(1)).cast("long").alias("tf")
-            )
-            store.write("postings", slice_id, postings)
+            store.write("postings", slice_id, _postings(ex, self.id_col))
             yield "postings"
             # df from the STAGED postings slice instead of a second
             # explode+aggregate over the token arrays (r19, guide §1.2):
@@ -874,11 +902,7 @@ class IncrementalBM25Index(StandingState):
             )
             store.write("df", slice_id, partial_df)
             yield "df"
-            totals = g.agg(
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.sum("dl").cast("long").alias("total_tokens"),
-            )
-            store.write("totals", slice_id, totals)
+            store.write("totals", slice_id, _bm25_totals(g))
             yield "totals"
 
     def topk(
@@ -890,11 +914,11 @@ class IncrementalBM25Index(StandingState):
     ) -> DataFrame:
         """Fixed-point BM25 top-k against the standing index.
         ``queries`` = (id_col, text_col); each query's distinct token
-        set scores the accumulated corpus — identical arithmetic to
-        :func:`bm25_topk_docs` with (N, total_tokens, df) read from
-        the summed standing state. The probe join shuffles only the
-        query term set; postings and partial dfs read co-located on
-        their term bucketing.
+        set scores the accumulated corpus through :func:`_bm25_rank`,
+        the read :func:`bm25_topk_docs` runs, with (N, total_tokens,
+        df) read from the summed standing state. The probe join
+        shuffles only the query term set; postings and partial dfs read
+        co-located on their term bucketing.
 
         TERM PUSHDOWN (r15 — what makes the probe BOUNDED instead of
         corpus-linear): without it, the probe join must SCAN the whole
@@ -922,8 +946,6 @@ class IncrementalBM25Index(StandingState):
         rather than erroring — the collect is bounded at
         ``push_terms + 1`` rows).
         """
-        from pyspark.sql.window import Window
-
         spark = queries.sparkSession
         postings = self._state("postings", spark)
         raw_df = self._state("df", spark)
@@ -961,40 +983,7 @@ class IncrementalBM25Index(StandingState):
             F.sum("n_docs").cast("long").alias("n_docs"),
             F.sum("total_tokens").cast("long").alias("total_tokens"),
         )
-        avgdl = "(total_tokens DIV n_docs)"
-        num = (
-            f"(CAST({self.scale} AS BIGINT) * 44 * {avgdl} * tf * "
-            f"(2*n_docs - 2*df + 1))"
-        )
-        den = f"((2*df + 1) * (20*{avgdl}*tf + 6*{avgdl} + 18*dl))"
-        # same SHUFFLE_HASH pins as the one-shot operator: the summed
-        # dfq is vocabulary-sized (broadcast-threshold flip-flop at
-        # fixture scale, never broadcastable at 100 TB)
-        scored = (
-            postings.join(dfq.hint("shuffle_hash"), on="term")
-            .join(qt.hint("shuffle_hash"), on="term")
-            .filter(F.col("query_id") != F.col(self.id_col))
-            .crossJoin(F.broadcast(tot))
-            .selectExpr("query_id", self.id_col, f"{num} DIV {den} AS contrib")
-        )
-        agg = scored.groupBy("query_id", self.id_col).agg(
-            F.sum("contrib").cast("long").alias("score_scaled")
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score_scaled").desc(), F.col(self.id_col)
-        )
-        return (
-            agg.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .selectExpr(
-                "query_id",
-                self.id_col,
-                "score_scaled",
-                f"CAST(score_scaled AS DOUBLE) / CAST({self.scale} AS DOUBLE)"
-                " AS score",
-                "rank",
-            )
-        )
+        return _bm25_rank(postings, dfq, tot, qt, k, self.id_col, self.scale)
 
 
 # -- CCNet-style unigram-LM perplexity buckets --------------------------------
@@ -1040,27 +1029,58 @@ def ccnet_surprisal_buckets(
     Returns (doc_id, dl, surprisal_scaled, surprisal, bucket) with
     bucket ∈ {'head','middle','tail'}.
     """
-    from pyspark.sql.window import Window
-
-    s = x.SPARK
-    g = df.selectExpr(id_col, f"{x.tokens(text_col, s)} AS _t").selectExpr(
-        id_col, f"CAST({x.xsize('_t', s)} AS BIGINT) AS dl", "_t"
-    ).filter("dl > 0")
+    g = _tokenized(df, text_col, id_col).filter("dl > 0")
     ex = pin(g.select(id_col, "dl", F.explode("_t").alias("term")))
-    tf = ex.groupBy(id_col, "dl", "term").agg(
-        F.count(F.lit(1)).cast("long").alias("tf")
+    # the probe is the corpus the LM was built from, so the tercile
+    # denominator is tot's n_docs — no separate probe count
+    return _surprisal_buckets(
+        ex, _term_counts(ex), _lm_totals(g), id_col, scale, count_probe=False
     )
-    ct = ex.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("ct"))
-    tot = g.agg(
+
+
+def _term_counts(ex: DataFrame) -> DataFrame:
+    """(term, ct): unigram occurrence counts of exploded term rows."""
+    return ex.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("ct"))
+
+
+def _lm_totals(g: DataFrame) -> DataFrame:
+    """1-row (n_total, n_docs) of a :func:`_tokenized` frame."""
+    return g.agg(
         F.sum("dl").cast("long").alias("n_total"),
         F.count(F.lit(1)).cast("long").alias("n_docs"),
     )
-    qsurp = x.floor_log2_ratio("n_total", "ct", s)
+
+
+def _surprisal_buckets(
+    ex: DataFrame,
+    ct: DataFrame,
+    tot: DataFrame,
+    id_col: str,
+    scale: int,
+    count_probe: bool,
+) -> DataFrame:
+    """The unigram-LM read shared by :func:`ccnet_surprisal_buckets`
+    and :meth:`IncrementalUnigramLM.score`: score the exploded probe
+    ``ex`` (doc_id, dl, term) against the LM's term counts ``ct``
+    (term, ct) and 1-row totals ``tot`` (n_total, n_docs), then bucket
+    at the probe's tercile cutpoints (:func:`_tercile_buckets`).
+    Probe-only terms (never seen by the LM) would make the log ratio
+    infinite; they carry ct=NULL through the left join and score at
+    the maximum observable surprisal floor(log2 N) + 1 — one grain
+    above any seen singleton, the standard out-of-vocabulary clamp
+    (it never fires when the probe is the LM's own corpus)."""
+    tf = ex.groupBy(id_col, "dl", "term").agg(
+        F.count(F.lit(1)).cast("long").alias("tf")
+    )
+    qsurp = (
+        f"CASE WHEN ct IS NULL THEN {x.blen('n_total', x.SPARK)} "
+        f"ELSE {x.floor_log2_ratio('n_total', 'ct', x.SPARK)} END"
+    )
     # pinned: BOTH the histogram (threshold) branch and the final
     # bucket-assignment branch consume the per-doc scores — without the
     # pin the whole tokenize+aggregate subtree executes twice
     docsc = pin(
-        tf.join(ct, on="term")
+        tf.join(ct, on="term", how="left")
         .crossJoin(F.broadcast(tot))
         .groupBy(id_col, "dl", "n_docs")
         .agg(F.sum(F.expr(f"tf * CAST({qsurp} AS BIGINT)")).alias("_sq"))
@@ -1071,36 +1091,53 @@ def ccnet_surprisal_buckets(
             f"(CAST({scale} AS BIGINT) * _sq) DIV dl AS surprisal_scaled",
         )
     )
-    hist = docsc.groupBy("surprisal_scaled", "n_docs").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
+    return _tercile_buckets(docsc, id_col, "dl", scale, count_probe)
+
+
+def _tercile_buckets(
+    docsc: DataFrame, id_col: str, len_col: str, scale: int, count_probe: bool
+) -> DataFrame:
+    """head / middle / tail buckets of ``docsc``'s integer
+    ``surprisal_scaled`` at the tercile cutpoints of a cumulative
+    histogram, shared by the whole LM family: the histogram's key is
+    the quantized score, the cumulative window runs over that
+    aggregated frame only, and the two cutpoints ride a 1-row
+    broadcast back onto the docs — no corpus-sized sort. Docs at a
+    cutpoint share a bucket.
+
+    The tercile denominator is ``docsc``'s ``n_docs`` column, or, with
+    ``count_probe``, a count of ``docsc`` itself (a standing LM's
+    n_docs counts its corpus, not the probe).
+
+    Returns (id_col, len_col, surprisal_scaled, surprisal, bucket)."""
+    from pyspark.sql.window import Window
+
+    if count_probe:
+        n, keys = "n_probe", ["surprisal_scaled"]
+    else:
+        n, keys = "n_docs", ["surprisal_scaled", "n_docs"]
+    hist = docsc.groupBy(*keys).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    cw = Window.orderBy("surprisal_scaled").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
-    cw = (
-        Window.orderBy("surprisal_scaled")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    cum = hist.withColumn("cum", F.sum("cnt").over(cw))
+    if count_probe:
+        cum = cum.crossJoin(F.broadcast(
+            docsc.groupBy().agg(F.count(F.lit(1)).cast("long").alias(n))
+        ))
+    thr = cum.agg(
+        F.min(F.when(F.col("cum") * 3 >= F.col(n), F.col("surprisal_scaled"))).alias("t1"),
+        F.min(
+            F.when(F.col("cum") * 3 >= 2 * F.col(n), F.col("surprisal_scaled"))
+        ).alias("t2"),
     )
-    thr = (
-        hist.withColumn("cum", F.sum("cnt").over(cw))
-        .agg(
-            F.min(
-                F.when(F.col("cum") * 3 >= F.col("n_docs"), F.col("surprisal_scaled"))
-            ).alias("t1"),
-            F.min(
-                F.when(
-                    F.col("cum") * 3 >= 2 * F.col("n_docs"), F.col("surprisal_scaled")
-                )
-            ).alias("t2"),
-        )
-    )
-    return (
-        docsc.crossJoin(F.broadcast(thr))
-        .selectExpr(
-            id_col,
-            "dl",
-            "surprisal_scaled",
-            f"CAST(surprisal_scaled AS DOUBLE) / CAST({scale} AS DOUBLE) AS surprisal",
-            "CASE WHEN surprisal_scaled <= t1 THEN 'head' "
-            "WHEN surprisal_scaled <= t2 THEN 'middle' ELSE 'tail' END AS bucket",
-        )
+    return docsc.crossJoin(F.broadcast(thr)).selectExpr(
+        id_col,
+        len_col,
+        "surprisal_scaled",
+        f"CAST(surprisal_scaled AS DOUBLE) / CAST({scale} AS DOUBLE) AS surprisal",
+        "CASE WHEN surprisal_scaled <= t1 THEN 'head' "
+        "WHEN surprisal_scaled <= t2 THEN 'middle' ELSE 'tail' END AS bucket",
     )
 
 
@@ -1205,52 +1242,80 @@ def dsir_select(
     Returns the selected candidates (doc_id, lang, n_features,
     weight_q) — weight_q is the integer importance weight.
     """
-    from pyspark.sql.window import Window
+    ex = pin(_dsir_features(df, n_buckets, text_col, id_col, lang_col))
+    st = _dsir_counts(ex, target_lang, lang_col)
+    tot = _dsir_totals(st)
+    return _dsir_pick(ex, st, tot, k, n_buckets, target_lang, id_col, lang_col)
 
+
+def _dsir_features(
+    docs: DataFrame, n_buckets: int, text_col: str, id_col: str, lang_col: str
+) -> DataFrame:
+    """(doc_id, lang, fb): one row per word-bigram occurrence, hashed
+    into ``n_buckets`` — the DSIR encoder."""
     s = x.SPARK
     tok = x.tokens(text_col, s)
     # let-bind the token array: the bigram expr references it 2+2n
     # times and CollapseProject would re-tokenize per reference
     bg = x.let(tok, "_t", _bigram_list_expr("_t", s), s)
-    g = df.selectExpr(id_col, lang_col, f"{bg} AS _bg")
-    ex = pin(
-        g.select(
-            id_col,
-            lang_col,
-            F.explode("_bg").alias("_f"),
-        ).selectExpr(
-            id_col,
-            lang_col,
-            f"pmod({x.h60('_f', s)}, {n_buckets}) AS fb",
-        )
+    return (
+        docs.selectExpr(id_col, lang_col, f"{bg} AS _bg")
+        .select(id_col, lang_col, F.explode("_bg").alias("_f"))
+        .selectExpr(id_col, lang_col, f"pmod({x.h60('_f', s)}, {n_buckets}) AS fb")
     )
-    is_target = F.col(lang_col) == target_lang
-    ct = ex.filter(is_target).groupBy("fb").agg(
-        F.count(F.lit(1)).cast("long").alias("ct")
+
+
+def _dsir_counts(features: DataFrame, target_lang: str, lang_col: str) -> DataFrame:
+    """(fb, ct, cr): per-bucket target and raw occurrence counts."""
+    is_t = F.col(lang_col) == target_lang
+    return features.groupBy("fb").agg(
+        F.sum(F.when(is_t, 1).otherwise(0)).cast("long").alias("ct"),
+        F.sum(F.when(is_t, 0).otherwise(1)).cast("long").alias("cr"),
     )
-    cr = ex.filter(~is_target).groupBy("fb").agg(
-        F.count(F.lit(1)).cast("long").alias("cr")
+
+
+def _dsir_totals(counts: DataFrame) -> DataFrame:
+    """1-row (t_tot, r_tot): t_tot = Σct and r_tot = Σcr are exactly
+    the target and raw feature-row counts."""
+    return counts.agg(
+        F.sum("ct").cast("long").alias("t_tot"),
+        F.sum("cr").cast("long").alias("r_tot"),
     )
-    tot = (
-        ex.agg(
-            F.sum(F.when(is_target, 1).otherwise(0)).cast("long").alias("t_tot"),
-            F.sum(F.when(is_target, 0).otherwise(1)).cast("long").alias("r_tot"),
-        )
-    )
+
+
+def _dsir_pick(
+    features: DataFrame,
+    st: DataFrame,
+    tot: DataFrame,
+    k: int,
+    n_buckets: int,
+    target_lang: str,
+    id_col: str,
+    lang_col: str,
+) -> DataFrame:
+    """The DSIR read shared by :func:`dsir_select` and
+    :meth:`IncrementalDSIRModel.select`: weight each candidate
+    (lang != target) of ``features`` against the model's counts ``st``
+    (fb, ct, cr) and totals ``tot``, then keep weight >= the k-th
+    largest (schema: see :func:`dsir_select`). Features unknown to
+    either distribution carry a NULL count through the left join and
+    are priced by the add-one smoothing alone (which never happens to
+    the raw side when the candidates are the model's own corpus)."""
+    from pyspark.sql.window import Window
+
     qlog = x.floor_log2_ratio(
         f"(COALESCE(ct, 0) + 1) * (r_tot + {n_buckets})",
-        f"(cr + 1) * (t_tot + {n_buckets})",
-        s,
+        f"(COALESCE(cr, 0) + 1) * (t_tot + {n_buckets})",
+        x.SPARK,
     )
     # pinned: the threshold histogram and the final selection filter
     # both consume the per-candidate weights (same contract as docsc in
-    # ccnet_surprisal_buckets)
+    # _surprisal_buckets)
     cand = pin(
-        ex.filter(~is_target)
+        features.filter(F.col(lang_col) != target_lang)
         .groupBy(id_col, lang_col, "fb")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .join(cr, on="fb")
-        .join(ct, on="fb", how="left")
+        .join(st, on="fb", how="left")
         .crossJoin(F.broadcast(tot))
         .groupBy(id_col, lang_col)
         .agg(
@@ -1258,10 +1323,11 @@ def dsir_select(
             F.sum(F.expr(f"tf * CAST({qlog} AS BIGINT)")).alias("weight_q"),
         )
     )
-    hist = cand.groupBy("weight_q").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    cw = (
-        Window.orderBy(F.col("weight_q").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    hist = cand.groupBy("weight_q").agg(
+        F.count(F.lit(1)).cast("long").alias("cnt")
+    )
+    cw = Window.orderBy(F.col("weight_q").desc()).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
     thr = (
         hist.withColumn("cum", F.sum("cnt").over(cw))
@@ -1374,26 +1440,39 @@ def corpus_drift_tv(
 
     Returns (slice, n_tokens, tv_scaled, tv).
     """
-    s = x.SPARK
-    ex = df.selectExpr(
-        f"{slice_col} AS slice", f"explode({x.tokens(text_col, s)}) AS term"
-    )
-    clt = pin(
-        ex.groupBy("slice", "term").agg(
-            F.count(F.lit(1)).cast("long").alias("cl")
-        )
-    )
+    clt = pin(_slice_term_counts(df, text_col, slice_col))
     ct = clt.groupBy("term").agg(F.sum("cl").cast("long").alias("ct"))
-    nl = clt.groupBy("slice").agg(F.sum("cl").cast("long").alias("n_l"))
     n = clt.agg(F.sum("cl").cast("long").alias("n_total"))
+    return _tv_drift(clt, ct, n, scale)
+
+
+def _slice_term_counts(df: DataFrame, text_col: str, slice_col: str) -> DataFrame:
+    """(slice, term, cl): per-slice token occurrence counts."""
+    return df.selectExpr(
+        f"{slice_col} AS slice", f"explode({x.tokens(text_col, x.SPARK)}) AS term"
+    ).groupBy("slice", "term").agg(F.count(F.lit(1)).cast("long").alias("cl"))
+
+
+def _tv_drift(clt: DataFrame, ct: DataFrame, tot: DataFrame, scale: int) -> DataFrame:
+    """The drift read shared by :func:`corpus_drift_tv` and
+    :meth:`IncrementalUnigramLM.drift`: per-slice TV distance of the
+    probe's counts ``clt`` (slice, term, cl) vs the LM's term counts
+    ``ct`` (term, ct) and 1-row ``tot`` (n_total). Probe terms unknown
+    to the LM carry ct=0 through a left join — their |cl·N − 0| mass
+    lands in the present sum, and the absent-mass term N_l·(N − S_l)
+    only ever counts LM terms (S_l sums coalesced cts), so the
+    distance stays exact and in [0, 1]."""
+    nl = clt.groupBy("slice").agg(F.sum("cl").cast("long").alias("n_l"))
     per_slice = (
-        clt.join(ct, on="term")
+        clt.join(ct, on="term", how="left")
         .join(F.broadcast(nl), on="slice")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(F.broadcast(tot))
         .groupBy("slice", "n_l", "n_total")
         .agg(
-            F.sum(F.expr("abs(cl * n_total - ct * n_l)")).cast("long").alias("present"),
-            F.sum("ct").cast("long").alias("s_l"),
+            F.sum(
+                F.expr("abs(cl * n_total - COALESCE(ct, 0) * n_l)")
+            ).cast("long").alias("present"),
+            F.sum(F.expr("COALESCE(ct, 0)")).cast("long").alias("s_l"),
         )
     )
     return per_slice.selectExpr(
@@ -1470,12 +1549,10 @@ class IncrementalUnigramLM(StandingState):
     * ``drift(B1 ∪ .. ∪ Bn, slice_col)`` == :func:`corpus_drift_tv`
       over the union, exactly.
 
-    ``drift`` also takes frames the LM has NEVER seen (the production
-    use: yesterday's model, today's feed): probe terms unknown to the
-    LM carry ct=0 through a left join — their |cl·N − 0| mass lands in
-    the present sum and the algebraic absent-mass term N_l·(N − S_l)
-    only ever counts standing terms (S_l sums coalesced cts), so the
-    distance stays exact and in [0, 1].
+    ``score`` and ``drift`` also take frames the LM has NEVER seen
+    (the production use: yesterday's model, today's feed); see
+    :func:`_surprisal_buckets` and :func:`_tv_drift` for how unseen
+    terms are priced.
     """
 
     def __init__(
@@ -1499,30 +1576,19 @@ class IncrementalUnigramLM(StandingState):
             "totals": (self.totals_table, None),
         }
 
-    def _tokenized(self, docs: DataFrame) -> DataFrame:
-        return docs.selectExpr(
-            self.id_col, f"{x.tokens(self.text_col, x.SPARK)} AS _t"
-        ).selectExpr(
-            self.id_col, f"CAST({x.xsize('_t', x.SPARK)} AS BIGINT) AS dl", "_t"
-        )
-
     def _stage(self, store, docs: DataFrame, slice_id: int):
         """Stage the term counts and the totals row of one slice — one
         tokenize pass (aggregate outputs: AQE already coalesces their
         writes, no file budget). ``streaming/recovery.py`` feeds
         this from foreachBatch, where a plain append would double-count
         a checkpoint-replayed batch in the standing LM."""
-        with persisted(self._tokenized(docs).filter("dl > 0")) as g:
-            counts = g.select(F.explode("_t").alias("term")).groupBy(
-                "term"
-            ).agg(F.count(F.lit(1)).cast("long").alias("ct"))
+        with persisted(
+            _tokenized(docs, self.text_col, self.id_col).filter("dl > 0")
+        ) as g:
+            counts = _term_counts(g.select(F.explode("_t").alias("term")))
             store.write("counts", slice_id, counts)
             yield "counts"
-            totals = g.agg(
-                F.sum("dl").cast("long").alias("n_total"),
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-            )
-            store.write("totals", slice_id, totals)
+            store.write("totals", slice_id, _lm_totals(g))
             yield "totals"
 
     def _summed(self) -> tuple[DataFrame, DataFrame]:
@@ -1537,114 +1603,28 @@ class IncrementalUnigramLM(StandingState):
         return ct, tot
 
     def score(self, docs: DataFrame) -> DataFrame:
-        """Surprisal-bucket ``docs`` against the standing LM — same
-        arithmetic and output schema as :func:`ccnet_surprisal_buckets`
-        with (ct, N) read from the summed state. Probe-only terms
-        (never seen by the LM) would make the log ratio infinite; they
-        carry ct=0 through the left join and score at the maximum
-        observable surprisal floor(log2 N) + 1 — one grain above any
-        seen singleton, the standard out-of-vocabulary clamp."""
-        from pyspark.sql.window import Window
-
+        """Surprisal-bucket ``docs`` against the standing LM — the read
+        of :func:`ccnet_surprisal_buckets` (:func:`_surprisal_buckets`)
+        with (ct, N) read from the summed state and the tercile
+        cutpoints taken over the PROBE frame's scores."""
         ctd, tot = self._summed()
-        g = self._tokenized(docs).filter("dl > 0")
+        g = _tokenized(docs, self.text_col, self.id_col).filter("dl > 0")
         ex = g.select(self.id_col, "dl", F.explode("_t").alias("term"))
-        tf = ex.groupBy(self.id_col, "dl", "term").agg(
-            F.count(F.lit(1)).cast("long").alias("tf")
-        )
-        qsurp = (
-            f"CASE WHEN ct IS NULL THEN {x.blen('n_total', x.SPARK)} "
-            f"ELSE {x.floor_log2_ratio('n_total', 'ct', x.SPARK)} END"
-        )
-        docsc = pin(
-            tf.join(ctd, on="term", how="left")
-            .crossJoin(F.broadcast(tot))
-            .groupBy(self.id_col, "dl", "n_docs")
-            .agg(F.sum(F.expr(f"tf * CAST({qsurp} AS BIGINT)")).alias("_sq"))
-            .selectExpr(
-                self.id_col,
-                "dl",
-                "n_docs",
-                f"(CAST({self.scale} AS BIGINT) * _sq) DIV dl AS surprisal_scaled",
-            )
-        )
-        # tercile cutpoints over the PROBE frame's scores (n_docs of
-        # the probe, not the corpus): mirror of the one-shot operator
-        n_probe = docsc.groupBy().agg(
-            F.count(F.lit(1)).cast("long").alias("n_probe")
-        )
-        hist = docsc.groupBy("surprisal_scaled").agg(
-            F.count(F.lit(1)).cast("long").alias("cnt")
-        )
-        cw = Window.orderBy("surprisal_scaled").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        thr = (
-            hist.withColumn("cum", F.sum("cnt").over(cw))
-            .crossJoin(F.broadcast(n_probe))
-            .agg(
-                F.min(
-                    F.when(
-                        F.col("cum") * 3 >= F.col("n_probe"),
-                        F.col("surprisal_scaled"),
-                    )
-                ).alias("t1"),
-                F.min(
-                    F.when(
-                        F.col("cum") * 3 >= 2 * F.col("n_probe"),
-                        F.col("surprisal_scaled"),
-                    )
-                ).alias("t2"),
-            )
-        )
-        return docsc.crossJoin(F.broadcast(thr)).selectExpr(
-            self.id_col,
-            "dl",
-            "surprisal_scaled",
-            f"CAST(surprisal_scaled AS DOUBLE) / CAST({self.scale} AS DOUBLE)"
-            " AS surprisal",
-            "CASE WHEN surprisal_scaled <= t1 THEN 'head' "
-            "WHEN surprisal_scaled <= t2 THEN 'middle' ELSE 'tail' END AS bucket",
+        return _surprisal_buckets(
+            ex, ctd, tot, self.id_col, self.scale, count_probe=True
         )
 
     def drift(
         self, docs: DataFrame, slice_col: str = "lang", tv_scale: int = TV_SCALE
     ) -> DataFrame:
         """Per-slice total-variation distance of ``docs``'s unigram
-        distributions vs the standing LM — same output schema as
-        :func:`corpus_drift_tv` with (ct, N) read from the summed
-        state. Works for both ingested frames (drift of each slice vs
-        the corpus it is part of) and unseen feeds (ct=0 terms stay in
-        the present sum)."""
+        distributions vs the standing LM — the read of
+        :func:`corpus_drift_tv` (:func:`_tv_drift`) with (ct, N) read
+        from the summed state. Works for both ingested frames (drift
+        of each slice vs the corpus it is part of) and unseen feeds."""
         ctd, tot = self._summed()
-        ex = docs.selectExpr(
-            f"{slice_col} AS slice",
-            f"explode({x.tokens(self.text_col, x.SPARK)}) AS term",
-        )
-        clt = ex.groupBy("slice", "term").agg(
-            F.count(F.lit(1)).cast("long").alias("cl")
-        )
-        nl = clt.groupBy("slice").agg(F.sum("cl").cast("long").alias("n_l"))
-        per_slice = (
-            clt.join(ctd, on="term", how="left")
-            .join(F.broadcast(nl), on="slice")
-            .crossJoin(F.broadcast(tot))
-            .groupBy("slice", "n_l", "n_total")
-            .agg(
-                F.sum(
-                    F.expr("abs(cl * n_total - COALESCE(ct, 0) * n_l)")
-                ).cast("long").alias("present"),
-                F.sum(F.expr("COALESCE(ct, 0)")).cast("long").alias("s_l"),
-            )
-        )
-        return per_slice.selectExpr(
-            "slice",
-            "n_l AS n_tokens",
-            f"(CAST({tv_scale} AS BIGINT) * (present + n_l * (n_total - s_l)))"
-            " DIV (2 * n_total * n_l) AS tv_scaled",
-            f"CAST((CAST({tv_scale} AS BIGINT) * (present + n_l * (n_total - s_l)))"
-            f" DIV (2 * n_total * n_l) AS DOUBLE) / CAST({tv_scale} AS DOUBLE) AS tv",
-        )
+        clt = _slice_term_counts(docs, self.text_col, slice_col)
+        return _tv_drift(clt, ctd, tot, tv_scale)
 
 
 def bigram_surprisal_buckets(
@@ -1675,8 +1655,6 @@ def bigram_surprisal_buckets(
 
     Returns (doc_id, n_bigrams, surprisal_scaled, surprisal, bucket).
     """
-    from pyspark.sql.window import Window
-
     s = x.SPARK
     tok = x.tokens(text_col, s)
     bg = x.let(tok, "_t", _bigram_list_expr("_t", s), s)
@@ -1715,33 +1693,7 @@ def bigram_surprisal_buckets(
             f"(CAST({scale} AS BIGINT) * _sq) DIV nb AS surprisal_scaled",
         )
     )
-    hist = docsc.groupBy("surprisal_scaled", "n_docs").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    cw = Window.orderBy("surprisal_scaled").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    thr = (
-        hist.withColumn("cum", F.sum("cnt").over(cw))
-        .agg(
-            F.min(
-                F.when(F.col("cum") * 3 >= F.col("n_docs"), F.col("surprisal_scaled"))
-            ).alias("t1"),
-            F.min(
-                F.when(
-                    F.col("cum") * 3 >= 2 * F.col("n_docs"), F.col("surprisal_scaled")
-                )
-            ).alias("t2"),
-        )
-    )
-    return docsc.crossJoin(F.broadcast(thr)).selectExpr(
-        id_col,
-        "n_bigrams",
-        "surprisal_scaled",
-        f"CAST(surprisal_scaled AS DOUBLE) / CAST({scale} AS DOUBLE) AS surprisal",
-        "CASE WHEN surprisal_scaled <= t1 THEN 'head' "
-        "WHEN surprisal_scaled <= t2 THEN 'middle' ELSE 'tail' END AS bucket",
-    )
+    return _tercile_buckets(docsc, id_col, "n_bigrams", scale, count_probe=False)
 
 
 def bigram_surprisal_buckets_oracle_sql(
@@ -1827,9 +1779,7 @@ class IncrementalDSIRModel(StandingState):
     reuses the one-shot oracle.
 
     ``select`` also takes candidate frames the model has NEVER seen
-    (the production cadence): features unknown to the raw distribution
-    carry cr=0 through the left join, so the add-one smoothing alone
-    prices them — same for unknown-to-target features (ct=0).
+    (the production cadence); see :func:`_dsir_pick`.
     """
 
     def __init__(
@@ -1857,38 +1807,19 @@ class IncrementalDSIRModel(StandingState):
             "totals": (self.totals_table, None),
         }
 
-    def _features(self, docs: DataFrame) -> DataFrame:
-        s = x.SPARK
-        tok = x.tokens(self.text_col, s)
-        bg = x.let(tok, "_t", _bigram_list_expr("_t", s), s)
-        return (
-            docs.selectExpr(self.id_col, self.lang_col, f"{bg} AS _bg")
-            .select(self.id_col, self.lang_col, F.explode("_bg").alias("_f"))
-            .selectExpr(
-                self.id_col,
-                self.lang_col,
-                f"pmod({x.h60('_f', s)}, {self.n_buckets}) AS fb",
-            )
-        )
-
     def _stage(self, store, docs: DataFrame, slice_id: int):
         """Stage the per-bucket target/raw counts of one slice, then
-        derive its totals row from the STAGED counts: t_tot = Σct and
-        r_tot = Σcr are exactly the feature-row sums, so the exploded
+        derive its totals row from the STAGED counts, so the exploded
         features are read once (NULL on an empty slice either way)."""
-        is_t = F.col(self.lang_col) == self.target_lang
-        counts = self._features(docs).groupBy("fb").agg(
-            F.sum(F.when(is_t, 1).otherwise(0)).cast("long").alias("ct"),
-            F.sum(F.when(is_t, 0).otherwise(1)).cast("long").alias("cr"),
+        features = _dsir_features(
+            docs, self.n_buckets, self.text_col, self.id_col, self.lang_col
         )
-        store.write("counts", slice_id, counts)
+        store.write("counts", slice_id, _dsir_counts(
+            features, self.target_lang, self.lang_col
+        ))
         yield "counts"
         staged = store.read_slice(docs.sparkSession, "counts", slice_id)
-        totals = staged.agg(
-            F.sum("ct").cast("long").alias("t_tot"),
-            F.sum("cr").cast("long").alias("r_tot"),
-        )
-        store.write("totals", slice_id, totals)
+        store.write("totals", slice_id, _dsir_totals(staged))
         yield "totals"
 
     def _summed(self) -> tuple[DataFrame, DataFrame]:
@@ -1905,44 +1836,18 @@ class IncrementalDSIRModel(StandingState):
 
     def select(self, docs: DataFrame, k: int = 25) -> DataFrame:
         """Score ``docs``'s candidates (lang != target) against the
-        standing model and keep weight >= the k-th largest — identical
-        arithmetic and output schema to :func:`dsir_select` with
-        (ct, cr, totals) read from the summed state."""
-        from pyspark.sql.window import Window
-
+        standing model and keep weight >= the k-th largest — the read
+        of :func:`dsir_select` (:func:`_dsir_pick`) with (ct, cr,
+        totals) read from the summed state."""
         st, tot = self._summed()
-        qlog = x.floor_log2_ratio(
-            f"(COALESCE(ct, 0) + 1) * (r_tot + {self.n_buckets})",
-            f"(COALESCE(cr, 0) + 1) * (t_tot + {self.n_buckets})",
-            x.SPARK,
+        features = _dsir_features(
+            docs, self.n_buckets, self.text_col, self.id_col, self.lang_col
         )
-        cand = pin(
-            self._features(docs)
-            .filter(F.col(self.lang_col) != self.target_lang)
-            .groupBy(self.id_col, self.lang_col, "fb")
-            .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-            .join(st.hint("shuffle_hash"), on="fb", how="left")
-            .crossJoin(F.broadcast(tot))
-            .groupBy(self.id_col, self.lang_col)
-            .agg(
-                F.sum("tf").alias("n_features"),
-                F.sum(F.expr(f"tf * CAST({qlog} AS BIGINT)")).alias("weight_q"),
-            )
-        )
-        hist = cand.groupBy("weight_q").agg(
-            F.count(F.lit(1)).cast("long").alias("cnt")
-        )
-        cw = Window.orderBy(F.col("weight_q").desc()).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        thr = (
-            hist.withColumn("cum", F.sum("cnt").over(cw))
-            .agg(F.max(F.when(F.col("cum") >= k, F.col("weight_q"))).alias("t_k"))
-        )
-        return (
-            cand.crossJoin(F.broadcast(thr))
-            .filter(F.col("weight_q") >= F.coalesce(F.col("t_k"), F.lit(-(1 << 62))))
-            .select(self.id_col, self.lang_col, "n_features", "weight_q")
+        # the standing read keeps its shuffle-hash join on fb; the
+        # one-shot leaves the (small) in-plan counts to the planner
+        return _dsir_pick(
+            features, st.hint("shuffle_hash"), tot, k, self.n_buckets,
+            self.target_lang, self.id_col, self.lang_col,
         )
 
 
@@ -2457,122 +2362,10 @@ BPE_MERGES: tuple[tuple[str, str], ...] = (
 BPE_RANK_MAX = len(BPE_MERGES) + 1
 
 
-def _bpe_keys_lit(d: str) -> str:
-    items = ", ".join(f"'{a} {b}'" for a, b in BPE_MERGES)
-    return f"array({items})" if d == x.SPARK else f"[{items}]"
-
-
-def bpe_rank_expr(pair: str, d: str) -> str:
-    """1-based merge rank of a ``'left right'`` pair key, or
-    BPE_RANK_MAX when the pair is not in the table. Both engines'
-    position functions signal a miss as 0 (DuckDB 1.x switched from
-    NULL to 0 — probed), so both normalize via NULLIF + COALESCE."""
-    if d == x.SPARK:
-        return (
-            f"COALESCE(NULLIF(array_position({_bpe_keys_lit(d)}, {pair}), 0),"
-            f" CAST({BPE_RANK_MAX} AS BIGINT))"
-        )
-    return (
-        f"COALESCE(NULLIF(list_position({_bpe_keys_lit(d)}, {pair}), 0),"
-        f" {BPE_RANK_MAX})"
-    )
-
-
-def bpe_walk_expr(w: str, d: str) -> str:
-    """BPE inference on one word (Sennrich et al. 2016,
-    arXiv:1508.07909; the GPT-2 tokenizer's merge loop, Radford et al.
-    2019): start from the character sequence and repeatedly merge the
-    LEFTMOST occurrence of the lowest-rank adjacent pair until no pair
-    is in the merge table. Returns the final pieces array<string>.
-
-    The recurrence differs from :func:`subword_walk_expr`'s greedy
-    longest-match walk in kind, not just vocab: BPE is an ITERATIVE
-    PAIR-MERGE ordered by a frozen rank table — a different tokenizer
-    family (GPT) from WordPiece (BERT). One-at-a-time leftmost
-    merging equals classic merge-all-occurrences BPE on a bottom-up
-    consistent table (see BPE_MERGES).
-
-    Fold shape: a word of L chars admits at most L-1 merges, so the
-    walk is ``aggregate(sequence of L-1 steps, chars, step)`` with the
-    no-pair state as the identity — same bounded-left-fold pattern as
-    the subword walk, SPARK DIALECT ONLY for the same reason
-    (list_reduce mis-vectorizes in DuckDB 1.0; the oracle walks the
-    identical recurrence as a recursive CTE,
-    :func:`bpe_segment_oracle_sql`). Entirely scan-local: no shuffle,
-    no Python, O(L^2) worst-case per word inside codegen."""
-    if d != x.SPARK:
-        raise ValueError(
-            "bpe_walk_expr is Spark-only: use the recursive-CTE oracle "
-            "(bpe_segment_oracle_sql)"
-        )
-    chars = (
-        f"transform(sequence(1, length({w})), _ci -> "
-        f"substring({w}, _ci, 1))"
-    )
-    pair = "concat(acc[_i], ' ', acc[_i + 1])"
-    ranks = x.xform(
-        x.zero_range("(size(acc) - 1)", d), "_i", bpe_rank_expr(pair, d), d
-    )
-    merged = (
-        "concat(slice(acc, 1, _j), "
-        "array(concat(acc[_j], acc[_j + 1])), "
-        "slice(acc, _j + 3, size(acc) - _j - 2))"
-    )
-    pick_j = "CAST(array_position(_r, array_min(_r)) - 1 AS INT)"
-    step = x.let(
-        ranks,
-        "_r",
-        f"CASE WHEN size(acc) < 2 OR array_min(_r) >= {BPE_RANK_MAX} "
-        f"THEN acc ELSE {x.let(pick_j, '_j', merged, d)} END",
-        d,
-    )
-    return (
-        f"aggregate({x.zero_range(f'(length({w}) - 1)', d)}, "
-        f"{chars}, (acc, _it) -> {step})"
-    )
-
-
-def bpe_doc_expr(text_col: str, d: str) -> str:
-    """Per-document BPE stats as ONE struct expression (Spark-only):
-    (n_words, n_pieces, seg_fp) — seg_fp = Σ_words h60(pieces joined
-    by ' ') % SUBWORD_FP_MOD, which pins the exact segmentation (a
-    space can never occur inside a piece, so the join is injective)."""
-    joined = "concat_ws(' ', _bp)"
-    word_stats = x.let(
-        bpe_walk_expr("_w", d),
-        "_bp",
-        "named_struct('cnt', CAST(size(_bp) AS BIGINT), "
-        f"'fp', ({x.h60(joined, d)} % {SUBWORD_FP_MOD}))",
-        d,
-    )
-    walk = x.xform("_ws", "_w", word_stats, d)
-    body = (
-        "named_struct('n_words', CAST(size(_ws) AS BIGINT), "
-        f"'n_pieces', {x.xsum_int(x.xform('_segs', '_s', '_s.cnt', d), d)}, "
-        f"'seg_fp', {x.xsum_int(x.xform('_segs', '_s', '_s.fp', d), d)})"
-    )
-    inner = x.let(walk, "_segs", body, d)
-    return x.let(x.tokens(text_col, d), "_ws", inner, d)
-
-
-def bpe_segment_expr_form(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """The r15–r18 pure-expression-tree form of :func:`bpe_segment`
-    (an O(L²) ``aggregate`` fold per word). Kept as the reference twin
-    for the Arrow-batched hot path (r19); tests/test_properties.py pins
-    both forms equal on the fixture corpus."""
-    s = x.SPARK
-    return df.selectExpr(
-        id_col, f"{bpe_doc_expr(text_col, s)} AS _bw"
-    ).selectExpr(
-        id_col,
-        "_bw.n_words AS n_words",
-        "_bw.n_pieces AS n_pieces",
-        "_bw.seg_fp AS seg_fp",
-        "CASE WHEN _bw.n_words > 0 THEN (CAST(1000 AS BIGINT) * _bw.n_pieces)"
-        " DIV _bw.n_words ELSE CAST(0 AS BIGINT) END AS pieces_per_word_x1000",
-    )
+def _bpe_keys_lit() -> str:
+    """The merge table's ``'left right'`` pair keys as a DuckDB list,
+    1-based position = merge rank."""
+    return "[" + ", ".join(f"'{a} {b}'" for a, b in BPE_MERGES) + "]"
 
 
 def bpe_segment(
@@ -2584,13 +2377,14 @@ def bpe_segment(
     report zero counts.
 
     Execution (r19, guide §4.2/§4.5): Arrow-batched ``mapInPandas``
-    running the identical leftmost-lowest-rank merge recurrence in
-    Python (see :func:`_segment_map_in_pandas`) — the SQL ``aggregate``
-    fold it replaced (:func:`bpe_segment_expr_form`, kept as the
-    equivalence twin) executed O(L²) interpreted lambda steps per word
-    and was the registry's single largest per-task-work item (9.7 s
-    Spark-only at sf0.1, r18 verdict task 1). Still zero shuffles and
-    scan-local; only (id, text) cross the Python boundary.
+    running the leftmost-lowest-rank merge recurrence in Python (see
+    :func:`_bpe_word_stats` and :func:`_segment_map_in_pandas`) — the
+    SQL ``aggregate`` fold it replaced executed O(L²) interpreted
+    lambda steps per word and was the registry's single largest
+    per-task-work item (9.7 s Spark-only at sf0.1, r18 verdict task
+    1). Still zero shuffles and scan-local; only (id, text) cross the
+    Python boundary. The DuckDB oracle walks the same recurrence as a
+    recursive CTE (:func:`bpe_segment_oracle_sql`).
 
     Returns (doc_id, n_words, n_pieces, seg_fp,
     pieces_per_word_x1000)."""
@@ -2610,7 +2404,7 @@ def _bpe_walk_ctes(table: str, text_col: str, id_col: str) -> str:
     the merge table — the same recurrence as Spark's aggregate fold.
     ``done`` holds exactly one final row per word."""
     d = x.DUCK
-    keys = _bpe_keys_lit(d)
+    keys = _bpe_keys_lit()
     ranks = (
         f"list_transform(range(1, len(p)), _i -> "
         f"COALESCE(NULLIF(list_position({keys}, p[_i] || ' ' || p[_i + 1]),"
@@ -2714,11 +2508,12 @@ FROM {table} t LEFT JOIN per_doc p USING ({id_col})
 # word→stats memo built once per task (§4.5 — every walk is a pure
 # function of the word, so memoizing within a task is just CSE, not
 # cross-run caching), and only the columns the walk needs cross the
-# boundary (§4.1). Equivalence is pinned three ways: the recursive-CTE
-# DuckDB oracles (unchanged), the pure-Python property models
-# (tests/test_properties.py), and the retained expression-tree twins
-# (`subword_segment_expr_form` / `bpe_segment_expr_form`) which
-# tests compare row-for-row on the fixture corpus.
+# boundary (§4.1). Equivalence is pinned by the recursive-CTE DuckDB
+# oracles, the pure-Python property models (tests/test_properties.py)
+# and, for the subword walk, the expression-tree form
+# (`subword_segment_expr_form`), which two registered queries still run
+# and tests compare row-for-row with the Arrow walk on the fixture
+# corpus.
 
 #: Python mirror of the Spark/Java ``\\s`` class used by
 #: :func:`xdialect.tokens` — Java's default (non-UNICODE) ``\\s`` is
@@ -2770,11 +2565,15 @@ def _subword_word_stats():
 
 
 def _bpe_word_stats():
-    """Per-task word→(n_pieces, fp) walker for the leftmost-lowest-rank
-    merge recurrence of :func:`bpe_walk_expr` (same tie rule: scanning
-    ascending with strict less keeps the LEFTMOST occurrence of the
-    minimum rank; fp = h60 of the space-joined pieces % mod, exactly
-    ``x.h60`` = int(md5 hex prefix 15, 16))."""
+    """Per-task word→(n_pieces, fp) walker for BPE inference (Sennrich
+    et al. 2016, arXiv:1508.07909; the GPT-2 tokenizer's merge loop):
+    start from the character sequence and repeatedly merge the
+    LEFTMOST occurrence of the lowest-rank adjacent pair until no pair
+    is in the merge table (scanning ascending with strict less keeps
+    the leftmost occurrence of the minimum rank). fp = h60 of the
+    space-joined pieces % mod, exactly ``x.h60`` = int(md5 hex prefix
+    15, 16); a space never occurs inside a piece, so the join is
+    injective."""
     import hashlib
 
     ranks = {(a, b): i + 1 for i, (a, b) in enumerate(BPE_MERGES)}
@@ -2829,9 +2628,8 @@ def _subword_doc_fn():
 
 
 def _bpe_doc_fn():
-    """text → (n_words, n_pieces, seg_fp, pieces_per_word_x1000),
-    mirroring :func:`bpe_doc_expr` + :func:`bpe_segment`'s projection
-    including NULL semantics."""
+    """text → (n_words, n_pieces, seg_fp, pieces_per_word_x1000) of
+    :func:`bpe_segment`, NULL text → NULL stats (ppw 0)."""
     word_stats = _bpe_word_stats()
 
     def doc(text):
@@ -2880,37 +2678,6 @@ def _segment_map_in_pandas(
     return df.select(*keep_cols, text_col).mapInPandas(run, schema)
 
 
-def subword_token_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    keep_cols: tuple[str, ...] = ("doc_id", "source"),
-    out_col: str = "n_subword_tokens",
-) -> DataFrame:
-    """(keep_cols, out_col = greedy-subword piece count) per document —
-    the Arrow-batched twin of ``subword_doc_expr(...).n_pieces``.
-    NULL text → NULL count, like the struct field access it mirrors.
-
-    Registered queries do NOT use this form (r19 measured: on the
-    fixture's short texts the O(L·max_piece) greedy walk is cheaper in
-    the expression tree than the Python boundary round trip — 0.58 s vs
-    0.68–0.84 s for token_budget_mixture_subword). It exists as the
-    documented crossover option for long-document corpora, pinned
-    equal to the expression form by tests."""
-
-    def make():
-        word_stats = _subword_word_stats()
-
-        def doc(text):
-            ws = _py_tokens(text)
-            if ws is None:
-                return (None,)
-            return (sum(word_stats(w)[0] for w in ws),)
-
-        return doc
-
-    return _segment_map_in_pandas(df, text_col, keep_cols, (out_col,), make)
-
-
 def bpe_token_counts(
     df: DataFrame,
     text_col: str = "text",
@@ -2918,8 +2685,8 @@ def bpe_token_counts(
     out_col: str = "n_bpe_tokens",
 ) -> DataFrame:
     """(keep_cols, out_col = BPE piece count) per document — the
-    Arrow-batched budget basis for token_budget_mixture_bpe (was
-    ``bpe_doc_expr(...).n_pieces``)."""
+    Arrow-batched budget basis for token_budget_mixture_bpe (equal to
+    :func:`bpe_segment`'s ``n_pieces``)."""
 
     def make():
         word_stats = _bpe_word_stats()
@@ -2990,8 +2757,6 @@ def kn_bigram_surprisal(
 
     Returns (doc_id, n_bigrams, surprisal_scaled, surprisal, bucket).
     """
-    from pyspark.sql.window import Window
-
     s = x.SPARK
     dn, dd = KN_DISCOUNT
     tok = x.tokens(text_col, s)
@@ -3047,33 +2812,7 @@ def kn_bigram_surprisal(
             f"(CAST({scale} AS BIGINT) * _sq) DIV nb AS surprisal_scaled",
         )
     )
-    hist = docsc.groupBy("surprisal_scaled", "n_docs").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    cw = Window.orderBy("surprisal_scaled").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    thr = (
-        hist.withColumn("cum", F.sum("cnt").over(cw))
-        .agg(
-            F.min(
-                F.when(F.col("cum") * 3 >= F.col("n_docs"), F.col("surprisal_scaled"))
-            ).alias("t1"),
-            F.min(
-                F.when(
-                    F.col("cum") * 3 >= 2 * F.col("n_docs"), F.col("surprisal_scaled")
-                )
-            ).alias("t2"),
-        )
-    )
-    return docsc.crossJoin(F.broadcast(thr)).selectExpr(
-        id_col,
-        "n_bigrams",
-        "surprisal_scaled",
-        f"CAST(surprisal_scaled AS DOUBLE) / CAST({scale} AS DOUBLE) AS surprisal",
-        "CASE WHEN surprisal_scaled <= t1 THEN 'head' "
-        "WHEN surprisal_scaled <= t2 THEN 'middle' ELSE 'tail' END AS bucket",
-    )
+    return _tercile_buckets(docsc, id_col, "n_bigrams", scale, count_probe=False)
 
 
 def kn_bigram_surprisal_oracle_sql(

@@ -1715,12 +1715,12 @@ def q_token_budget_mixture_subword(spark: SparkSession, sf_dir: str) -> DataFram
     from dagster_etl_spark.operators.sampling import token_budget_mixture
     from dagster_etl_spark.operators.text import subword_doc_expr
 
-    # r19 measured (guide §1): the Arrow-batched walk
-    # (subword_token_counts) read 0.68–0.84 s here vs 0.58 s for this
-    # expression form — the greedy subword walk is O(L·max_piece),
-    # cheap enough that the Python-boundary round trip costs more than
-    # it saves at this text length. The BPE twin (O(L²) folds) keeps
-    # the Arrow path; re-measure the crossover if document lengths grow.
+    # r19 measured (guide §1): an Arrow-batched subword walk read
+    # 0.68–0.84 s here vs 0.58 s for this expression form — the greedy
+    # subword walk is O(L·max_piece), cheap enough that the
+    # Python-boundary round trip costs more than it saves at this text
+    # length, so that walk was deleted. BPE (O(L²) merges) runs only on
+    # the Arrow path (bpe_token_counts).
     docs = load_table(spark, sf_dir, "documents").selectExpr(
         "doc_id",
         "source",

@@ -83,12 +83,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for spark.sql use."""
     for n in TABLES:

@@ -148,11 +148,18 @@ def stream_documents(
     The index is named after the work dir: a restart on the same
     ``work_dir`` finds the crashed run's slice region, and two work
     dirs never share leftover state. A fresh drop drops the index
-    first (correctness surface: a rebuild, never an accretion)."""
+    first (correctness surface: a rebuild, never an accretion); on the
+    default scratch work dir the index is deleted at interpreter exit
+    with it."""
     from dagster_etl_spark.sources.fixtures import load_table
 
+    from dagster_etl_spark.scratch import drop_warehouse_at_exit
+
     work = work_root(state_cls.__name__.lower(), sf_dir, work_dir)
-    idx = state_cls(spark, f"stream_{_digest(work)}")
+    name = f"stream_{_digest(work)}"
+    if work_dir is None:
+        drop_warehouse_at_exit(spark, name)
+    idx = state_cls(spark, name)
     docs = load_table(spark, sf_dir, "documents")
     in_dir = stage_drop(spark, docs, work, idx.drop)
     run_recoverable_ingest(

@@ -55,6 +55,7 @@ def streaming_weighted_sample(
 
     from dagster_etl_spark.operators.sampling import _ticket_expr
     from dagster_etl_spark.functions import xdialect as x
+    from dagster_etl_spark.scratch import drop_warehouse_at_exit
     from dagster_etl_spark.sources.fixtures import load_table
     from dagster_etl_spark.sources.lake import delete_path
     from dagster_etl_spark.streaming.recovery import (
@@ -72,6 +73,8 @@ def streaming_weighted_sample(
     # run wrote, and two different work dirs must never collide on a
     # leftover warehouse location
     state_table = f"ws_state_{hashlib.md5(work.encode()).hexdigest()[:8]}"
+    if work_dir is None:
+        drop_warehouse_at_exit(spark, state_table)
 
     def reset() -> None:
         spark.sql(f"DROP TABLE IF EXISTS {state_table}")

@@ -24,7 +24,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dagster_etl_spark.sources.lake import check_exists, delete_path, rename_or_raise
+from dagster_etl_spark.sources.lake import check_exists, rename_or_raise
 
 
 def with_tenant(df: DataFrame, tenant_id: str, column: str = "project_id") -> DataFrame:
@@ -115,11 +115,6 @@ def append_parquet(source: DataFrame, path: str) -> int:
     n = source.count()
     source.write.mode("append").parquet(path)
     return n
-
-
-def truncate_parquet(spark: SparkSession, path: str) -> None:
-    """S10: truncate = delete the path (next write recreates)."""
-    delete_path(spark, path)
 
 
 def merge_delete_sql(catalog_table: str, keys: list[str]) -> str:

@@ -360,49 +360,6 @@ def test_ivfpq_rebucket_appended_index_invariants(spark):
     idx.drop()
 
 
-def test_ivfpq_pre_r16_codes_table_without_rn_still_works(spark):
-    """r16 ADVICE: a codes table persisted BEFORE the encode-time rn
-    column must keep working — topk recomputes rn in-plan (identical
-    fold, identical values) and append matches the legacy schema
-    instead of erroring. Simulate by rewriting the codes table minus
-    rn, then search AND append onto it; results must equal the
-    rn-carrying index bit-for-bit."""
-    from dagster_etl_spark.operators.similarity import IncrementalIVFPQIndex
-    from dagster_etl_spark.sources.bucketed import write_bucketed
-    from dagster_etl_spark.sources.fixtures import load_table
-    from tests.conftest import SF_SMALL
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    init_slice = emb.filter("vec_id % 3 = 0")
-    rest = emb.filter("vec_id % 3 <> 0")
-    q = emb.filter("vec_id < 5")
-
-    new = IncrementalIVFPQIndex(spark, "ivfpq_rn_new", m=8, ksub=16)
-    new.init(init_slice)
-    new.ingest(rest)
-    want = {
-        (r.query_id, r.rank, r.neighbor_id, r.cosine)
-        for r in new.topk(q, k=10, rerank_source=emb).collect()
-    }
-    new.drop()
-
-    old = IncrementalIVFPQIndex(spark, "ivfpq_rn_old", m=8, ksub=16)
-    old.init(init_slice)
-    # strip rn in place: the pre-r16 on-disk schema
-    legacy = spark.table(old.codes_table).drop("rn").localCheckpoint()
-    spark.sql(f"DROP TABLE {old.codes_table}")
-    write_bucketed(legacy, old.codes_table, ["bucket"], num_buckets=old.num_buckets)
-    assert "rn" not in spark.table(old.codes_table).columns
-    old.ingest(rest)  # must match the legacy schema, not error
-    assert "rn" not in spark.table(old.codes_table).columns
-    got = {
-        (r.query_id, r.rank, r.neighbor_id, r.cosine)
-        for r in old.topk(q, k=10, rerank_source=emb).collect()
-    }
-    old.drop()
-    assert got == want and len(got) == 50
-
-
 def test_ivfpq_rebucket_crash_windows_roll_forward(spark):
     """r18 (r17 verdict task 5): the rebucket swap is crash-safe at
     EVERY window, including the historically-unprotected span between

@@ -1159,44 +1159,31 @@ def test_bpe_segment_matches_python_model(spark, texts):
 
 
 def test_arrow_walks_equal_expression_twins(spark):
-    """r19: the tokenizer walks execute as Arrow-batched mapInPandas on
-    the hot path; the r15–r18 expression-tree forms are retained as
-    twins and must stay BIT-IDENTICAL (values, column names, dtypes) on
-    the real fixture corpus — the in-repo equivalence gate next to the
-    DuckDB recursive-CTE oracles."""
+    """r19: the tokenizer walks execute as Arrow-batched mapInPandas.
+    The subword walk's expression-tree form (still run by registered
+    queries) must stay BIT-IDENTICAL to its Arrow twin (values, column
+    names, dtypes) on the real fixture corpus, and the BPE budget
+    counts must equal ``bpe_segment``'s piece counts — the in-repo
+    equivalence gate next to the DuckDB recursive-CTE oracles."""
     import pandas as pd
 
     from tests.conftest import SF_SMALL
 
-    from dagster_etl_spark.functions import xdialect as x
     from dagster_etl_spark.operators.text import (
-        bpe_doc_expr,
         bpe_segment,
-        bpe_segment_expr_form,
         bpe_token_counts,
-        subword_doc_expr,
         subword_segment,
         subword_segment_expr_form,
-        subword_token_counts,
     )
     from dagster_etl_spark.sources.fixtures import load_table
 
     docs = load_table(spark, SF_SMALL, "documents")
-    old_sw_counts = docs.selectExpr(
-        "doc_id",
-        "source",
-        f"{subword_doc_expr('text', x.SPARK)}.n_pieces AS n_subword_tokens",
-    )
-    old_bpe_counts = docs.selectExpr(
-        "doc_id",
-        "source",
-        f"{bpe_doc_expr('text', x.SPARK)}.n_pieces AS n_bpe_tokens",
-    )
+    seg_counts = bpe_segment(docs.select("doc_id", "text")).join(
+        docs.select("doc_id", "source"), on="doc_id"
+    ).selectExpr("doc_id", "source", "n_pieces AS n_bpe_tokens")
     pairs = [
         ("subword_segment", subword_segment(docs), subword_segment_expr_form(docs)),
-        ("bpe_segment", bpe_segment(docs), bpe_segment_expr_form(docs)),
-        ("subword_token_counts", subword_token_counts(docs), old_sw_counts),
-        ("bpe_token_counts", bpe_token_counts(docs), old_bpe_counts),
+        ("bpe_token_counts", bpe_token_counts(docs), seg_counts),
     ]
     for name, new, old in pairs:
         a = new.toPandas().sort_values("doc_id").reset_index(drop=True)
