@@ -5,12 +5,13 @@ Runs every ``queries()`` entry at sf0.01 on Spark and its
 and order-insensitive values (exact equality, floats included — the
 engine's determinism contract is bit-for-bit).
 
-Memory stays bounded at any result size: the Spark result is cached on
-disk and the oracle result in a DuckDB temp table, and a result of more
-than CHUNK_ROWS rows is compared chunk by chunk (rows split by one
-integer column mod the chunk count, the same split on both sides), so
-at most one chunk of each side is in pandas at a time. The process's
-peak RSS is printed at the end and recorded in the --json artifact.
+The pandas side stays bounded at any result size: the Spark result is
+cached on disk and the oracle result in a DuckDB temp table, and a
+result of more than CHUNK_ROWS rows is compared chunk by chunk (rows
+split by one integer column mod the chunk count, the same split on both
+sides), so at most one chunk of each side is in pandas at a time. The
+process's peak RSS (which includes DuckDB running the oracles) is
+printed at the end and recorded in the --json artifact.
 
 Usage: python tools/check_correctness.py [--json OUT.json] [sf_dir] [name ...]
 """
