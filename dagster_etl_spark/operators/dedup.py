@@ -1368,41 +1368,31 @@ def semantic_dedup(
 
     Scale shape: the quantizer is the deterministic hash quantizer
     (similarity.hash_centroids — bounded nlist-row collect, oracle-
-    reproducible); assignment is a per-row fold expression; the only
-    shuffle is the within-bucket self-join, whose cost is
+    reproducible); assignment is the scan-local similarity.nearest_lists
+    kernel; the costly shuffle is the within-bucket self-join, at
     sum(bucket^2) — bounded by growing nlist with the corpus exactly
     like IVF search (nlist ~ sqrt(N), see IncrementalANNIndex's
     sizing rule). This within-cluster-pairwise structure is the
     paper's own design; giant skewed clusters fall to AQE skew
     handling, or compose with MinHash-LSH inside the cluster.
     """
-    from pyspark.sql.window import Window
-
-    from dagster_etl_spark.operators.similarity import hash_centroids
+    from dagster_etl_spark.operators.similarity import hash_centroids, nearest_lists
 
     cents = hash_centroids(df, nlist, id_col=id_col, vec_col=vec_col)
     spark = df.sparkSession
     cent_df = spark.createDataFrame(
         [(i, c) for i, c in enumerate(cents)], ["bucket", "cv"]
-    ).selectExpr("bucket", "CAST(cv AS array<float>) AS cv")
-    # max-dot assignment as a broadcast join + per-id window rather
-    # than one giant literal expression: at the sizing rule's
-    # nlist ~ sqrt(N) an nlist-struct array_sort expression blows the
-    # JVM codegen method limit and falls back to interpreted eval
-    # (measured 111 s at 100k x nlist=316; the join form is ~10x
-    # faster and scales with cores). Tie-break (score, bucket) DESC ==
-    # the oracle's ORDER BY d DESC, cidx DESC.
-    dot = x.dot_fold(vec_col, "cv", x.SPARK)
-    wassign = Window.partitionBy(id_col).orderBy(
-        F.col("_d").desc(), F.col("bucket").desc()
-    )
+    ).selectExpr("CAST(bucket AS INT) AS bucket", "CAST(cv AS array<float>) AS cv")
+    # max-dot assignment (ties to the larger bucket, the oracle's ORDER
+    # BY d DESC, cidx DESC), then a broadcast equi-join for the cv. The
+    # id-hash repartition spreads the pair stage below: on a one-file
+    # input AQE runs that join in as many tasks as this stage has
+    # (measured 4.1 s unspread vs 2.5 s at sf0.1 on 4 cores), and the
+    # final join on id reuses it
     cent_cos = x.cosine(vec_col, "cv", dim, x.SPARK)
     assigned = pin(
-        df.select(id_col, vec_col)
-        .crossJoin(F.broadcast(cent_df))
-        .selectExpr(id_col, vec_col, "bucket", f"{dot} AS _d")
-        .withColumn("_r", F.row_number().over(wassign))
-        .filter("_r = 1")
+        nearest_lists(df, vec_col, cents, [id_col, vec_col])
+        .repartition(id_col)
         .join(F.broadcast(cent_df), on="bucket")
         .selectExpr(
             id_col,

@@ -14,6 +14,7 @@ against query buckets at Hamming distance <= 1).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -197,20 +198,149 @@ def ivf_index(
     return assigned, centroids
 
 
-def _topn_centroid_buckets_expr(vec_col: str, centroids: list[list[float]], nprobe: int) -> str:
-    """Array of the ``nprobe`` nearest centroid ids for a vector —
-    scored with fold-form dots against centroid literals, ranked by
-    packing (score, idx) into sortable structs, all JVM-side."""
-    scored = ", ".join(
-        "named_struct('score', "
-        + f"aggregate(zip_with({vec_col}, array({', '.join(f'{v!r}D' for v in c)}), "
-        + "(e, w) -> CAST(e AS DOUBLE) * w), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-        + f", 'idx', {i})"
-        for i, c in enumerate(centroids)
+# -- numpy kernels over the frozen quantizers --------------------------------
+#
+# Each IVF or PQ stage is one Arrow-batched mapInPandas kernel with the
+# quantizer handed over as an array; dim is the quantizer's width. The
+# arithmetic is the DuckDB oracles' to the bit: float32 inputs widen to
+# float64, a sum over dimensions is a Python-loop left fold vectorized
+# over rows and started at 0.0 (never np.dot / sum / einsum, whose
+# blocked or pairwise order rounds differently), a centroid tie goes to
+# the larger index, a code tie to the first, and reconstructions are the
+# float32 codewords.
+
+
+def _vector_map(
+    df: DataFrame, keep: list[str], reads: list[str], new: list[str], fn
+) -> DataFrame:
+    """``df``'s ``keep`` + ``reads`` columns only (mapInPandas defeats
+    column pruning, so prune first) through ``fn`` per Arrow batch;
+    ``fn(pdf)`` returns the ``keep`` columns and then the new ones, typed
+    by the DDL list ``new``. Narrow: the partitioning stays and no
+    exchange is added."""
+    dtypes = dict(df.dtypes)
+    schema = ", ".join([f"`{c}` {dtypes[c]}" for c in keep] + new)
+    return df.select(*dict.fromkeys(keep + reads)).mapInPandas(
+        lambda batches: map(fn, batches), schema
     )
-    return (
-        f"slice(transform(reverse(array_sort(array({scored}))), s -> s.idx), 1, {nprobe})"
-    )
+
+
+def _widened(pdf, vec_col: str, name_col: str, dim: int):
+    """``pdf[vec_col]`` as an (n, dim) float64 matrix. Raises ValueError
+    naming the first row (by ``name_col``) whose vector is NULL or not
+    ``dim`` long — such a vector has no nearest centroid or code."""
+    vecs = pdf[vec_col]
+    for name, v in zip(pdf[name_col], vecs):
+        if v is None or len(v) != dim:
+            got = "NULL" if v is None else f"length {len(v)}"
+            raise ValueError(
+                f"{vec_col} of {name_col} {name} is {got}; the quantizer's dim is {dim}"
+            )
+    return np.array(list(vecs), dtype=np.float64).reshape(-1, dim)
+
+
+def _top_lists(X, cents, width: int):
+    """(n, width) indices of the ``width`` centroids with the largest
+    dot with each row of ``X``, nearest first, ties to the larger
+    index. Scored in row blocks so the (rows, nlist) matrix stays
+    ~8 MB at any nlist."""
+    nlist, dim = cents.shape
+    block = max(1, (1 << 20) // nlist)
+    out = np.empty((len(X), width), dtype=np.int32)
+    for s in range(0, len(X), block):
+        xs = X[s : s + block]
+        d = np.zeros((len(xs), nlist))
+        for t in range(dim):
+            d = d + xs[:, t, None] * cents[:, t]
+        # stable sort of the negated scores over reversed columns:
+        # equal scores keep descending-index order
+        order = np.argsort(-d[:, ::-1], axis=1, kind="stable")[:, :width]
+        out[s : s + block] = nlist - 1 - order
+    return out
+
+
+def _reconstruct(codes, books32):
+    """(n, m*ds) float32 reconstructions: each subspace's codeword."""
+    return np.concatenate([b[codes[:, j]] for j, b in enumerate(books32)], axis=1)
+
+
+def nearest_lists(
+    df: DataFrame,
+    vec_col: str,
+    centroids: list[list[float]],
+    keep: list[str],
+    nprobe: int = 1,
+) -> DataFrame:
+    """``keep`` + ``bucket int``: the ``nprobe`` centroids with the
+    largest dot with each row's vector, one output row each, nearest
+    first; ``nprobe=1`` is the IVF list assignment. ``keep[0]`` names a
+    row in the malformed-vector error."""
+    cents = np.asarray(centroids, dtype=np.float64)
+    nlist, dim = cents.shape
+    width = min(nprobe, nlist)
+
+    def fn(pdf):
+        top = _top_lists(_widened(pdf, vec_col, keep[0], dim), cents, width)
+        out = pdf[keep].iloc[np.repeat(np.arange(len(top)), width)]
+        return out.reset_index(drop=True).assign(bucket=top.ravel())
+
+    return _vector_map(df, keep, [vec_col], ["bucket int"], fn)
+
+
+def ivf_pq_encode(
+    vectors: DataFrame,
+    centroids: list[list[float]] | None,
+    books: list[list[list[float]]],
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The PQ encode kernel, shared by :func:`pq_encode`,
+    :func:`ivf_pq_topk` and :class:`IncrementalIVFPQIndex`: (id,
+    [bucket: the nearest centroid, when ``centroids`` are given],
+    code_0..code_{m-1}: each subspace's codeword nearest in squared L2,
+    rn: the reconstruction's norm — a pure function of the codes, paid
+    once per vector at encode instead of once per probe)."""
+    books64 = np.asarray(books, dtype=np.float64)
+    books32 = books64.astype(np.float32)
+    m, ksub, ds = books64.shape
+    cents = None if centroids is None else np.asarray(centroids, dtype=np.float64)
+    dim = m * ds if cents is None else cents.shape[1]
+    new = ["bucket int"] if cents is not None else []
+    new += [f"code_{j} int" for j in range(m)] + ["rn double"]
+
+    def fn(pdf):
+        X = _widened(pdf, vec_col, id_col, dim)
+        cols = {} if cents is None else {"bucket": _top_lists(X, cents, 1)[:, 0]}
+        codes = np.empty((len(X), m), dtype=np.int32)
+        for j in range(m):
+            d = np.zeros((len(X), ksub))
+            for t in range(ds):
+                e = X[:, j * ds + t, None] - books64[j, :, t]
+                d = d + e * e
+            codes[:, j] = np.argmin(d, axis=1)
+            cols[f"code_{j}"] = codes[:, j]
+        rn = np.zeros(len(X))
+        for r in _reconstruct(codes, books32).astype(np.float64).T:
+            rn = rn + r * r
+        cols["rn"] = np.sqrt(rn)
+        return pdf[[id_col]].assign(**cols)
+
+    return _vector_map(spread(vectors), [id_col], [vec_col], new, fn)
+
+
+def pq_reconstruct(
+    df: DataFrame, books: list[list[list[float]]], keep: list[str]
+) -> DataFrame:
+    """``keep`` + ``rv array<float>``: the reconstruction of each row's
+    ``code_0..code_{m-1}`` from the float32 codewords."""
+    books32 = np.asarray(books, dtype=np.float32)
+    code_cols = [f"code_{j}" for j in range(len(books32))]
+
+    def fn(pdf):
+        rv = _reconstruct(pdf[code_cols].to_numpy(), books32)
+        return pdf[keep].assign(rv=list(rv))
+
+    return _vector_map(df, keep, code_cols, ["rv array<float>"], fn)
 
 
 def hash_centroids(
@@ -250,13 +380,12 @@ def ivf_cosine_topk(
 
     ``quantizer="kmeans"`` (default) fits distributed Spark-ML KMeans;
     ``"hash"`` uses :func:`hash_centroids` and assigns each corpus
-    vector to its max-dot centroid with the same JVM fold expressions
-    as the probe — fully deterministic, which is what lets the
+    vector to its max-dot centroid with the same kernel as the probe
+    (:func:`nearest_lists`) — fully deterministic, which is what lets the
     ``ivf_ann_topk`` DuckDB oracle recompute the whole search."""
     if quantizer == "hash":
         centroids = hash_centroids(corpus, nlist, id_col=id_col, vec_col=vec_col)
-        bucket = f"{_topn_centroid_buckets_expr(vec_col, centroids, 1)}[0]"
-        assigned = corpus.selectExpr(id_col, vec_col, f"{bucket} AS bucket")
+        assigned = nearest_lists(corpus, vec_col, centroids, [id_col, vec_col])
     else:
         assigned, centroids = ivf_index(
             corpus, dim, nlist, id_col=id_col, vec_col=vec_col
@@ -289,10 +418,10 @@ def _ivf_probe_topk(
     c = assigned.selectExpr(
         f"{id_col} AS neighbor_id", f"{vec_col} AS cv", *grp, "bucket"
     )
-    probe = _topn_centroid_buckets_expr("qv", centroids, nprobe)
-    q = queries.selectExpr(
-        f"{id_col} AS query_id", f"{vec_col} AS qv", *grp
-    ).selectExpr("*", f"explode({probe}) AS bucket")
+    q = nearest_lists(
+        queries.selectExpr(f"{id_col} AS query_id", f"{vec_col} AS qv", *grp),
+        "qv", centroids, ["query_id", "qv"] + (["_grp"] if grp else []), nprobe,
+    )
     cos = x.cosine("qv", "cv", dim, x.SPARK)
     scored = (
         F.broadcast(q)
@@ -328,7 +457,7 @@ def filtered_ivf_topk(
     Uses the deterministic hash quantizer (same as ``ivf_ann_topk``'s
     oracle-able path) so the DuckDB oracle recomputes the entire
     filtered search. Scale shape: centroids are a bounded collect
-    (nlist rows); the corpus assignment is one scan-local expression;
+    (nlist rows); the corpus assignment is one scan-local kernel;
     the probe join broadcasts queries x nprobe rows; the only corpus
     exchange is the final top-k window.
 
@@ -340,9 +469,8 @@ def filtered_ivf_topk(
     bucketed near-dup operators, not this entry point.
     """
     centroids = hash_centroids(corpus, nlist, id_col=id_col, vec_col=vec_col)
-    bucket = f"{_topn_centroid_buckets_expr(vec_col, centroids, 1)}[0]"
-    assigned = spread(corpus).selectExpr(
-        id_col, vec_col, filter_col, f"{bucket} AS bucket"
+    assigned = nearest_lists(
+        spread(corpus), vec_col, centroids, [id_col, vec_col, filter_col]
     )
     return _ivf_probe_topk(
         queries, assigned, centroids, nprobe, dim, k, id_col, vec_col, filter_col
@@ -481,114 +609,9 @@ def pq_codebooks(
     return books
 
 
-def _pq_dist_chain_exprs(
-    vec_col: str, book: list[list[float]], j: int, ds: int
-) -> list[str]:
-    """The ksub squared-distance chains for subspace ``j`` (one SQL
-    expression per codeword) — the shared first stage of the staged
-    encode below. Codeword literals use the typed ``{v!r}D`` form:
-    bit-identical to ``CAST({v!r} AS DOUBLE)`` (probed r19) at ~40% of
-    the string, which matters because these chains are the largest
-    generated SQL in the repo (m·ksub·ds literals — ~130 KB at
-    m=8/ksub=16, 4× that at the sized_for geometry) and their parse is
-    a pure scale-independent build constant."""
-    base = j * ds
-    chains = []
-    for w in book:
-        terms = " + ".join(
-            f"(CAST(element_at({vec_col}, {base + t + 1}) AS DOUBLE) - "
-            f"{w[t]!r}D) * "
-            f"(CAST(element_at({vec_col}, {base + t + 1}) AS DOUBLE) - "
-            f"{w[t]!r}D)"
-            for t in range(ds)
-        )
-        chains.append(f"({terms})")
-    return chains
-
-
-def pq_codes_staged(
-    df: DataFrame,
-    books: list[list[list[float]]],
-    ds: int,
-    vec_col: str,
-    carry: list[tuple[str, str]],
-) -> DataFrame:
-    """Two-projection PQ encode (r17, re-staged r18): stage 1 evaluates
-    each (subspace, codeword) squared-distance chain ONCE into its own
-    scalar column (plus the ``carry`` (expr, name) passthroughs); stage
-    2 assembles each subspace's ksub columns into an array and reads
-    the code off it with primitive array_position/array_min.
-
-    Why two stages instead of one expression per code: the single
-    expression ``array_position(arr, array_min(arr))`` embeds the
-    chain array TWICE per subspace — double the tree Catalyst analyzes
-    and janino compiles, and that tree size is what makes the build
-    constant scale-independent (~25 s whatever the corpus; probe-pair
-    rebuild_sec is flat across x10..x100). A lambda-fold argmin keeps
-    one copy of the tree but pays a per-element struct allocation at
-    RUNTIME — measured 3.7x single-process at x100, worse than the 3.0x
-    it replaced (the same 66 us/row alloc-churn lesson as the struct
-    sort this docstring's sibling already records). The staged split
-    gets both: each chain appears once in the tree (compile), is
-    materialized once per row (runtime), and the argmin runs primitive
-    array ops over column refs. Catalyst's CollapseProject keeps the
-    two projections separate because the distance columns are
-    non-cheap and referenced twice (SPARK-36718).
-
-    Why SCALAR distance columns instead of r17's per-subspace ARRAY
-    columns (r18): with arrays, both stages fused into one
-    WholeStageCodegen whose generated processNext() exceeded janino's
-    64 KB method limit at the registered geometries (m=8/ksub=16
-    already fails; sized_for's m=16/ksub=64 is 4x bigger). The compile
-    FAILURE is not cached, so every execution re-parsed and re-failed a
-    ~23k-line class on the driver (~1-2 s) before falling back to
-    non-codegen operators. m*ksub scalar columns put the stage past
-    spark.sql.codegen.maxFields (100), so Spark skips whole-stage
-    fusion for it UP FRONT — no doomed compile, and each projection
-    gets its own (method-splittable) expression codegen. Measured on
-    the x10 fixture corpus (20k vectors): encode 2.2s -> 1.4s at
-    m=8/ksub=16, 20-27s -> 8-11s at m=16/ksub=64; codes verified
-    identical vector-for-vector.
-
-    Values are identical to the single-expression form: same chains,
-    same array_position first-match tie rule — every oracle unchanged."""
-    dist_exprs = [
-        f"{chain} AS _d{j}_{c}"
-        for j, book in enumerate(books)
-        for c, chain in enumerate(_pq_dist_chain_exprs(vec_col, book, j, ds))
-    ]
-    s1 = df.selectExpr(*[f"{e} AS {n}" for e, n in carry], *dist_exprs)
-    code_exprs = []
-    for j, book in enumerate(books):
-        arr = "array(" + ", ".join(f"_d{j}_{c}" for c in range(len(book))) + ")"
-        code_exprs.append(
-            f"CAST(array_position({arr}, array_min({arr})) - 1 AS INT) AS code_{j}"
-        )
-    return s1.selectExpr(*[n for _, n in carry], *code_exprs)
-
-
-def pq_reconstruct_expr(code_cols: list[str], books: list[list[list[float]]]) -> str:
-    """64-dim reconstruction x-hat from the m stored codes: concat of
-    per-subspace codeword lookups against the codebook literals —
-    scan-local, no join (the codebooks are plan constants)."""
-    parts = []
-    for j, (col, book) in enumerate(zip(code_cols, books)):
-        # CAST({v!r}D AS FLOAT): double literal -> float cast is
-        # bit-identical to the decimal-literal cast it replaces (the
-        # codebook values ARE float32s, both roundings recover them
-        # exactly — probed r19) at a fraction of the parse
-        lits = ", ".join(
-            "array(" + ", ".join(f"CAST({v!r}D AS FLOAT)" for v in w) + ")"
-            for w in book
-        )
-        parts.append(f"element_at(array({lits}), {col} + 1)")
-    return "concat(" + ", ".join(parts) + ")"
-
-
 def pq_encode(
     corpus: DataFrame,
     books: list[list[list[float]]],
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -597,11 +620,7 @@ def pq_encode(
     fixture, 96x for a 1536-dim production embedding at m=16). This is
     the table a 100 TB store actually keeps hot; full vectors stay on
     cold storage for reranking."""
-    m = len(books)
-    ds = dim // m
-    return pq_codes_staged(
-        spread(corpus), books, ds, vec_col, [(id_col, id_col)]
-    )
+    return ivf_pq_encode(corpus, None, books, id_col, vec_col).drop("rn")
 
 
 def pq_cosine_topk(
@@ -622,21 +641,20 @@ def pq_cosine_topk(
     codeword_j)), but expressed as one 64-dim cosine chain so Spark
     and the DuckDB oracle execute the identical IEEE sequence.
 
-    Scale shape: the codebooks are plan literals; encoding and
-    reconstruction are scan-local expressions (no join, no shuffle);
+    Scale shape: the codebooks are a bounded collect handed to the
+    encode and reconstruct kernels (scan-local: no join, no shuffle);
     the query side broadcasts as in every ANN variant here. The
     memory story is the point: the hot table is m bytes/vector, so a
     100 TB float32 store becomes ~3 TB of codes — compose with the
     IVF bucketing (IncrementalANNIndex) for the standard IVF-PQ
     layout where this dial matters most."""
     books = pq_codebooks(corpus, m=m, ksub=ksub, dim=dim, id_col=id_col, vec_col=vec_col)
-    codes = pq_encode(corpus, books, dim=dim, id_col=id_col, vec_col=vec_col)
-    recon = pq_reconstruct_expr([f"code_{j}" for j in range(m)], books)
-    # norms precomputed once per side: x.cosine would re-fold both
-    # norms per (query, neighbor) pair — nq-times redundant on the
-    # corpus side. Same expressions, same IEEE sequence, same oracle.
-    c = codes.selectExpr(f"{id_col} AS neighbor_id", f"{recon} AS rv").selectExpr(
-        "neighbor_id", "rv", f"{x.norm_fold('rv', x.SPARK)} AS rn"
+    codes = ivf_pq_encode(corpus, None, books, id_col, vec_col)
+    # norms once per side (the corpus's rn from the encode): x.cosine
+    # would re-fold both norms per (query, neighbor) pair — nq-times
+    # redundant on the corpus side. Same IEEE sequence, same oracle.
+    c = pq_reconstruct(
+        codes.withColumnRenamed(id_col, "neighbor_id"), books, ["neighbor_id", "rn"]
     )
     q = queries.selectExpr(f"{id_col} AS query_id", f"{vec_col} AS qv").selectExpr(
         "query_id", "qv", f"{x.norm_fold('qv', x.SPARK)} AS qn"
@@ -739,37 +757,10 @@ def ivf_pq_topk(
     EXACT cosines on the reranked top-k."""
     cents = hash_centroids(corpus, nlist, id_col=id_col, vec_col=vec_col)
     books = pq_codebooks(corpus, m=m, ksub=ksub, dim=dim, id_col=id_col, vec_col=vec_col)
-    codes = ivf_pq_encode(corpus, cents, books, dim, id_col, vec_col)
+    codes = ivf_pq_encode(corpus, cents, books, id_col, vec_col)
     return _ivf_pq_search(
         queries, codes, cents, books, nprobe, k, rerank, corpus, dim, id_col, vec_col
     )
-
-
-def ivf_pq_encode(
-    vectors: DataFrame,
-    cents: list[list[float]],
-    books: list[list[list[float]]],
-    dim: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(id, bucket, code_0..code_{m-1}, rn): list assignment + m PQ
-    codes + reconstruction norm — one scan-local projection against
-    the quantizer literals, shared by :func:`ivf_pq_topk` and
-    :class:`IncrementalIVFPQIndex`."""
-    bucket = f"{_topn_centroid_buckets_expr(vec_col, cents, 1)}[0]"
-    coded = pq_codes_staged(
-        spread(vectors), books, dim // len(books), vec_col,
-        [(id_col, id_col), (bucket, "bucket")],
-    )
-    # Reconstruction norm PRE-COMPUTED at encode time (r16, the
-    # ivfpq half of the BM25-pushdown lesson): rn is a pure function
-    # of the codes, so paying the norm fold once per vector at ingest
-    # — instead of once per vector PER PROBE — removes a dim-length
-    # fold from the search hot path without changing a single float
-    # (same rv, same fold, same value).
-    recon = pq_reconstruct_expr([f"code_{j}" for j in range(len(books))], books)
-    return coded.selectExpr("*", f"{x.norm_fold(f'({recon})', x.SPARK)} AS rn")
 
 
 def _ivf_pq_search(
@@ -792,26 +783,26 @@ def _ivf_pq_search(
     exact-rerank the top ``rerank`` candidates (:func:`_exact_rerank`).
     Without it the ADC ranking itself is returned (query_id,
     neighbor_id, adc, rank)."""
-    recon = pq_reconstruct_expr([f"code_{j}" for j in range(len(books))], books)
-    probe = _topn_centroid_buckets_expr("qv", cents, nprobe)
-    q = (
-        queries.selectExpr(f"{id_col} AS query_id", f"{vec_col} AS qv")
-        .selectExpr("query_id", "qv", f"{x.norm_fold('qv', x.SPARK)} AS qn")
-        .selectExpr("query_id", "qv", "qn", f"explode({probe}) AS bucket")
-    )
+    q = nearest_lists(
+        queries.selectExpr(f"{id_col} AS query_id", f"{vec_col} AS qv"),
+        "qv", cents, ["query_id", "qv"], nprobe,
+    ).selectExpr("query_id", "qv", f"{x.norm_fold('qv', x.SPARK)} AS qn", "bucket")
     # PROBE PUSHDOWN (r16, the BM25-term-pushdown analog): the probed
     # bucket set is bounded (<= min(nlist, n_queries * nprobe) values;
     # the collect is a bounded job on the tiny query side), and
     # pushing it into the codes scan as an IN filter BEFORE the
-    # reconstruction projection means the dim-length ADC
+    # reconstruct kernel means the dim-length ADC
     # reconstruction runs only on probed lists and the bucketed scan
     # prunes never-probed buckets — probe cost tracks nprobe/nlist of
     # the corpus, not the corpus. Semantics-preserving: the bucket
     # equi-join discards every filtered row anyway, and no float
     # changes. rn comes precomputed from encode time.
     probed = sorted(r.bucket for r in q.select("bucket").distinct().collect())
-    c = codes.filter(F.col("bucket").isin(probed)).selectExpr(
-        f"{id_col} AS neighbor_id", "bucket", f"{recon} AS rv", "rn"
+    c = pq_reconstruct(
+        codes.filter(F.col("bucket").isin(probed)).withColumnRenamed(
+            id_col, "neighbor_id"
+        ),
+        books, ["neighbor_id", "bucket", "rn"],
     )
     adc = f"({x.dot_fold('qv', 'rv', x.SPARK)} / nullif(qn * rn, 0.0d))"
     scored = (
@@ -867,7 +858,7 @@ class IncrementalANNIndex(StandingState):
     init — ``hash_centroids`` over the first slice (deterministic:
     the nlist vectors with smallest md5 id-hash, oracle-reproducible)
     — and every ingest assigns only its own vectors (max-dot against
-    the frozen centroids, a JVM fold expression) and appends them to
+    the frozen centroids, :func:`nearest_lists`) and appends them to
     a bucket-bucketed table. Search probes the standing table.
 
     State = two catalog tables:
@@ -884,8 +875,7 @@ class IncrementalANNIndex(StandingState):
     are bit-reproducible in SQL — same oracle shape as ivf_ann_topk
     with centroid selection restricted to the init slice.
 
-    100 TB sizing rule (measured, tools/ann_nprobe_sweep.py ->
-    ANN_NPROBE_r12.json): search scans ``nprobe * N / nlist`` vectors
+    100 TB sizing rule (measured, ANN_NPROBE_r12.json): search scans ``nprobe * N / nlist`` vectors
     per query, so at FIXED nlist the latency grows linearly with the
     corpus (the 1.94 -> 3.26 s curve in SCALETREND_INGEST_r11). The
     knob is nlist, not nprobe: grow ``nlist ~ sqrt(N)`` as the corpus
@@ -938,10 +928,8 @@ class IncrementalANNIndex(StandingState):
         function of the quantizer, so a replay rewrites identical rows.
         Scan-local with no spread: the partitioning is the slice's own
         splits, already slice-sized — no file budget."""
-        cents = self._centroids()
-        bucket = f"{_topn_centroid_buckets_expr(self.vec_col, cents, 1)}[0]"
-        assigned = vectors.selectExpr(
-            self.id_col, self.vec_col, f"{bucket} AS bucket"
+        assigned = nearest_lists(
+            vectors, self.vec_col, self._centroids(), [self.id_col, self.vec_col]
         )
         store.write("vectors", slice_id, assigned)
         yield "vectors"
@@ -997,8 +985,8 @@ class IncrementalIVFPQIndex(StandingState):
       resident while the float vectors live cold.
 
     Search probes nprobe lists, ADC-scores the stored codes against
-    reconstructions (codebooks are a bounded m*ksub collect, turned
-    into plan literals), and — given a ``rerank_source`` (the cold
+    reconstructions (codebooks are a bounded m*ksub collect handed to
+    the kernels as arrays), and — given a ``rerank_source`` (the cold
     float table) — exact-reranks the top candidates. Fully
     SQL-recomputable: the registered query's oracle restricts BOTH
     quantizer pools to the init slice and replays all three stages.
@@ -1123,8 +1111,7 @@ class IncrementalIVFPQIndex(StandingState):
         pure function of them, so a replay rewrites identical code
         rows."""
         coded = ivf_pq_encode(
-            vectors, self._centroids(), self._books(), self.dim,
-            self.id_col, self.vec_col,
+            vectors, self._centroids(), self._books(), self.id_col, self.vec_col
         )
         store.write("codes", slice_id, coded, files=slice_file_budget(vectors))
         yield "codes"
@@ -1181,7 +1168,7 @@ class IncrementalIVFPQIndex(StandingState):
         work, and the reason the one-shot build constant is what it is)
         are NOT recomputed — codes and rn are carried over unchanged.
         Only the coarse assignment reruns: join codes with ``vectors``
-        on id, one argmin over the nlist new centroid literals per row,
+        on id, one nearest-centroid kernel pass over the new centroids,
         write the re-bucketed staging table, and swap it in with a
         catalog rename (maps to an ACID metastore pointer swap on a
         real cluster; no driver-side materialization anywhere).
@@ -1233,8 +1220,7 @@ class IncrementalIVFPQIndex(StandingState):
         cents = hash_centroids(
             vectors, nlist, id_col=self.id_col, vec_col=self.vec_col
         )
-        bucket = f"{_topn_centroid_buckets_expr(self.vec_col, cents, 1)}[0]"
-        assign = spread(vectors).selectExpr(self.id_col, f"{bucket} AS bucket")
+        assign = nearest_lists(spread(vectors), self.vec_col, cents, [self.id_col])
         # fold any committed slice deltas into the base first: the swap
         # rewrites the WHOLE codes table, so the region must be empty
         self.compact_slices()

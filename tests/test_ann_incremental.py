@@ -231,36 +231,75 @@ def test_ivfpq_sized_for_applies_measured_rules(spark):
     idx.drop()
 
 
-def test_sized_for_encode_never_fails_codegen(spark, capfd):
-    """r18 verdict task 7 tripwire: the staged PQ encode at the
-    sized_for geometry (m=16/ksub=64 — the biggest generated
-    projection in the repo) must never trip janino's 64 KB method
-    limit again. r17's array-staged encode fused into one
-    WholeStageCodegen whose processNext() failed to compile ON EVERY
-    EXECUTION (compile failures are not cached), silently costing
-    ~1-2 s of driver re-parse per run; the r18 scalar staging pushes
-    the stage past spark.sql.codegen.maxFields so the doomed fusion is
-    skipped up front. The failure signature is an ERROR CodeGenerator
-    line on the JVM's stderr — capfd sees it because the local-mode
-    JVM shares the process's fd 2."""
-    from dagster_etl_spark.operators.similarity import (
-        pq_codebooks,
-        pq_encode,
-    )
+def test_ivf_pq_topk_exact_at_sized_for_geometry(spark):
+    """ivf_pq_topk at the sized_for PQ geometry (m=16, ksub=64 — the
+    class defaults) equals the DuckDB replay of all three stages value
+    for value, compared the way tools/check_correctness.py compares:
+    the registered queries pin the codes only at m=8/ksub=16."""
+    import duckdb
+
+    from dagster_etl_spark.operators.similarity import ivf_pq_topk
+    from dagster_etl_spark.queries_llm import _ivf_pq_oracle
     from dagster_etl_spark.sources.fixtures import load_table
+    from tools.check_correctness import compare
 
     emb = load_table(spark, SF_SMALL, "embeddings")
-    capfd.readouterr()  # drain unrelated log noise first
-    books = pq_codebooks(emb, m=16, ksub=64, dim=64)
-    codes = pq_encode(emb, books, dim=64)
-    n = codes.count()
-    assert n == emb.count()
-    err = capfd.readouterr().err
-    for line in err.splitlines():
-        assert not (
-            "CodeGenerator" in line and ("ERROR" in line or "Error" in line)
-        ), f"codegen failure during sized_for encode: {line}"
-        assert "grows beyond 64 KB" not in line, line
+    got = ivf_pq_topk(
+        emb.filter("vec_id < 5"), emb, dim=64, k=10, m=16, ksub=64
+    ).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{SF_SMALL}/embeddings.parquet'"
+    )
+    want = con.execute(_ivf_pq_oracle(m=16, ksub=64)).fetchdf()
+    assert len(got) == 50
+    assert compare(got, want) == []
+
+
+def test_vector_kernels_guard_malformed_vectors_and_break_ties(spark):
+    """The nearest-centroid and PQ encode kernels raise ValueError
+    naming the offending id when a vector is NULL or not the
+    quantizer's dim long (the SQL they replaced put NULL and empty
+    vectors in bucket nlist-1 and aborted on a short one with an array
+    index error). A zero vector is valid; a centroid tie goes to the
+    larger index and a code tie to the first."""
+    import math
+
+    from pyspark.errors import PythonException
+
+    from dagster_etl_spark.operators.similarity import ivf_pq_encode, nearest_lists
+
+    cents = [[1.0, 0.0], [0.0, 1.0], [1.0, 0.0]]  # lists 0 and 2 always tie
+    books = [[[1.0], [1.0], [0.0]], [[0.5], [0.5], [2.0]]]  # codewords 0, 1 tie
+
+    def frame(rows):
+        return spark.createDataFrame(
+            rows, "vec_id bigint, embedding array<float>"
+        ).coalesce(1)
+
+    ok = frame([(1, [1.0, 0.5]), (2, [0.0, 0.0]), (3, [0.25, 1.0])])
+    assign = nearest_lists(ok, "embedding", cents, ["vec_id"])
+    assert {r.vec_id: r.bucket for r in assign.collect()} == {1: 2, 2: 2, 3: 1}
+    probe = nearest_lists(ok, "embedding", cents, ["vec_id"], nprobe=3)
+    assert [(r.vec_id, r.bucket) for r in probe.collect()] == [
+        (1, 2), (1, 0), (1, 1), (2, 2), (2, 1), (2, 0), (3, 1), (3, 2), (3, 0),
+    ]
+    enc = ivf_pq_encode(ok, cents, books, "vec_id", "embedding")
+    assert {
+        r.vec_id: (r.bucket, r.code_0, r.code_1, r.rn) for r in enc.collect()
+    } == {1: (2, 0, 0, math.sqrt(1.25)), 2: (2, 2, 0, 0.5), 3: (1, 2, 0, 0.5)}
+
+    kernels = (
+        lambda df: nearest_lists(df, "embedding", cents, ["vec_id"]),
+        lambda df: ivf_pq_encode(df, None, books, "vec_id", "embedding"),
+    )
+    for bad, what in ((None, "is NULL"), ([], "is length 0"), ([1.0], "is length 1")):
+        df = frame([(1, [1.0, 0.5]), (7, bad)])
+        for kernel in kernels:
+            with pytest.raises(
+                PythonException, match=f"ValueError: embedding of vec_id 7 {what}"
+            ):
+                kernel(df).collect()
 
 
 def test_ivfpq_rebucket_degenerate_equals_fresh_init(spark):

@@ -69,18 +69,18 @@ AUDITED = [
     "quantized_ann_topk",
     "dedup_lines",
     "url_dedup",
-    # r12 registrations (pure expression trees, no Python anywhere):
-    # semantic_dedup and the PQ pair do bounded centroid/codebook
-    # collects on build (like ivf) but plan as expressions; the bloom
-    # gate's corpus probe must stay broadcast-join-only
+    # r12 registrations: semantic_dedup and the PQ pair do bounded
+    # centroid/codebook collects on build (like ivf) and run their
+    # quantizer stages as the numpy kernels in MAPINPANDAS_ALLOWED; the
+    # bloom gate's corpus probe must stay broadcast-join-only
     "semantic_dedup",
     "contamination_score",
     "decontaminate_bloom_gate",
     "pq_ann_topk",
     "pq_ann_rerank",
     # like the PQ pair: bounded centroid+codebook collects on build,
-    # pure expression tree afterwards (r12 ADVICE: budgets existed but
-    # the name was missing here, so they never ran)
+    # numpy kernels afterwards (r12 ADVICE: budgets existed but the
+    # name was missing here, so they never ran)
     "ivf_pq_ann_topk",
     # r6 sweep widening: every remaining batch query that is cheap to
     # plan (excluded: streaming — executes on build; ivf/dedup_clusters/
@@ -111,8 +111,9 @@ AUDITED = [
     "gopher_quality_flags",
     "ngram_jaccard_pairs",
     "embedding_neardup",
-    # r13 registrations (pure expression trees; filtered IVF does the
-    # bounded nlist-centroid collect on build like semantic_dedup)
+    # r13 registrations (pure expression trees, except filtered IVF:
+    # the bounded nlist-centroid collect on build like semantic_dedup,
+    # then the nearest-centroid kernel)
     "temperature_mixture",
     "filtered_ann_topk",
     "cross_corpus_neardup",
@@ -134,7 +135,7 @@ AUDITED = [
     "sole_failed_supplier",
     "bigram_surprisal_buckets",
     # the IVF-leg hybrid does the bounded nlist hash-centroid collect
-    # on build, like filtered_ivf_ann_topk
+    # on build and the nearest-centroid kernel, like filtered_ivf_ann_topk
     "hybrid_rrf_ivf",
     # r15 registrations (pure expression trees)
     "quality_classifier_score",
@@ -200,9 +201,6 @@ BNLJ_ALLOWED: dict[str, tuple[int, str]] = {
         1, "idf needs N_docs: broadcast 1-row doc-count frame"),
     "temperature_mixture": (
         1, "mixture weights normalize by a broadcast 1-row total frame"),
-    "semantic_dedup": (
-        3, "per-cluster stats + 1-row totals, all broadcast dimension-"
-           "sized frames (cluster count <= nlist)"),
     # bounded query batches: ANN entry points score a broadcast probe
     # batch against the corpus -- |queries| << |corpus| by contract
     # (documented in similarity.py docstrings)
@@ -287,6 +285,25 @@ MAPINPANDAS_ALLOWED = {
     # 1); results pinned identical to the retained expression twins
     # and the recursive-CTE oracles
     "subword_segment": 1,
+    # the vector quantizer kernels (operators/similarity.py: centroids
+    # and codebooks passed as arrays, replacing SQL with the quantizers
+    # written in as literals), values equal to the DuckDB oracles; warm
+    # best-of-3 build + execute at sf0.1 on 4 cores, literal SQL ->
+    # kernel. Counts are printed nodes: a pinned frame prints once per
+    # consumer but executes once.
+    # assignment (1, printed 3x): 2.52 -> 2.52 s
+    "semantic_dedup": 3,
+    # encode + reconstruct: 6.65 -> 1.61 s
+    "pq_ann_topk": 2,
+    # encode + reconstruct: 6.97 -> 1.70 s
+    "pq_ann_rerank": 2,
+    # encode + query probe + reconstruct of the probed lists:
+    # 8.55 -> 2.52 s
+    "ivf_pq_ann_topk": 3,
+    # corpus assignment + query probe: 2.01 -> 1.65 s
+    "filtered_ivf_ann_topk": 2,
+    # the IVF leg's assignment + probe: 5.41 -> 5.07 s
+    "hybrid_rrf_ivf": 2,
 }
 
 
@@ -294,7 +311,7 @@ def test_no_rowwise_python(plans):
     """BatchEvalPython = row-at-a-time Python UDF — banned everywhere.
     Arrow-batched Python (mapInPandas) is allowed only in multimodal
     decode (not in this audit set) and the MAPINPANDAS_ALLOWED
-    tokenizer walks."""
+    tokenizer walks and vector quantizer kernels."""
     for name, (plan, _) in plans.items():
         assert "BatchEvalPython" not in plan, f"{name} runs row-wise Python"
         assert "ArrowEvalPython" not in plan, f"{name} runs Python in an expression"
@@ -411,9 +428,11 @@ EXCHANGE_BUDGET = {
     "gopher_quality_flags": 1,
     "ngram_jaccard_pairs": 3,
     "embedding_neardup": 0,
-    # r12: semantic_dedup = assignment window (1) + within-bucket pair
-    # join (2 sides) + dropped-distinct (2 partial/final) + kept join
-    # side shuffles; budget is the measured count at SF_SMALL.
+    # r12: semantic_dedup = id-hash spread of the assignment (1,
+    # printed once per consumer of the pinned frame; a per-id window
+    # until the assignment became a kernel) + within-bucket pair join
+    # (2 sides) + dropped-distinct (2 partial/final) + kept join side
+    # shuffles; budget is the measured count at SF_SMALL.
     "semantic_dedup": 7,
     # corpus-gram distinct (2) + per-doc aggregate (1) + all-docs left
     # join side (1); the benchmark side broadcasts

@@ -19,6 +19,7 @@ Usage: python tools/check_correctness.py [--json OUT.json] [sf_dir] [name ...]
 from __future__ import annotations
 
 import json
+import os
 import resource
 import sys
 import time
@@ -254,7 +255,9 @@ def main() -> int:
     from dagster_etl_spark.session import get_spark
     import __spark_entry__ as entrymod
 
-    spark = get_spark("correctness", master="local[8]", shuffle_partitions=8)
+    # sized from the host unless SPARK_GRAFT_CPUS says otherwise
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    spark = get_spark("correctness", master=f"local[{cpus}]", shuffle_partitions=cpus)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -270,13 +273,11 @@ def main() -> int:
     # (kn_bigram_surprisal 2.25s -> 14.64s, code unchanged). Record the
     # 1-min loadavg at sweep start AND per query so a slow row can be
     # adjudicated as contention vs plan regression from the artifact.
-    import os as _os
-
-    sweep_load = round(_os.getloadavg()[0], 2)
+    sweep_load = round(os.getloadavg()[0], 2)
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
             continue
-        load1 = round(_os.getloadavg()[0], 2)
+        load1 = round(os.getloadavg()[0], 2)
         t0 = time.time()
         sq = None
         try:

@@ -13,6 +13,7 @@ Usage: python tools/dump_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
@@ -26,6 +27,8 @@ if _argv[:1] == ["--into"]:
 SF_DIR = _argv[0] if _argv else "/root/testdata/sf0.1"
 ONLY = _argv[1:]
 
+SHUFFLE = re.compile(r"\bExchange (?:hash|range|Single|RoundRobin)")
+
 HEADER = """# Physical plans (generated by tools/dump_plans.py)
 
 `.explain("formatted")` for every bench-tagged query at {sf}, AQE off so
@@ -38,7 +41,7 @@ visible. What the plan audit (tests/test_plans.py) asserts mechanically:
   are hash-partitioned exchanges on the aggregation/join keys;
 * no `CartesianProduct`, no `BatchEvalPython` (row-wise Python) in any
   audited plan — Python appears only as Arrow-batched `MapInPandas`
-  in the multimodal decode path.
+  (multimodal decode, the tokenizer walks, the vector kernels).
 
 Note (r8): several joins are deliberately UNHINTED and appear as
 sort-merge joins in this AQE-off dump — at runtime AQE converts each
@@ -81,8 +84,13 @@ def main() -> None:
         )
         if out_dir:
             (out_dir / f"{name}_{TAG}.txt").write_text(plan)
-            print(f"{name}: {plan.count('Exchange')} Exchange, "
-                  f"{plan.count('BatchEvalPython')} BatchEvalPython")
+            # counted on the plan's one-line-per-node form with
+            # tests/test_plans.py's rules: broadcast and reused
+            # exchanges are not shuffles
+            tree = df._jdf.queryExecution().executedPlan().toString()
+            print(f"{name}: {len(SHUFFLE.findall(tree))} shuffle Exchange, "
+                  f"{tree.count('MapInPandas')} MapInPandas, "
+                  f"{tree.count('BatchEvalPython')} BatchEvalPython")
         else:
             out.append(f"\n## {name}\n\n```\n{plan.strip()}\n```\n")
     if not out_dir:
