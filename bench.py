@@ -97,13 +97,13 @@ def main() -> None:
     # informational extras — NOT in the headline total (BASELINE.md's
     # DuckDB totals cover exactly the `queries` set). Since round 8 the
     # headline times the approx-distinct WIP queries (the contractual
-    # scale path; scale_trend r8 showed exact plateauing ~5x a single
+    # scale path; SCALETREND_r8.json showed exact plateauing ~5x a single
     # process); the exact hash-verified forms stay visible here for
     # round-over-round comparability.
     # extras get the SAME defense as every quoted number (r10 verdict
     # task 6): best-of-2 plus the sample spread, so a future drift
     # spike on this +/-30% host reads as drift, not a regression (the
-    # r7 false alarm). audit_spreads.py flags extra_spread > extra.
+    # r7 false alarm); an extra_spread above its extra marks drift.
     extra: dict[str, float] = {}
     extra_spread: dict[str, float] = {}
     for name in ("wip_aggregate", "priority_wip"):

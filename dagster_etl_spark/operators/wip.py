@@ -308,7 +308,7 @@ def priority_wip_split(
     inner-join forms (``priority_wip_preagg`` / ``priority_wip_join``)
     are the correct choice: they drop orphan lots, this one keeps them.
 
-    Why splitting wins (probe_priority_plan, x50 = 30 M fact rows /
+    Why splitting wins (probe_priority_plan_r9.json, x50 = 30 M fact rows /
     7.5 M dim rows, interleaved DuckDB pairs): the join-then-aggregate
     shape must move every fact row through the dim join before a single
     partial aggregate can run — the probe's broadcast build alone is a

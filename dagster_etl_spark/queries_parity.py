@@ -68,7 +68,7 @@ def q_wip_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "replaces the exact lot count, turning the two-phase distinct into "
     "ONE partial-aggregating pass whose exchange carries per-group HLL "
     "sketches instead of (group, lot) tuples. This is the benched "
-    "default for count-distinct rollups (tools/scale_trend.py r8: the "
+    "default for count-distinct rollups (SCALETREND_r8.json: the "
     "exact form plateaus ~5x a single-process engine at 10-50x data; "
     "the estimator is bound-checked against the exact count in "
     "tests/test_wip.py). The exact form stays registered and "

@@ -1101,9 +1101,10 @@ def q_curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def curation_v2(docs: DataFrame) -> DataFrame:
-    """The composed five-stage plan over (doc_id, text, source) — shared
-    by the registered query and tools/scale_smoke.py so the scale smoke
-    exercises exactly the plan the correctness gate hash-verifies."""
+    """The composed five-stage plan over (doc_id, text, source) that the
+    registered query runs and the correctness gate hash-verifies; the
+    curation scale trends (SCALETREND_CURATION_*.json) measured this
+    same plan."""
     from pyspark.sql import functions as F
 
     from dagster_etl_spark.operators.dedup import (

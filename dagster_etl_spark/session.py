@@ -55,7 +55,7 @@ def get_spark(
         # cores runs on a fraction of the machine — measured 6x slower
         # at 10x sf0.1 (6M rows -> 2-3 post-shuffle partitions on 32
         # cores) and ~1.4x slower even at sf0.1, refuting the r5-era
-        # "-28% floor" reading (tools/scale_trend.py, round 8). On a
+        # "-28% floor" reading (SCALETREND_r8.json). On a
         # real cluster advisory-size coalescing only pays once shuffle
         # volume >> advisory x slots; set it per-job there, not here.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
@@ -76,7 +76,7 @@ def get_spark(
         # fact-growing dim broadcast at 50x sf0.1 — the single-threaded
         # broadcast build measured 5.0s vs 1.8s for the parallel
         # shuffled-hash/sort-merge join of the same query
-        # (tools/probe_cycle_plan.py). Genuine dims (region, nation,
+        # (probe_cycle_plan_r10.json). Genuine dims (region, nation,
         # customer, sf0.1 orders) are all under 10MB and still
         # broadcast; anything bigger builds its hash table in parallel
         # on the executors. The driver's plain session never had the

@@ -6,46 +6,34 @@ and ``IncrementalDSIRModel`` (operators/text.py),
 ``IncrementalNearDupIndex`` (operators/dedup.py), and
 ``IncrementalANNIndex`` and ``IncrementalIVFPQIndex``
 (operators/similarity.py) — is a :class:`StandingState`: bucketed base
-tables plus a slice region, written only through ``ingest_slice``.
-Structured Streaming's checkpoint gives at-least-once delivery to
-``foreachBatch`` — after a crash mid-batch, the SAME batch id is
-replayed on restart, and a plain append would re-append whatever
-portion of the slice already landed. This module is the gate that
-makes ingest crash-safe for a fault at ANY point:
+tables plus a slice region of committed deltas. Its one commit record
+is the region's MANIFEST, a small JSON file that every state change
+replaces atomically (``os.replace``). It holds:
 
-* each micro-batch's state lands in a **slice directory keyed by the
-  checkpointed batch id**, written with ``mode("overwrite")`` — a
-  replay after a crash anywhere during staging simply rewrites the
-  same directory with the identical (deterministic) rows;
-* a slice becomes visible only when its id enters the **MANIFEST**, a
-  single small JSON file replaced atomically (``os.replace``) AFTER
-  every component of the slice is fully staged. Readers union only
-  committed slices, so a partially staged slice from a crashed attempt
-  is invisible until its replay completes it;
-* replays of an already-committed slice are skipped outright
-  (``is_committed``) — the crash window between manifest commit and
-  Spark's own checkpoint commit degrades to a no-op, not a double
-  apply.
+* ``slices`` — the committed slice ids. Structured Streaming replays
+  the SAME batch id after a crash mid-batch; each batch is staged into
+  slice directories keyed by that id with ``mode("overwrite")``, its
+  id enters ``slices`` only once every component is staged, readers
+  union only committed slices, and a committed id's replay is skipped;
+* ``schemas`` — each component's staged schema, so slice reads skip
+  parquet's footer-inference job;
+* at most one ``swap`` {live table: staged table} and the slice ids it
+  ``retire``\ s — the commit of a table rewrite (the fold, an IVF-PQ
+  rebucket). Tables are staged under fresh names before the record; the
+  next ingest, fold or read rolls a recorded swap FORWARD, and a crash
+  before the record leaves the live state untouched.
 
-Net effect: ingest is idempotent under replay from any crash point, so
-the recovered standing state is bit-identical to an uninterrupted run
-— the property tests/test_streaming_recovery.py proves by killing a
-stream mid-batch and restarting it from the checkpoint. Batch-grain
-``ingest`` is the same write path: one slice, then the fold.
-
-Scale posture: the slice region is the index's write-ahead delta (an
-LSM level-0); ``StandingState.compact_slices`` folds committed slices
-into the bucketed base tables to restore the pure co-located query
-plan. On a real cluster the manifest's atomic replace maps to a
-conditional put / metastore transaction (Iceberg & Delta implement
-exactly this commit protocol); on the local filesystem ``os.replace``
-is the honest equivalent.
+So every state change is idempotent under replay from any crash point
+(tests/test_streaming_recovery.py kills ingests, folds and swaps and
+restarts them). The slice region is the index's write-ahead delta (an
+LSM level-0); the fold rewrites base ∪ deltas to restore the pure
+co-located plan. One atomically replaced log record is how Iceberg and
+Delta commit table changes; on a cluster it maps to a conditional put.
 
 Reference parity note: the reference has no streaming at all
 (SURVEY §2.7); its recovery story is idempotent daily REPROCESSING
 (etl/common/assets/transfer.py re-derives a day from scratch). This is
-the same contract pushed down to micro-batch grain, where re-deriving
-"the whole day" is no longer an option.
+the same contract pushed down to micro-batch grain.
 """
 
 from __future__ import annotations
@@ -53,11 +41,12 @@ from __future__ import annotations
 import json
 import os
 import tempfile
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from contextlib import closing, contextmanager
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _local(path: str) -> str:
@@ -100,19 +89,13 @@ def slice_file_budget(batch_df: DataFrame) -> int:
 class SliceStore:
     """Per-index slice region with an atomically replaced manifest.
 
-    WRITER CONCURRENCY (r16 ADVICE): :meth:`commit` is a
-    read-modify-write of the whole manifest, and ``foreachBatch``
-    serializes batches only WITHIN one stream — two streams sharing an
-    index root would otherwise race and silently drop each other's
-    committed slice ids. Locally, :meth:`commit` therefore takes an
-    exclusive ``flock`` on ``.manifest.lock`` for the read→replace
-    span, making concurrent committers serialize instead of clobber.
-    On a real cluster the manifest replace maps to a metastore /
-    conditional-put transaction (see module docstring) whose CAS
-    provides the same serialization; the intended deployment remains
-    ONE ingesting stream per index — the lock turns an accidental
-    second writer from silent data loss into correct (if contended)
-    behavior."""
+    WRITER CONCURRENCY (r16 ADVICE): every manifest change is a
+    read-modify-write of the whole file, and ``foreachBatch``
+    serializes batches only within one stream, so :meth:`_update`
+    holds an exclusive ``flock`` on ``.manifest.lock`` for the
+    read→replace span: an accidental second writer on the same root
+    serializes instead of dropping committed ids (a conditional put's
+    CAS does the same on a cluster)."""
 
     def __init__(self, root: str) -> None:
         self.root = root
@@ -120,42 +103,76 @@ class SliceStore:
 
     # -- manifest ---------------------------------------------------------
 
-    def committed(self) -> list[int]:
+    def _load(self) -> dict:
         try:
             with open(self._manifest) as f:
-                return sorted(json.load(f)["slices"])
+                return json.load(f)
         except FileNotFoundError:
-            return []
+            return {}
 
-    def is_committed(self, slice_id: int) -> bool:
-        return int(slice_id) in set(self.committed())
-
-    def commit(self, slice_id: int) -> None:
-        """Atomically add ``slice_id`` to the manifest (idempotent).
-
-        write-temp + ``os.replace``: a crash during commit leaves either
-        the old manifest or the new one, never a torn file. This is the
-        single commit point — every component of the slice must be
-        fully staged before calling. The read→replace span holds an
-        exclusive flock (class docstring: writer concurrency) so a
-        second writer on the same root serializes instead of dropping
-        this commit's ids."""
+    def _update(self, change: Callable[[dict], None]) -> None:
+        """Apply ``change`` to the manifest under the writer lock;
+        write-temp + ``os.replace`` never leaves a torn file."""
         import fcntl
 
         d = os.path.dirname(self._manifest)
         os.makedirs(d, exist_ok=True)
         with open(os.path.join(d, ".manifest.lock"), "w") as lf:
             fcntl.flock(lf, fcntl.LOCK_EX)
-            slices = set(self.committed())
-            slices.add(int(slice_id))
+            manifest = self._load()
+            change(manifest)
             fd, tmp = tempfile.mkstemp(dir=d, prefix=".manifest_")
             try:
                 with os.fdopen(fd, "w") as f:
-                    json.dump({"slices": sorted(slices)}, f)
+                    json.dump(manifest, f)
                 os.replace(tmp, self._manifest)
             finally:
                 if os.path.exists(tmp):
                     os.unlink(tmp)
+
+    def committed(self) -> list[int]:
+        return sorted(self._load().get("slices", []))
+
+    def is_committed(self, slice_id: int) -> bool:
+        return int(slice_id) in set(self.committed())
+
+    def commit(self, slice_id: int) -> None:
+        """Atomically add ``slice_id`` to the manifest (idempotent).
+        This is the slice's single commit point — every component of
+        the slice must be fully staged before calling."""
+
+        def add(m: dict) -> None:
+            m["slices"] = sorted({*m.get("slices", []), int(slice_id)})
+
+        self._update(add)
+
+    def pending_swap(self) -> dict[str, str] | None:
+        """The recorded swap {live table: staged table} not yet rolled
+        forward, or None."""
+        return self._load().get("swap")
+
+    def record_swap(self, swap: dict[str, str], retire: list[int]) -> None:
+        """Commit a table rewrite (:meth:`StandingState._swap`)."""
+        self._update(lambda m: m.update(swap=swap, retire=sorted(retire)))
+
+    def finish_swap(self) -> None:
+        """Clear the swap record and drop its retired ids from
+        ``slices`` in one replace, then delete their directories."""
+        import shutil
+
+        retired: list[int] = []
+
+        def finish(m: dict) -> None:
+            retired.extend(m.pop("retire", []))
+            m.pop("swap", None)
+            m["slices"] = sorted(set(m.get("slices", [])) - set(retired))
+
+        self._update(finish)
+        for component in next(os.walk(_local(self.root)))[1]:
+            for i in retired:
+                shutil.rmtree(
+                    _local(self.slice_path(component, i)), ignore_errors=True
+                )
 
     # -- slice data -------------------------------------------------------
 
@@ -167,45 +184,48 @@ class SliceStore:
     ) -> None:
         """Stage one component of one slice. ``overwrite`` is what makes
         a replay safe: the crashed attempt's partial files are replaced
-        wholesale by the (deterministic) recomputation.
+        wholesale by the (deterministic) recomputation. The component's
+        schema enters the manifest when it first appears or changes.
 
         ``files`` bounds the part-file count (see
-        :func:`slice_file_budget`): the repartition keeps the upstream
-        encode chain at full parallelism while the tiny delta lands in
-        slice-sized files instead of cores× kilobyte ones. Replay-safe:
-        the round-robin repartition sorts its input first
-        (SPARK-23207, on by default), and the overwrite replaces the
-        directory wholesale anyway — only the ROW SET must be
-        deterministic, and it is."""
+        :func:`slice_file_budget`): the upstream chain keeps full
+        parallelism while the tiny delta lands in slice-sized files.
+        Only the ROW SET must be deterministic for a replay, and it is
+        (the round-robin repartition sorts its input, SPARK-23207)."""
+        schema = df.schema.jsonValue()
         if files is not None:
             df = df.repartition(files)
         df.write.mode("overwrite").parquet(self.slice_path(component, slice_id))
+        if self._load().get("schemas", {}).get(component) != schema:
+            self._update(
+                lambda m: m.setdefault("schemas", {}).update({component: schema})
+            )
+
+    def _reader(self, spark: SparkSession, component: str):
+        schema = self._load().get("schemas", {}).get(component)
+        if schema is None:
+            return spark.read
+        return spark.read.schema(StructType.fromJson(schema))
 
     def read_slice(
         self, spark: SparkSession, component: str, slice_id: int
     ) -> DataFrame:
-        return spark.read.parquet(self.slice_path(component, slice_id))
+        return self._reader(spark, component).parquet(
+            self.slice_path(component, slice_id)
+        )
 
     def read(self, spark: SparkSession, component: str) -> DataFrame | None:
         """Union of the COMMITTED slices of ``component`` (None when no
-        slice has committed). Staged-but-uncommitted directories are
-        deliberately invisible — they are a crashed attempt's leftovers
-        until their replay commits them.
-
-        A committed slice id whose component directory is ABSENT is an
-        error, not a filter (r17 ADVICE): every ``ingest_slice`` stages
-        all components before the manifest commit, so a missing dir
-        means the slice data was deleted out from under the manifest —
-        silently reading a smaller standing state would be data loss
-        dressed as success."""
+        slice has committed); a crashed attempt's staged directories
+        stay invisible until their replay commits them. A committed id
+        whose directory is ABSENT raises (r17 ADVICE): slice data was
+        deleted under the manifest, and reading a smaller state would
+        be data loss dressed as success."""
         ids = self.committed()
         if not ids:
             return None
-        missing = [
-            i
-            for i in ids
-            if not os.path.isdir(_local(self.slice_path(component, i)))
-        ]
+        paths = [self.slice_path(component, i) for i in ids]
+        missing = [i for i, p in zip(ids, paths) if not os.path.isdir(_local(p))]
         if missing:
             raise FileNotFoundError(
                 f"slice store {self.root!r}: manifest-committed slice(s) "
@@ -213,13 +233,10 @@ class SliceStore:
                 "was removed outside the store (manifest and data are "
                 "out of sync)"
             )
-        return spark.read.parquet(
-            *[self.slice_path(component, i) for i in ids]
-        )
+        return self._reader(spark, component).parquet(*paths)
 
     def clear(self) -> None:
-        """Drop the whole slice region (after compaction folds it into
-        the base tables, or to reset a correctness-surface rebuild)."""
+        """Drop the whole slice region and its manifest."""
         import shutil
 
         shutil.rmtree(_local(self.root), ignore_errors=True)
@@ -246,22 +263,27 @@ def persisted(df: DataFrame) -> Iterator[DataFrame]:
 
 class StandingState:
     """Lifecycle shared by every incremental index: bucketed base
-    tables, a :class:`SliceStore` region of committed deltas, and one
-    write path into them.
+    tables, a :class:`SliceStore` region of committed deltas, and the
+    region's MANIFEST as the one commit record of both.
 
     A subclass declares ``components`` — component name -> (catalog
     table, bucket columns or None for a plain table) — sets ``spark``
-    and ``num_buckets``, and implements :meth:`_stage`. Tables outside
-    the slice protocol that :meth:`drop` must also remove (frozen
-    quantizers) go in ``extra_tables``. The region lives next to the
-    first component's table in the warehouse, so drop/rebuild
-    semantics match.
+    and ``num_buckets`` (a first fold's file buckets), and implements
+    :meth:`_stage`. Tables outside the slice protocol that :meth:`drop`
+    must also remove (frozen quantizers) go in ``extra_tables``. The
+    region lives next to the first component's table.
 
-    Reads see base ∪ committed deltas (:meth:`_state`); with no slice
-    region that is exactly the plain refreshed table read, so the
-    co-located plan over a folded index is unchanged. :meth:`_parts`
-    keeps the two apart for joins that must stay co-located with a
-    bucketed base."""
+    Two writes change the state, each committed by one manifest
+    replace: :meth:`ingest_slice` adds a slice id, and :meth:`_swap`
+    replaces base tables with staged ones and retires the slice ids
+    they absorbed (the fold :meth:`compact_slices`, and the IVF-PQ
+    rebucket). ``ingest_slice``, ``compact_slices`` and :meth:`_parts`
+    first roll forward a swap a crash left recorded.
+
+    Reads see base ∪ committed deltas (:meth:`_state`); over a folded
+    index that is the plain table read, so its co-located plan is
+    unchanged. :meth:`_parts` keeps the two apart for joins that must
+    stay co-located with a bucketed base."""
 
     spark: SparkSession
     num_buckets: int
@@ -295,6 +317,7 @@ class StandingState:
         the commit. Frames cached while staging are released before
         this returns, also when it raises."""
         store = self._slice_store()
+        self._roll_forward(store)
         if store.is_committed(slice_id):
             return False
         hook = fault_hook or (lambda _label: None)
@@ -321,16 +344,24 @@ class StandingState:
         """The standing rows of ``component`` as at most two frames:
         the refreshed base table, and the committed deltas ∪ ``extra``.
         ``spark`` is the reading session: a foreachBatch clone does not
-        see another session's appends through its own relation cache.
-        Deltas take the base's columns, so a base written before a
-        column was added stays readable."""
+        see another session's writes through its own relation cache."""
         spark = spark or self.spark
+        store = self._slice_store()
+        self._roll_forward(store)
+        delta = union_all(store.read(spark, component), extra)
+        return self._with_base(component, spark, delta)
+
+    def _with_base(
+        self, component: str, spark: SparkSession, delta: DataFrame | None
+    ) -> list[DataFrame]:
+        """[refreshed base table, ``delta``], leaving out an absent part.
+        The delta takes the base's columns, so a base written before a
+        column was added stays readable."""
         table = self.components[component][0]
         base = None
         if spark.catalog.tableExists(table):
             spark.catalog.refreshTable(table)
             base = spark.table(table)
-        delta = union_all(self._slice_store().read(spark, component), extra)
         if base is not None and delta is not None:
             delta = delta.select(*base.columns)
         return [p for p in (base, delta) if p is not None]
@@ -346,47 +377,85 @@ class StandingState:
             )
         return union_all(*parts)
 
-    def compact_slices(self) -> int:
-        """Fold the committed deltas into the base tables and clear the
-        region, restoring the pure co-located plan. Returns the number
-        of slices folded. A missing bucketed table is created with
-        ``write_bucketed`` and an existing one appended to under its
-        own spec; a plain table is overwritten (after removing any
-        orphaned location) or appended to.
+    def _folded(self, store: SliceStore, component: str, ids: list[int]) -> DataFrame:
+        """Base ∪ the deltas of slices ``ids``: the rows of ``component``
+        that a rewrite retiring exactly ``ids`` stages."""
+        delta = union_all(*(store.read_slice(self.spark, component, i) for i in ids))
+        return union_all(*self._with_base(component, self.spark, delta))
 
-        NOT crash-safe: a crash between the first append and the region
-        clear leaves slices both folded and committed, and a rerun
-        would fold them twice. In production the fold is one ACID table
-        commit (Iceberg/Delta); locally run it once, outside a stream."""
-        from dagster_etl_spark.sources.bucketed import (
-            append_bucketed,
-            write_bucketed,
-        )
+    def _swap(
+        self, store: SliceStore, swap: dict[str, str], retire: list[int], hook
+    ) -> None:
+        """Commit staged tables: record ``swap`` {live: staged} and the
+        slice ids it retires in the manifest (the ``marker`` hook), then
+        roll it forward. Every staged table must be fully written
+        first, under a fresh name (a catalog rename moves the staged
+        directory to the live table's)."""
+        store.record_swap(swap, retire)
+        hook("marker")
+        self._roll_forward(store, hook)
+
+    def _roll_forward(self, store: SliceStore, hook=None) -> None:
+        """Finish a recorded swap (idempotent): each staged table still
+        present replaces its live table (the ``pre_rename_<live>`` hook
+        sits between the drop and the rename); one a crashed attempt
+        already renamed is left alone. The record is cleared last, so
+        re-entering after a crash at any line repeats only the
+        remaining work."""
         from dagster_etl_spark.sources.lake import delete_path
 
+        swap = store.pending_swap()
+        if swap is None:
+            return
+        hook = hook or (lambda _label: None)
+        warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
+        for live, staged in swap.items():
+            if self.spark.catalog.tableExists(staged):
+                self.spark.sql(f"DROP TABLE IF EXISTS {live}")
+                hook(f"pre_rename_{live}")
+                # a managed rename refuses an existing target directory
+                delete_path(self.spark, f"{warehouse}/{live.lower()}")
+                self.spark.sql(f"ALTER TABLE {staged} RENAME TO {live}")
+        store.finish_swap()
+
+    def compact_slices(self, fault_hook=None) -> int:
+        """Fold the committed deltas into the base tables, restoring the
+        pure co-located plan. Returns the number of slices folded. Each
+        component's base ∪ deltas is staged as a new table — bucketed
+        under the base's own spec, or ``num_buckets`` on a first fold —
+        and :meth:`_swap` commits them all with the folded ids, so a
+        slice committed while the fold runs stays in the region.
+        ``fault_hook(label)`` is a test-only injection point called
+        after each staged component (``staged_<name>``) and by the
+        swap."""
+        import uuid
+
+        from dagster_etl_spark.sources.bucketed import (
+            bucket_spec,
+            write_bucketed,
+        )
+
         store = self._slice_store()
-        n = len(store.committed())
-        if n == 0:
+        self._roll_forward(store)
+        ids = store.committed()
+        if not ids:
             return 0
-        spark = self.spark
+        hook = fault_hook or (lambda _label: None)
+        tag = uuid.uuid4().hex[:8]
+        swap = {}
         for component, (table, bucket_cols) in self.components.items():
-            delta = store.read(spark, component)
-            if spark.catalog.tableExists(table):
-                delta = delta.select(*spark.table(table).columns)
-                if bucket_cols:
-                    append_bucketed(delta, table)
-                else:
-                    delta.write.mode("append").saveAsTable(table)
-            elif bucket_cols:
-                write_bucketed(
-                    delta, table, bucket_cols, num_buckets=self.num_buckets
-                )
+            rows = self._folded(store, component, ids)
+            staged = swap[table] = f"{table}__staged_{tag}"
+            if not bucket_cols:
+                rows.write.saveAsTable(staged)
+            elif self.spark.catalog.tableExists(table):
+                n, cols, sort_cols = bucket_spec(self.spark, table)
+                write_bucketed(rows, staged, cols, n, sort_cols=sort_cols)
             else:
-                warehouse = spark.conf.get("spark.sql.warehouse.dir")
-                delete_path(spark, f"{warehouse}/{table.lower()}")
-                delta.write.mode("overwrite").saveAsTable(table)
-        store.clear()
-        return n
+                write_bucketed(rows, staged, bucket_cols, self.num_buckets)
+            hook(f"staged_{component}")
+        self._swap(store, swap, ids, hook)
+        return len(ids)
 
     def compact(self) -> dict[str, tuple[int, int]]:
         """Collapse the per-append files of the bucketed base tables;
@@ -401,7 +470,10 @@ class StandingState:
         }
 
     def drop(self) -> None:
-        tables = [t for t, _ in self.components.values()]
-        for t in (*self.extra_tables, *tables):
-            self.spark.sql(f"DROP TABLE IF EXISTS {t}")
+        """Drop every table of the index, the staged tables a crashed
+        swap left behind, and the slice region."""
+        for t in (*self.extra_tables, *(t for t, _ in self.components.values())):
+            staged = self.spark.sql(f"SHOW TABLES LIKE '{t}__staged_*'").collect()
+            for name in (t, *(r.tableName for r in staged)):
+                self.spark.sql(f"DROP TABLE IF EXISTS {name}")
         self._slice_store().clear()

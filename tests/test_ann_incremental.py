@@ -404,11 +404,11 @@ def test_ivfpq_rebucket_crash_windows_roll_forward(spark):
     EVERY window, including the historically-unprotected span between
     `DROP TABLE codes` and the staging rename. Inject a crash at each
     fault hook, then open a FRESH handle (init-time geometry, as a
-    restarted process would) and search: recover_rebucket must roll the
-    staged swap forward on first use, leaving results identical to an
-    uninterrupted rebucket and the geometry at the marker's nlist.
-    A crash BEFORE the marker ("staged") must leave the live index
-    untouched and re-runnable."""
+    restarted process would) and search: the swap recorded in the
+    slice-store manifest must roll forward on first use, leaving
+    results identical to an uninterrupted rebucket and the stored
+    geometry at the new nlist. A crash BEFORE the record ("staged")
+    must leave the live index untouched and re-runnable."""
     from dagster_etl_spark.operators.similarity import IncrementalIVFPQIndex
     from dagster_etl_spark.sources.fixtures import load_table
 
@@ -457,7 +457,7 @@ def test_ivfpq_rebucket_crash_windows_roll_forward(spark):
         )
         assert got == want, f"crash at {label} not rolled forward"
         assert fresh.nlist == 16 and fresh.num_buckets == 16
-        assert fresh._read_rb_marker() is None  # marker consumed
+        assert fresh._slice_store().pending_swap() is None  # record consumed
         fresh.drop()
 
     # crash BEFORE the marker: live index untouched, rebucket re-runs
@@ -472,7 +472,7 @@ def test_ivfpq_rebucket_crash_windows_roll_forward(spark):
             ) if lab == "staged" else None,
         )
     fresh = IncrementalIVFPQIndex(spark, "ivfpq_rbc_pre", nlist=8, m=8, ksub=16)
-    assert fresh.recover_rebucket() is False  # nothing committed
+    assert fresh._slice_store().pending_swap() is None  # nothing recorded
     assert sorted(tuple(r) for r in fresh.topk(q, k=10, nprobe=8).collect()) == pre
     fresh.rebucket(emb, 16)  # the retry completes normally
     assert sorted(tuple(r) for r in fresh.topk(q, k=10, nprobe=16).collect()) == want
@@ -511,6 +511,11 @@ def test_ivfpq_maybe_rebucket_trigger(spark):
     # second call at the same size is a no-op (hysteresis: target
     # no longer exceeds the standing nlist)
     assert idx.maybe_rebucket(emb, max_per_list=per_list) is None
+    # so is a fresh handle at the init-time geometry: it reads the
+    # stored nlist, not its constructor's
+    fresh = IncrementalIVFPQIndex(spark, "ivfpq_auto", nlist=4, m=8, ksub=16)
+    assert fresh.nlist == target
+    assert fresh.maybe_rebucket(emb, max_per_list=per_list) is None
     # the re-bucketed index still searches
     got = idx.topk(emb.filter("vec_id < 3"), k=5, nprobe=target)
     assert got.count() == 15

@@ -416,6 +416,132 @@ def test_ivfpq_kill_restart_equals_oneshot(spark, tmp_path, fail_at):
     want_idx.drop()
 
 
+def _standing(kind, spark, name):
+    """(fresh handle on index ``name``, its input rows, ingest_slice
+    options) for each of the six standing indexes."""
+    from dagster_etl_spark.operators.dedup import IncrementalNearDupIndex
+    from dagster_etl_spark.operators.similarity import (
+        IncrementalANNIndex,
+        IncrementalIVFPQIndex,
+    )
+    from dagster_etl_spark.operators.text import (
+        IncrementalBM25Index,
+        IncrementalDSIRModel,
+        IncrementalUnigramLM,
+    )
+    from dagster_etl_spark.sources.fixtures import load_table
+
+    if kind in ("ann", "ivfpq"):
+        emb = load_table(spark, SF_SMALL, "embeddings")
+        if kind == "ann":
+            return IncrementalANNIndex(spark, name, nlist=4), emb, {}
+        return IncrementalIVFPQIndex(spark, name, nlist=4, m=8, ksub=16), emb, {}
+    cls, opts = {
+        "neardup": (IncrementalNearDupIndex, {"threshold": 0.2}),
+        "bm25": (IncrementalBM25Index, {}),
+        "lm": (IncrementalUnigramLM, {}),
+        "dsir": (IncrementalDSIRModel, {}),
+    }[kind]
+    return cls(spark, name), _docs(spark, 80), opts
+
+
+def _standing_rows(idx):
+    """Every component's base ∪ committed deltas, as sorted rows (the
+    read rolls a recorded swap forward first)."""
+    return {
+        c: sorted(repr(tuple(r)) for r in idx._state(c).collect())
+        for c in idx.components
+    }
+
+
+def _kill_at(label):
+    def hook(lab):
+        if lab == label:
+            raise RuntimeError(f"injected kill at {label}")
+
+    return hook
+
+
+KINDS = ["neardup", "bm25", "lm", "dsir", "ann", "ivfpq"]
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_fold_kill_at_every_window_rolls_forward(spark, kind):
+    """The fold is exactly-once like ingest: kill ``compact_slices``
+    after each component's staged write, after the manifest record and
+    between each live table's drop and its rename; a restarted handle's
+    next ``ingest_slice`` (odd rounds) or read (even rounds) rolls the
+    swap forward, and the standing state equals an uninterrupted twin's
+    that ran the same slices and folds."""
+    idx, data, opts = _standing(kind, spark, f"fk_{kind}")
+    ref = _standing(kind, spark, f"fk_{kind}_ref")[0]
+    key = idx.id_col
+    labels = (
+        [f"staged_{c}" for c in idx.components]
+        + ["marker"]
+        + [f"pre_rename_{t}" for t, _ in idx.components.values()]
+    )
+    n = len(labels) + 1
+    part = lambda i: data.filter(f"{key} % {n} = {i}")  # noqa: E731
+    for x in (idx, ref):
+        x.drop()
+        if hasattr(x, "init"):
+            x.init(data.filter(f"{key} % 7 = 0"))
+        x.ingest_slice(part(0), 0, **opts)
+    unfolded = [0]
+    try:
+        for i, label in enumerate(labels, start=1):
+            ref.compact_slices()
+            with pytest.raises(RuntimeError, match="injected kill"):
+                idx.compact_slices(fault_hook=_kill_at(label))
+            idx = _standing(kind, spark, f"fk_{kind}")[0]  # the restart
+            if i % 2:
+                for x in (idx, ref):
+                    x.ingest_slice(part(i), i, **opts)
+                assert _standing_rows(idx) == _standing_rows(ref), label
+            else:
+                assert _standing_rows(idx) == _standing_rows(ref), label
+                for x in (idx, ref):
+                    x.ingest_slice(part(i), i, **opts)
+            # a kill before the record leaves the folded slices committed
+            if not label.startswith("staged_"):
+                unfolded = []
+            unfolded.append(i)
+            store = idx._slice_store()
+            assert store.pending_swap() is None
+            assert store.committed() == unfolded, label
+        assert _standing_rows(idx) == _standing_rows(ref)
+    finally:
+        idx.drop()
+        ref.drop()
+
+
+def test_slice_committed_during_fold_survives(spark):
+    """The fold retires exactly the slice ids it read: a slice committed
+    after its tables are staged but before the swap is recorded stays
+    committed, and the standing state holds every slice once."""
+    idx, docs, _ = _standing("bm25", spark, "fk_concurrent")
+    ref = _standing("bm25", spark, "fk_concurrent_ref")[0]
+    part = lambda i: docs.filter(f"doc_id % 3 = {i}")  # noqa: E731
+    for x in (idx, ref):
+        x.drop()
+        x.ingest_slice(part(0), 0)
+        x.ingest_slice(part(1), 1)
+    ref.ingest_slice(part(2), 2)
+
+    def commit_another(label):
+        if label == "staged_totals":
+            assert idx.ingest_slice(part(2), 2)
+
+    try:
+        assert idx.compact_slices(fault_hook=commit_another) == 2
+        assert idx._slice_store().committed() == [2]
+        assert _standing_rows(idx) == _standing_rows(ref)
+    finally:
+        idx.drop()
+        ref.drop()
+
+
 def _streamed_surface(kind):
     """(index class, ingest_slice options, the registered query's read,
     the one-shot operator) for each document stream registered in
