@@ -1,6 +1,7 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
+(default: the sf0.1 fixtures) on local[N] (N = $SPARK_GRAFT_CPUS, else
+the host's schedulable cores) and prints ONE JSON line:
+{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
 
 Work is materialized via the `noop` data source (full execution, no
 driver collect) so timings measure the distributed plan, not toPandas.
@@ -28,15 +29,14 @@ def sf_of(path: str) -> float:
 
 def main() -> None:
     from dagster_etl_spark.registry import all_queries
-    from dagster_etl_spark.session import get_spark
+    from dagster_etl_spark.session import default_cpus, get_spark
 
     # size the shuffle to the data, not the box: sf0.1 is ~600k rows, so
     # 16 post-shuffle partitions keep tasks >= a few MB each (SURVEY §4:
     # partition sizing is a data-volume knob; 32+ partitions at this
     # scale just pays task-scheduling overhead). Executor threads still
-    # come from SPARK_GRAFT_CPUS.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("bench", shuffle_partitions=min(cpus, 16))
+    # come from default_cpus().
+    spark = get_spark("bench", shuffle_partitions=min(default_cpus(), 16))
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
 
     specs = all_queries()

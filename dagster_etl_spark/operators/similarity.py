@@ -822,33 +822,6 @@ def _ivf_pq_search(
     return _exact_rerank(cands, rerank_source, queries, dim, k, id_col, vec_col)
 
 
-def _save_centroids(spark, table: str, cents: list[list[float]]) -> None:
-    """Write a frozen quantizer's centroids as (cidx, cv) rows."""
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], ["cidx", "cv"]
-    ).selectExpr("cidx", "CAST(cv AS array<float>) AS cv").write.saveAsTable(table)
-
-
-def _load_centroids(spark, table: str) -> list[list[float]]:
-    """Bounded collect of :func:`_save_centroids`' table: nlist rows
-    (the same bounded-driver-side exception as hash_centroids / the
-    nlist KMeans centers)."""
-    rows = spark.table(table).orderBy("cidx").collect()
-    return [[float(v) for v in r["cv"]] for r in rows]
-
-
-def _clear_frozen(index: StandingState) -> None:
-    """Drop ``index`` and the warehouse directories of its frozen
-    quantizer tables (``extra_tables``) — the fresh start of an
-    ``init``."""
-    from dagster_etl_spark.sources.lake import delete_path
-
-    index.drop()
-    warehouse = index.spark.conf.get("spark.sql.warehouse.dir")
-    for t in index.extra_tables:
-        delete_path(index.spark, f"{warehouse}/{t.lower()}")
-
-
 # -- incremental ANN index -------------------------------------------------
 
 class IncrementalANNIndex(StandingState):
@@ -864,10 +837,12 @@ class IncrementalANNIndex(StandingState):
     the frozen centroids, :func:`nearest_lists`) and appends them to
     a bucket-bucketed table. Search probes the standing table.
 
-    State = two catalog tables:
+    State = one catalog table and one frozen array, both committed by
+    the slice store's MANIFEST:
 
-    * ``{name}_ann_centroids`` (cidx, cv) — nlist rows, written once;
-    * ``{name}_ann_vectors``   (vec_id, embedding, bucket) bucketed by
+    * ``centroids`` — the nlist x dim float32 array, written once by
+      :meth:`init`; reads load it with numpy (no Spark job);
+    * ``{name}_ann_vectors`` (vec_id, embedding, bucket) bucketed by
       ``bucket`` so a shuffle-join search is co-located on the corpus
       side; at driver scale the probe side broadcasts and no side
       shuffles.
@@ -903,7 +878,6 @@ class IncrementalANNIndex(StandingState):
         num_buckets: int = 8,
     ) -> None:
         self.spark = spark
-        self.centroids_table = f"{name}_ann_centroids"
         self.vectors_table = f"{name}_ann_vectors"
         self.dim = dim
         self.nlist = nlist
@@ -911,18 +885,15 @@ class IncrementalANNIndex(StandingState):
         self.vec_col = vec_col
         self.num_buckets = num_buckets
         self.components = {"vectors": (self.vectors_table, ["bucket"])}
-        self.extra_tables = (self.centroids_table,)
-
-    def _centroids(self) -> list[list[float]]:
-        return _load_centroids(self.spark, self.centroids_table)
 
     def init(self, vectors: DataFrame) -> None:
         """Freeze the quantizer on the first slice and ingest it."""
-        _clear_frozen(self)
-        cents = hash_centroids(
-            vectors, self.nlist, id_col=self.id_col, vec_col=self.vec_col
+        self.drop()
+        self._freeze(
+            centroids=hash_centroids(
+                vectors, self.nlist, id_col=self.id_col, vec_col=self.vec_col
+            )
         )
-        _save_centroids(self.spark, self.centroids_table, cents)
         self.ingest(vectors)
 
     def _stage(self, store, vectors: DataFrame, slice_id: int):
@@ -931,9 +902,8 @@ class IncrementalANNIndex(StandingState):
         function of the quantizer, so a replay rewrites identical rows.
         Scan-local with no spread: the partitioning is the slice's own
         splits, already slice-sized — no file budget."""
-        assigned = nearest_lists(
-            vectors, self.vec_col, self._centroids(), [self.id_col, self.vec_col]
-        )
+        cents = self._frozen("centroids")
+        assigned = nearest_lists(vectors, self.vec_col, cents, [self.id_col, self.vec_col])
         store.write("vectors", slice_id, assigned)
         yield "vectors"
 
@@ -944,7 +914,7 @@ class IncrementalANNIndex(StandingState):
         :func:`ivf_cosine_topk` (:func:`_ivf_probe_topk`) over the
         standing vectors."""
         return _ivf_probe_topk(
-            queries, self._state("vectors"), self._centroids(), nprobe,
+            queries, self._state("vectors"), self._frozen("centroids"), nprobe,
             self.dim, k, self.id_col, self.vec_col,
         )
 
@@ -978,18 +948,20 @@ class IncrementalIVFPQIndex(StandingState):
     IDENTICAL regardless of slicing (property-tested: accumulated ==
     one-shot), the same invariant the other incremental surfaces pin.
 
-    State = three catalog tables:
+    State = one catalog table and two frozen arrays, all committed by
+    the slice store's MANIFEST:
 
-    * ``{name}_ivfpq_centroids`` (cidx, cv) — nlist rows, written once;
-    * ``{name}_ivfpq_codebooks`` (j, cidx, subvec) — m*ksub rows, once;
+    * ``centroids`` — the nlist x dim float32 array (a rebucket
+      replaces it in the same record as the codes);
+    * ``codebooks`` — the m x ksub x dim/m float32 array, written once;
     * ``{name}_ivfpq_codes`` (id, bucket, code_0..code_{m-1}) —
       bucketed by ``bucket``; the HOT state, m small ints per vector
       (~8 bytes against dim*4 float32) — what a 100 TB store keeps
       resident while the float vectors live cold.
 
     Search probes nprobe lists, ADC-scores the stored codes against
-    reconstructions (codebooks are a bounded m*ksub collect handed to
-    the kernels as arrays), and — given a ``rerank_source`` (the cold
+    reconstructions (both arrays load with numpy, no Spark job, and go
+    to the kernels as they are), and — given a ``rerank_source`` (the cold
     float table) — exact-reranks the top candidates. Fully
     SQL-recomputable: the registered query's oracle restricts BOTH
     quantizer pools to the init slice and replays all three stages.
@@ -1026,8 +998,6 @@ class IncrementalIVFPQIndex(StandingState):
         num_buckets: int = 8,
     ) -> None:
         self.spark = spark
-        self.centroids_table = f"{name}_ivfpq_centroids"
-        self.codebooks_table = f"{name}_ivfpq_codebooks"
         self.codes_table = f"{name}_ivfpq_codes"
         self.dim = dim
         self._nlist = nlist
@@ -1037,15 +1007,15 @@ class IncrementalIVFPQIndex(StandingState):
         self.vec_col = vec_col
         self._num_buckets = num_buckets
         self.components = {"codes": (self.codes_table, ["bucket"])}
-        self.extra_tables = (self.centroids_table, self.codebooks_table)
 
     @property
     def nlist(self) -> int:
-        """The stored list count (a rebucket changes it); the
+        """The stored centroid count (a rebucket changes it); the
         constructor's until :meth:`init` freezes the centroids."""
-        if self.spark.catalog.tableExists(self.centroids_table):
-            return len(self._centroids())
-        return self._nlist
+        try:
+            return len(self._frozen("centroids"))
+        except KeyError:
+            return self._nlist
 
     @property
     def num_buckets(self) -> int:
@@ -1091,39 +1061,18 @@ class IncrementalIVFPQIndex(StandingState):
             id_col=id_col, vec_col=vec_col, num_buckets=max(8, nlist),
         )
 
-    # -- frozen state (bounded collects: nlist + m*ksub rows) --
-
-    def _centroids(self) -> list[list[float]]:
-        return _load_centroids(self.spark, self.centroids_table)
-
-    def _books(self) -> list[list[list[float]]]:
-        rows = (
-            self.spark.table(self.codebooks_table)
-            .orderBy("j", "cidx")
-            .collect()
-        )
-        books: list[list[list[float]]] = [[] for _ in range(self.m)]
-        for r in rows:
-            books[r["j"]].append([float(v) for v in r["subvec"]])
-        return books
-
     def init(self, vectors: DataFrame) -> None:
         """Freeze both quantizers on the first slice and ingest it."""
-        _clear_frozen(self)
-        cents = hash_centroids(
-            vectors, self._nlist, id_col=self.id_col, vec_col=self.vec_col
+        self.drop()
+        self._freeze(
+            centroids=hash_centroids(
+                vectors, self._nlist, id_col=self.id_col, vec_col=self.vec_col
+            ),
+            codebooks=pq_codebooks(
+                vectors, m=self.m, ksub=self.ksub, dim=self.dim,
+                id_col=self.id_col, vec_col=self.vec_col,
+            ),
         )
-        _save_centroids(self.spark, self.centroids_table, cents)
-        books = pq_codebooks(
-            vectors, m=self.m, ksub=self.ksub, dim=self.dim,
-            id_col=self.id_col, vec_col=self.vec_col,
-        )
-        self.spark.createDataFrame(
-            [(j, i, w) for j, book in enumerate(books) for i, w in enumerate(book)],
-            ["j", "cidx", "subvec"],
-        ).selectExpr(
-            "j", "cidx", "CAST(subvec AS array<float>) AS subvec"
-        ).write.saveAsTable(self.codebooks_table)
         self.ingest(vectors)
 
     def _stage(self, store, vectors: DataFrame, slice_id: int):
@@ -1132,7 +1081,8 @@ class IncrementalIVFPQIndex(StandingState):
         pure function of them, so a replay rewrites identical code
         rows."""
         coded = ivf_pq_encode(
-            vectors, self._centroids(), self._books(), self.id_col, self.vec_col
+            vectors, self._frozen("centroids"), self._frozen("codebooks"),
+            self.id_col, self.vec_col,
         )
         store.write("codes", slice_id, coded, files=slice_file_budget(vectors))
         yield "codes"
@@ -1159,8 +1109,8 @@ class IncrementalIVFPQIndex(StandingState):
         if rerank is None and rerank_source is not None:
             rerank = max(500, codes.count() // 200)
         return _ivf_pq_search(
-            queries, codes, self._centroids(), self._books(), nprobe, k,
-            rerank, rerank_source, self.dim, self.id_col, self.vec_col,
+            queries, codes, self._frozen("centroids"), self._frozen("codebooks"),
+            nprobe, k, rerank, rerank_source, self.dim, self.id_col, self.vec_col,
         )
 
     def rebucket(
@@ -1197,9 +1147,10 @@ class IncrementalIVFPQIndex(StandingState):
         method it froze at init.
 
         CRASH SAFETY: the re-bucketed codes (with the committed slice
-        deltas folded in) and the new centroids are staged under fresh
-        names and committed by :meth:`StandingState._swap`, the
-        manifest's roll-forward swap that the fold uses too.
+        deltas folded in) and the new centroid file are staged under
+        fresh names and committed by one :meth:`StandingState._swap`
+        record, the manifest's roll-forward swap that the fold uses
+        too; its final replace switches codes and centroids together.
 
         FILE-BUCKET RESCALE (r17 ADVICE): the staged codes table is
         written at ``max(8, nlist)`` file buckets — sized_for's
@@ -1214,8 +1165,10 @@ class IncrementalIVFPQIndex(StandingState):
         store = self._slice_store()
         self._roll_forward(store)  # finish a crashed predecessor first
         ids = store.committed()
-        cents = hash_centroids(
-            vectors, nlist, id_col=self.id_col, vec_col=self.vec_col
+        # assign against exactly the float32 array the record will hold
+        cents = np.asarray(
+            hash_centroids(vectors, nlist, id_col=self.id_col, vec_col=self.vec_col),
+            np.float32,
         )
         assign = nearest_lists(spread(vectors), self.vec_col, cents, [self.id_col])
         codes = self._folded(store, "codes", ids)
@@ -1238,15 +1191,9 @@ class IncrementalIVFPQIndex(StandingState):
                 f"rebucket: float table covers {n_new} of {n_old} ingested "
                 "ids — pass the full accumulated vector table"
             )
-        cstaging = f"{self.centroids_table}__staged_{tag}"
-        _save_centroids(self.spark, cstaging, cents)
+        arrays = {"centroids": store.write_array("centroids", cents)}
         hook("staged")
-        self._swap(
-            store,
-            {self.codes_table: staging, self.centroids_table: cstaging},
-            ids,
-            hook,
-        )
+        self._swap(store, {self.codes_table: staging}, ids, hook, arrays)
         hook("post_swap")
 
     def maybe_rebucket(

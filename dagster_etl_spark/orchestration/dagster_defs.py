@@ -205,7 +205,7 @@ def build_definitions(
                 )
                 upstream_key = transfer_key
 
-            if p.load is not None:
+            if PipelineRunner.load_config(tenant.tenant_id, p) is not None:
 
                 def _load(context, tenant=tenant, p=p):
                     date = context.partition_key if p.date_column else None

@@ -27,7 +27,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dagster_etl_spark.orchestration.config import PipelineConfig, TenantConfig
+from dagster_etl_spark.orchestration.config import LoadConfig, PipelineConfig, TenantConfig
 from dagster_etl_spark.orchestration.plugins import (
     resolve_extract_query,
     resolve_load_config,
@@ -73,6 +73,13 @@ class PipelineRunner:
         self.lake_base = lake_base
         self.warehouse_base = warehouse_base
         self.ctx = context or RunContext()
+
+    @staticmethod
+    def load_config(tenant_id: str, p: PipelineConfig) -> LoadConfig | None:
+        """The pipeline's load target: a tenant plugin's (U3), else the
+        config's; None when the pipeline has no load stage. Both run
+        paths and the Dagster asset graph decide on this."""
+        return resolve_load_config(tenant_id, p.name) or p.load
 
     # -- stages ---------------------------------------------------------------
 
@@ -138,7 +145,7 @@ class PipelineRunner:
         """S8-S12: tenant-column injection + keyed upsert (or append /
         overwrite) into the warehouse path."""
         t0 = time.time()
-        cfg = resolve_load_config(self.tenant.tenant_id, p.name) or p.load
+        cfg = self.load_config(self.tenant.tenant_id, p)
         if cfg is None:  # explicit raise, not assert: survives python -O
             raise ValueError(f"load stage without load config: {p.name}")
         df = with_tenant(staged["df"], self.tenant.tenant_id)
@@ -179,7 +186,7 @@ class PipelineRunner:
             if p.has_transfer:
                 out["transfer"] = self.transfer(p, partition_date, upstream)
                 staged = out["transfer"]
-            if p.load is not None or resolve_load_config(self.tenant.tenant_id, p.name):
+            if self.load_config(self.tenant.tenant_id, p) is not None:
                 out["load"] = self.load(p, partition_date, staged)
         except Exception as exc:  # failure hook parity (etl_hooks.py:19-82)
             self.ctx.record(
@@ -202,7 +209,7 @@ class PipelineRunner:
             if p.has_transfer:
                 stages["transfer"] = self.transfer(p, partition_date, handoffs)
                 staged = stages["transfer"]
-            if p.load is not None or resolve_load_config(self.tenant.tenant_id, p.name):
+            if self.load_config(self.tenant.tenant_id, p) is not None:
                 stages["load"] = self.load(p, partition_date, staged)
             results[p.name] = stages
         return results

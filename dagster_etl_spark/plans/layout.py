@@ -21,6 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dagster_etl_spark.sources.lake import _hadoop_fs, swap_in
+
 
 def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     """Round-robin repartition ``df`` to ``partitions`` (default: the
@@ -52,13 +54,6 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     return df.repartition(target)
 
 
-def _hadoop_fs(spark, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
-
-
 def compaction_plan(
     spark, path: str, target_file_mb: int = 128, slack: float = 1.2
 ) -> dict:
@@ -67,7 +62,7 @@ def compaction_plan(
     count at ``target_file_mb``, and ``rewrite`` (True when the
     directory has more than ``slack``× the target count). Driver-side
     metadata listing only — no data is read."""
-    fs, hpath = _hadoop_fs(spark, path)
+    fs, hpath, _ = _hadoop_fs(spark, path)
     files = [
         s
         for s in fs.listStatus(hpath)
@@ -98,12 +93,12 @@ def compact_parquet(
 
     Coalesces the directory to ``ceil(bytes / target_file_mb)`` files
     via ``coalesce`` (no shuffle — partitions merge on read) written to
-    a sibling temp dir, then swaps it in. The temp write fully
-    materializes BEFORE the original is touched, so a mid-swap failure
-    leaves either the old or the new complete data, never a mix of
-    half-written state; the directory swap itself is two FS renames and
-    is not atomic on object stores — run from a single maintenance job
-    (the same operational contract as Delta/Iceberg compaction).
+    a sibling temp dir, then swaps it in with the lake's rename-aside
+    swap (:func:`~dagster_etl_spark.sources.lake.swap_in`). The temp
+    write fully materializes BEFORE the original is touched, so a
+    mid-swap failure leaves either the old or the new complete data,
+    never a mix of half-written state; run it from a single maintenance
+    job (the same operational contract as Delta/Iceberg compaction).
     No-ops (rewrite=False) when the directory is already within
     ``slack``× of target, so scheduling it idempotently is free.
 
@@ -128,16 +123,7 @@ def compact_parquet(
             .write.mode("overwrite")
             .parquet(tmp)
         )
-    fs, hpath = _hadoop_fs(spark, path)
-    jvm = spark._jvm
-    old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__pre_compact")
-    fs.delete(old, True)
-    if not fs.rename(hpath, old):
-        raise IOError(f"compaction swap failed renaming {path}")
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), hpath):
-        fs.rename(old, hpath)  # roll back
-        raise IOError(f"compaction swap failed installing {tmp}")
-    fs.delete(old, True)
+    swap_in(spark, tmp, path)
     return {**plan, "rewritten": True}
 
 

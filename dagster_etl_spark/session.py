@@ -26,6 +26,13 @@ from pyspark.sql import SparkSession
 DEFAULT_TZ = "UTC"
 
 
+def default_cpus() -> int:
+    """Executor threads and shuffle partitions: ``SPARK_GRAFT_CPUS`` when
+    set (the deployment override), else the cores this process may be
+    scheduled on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "dagster-etl-spark",
     master: str | None = None,
@@ -35,10 +42,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    ``master``/``shuffle_partitions`` default from ``SPARK_GRAFT_CPUS``
-    so tests, bench.py and the driver all agree on parallelism.
+    ``master``/``shuffle_partitions`` default from :func:`default_cpus`
+    so tests, bench.py and the correctness harness agree on parallelism.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
 

@@ -212,6 +212,60 @@ class BucketedPipeline:
         )
 
 
+def file_count(spark: SparkSession, table: str) -> int:
+    """Distinct data files behind ``table``."""
+    from pyspark.sql.functions import input_file_name
+
+    spark.catalog.refreshTable(table)
+    return spark.table(table).select(input_file_name()).distinct().count()
+
+
+def stage_compacted(spark: SparkSession, table: str, staged: str) -> None:
+    """Write bucketed ``table``'s rows to the new table ``staged`` under
+    the same spec, one file per bucket: the collapse step that
+    :func:`compact_bucketed` and ``StandingState.compact`` share.
+
+    Repartition ON THE BUCKET KEY to exactly num_buckets tasks —
+    bucketed writers emit one file per (task, bucket), so each task
+    must carry exactly one bucket for the rewrite to actually collapse
+    files (repartition's murmur3-mod-n is the same hash family
+    bucketing uses). The bucketed READ must be disabled while staging:
+    the planner otherwise removes the repartition exchange (the table
+    already claims HashPartitioning on the key) yet still scans by file
+    splits, leaving write tasks bucket-MISaligned and the rewrite a
+    no-op (measured: 8 files -> 8 files without this)."""
+    num_buckets, bucket_cols, sort_cols = bucket_spec(spark, table)
+    if not num_buckets or not bucket_cols:
+        raise ValueError(f"table {table!r} is not bucketed")
+    saved = spark.conf.get("spark.sql.sources.bucketing.enabled")
+    spark.conf.set("spark.sql.sources.bucketing.enabled", "false")
+    try:
+        write_bucketed(
+            spark.table(table).repartition(num_buckets, *bucket_cols),
+            staged,
+            bucket_cols,
+            num_buckets=num_buckets,
+            sort_cols=sort_cols,
+        )
+    finally:
+        spark.conf.set("spark.sql.sources.bucketing.enabled", saved)
+
+
+def replace_table(spark: SparkSession, live: str, staged: str, hook=None) -> None:
+    """Put managed table ``staged`` in ``live``'s place: drop ``live``,
+    delete any directory left at its location (a managed rename refuses
+    an existing target directory) and rename ``staged`` onto it.
+    ``hook()`` runs between the drop and the rename."""
+    from dagster_etl_spark.sources.lake import delete_path
+
+    spark.sql(f"DROP TABLE IF EXISTS {live}")
+    if hook is not None:
+        hook()
+    warehouse = spark.conf.get("spark.sql.warehouse.dir")
+    delete_path(spark, f"{warehouse}/{live.lower()}")
+    spark.sql(f"ALTER TABLE {staged} RENAME TO {live}")
+
+
 def compact_bucketed(spark: SparkSession, table: str) -> tuple[int, int]:
     """Rewrite a bucketed table under its own spec, collapsing the
     small per-append files each daily increment leaves behind (every
@@ -219,55 +273,16 @@ def compact_bucketed(spark: SparkSession, table: str) -> tuple[int, int]:
     a bucket is hundreds of small files and scan/open overhead
     dominates). One full-table rewrite, spec unchanged — downstream
     joins stay exchange-free; run it on the compaction cadence, not
-    the ingest cadence. Returns (files_before, files_after)."""
-    from pyspark.sql.functions import input_file_name
+    the ingest cadence. The collapsed copy is written once under a
+    staged name (Spark can't overwrite a table from a plan that reads
+    it) and renamed into place. Returns (files_before, files_after)."""
+    import uuid
 
-    num_buckets, bucket_cols, sort_cols = bucket_spec(spark, table)
-    if not num_buckets or not bucket_cols:
-        raise ValueError(f"table {table!r} is not bucketed")
-
-    def _file_count() -> int:
-        return (
-            spark.table(table)
-            .select(input_file_name().alias("f"))
-            .distinct()
-            .count()
-        )
-
-    before = _file_count()
-    # stage through a temp table: Spark can't overwrite a table from a
-    # plan that reads the same table. Repartition ON THE BUCKET KEY to
-    # exactly num_buckets tasks — bucketed writers emit one file per
-    # (task, bucket), so each task must carry exactly one bucket for
-    # the rewrite to actually collapse files (repartition's
-    # murmur3-mod-n is the same hash family bucketing uses). The
-    # bucketed READ must be disabled while compacting: the planner
-    # otherwise removes the repartition exchange (the table already
-    # claims HashPartitioning on the key) yet still scans by file
-    # splits, leaving write tasks bucket-MISaligned and the rewrite a
-    # no-op (measured: 8 files -> 8 files without this).
-    tmp = f"{table}__compact_tmp"
-    saved = spark.conf.get("spark.sql.sources.bucketing.enabled")
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "false")
-    try:
-        write_bucketed(
-            spark.table(table).repartition(num_buckets, *bucket_cols),
-            tmp,
-            bucket_cols,
-            num_buckets=num_buckets,
-            sort_cols=sort_cols,
-        )
-        write_bucketed(
-            spark.table(tmp).repartition(num_buckets, *bucket_cols),
-            table,
-            bucket_cols,
-            num_buckets=num_buckets,
-            sort_cols=sort_cols,
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.bucketing.enabled", saved)
-    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    return before, _file_count()
+    before = file_count(spark, table)
+    staged = f"{table}__staged_{uuid.uuid4().hex[:8]}"
+    stage_compacted(spark, table, staged)
+    replace_table(spark, table, staged)
+    return before, file_count(spark, table)
 
 
 def bucketed_join(

@@ -47,6 +47,29 @@ def rename_or_raise(fs, src, dst) -> None:
         raise IOError(f"filesystem rename failed: {src} -> {dst}")
 
 
+def swap_in(spark: SparkSession, staging: str, path: str) -> None:
+    """Replace directory ``path`` with the completed rewrite at
+    ``staging`` by a rename-aside swap: the live data survives as
+    ``{path}__old`` until the new data is in place, so a crash mid-swap
+    never loses it — delete-then-rename would. The two renames are not
+    atomic on object stores (true atomicity needs a table format), so
+    run it from one writer."""
+    fs, live, jvm = _hadoop_fs(spark, path)
+    staging_p = jvm.org.apache.hadoop.fs.Path(staging)
+    old_p = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__old")
+    fs.delete(old_p, True)
+    rename_or_raise(fs, live, old_p)
+    try:
+        rename_or_raise(fs, staging_p, live)
+    except IOError:
+        fs.rename(old_p, live)  # restore the live data before surfacing
+        raise
+    # only drop the __old copy once the rewrite is verifiably live
+    if not fs.exists(live):
+        raise IOError(f"rewritten data missing at {path} after swap; old copy kept")
+    fs.delete(old_p, True)
+
+
 def write_partition(
     df: DataFrame,
     base: str,
@@ -94,51 +117,6 @@ def delete_path(spark: SparkSession, path: str) -> bool:
     if not fs.exists(hpath):
         return False
     return bool(fs.delete(hpath, True))
-
-
-def compact_partition(
-    spark: SparkSession, path: str, target_file_bytes: int = 128 * 1024 * 1024
-) -> dict[str, int]:
-    """Small-files compaction: rewrite a partition into
-    ceil(bytes/target) files via staging dir + atomic-ish rename swap
-    (readers of ``path`` never see a partial rewrite).
-
-    Daily micro-batch appends (the upsert sink, streaming foreachBatch)
-    accrete files; at 100 TB uncompacted partitions turn every scan
-    into a file-listing + task-per-tiny-file storm. Run this as the
-    maintenance job per closed partition.
-    """
-    fs, hpath, jvm = _hadoop_fs(spark, path)
-    files = [
-        f
-        for f in fs.listStatus(hpath)
-        if f.isFile() and f.getPath().getName().endswith(".parquet")
-    ]
-    before = len(files)
-    total_bytes = sum(f.getLen() for f in files)
-    n_out = max(1, -(-total_bytes // target_file_bytes))
-    df = spark.read.parquet(path)
-    staging = path.rstrip("/") + "__compact"
-    df.repartition(n_out).write.mode("overwrite").parquet(staging)
-    staging_p = jvm.org.apache.hadoop.fs.Path(staging)
-    # rename-aside swap (same sequence as writers.upsert.upsert_parquet):
-    # the live path is only ever replaced by a completed rewrite, and the
-    # old data survives as __old until the new data is in place — a crash
-    # mid-swap never loses the partition, unlike delete-then-rename.
-    old_p = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__old")
-    fs.delete(old_p, True)
-    rename_or_raise(fs, hpath, old_p)
-    try:
-        rename_or_raise(fs, staging_p, hpath)
-    except IOError:
-        # restore the original partition before surfacing the failure
-        fs.rename(old_p, hpath)
-        raise
-    # only drop the __old copy once the rewrite is verifiably live
-    if not fs.exists(hpath):
-        raise IOError(f"compacted data missing at {path} after swap; old copy kept")
-    fs.delete(old_p, True)
-    return {"files_before": before, "files_after": int(n_out), "bytes": int(total_bytes)}
 
 
 def write_sorted_layout(

@@ -17,18 +17,24 @@ replaces atomically (``os.replace``). It holds:
   union only committed slices, and a committed id's replay is skipped;
 * ``schemas`` — each component's staged schema, so slice reads skip
   parquet's footer-inference job;
-* at most one ``swap`` {live table: staged table} and the slice ids it
-  ``retire``\ s — the commit of a table rewrite (the fold, an IVF-PQ
-  rebucket). Tables are staged under fresh names before the record; the
-  next ingest, fold or read rolls a recorded swap FORWARD, and a crash
-  before the record leaves the live state untouched.
+* ``arrays`` — the frozen quantizers (IVF centroids, PQ codebooks),
+  each a float32 ``.npy`` file in the region; reads load them with
+  numpy and start no Spark job;
+* at most one ``swap`` {live table: staged table}, the slice ids it
+  retires (``retire``) and the arrays it switches in (``swap_arrays``)
+  — the commit of a rewrite (the fold, a compaction, an IVF-PQ
+  rebucket, a quantizer freeze). Tables and files are staged under
+  fresh names before the record; the next write or read rolls a
+  recorded swap FORWARD, and a crash before the record leaves the live
+  state untouched.
 
 So every state change is idempotent under replay from any crash point
-(tests/test_streaming_recovery.py kills ingests, folds and swaps and
-restarts them). The slice region is the index's write-ahead delta (an
-LSM level-0); the fold rewrites base ∪ deltas to restore the pure
-co-located plan. One atomically replaced log record is how Iceberg and
-Delta commit table changes; on a cluster it maps to a conditional put.
+(tests/test_streaming_recovery.py kills ingests, folds, compactions and
+swaps and restarts them). The slice region is the index's write-ahead
+delta (an LSM level-0); the fold rewrites base ∪ deltas to restore the
+pure co-located plan. One atomically replaced log record is how Iceberg
+and Delta commit table changes; on a cluster it maps to a conditional
+put.
 
 Reference parity note: the reference has no streaming at all
 (SURVEY §2.7); its recovery story is idempotent daily REPROCESSING
@@ -41,10 +47,12 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+import uuid
 from collections.abc import Callable, Iterator
 from contextlib import closing, contextmanager
 from functools import reduce
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -151,28 +159,58 @@ class SliceStore:
         forward, or None."""
         return self._load().get("swap")
 
-    def record_swap(self, swap: dict[str, str], retire: list[int]) -> None:
-        """Commit a table rewrite (:meth:`StandingState._swap`)."""
-        self._update(lambda m: m.update(swap=swap, retire=sorted(retire)))
+    def record_swap(
+        self, swap: dict[str, str], retire: list[int], arrays: dict[str, str]
+    ) -> None:
+        """Commit a rewrite (:meth:`StandingState._swap`)."""
+        self._update(
+            lambda m: m.update(swap=swap, retire=sorted(retire), swap_arrays=arrays)
+        )
 
     def finish_swap(self) -> None:
-        """Clear the swap record and drop its retired ids from
-        ``slices`` in one replace, then delete their directories."""
+        """Clear the swap record, drop its retired ids from ``slices``
+        and switch its arrays in, all in one replace; then delete the
+        retired slice directories and the replaced array files."""
         import shutil
 
         retired: list[int] = []
+        replaced: list[str] = []
 
         def finish(m: dict) -> None:
             retired.extend(m.pop("retire", []))
             m.pop("swap", None)
             m["slices"] = sorted(set(m.get("slices", [])) - set(retired))
+            arrays, new = m.setdefault("arrays", {}), m.pop("swap_arrays", {})
+            replaced.extend(arrays[name] for name in new if name in arrays)
+            arrays.update(new)
 
         self._update(finish)
-        for component in next(os.walk(_local(self.root)))[1]:
+        root = _local(self.root)
+        for component in next(os.walk(root))[1]:
             for i in retired:
                 shutil.rmtree(
                     _local(self.slice_path(component, i)), ignore_errors=True
                 )
+        for file in replaced:
+            os.unlink(os.path.join(root, file))
+
+    # -- frozen arrays ----------------------------------------------------
+
+    def write_array(self, name: str, values) -> str:
+        """Stage ``values`` as a float32 file under a fresh name in the
+        region and return that name; it counts only once a swap record
+        names it."""
+        file = f"{name}_{uuid.uuid4().hex[:8]}.npy"
+        os.makedirs(_local(self.root), exist_ok=True)
+        np.save(os.path.join(_local(self.root), file), np.asarray(values, np.float32))
+        return file
+
+    def read_array(self, name: str) -> np.ndarray:
+        """The recorded array ``name``; KeyError when none is recorded."""
+        file = self._load().get("arrays", {}).get(name)
+        if file is None:
+            raise KeyError(f"slice store {self.root!r} records no {name!r} array")
+        return np.load(os.path.join(_local(self.root), file))
 
     # -- slice data -------------------------------------------------------
 
@@ -263,22 +301,23 @@ def persisted(df: DataFrame) -> Iterator[DataFrame]:
 
 class StandingState:
     """Lifecycle shared by every incremental index: bucketed base
-    tables, a :class:`SliceStore` region of committed deltas, and the
-    region's MANIFEST as the one commit record of both.
+    tables, a :class:`SliceStore` region of committed deltas and frozen
+    arrays, and the region's MANIFEST as the one commit record of all
+    of it.
 
     A subclass declares ``components`` — component name -> (catalog
     table, bucket columns or None for a plain table) — sets ``spark``
     and ``num_buckets`` (a first fold's file buckets), and implements
-    :meth:`_stage`. Tables outside the slice protocol that :meth:`drop`
-    must also remove (frozen quantizers) go in ``extra_tables``. The
-    region lives next to the first component's table.
+    :meth:`_stage`. The region lives next to the first component's
+    table.
 
     Two writes change the state, each committed by one manifest
     replace: :meth:`ingest_slice` adds a slice id, and :meth:`_swap`
-    replaces base tables with staged ones and retires the slice ids
-    they absorbed (the fold :meth:`compact_slices`, and the IVF-PQ
-    rebucket). ``ingest_slice``, ``compact_slices`` and :meth:`_parts`
-    first roll forward a swap a crash left recorded.
+    replaces base tables with staged ones, retires the slice ids they
+    absorbed and switches in staged arrays (the fold
+    :meth:`compact_slices`, :meth:`compact`, :meth:`_freeze` and the
+    IVF-PQ rebucket). Every write and read first rolls forward a swap
+    a crash left recorded.
 
     Reads see base ∪ committed deltas (:meth:`_state`); over a folded
     index that is the plain table read, so its co-located plan is
@@ -288,7 +327,6 @@ class StandingState:
     spark: SparkSession
     num_buckets: int
     components: dict[str, tuple[str, list[str] | None]]
-    extra_tables: tuple[str, ...] = ()
 
     def _stage(
         self, store: SliceStore, data: DataFrame, slice_id: int, **opts
@@ -384,14 +422,21 @@ class StandingState:
         return union_all(*self._with_base(component, self.spark, delta))
 
     def _swap(
-        self, store: SliceStore, swap: dict[str, str], retire: list[int], hook
+        self,
+        store: SliceStore,
+        swap: dict[str, str],
+        retire: list[int],
+        hook=None,
+        arrays: dict[str, str] | None = None,
     ) -> None:
-        """Commit staged tables: record ``swap`` {live: staged} and the
-        slice ids it retires in the manifest (the ``marker`` hook), then
-        roll it forward. Every staged table must be fully written
-        first, under a fresh name (a catalog rename moves the staged
-        directory to the live table's)."""
-        store.record_swap(swap, retire)
+        """Commit staged tables and array files: record ``swap`` {live:
+        staged}, the slice ids it retires and ``arrays`` {name: staged
+        file} in the manifest (the ``marker`` hook), then roll it
+        forward. Everything must be fully written first, under a fresh
+        name (a catalog rename moves the staged directory to the live
+        table's)."""
+        hook = hook or (lambda _label: None)
+        store.record_swap(swap, retire, arrays or {})
         hook("marker")
         self._roll_forward(store, hook)
 
@@ -399,24 +444,36 @@ class StandingState:
         """Finish a recorded swap (idempotent): each staged table still
         present replaces its live table (the ``pre_rename_<live>`` hook
         sits between the drop and the rename); one a crashed attempt
-        already renamed is left alone. The record is cleared last, so
-        re-entering after a crash at any line repeats only the
-        remaining work."""
-        from dagster_etl_spark.sources.lake import delete_path
+        already renamed is left alone. The record is cleared, and its
+        arrays switched in, last, so re-entering after a crash at any
+        line repeats only the remaining work."""
+        from dagster_etl_spark.sources.bucketed import replace_table
 
         swap = store.pending_swap()
         if swap is None:
             return
         hook = hook or (lambda _label: None)
-        warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
         for live, staged in swap.items():
             if self.spark.catalog.tableExists(staged):
-                self.spark.sql(f"DROP TABLE IF EXISTS {live}")
-                hook(f"pre_rename_{live}")
-                # a managed rename refuses an existing target directory
-                delete_path(self.spark, f"{warehouse}/{live.lower()}")
-                self.spark.sql(f"ALTER TABLE {staged} RENAME TO {live}")
+                replace_table(
+                    self.spark, live, staged, lambda: hook(f"pre_rename_{live}")
+                )
         store.finish_swap()
+
+    def _rewrite(
+        self, store: SliceStore, components, write, retire: list[int], fault_hook
+    ) -> None:
+        """Stage each of ``components`` with ``write(component, staged)``
+        under a fresh table name (then the ``staged_<component>`` hook)
+        and commit them all with :meth:`_swap`, retiring ``retire``."""
+        hook = fault_hook or (lambda _label: None)
+        tag = uuid.uuid4().hex[:8]
+        swap = {}
+        for component in components:
+            table = self.components[component][0]
+            write(component, swap.setdefault(table, f"{table}__staged_{tag}"))
+            hook(f"staged_{component}")
+        self._swap(store, swap, retire, hook)
 
     def compact_slices(self, fault_hook=None) -> int:
         """Fold the committed deltas into the base tables, restoring the
@@ -428,8 +485,6 @@ class StandingState:
         ``fault_hook(label)`` is a test-only injection point called
         after each staged component (``staged_<name>``) and by the
         swap."""
-        import uuid
-
         from dagster_etl_spark.sources.bucketed import (
             bucket_spec,
             write_bucketed,
@@ -440,12 +495,10 @@ class StandingState:
         ids = store.committed()
         if not ids:
             return 0
-        hook = fault_hook or (lambda _label: None)
-        tag = uuid.uuid4().hex[:8]
-        swap = {}
-        for component, (table, bucket_cols) in self.components.items():
+
+        def write(component: str, staged: str) -> None:
+            table, bucket_cols = self.components[component]
             rows = self._folded(store, component, ids)
-            staged = swap[table] = f"{table}__staged_{tag}"
             if not bucket_cols:
                 rows.write.saveAsTable(staged)
             elif self.spark.catalog.tableExists(table):
@@ -453,26 +506,50 @@ class StandingState:
                 write_bucketed(rows, staged, cols, n, sort_cols=sort_cols)
             else:
                 write_bucketed(rows, staged, bucket_cols, self.num_buckets)
-            hook(f"staged_{component}")
-        self._swap(store, swap, ids, hook)
+
+        self._rewrite(store, self.components, write, ids, fault_hook)
         return len(ids)
 
-    def compact(self) -> dict[str, tuple[int, int]]:
+    def compact(self, fault_hook=None) -> dict[str, tuple[int, int]]:
         """Collapse the per-append files of the bucketed base tables;
-        bucket specs survive, so probe joins stay co-located. Returns
-        {table: (files_before, files_after)}."""
-        from dagster_etl_spark.sources.bucketed import compact_bucketed
+        bucket specs survive, so probe joins stay co-located. Each
+        table's collapsed copy is staged under a fresh name
+        (:func:`~dagster_etl_spark.sources.bucketed.stage_compacted`)
+        and :meth:`_swap` commits them all, retiring no slice id, so a
+        crash at any line rolls forward like the fold's (same
+        ``fault_hook`` labels). Returns {table: (files_before,
+        files_after)}."""
+        from dagster_etl_spark.sources.bucketed import file_count, stage_compacted
 
-        return {
-            table: compact_bucketed(self.spark, table)
-            for table, bucket_cols in self.components.values()
-            if bucket_cols
-        }
+        store = self._slice_store()
+        self._roll_forward(store)
+        tables = {c: t for c, (t, cols) in self.components.items() if cols}
+        before = {t: file_count(self.spark, t) for t in tables.values()}
+
+        def write(component: str, staged: str) -> None:
+            stage_compacted(self.spark, tables[component], staged)
+
+        self._rewrite(store, tables, write, [], fault_hook)
+        return {t: (n, file_count(self.spark, t)) for t, n in before.items()}
+
+    def _freeze(self, **arrays) -> None:
+        """Commit frozen arrays (a quantizer): each is written under a
+        fresh file name, then one swap record switches them all in."""
+        store = self._slice_store()
+        files = {name: store.write_array(name, v) for name, v in arrays.items()}
+        self._swap(store, {}, [], arrays=files)
+
+    def _frozen(self, name: str) -> np.ndarray:
+        """The recorded array ``name`` after the roll-forward, loaded
+        with numpy: no Spark job. KeyError before :meth:`_freeze`."""
+        store = self._slice_store()
+        self._roll_forward(store)
+        return store.read_array(name)
 
     def drop(self) -> None:
         """Drop every table of the index, the staged tables a crashed
-        swap left behind, and the slice region."""
-        for t in (*self.extra_tables, *(t for t, _ in self.components.values())):
+        swap left behind, and the slice region with its arrays."""
+        for t, _ in self.components.values():
             staged = self.spark.sql(f"SHOW TABLES LIKE '{t}__staged_*'").collect()
             for name in (t, *(r.tableName for r in staged)):
                 self.spark.sql(f"DROP TABLE IF EXISTS {name}")

@@ -24,7 +24,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dagster_etl_spark.sources.lake import check_exists, rename_or_raise
+from dagster_etl_spark.sources.lake import check_exists, swap_in
 
 
 def with_tenant(df: DataFrame, tenant_id: str, column: str = "project_id") -> DataFrame:
@@ -80,34 +80,12 @@ def upsert_parquet(
     merged = upsert_keys_plan(target, source, keys)
     staging = path.rstrip("/") + "__staging"
     merged.write.mode("overwrite").parquet(staging)
-
-    # rename-aside swap: the old data survives (as __old) until the new
-    # data is in place, so a crash mid-swap never loses the target —
-    # delete-then-rename would. (True atomicity needs a table format:
-    # Iceberg/Delta MERGE is the production path, merge_delete_sql.)
-    fs, final_p, jvm = _fs(spark, path)
-    staging_p = jvm.org.apache.hadoop.fs.Path(staging)
-    old_p = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__old")
-    fs.delete(old_p, True)
-    rename_or_raise(fs, final_p, old_p)
-    try:
-        rename_or_raise(fs, staging_p, final_p)
-    except IOError:
-        fs.rename(old_p, final_p)  # restore the target before surfacing
-        raise
-    if not fs.exists(final_p):
-        raise IOError(f"merged data missing at {path} after swap; old copy kept")
-    fs.delete(old_p, True)
+    # Iceberg/Delta MERGE is the atomic production path (merge_delete_sql)
+    swap_in(spark, staging, path)
 
     after = spark.read.parquet(path).count()
     deleted = before + inserted - after
     return {"deleted": int(deleted), "inserted": int(inserted)}
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
 
 
 def append_parquet(source: DataFrame, path: str) -> int:

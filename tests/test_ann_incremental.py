@@ -77,14 +77,17 @@ def test_ingest_order_is_irrelevant(ann_env):
 
 
 def test_vectors_table_bucketed_and_appends_keep_spec(ann_env):
+    import numpy as np
     from pyspark.sql import functions as F
 
+    from dagster_etl_spark.operators.similarity import hash_centroids
     from dagster_etl_spark.sources.bucketed import bucket_spec
     from dagster_etl_spark.sources.fixtures import load_table
 
     spark, idx = ann_env
     emb = load_table(spark, SF_SMALL, "embeddings")
-    idx.init(emb.filter("vec_id % 3 = 0"))
+    init = emb.filter("vec_id % 3 = 0")
+    idx.init(init)
     assert bucket_spec(spark, idx.vectors_table) == (8, ["bucket"], [])
     idx.ingest(emb.filter("vec_id % 3 = 1"))
     idx.ingest(emb.filter("vec_id % 3 = 2"))
@@ -98,8 +101,50 @@ def test_vectors_table_bucketed_and_appends_keep_spec(ann_env):
     )
     assert n_bad == 0
     # centroids were frozen from the init slice only
-    cents = spark.table(idx.centroids_table).count()
-    assert cents == idx.nlist
+    cents = idx._frozen("centroids")
+    assert cents.shape == (idx.nlist, DIM) and cents.dtype == np.float32
+    assert np.array_equal(cents, np.float32(hash_centroids(init, idx.nlist)))
+
+
+def test_quantizer_reads_start_no_spark_job(spark):
+    """The frozen quantizers live in the slice store's MANIFEST as
+    float32 files: a fresh handle's quantizer read and ``nlist`` load
+    them with numpy and start no Spark job, and ``init`` leaves only
+    the component tables in the catalog."""
+    from dagster_etl_spark.operators.similarity import (
+        IncrementalANNIndex,
+        IncrementalIVFPQIndex,
+    )
+    from dagster_etl_spark.sources.fixtures import load_table
+
+    emb = load_table(spark, SF_SMALL, "embeddings").filter("vec_id % 3 = 0")
+    ann = IncrementalANNIndex(spark, "t_nojob_ann", dim=DIM, nlist=8)
+    pq = IncrementalIVFPQIndex(spark, "t_nojob_pq", nlist=8, m=8, ksub=16)
+    sc = spark.sparkContext
+    try:
+        ann.init(emb)
+        pq.init(emb)
+        tables = {r.tableName for r in spark.sql("SHOW TABLES LIKE 't_nojob*'").collect()}
+        assert tables == {ann.vectors_table, pq.codes_table}
+        ann = IncrementalANNIndex(spark, "t_nojob_ann", dim=DIM, nlist=8)
+        pq = IncrementalIVFPQIndex(spark, "t_nojob_pq", nlist=4, m=8, ksub=16)
+        sc.setJobGroup("quantizer_reads", "fresh-handle quantizer reads")
+        try:
+            cents = ann._frozen("centroids")
+            pq_cents = pq._frozen("centroids")
+            books = pq._frozen("codebooks")
+            nlist = pq.nlist
+            jobs = sc.statusTracker().getJobIdsForGroup("quantizer_reads")
+            spark.range(3).count()  # the tracker does see this group's jobs
+            assert sc.statusTracker().getJobIdsForGroup("quantizer_reads")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert jobs == []
+        assert cents.shape == pq_cents.shape == (8, DIM) and nlist == 8
+        assert books.shape == (8, 16, DIM // 8)
+    finally:
+        ann.drop()
+        pq.drop()
 
 
 def test_recall_floor_vs_exact(ann_env):
@@ -332,7 +377,8 @@ def test_ivfpq_rebucket_degenerate_equals_fresh_init(spark):
     b.init(emb)
 
     rows = lambda t: sorted(tuple(r) for r in spark.table(t).collect())  # noqa: E731
-    assert rows(a.centroids_table) == rows(b.centroids_table)
+    for name in ("centroids", "codebooks"):  # bit for bit
+        assert a._frozen(name).tobytes() == b._frozen(name).tobytes(), name
     assert rows(a.codes_table) == rows(b.codes_table)
     assert bucket_spec(spark, a.codes_table) == bucket_spec(spark, b.codes_table)
     got = sorted(tuple(r) for r in a.topk(q, k=10, nprobe=4).collect())
@@ -379,7 +425,7 @@ def test_ivfpq_rebucket_appended_index_invariants(spark):
         .select("vec_id", *code_cols).collect()
     )
     assert after_codes == before_codes  # PQ state untouched
-    assert spark.table(idx.centroids_table).count() == 16
+    assert len(idx._frozen("centroids")) == 16
     # full probe sees every list regardless of geometry -> identical
     after_full = sorted(
         tuple(r) for r in idx.topk(q, k=10, nprobe=16).collect()
@@ -421,6 +467,7 @@ def test_ivfpq_rebucket_crash_windows_roll_forward(spark):
     # name-independent outputs: centroids/codebooks derive from the
     # data alone, so every recovered index must reproduce these rows
     want = sorted(tuple(r) for r in ref.topk(q, k=10, nprobe=16).collect())
+    want_cents = ref._frozen("centroids").tobytes()
     ref.drop()
 
     # crash AFTER the marker: roll forward on next use
@@ -428,7 +475,6 @@ def test_ivfpq_rebucket_crash_windows_roll_forward(spark):
         (
             lambda name: "marker",
             lambda name: f"pre_rename_{name}_ivfpq_codes",
-            lambda name: f"pre_rename_{name}_ivfpq_centroids",
         )
     ):
         name = f"ivfpq_rbc_{i}"
@@ -445,6 +491,9 @@ def test_ivfpq_rebucket_crash_windows_roll_forward(spark):
         # the no-codes-table window is real at pre_rename_codes: prove
         # recovery heals it through the ordinary entry points alone
         fresh = IncrementalIVFPQIndex(spark, name, nlist=8, m=8, ksub=16)
+        if i == 0:
+            # reading the stored geometry alone rolls the swap forward
+            assert fresh.nlist == 16
         if i == 1:
             # the WRITE path must self-heal too (an ingest job can be
             # the first thing to touch the index after a crash); an
@@ -457,6 +506,7 @@ def test_ivfpq_rebucket_crash_windows_roll_forward(spark):
         )
         assert got == want, f"crash at {label} not rolled forward"
         assert fresh.nlist == 16 and fresh.num_buckets == 16
+        assert fresh._frozen("centroids").tobytes() == want_cents
         assert fresh._slice_store().pending_swap() is None  # record consumed
         fresh.drop()
 
@@ -507,7 +557,7 @@ def test_ivfpq_maybe_rebucket_trigger(spark):
     fired = idx.maybe_rebucket(emb, max_per_list=per_list)
     assert fired == target and idx.nlist == target
     assert idx.num_buckets == max(8, target)
-    assert spark.table(idx.centroids_table).count() == target
+    assert len(idx._frozen("centroids")) == target
     # second call at the same size is a no-op (hysteresis: target
     # no longer exceeds the standing nlist)
     assert idx.maybe_rebucket(emb, max_per_list=per_list) is None

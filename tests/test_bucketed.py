@@ -335,6 +335,8 @@ def test_compact_bucketed_collapses_append_files(bucket_env):
             ["l_orderkey"],
         )
         assert exchanges_in_plan(pipe.join()) == 0
+        # the staged copy was renamed into place, not left beside it
+        assert not spark.sql(f"SHOW TABLES LIKE '{pipe.fact_table}_*'").collect()
     finally:
-        for t in (pipe.fact_table, pipe.dim_table, pipe.fact_table + "__compact_tmp"):
+        for t in (pipe.fact_table, pipe.dim_table):
             spark.sql(f"DROP TABLE IF EXISTS {t}")

@@ -192,6 +192,48 @@ def test_failure_hook_records(spark, tenant, tmp_path):
     assert len(fails) == 1 and fails[0]["pipeline"] == "broken"
 
 
+def test_plugin_only_load_target_runs(spark, tmp_path, monkeypatch):
+    """A load target registered only by a tenant plugin (U3) counts as a
+    load stage: ``PipelineRunner.load_config`` — the one predicate both
+    run paths and the Dagster asset graph use — returns it, and
+    ``run_partition`` loads through it."""
+    from dagster_etl_spark.orchestration import PipelineRunner, plugins
+    from dagster_etl_spark.orchestration.config import (
+        LoadConfig,
+        PipelineConfig,
+        TenantConfig,
+    )
+
+    cfg = LoadConfig(table="plugin_orders", mode="overwrite")
+    monkeypatch.setitem(
+        plugins._TENANT_PLUGINS, "t_plugin",
+        plugins.TenantPlugins(load_configs={"orders": cfg}),
+    )
+    tenant = TenantConfig(
+        tenant_id="t_plugin",
+        pipelines=[
+            PipelineConfig(name="orders", source_table="orders",
+                           columns=["o_orderkey", "o_orderpriority"]),
+            PipelineConfig(name="nation", source_table="nation"),
+        ],
+    )
+    orders, nation = tenant.pipelines
+    assert orders.load is None
+    assert PipelineRunner.load_config("t_plugin", orders) is cfg
+    assert PipelineRunner.load_config("t_plugin", nation) is None
+
+    runner = PipelineRunner(
+        spark, tenant, source_dir=SF_SMALL,
+        lake_base=str(tmp_path / "lake"), warehouse_base=str(tmp_path / "wh"),
+    )
+    results = runner.run_partition(None)
+    assert "load" not in results["nation"]
+    loaded = results["orders"]["load"]
+    assert loaded["path"] == str(tmp_path / "wh" / "plugin_orders")
+    assert loaded["inserted"] == results["orders"]["extract"]["row_count"] > 0
+    assert spark.read.parquet(loaded["path"]).count() == loaded["inserted"]
+
+
 def test_dagster_graft_gated_without_dagster():
     from dagster_etl_spark.orchestration.dagster_defs import (
         build_definitions,

@@ -143,10 +143,12 @@ def test_with_tenant_injection(spark):
 
 
 def test_compact_partition(spark, tmp_path):
+    """A fragmented lake partition compacts to one file through
+    ``compact_parquet`` with its rows and ``sum(l_quantity)`` kept."""
     from pyspark.sql import functions as F
 
+    from dagster_etl_spark.plans.layout import compact_parquet, compaction_plan
     from dagster_etl_spark.sources.fixtures import load_table
-    from dagster_etl_spark.sources.lake import compact_partition
     from tests.conftest import SF_SMALL
 
     path = str(tmp_path / "frag")
@@ -154,8 +156,9 @@ def test_compact_partition(spark, tmp_path):
     li.repartition(16).write.parquet(path)  # fragment into 16 small files
 
     before_sum = li.agg(F.sum("l_quantity")).collect()[0][0]
-    stats = compact_partition(spark, path, target_file_bytes=64 * 1024 * 1024)
-    assert stats["files_before"] == 16 and stats["files_after"] == 1
+    stats = compact_parquet(spark, path, target_file_mb=64)
+    assert stats["files"] == 16 and stats["target_files"] == 1 and stats["rewritten"]
+    assert compaction_plan(spark, path)["files"] == 1
 
     after = spark.read.parquet(path)
     assert after.count() == li.count()

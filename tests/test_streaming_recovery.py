@@ -516,6 +516,66 @@ def test_fold_kill_at_every_window_rolls_forward(spark, kind):
         ref.drop()
 
 
+@pytest.mark.parametrize("kind", KINDS)
+def test_compact_kill_at_every_window_rolls_forward(spark, kind):
+    """Compaction is exactly-once like the fold: kill ``compact`` after
+    each bucketed table's staged copy, after the manifest record and
+    between each live table's drop and its rename; a restarted handle's
+    next read (even rounds) or ``ingest_slice`` (odd rounds) rolls the
+    swap forward. Compaction retires no slice id, so every slice since
+    the last fold stays committed; the standing state equals an
+    uninterrupted twin's, and so do each bucketed table's spec and file
+    count once the swap was recorded (a kill before the record leaves
+    the live tables untouched)."""
+    from dagster_etl_spark.sources.bucketed import bucket_spec, file_count
+
+    idx, data, opts = _standing(kind, spark, f"ck_{kind}")
+    ref = _standing(kind, spark, f"ck_{kind}_ref")[0]
+    key = idx.id_col
+    bucketed = [c for c, (_, cols) in idx.components.items() if cols]
+    labels = (
+        [f"staged_{c}" for c in bucketed]
+        + ["marker"]
+        + [f"pre_rename_{idx.components[c][0]}" for c in bucketed]
+    )
+    n = len(labels) + 2
+    part = lambda i: data.filter(f"{key} % {n} = {i}")  # noqa: E731
+    layout = lambda x: {  # noqa: E731
+        c: (bucket_spec(spark, x.components[c][0]), file_count(spark, x.components[c][0]))
+        for c in bucketed
+    }
+    for x in (idx, ref):
+        x.drop()
+        if hasattr(x, "init"):
+            x.init(data.filter(f"{key} % 7 = 0"))
+        for i in (0, 1):  # two folds: the base tables hold per-task files
+            x.ingest_slice(part(i), i, **opts)
+            x.compact_slices()
+    try:
+        for i, label in enumerate(labels, start=2):
+            untouched = layout(idx)
+            ref.compact()
+            with pytest.raises(RuntimeError, match="injected kill"):
+                idx.compact(fault_hook=_kill_at(label))
+            idx = _standing(kind, spark, f"ck_{kind}")[0]  # the restart
+            if i % 2:
+                for x in (idx, ref):
+                    x.ingest_slice(part(i), i, **opts)
+                assert _standing_rows(idx) == _standing_rows(ref), label
+            else:
+                assert _standing_rows(idx) == _standing_rows(ref), label
+                for x in (idx, ref):
+                    x.ingest_slice(part(i), i, **opts)
+            store = idx._slice_store()
+            assert store.pending_swap() is None
+            assert store.committed() == list(range(2, i + 1)), label
+            want = untouched if label.startswith("staged_") else layout(ref)
+            assert layout(idx) == want, label
+    finally:
+        idx.drop()
+        ref.drop()
+
+
 def test_slice_committed_during_fold_survives(spark):
     """The fold retires exactly the slice ids it read: a slice committed
     after its tables are staged but before the swap is recorded stays

@@ -255,9 +255,8 @@ def main() -> int:
     from dagster_etl_spark.session import get_spark
     import __spark_entry__ as entrymod
 
-    # sized from the host unless SPARK_GRAFT_CPUS says otherwise
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
-    spark = get_spark("correctness", master=f"local[{cpus}]", shuffle_partitions=cpus)
+    # sized by session.default_cpus(): SPARK_GRAFT_CPUS, else the host
+    spark = get_spark("correctness")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
