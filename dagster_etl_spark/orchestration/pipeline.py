@@ -4,15 +4,22 @@ stage-handoff contract (each stage writes lake Parquet and passes a
 ``{"path", "row_count", "tenant_id"}`` dict; reference:
 etl/factories/asset_factory.py:105-431).
 
+The lake checkpoint is the data path. Each stage runs its plan once,
+in the checkpoint write, and counts its rows inside that write; the
+handoff then carries ``df``, a read of the checkpoint it just wrote
+(with the written schema, so no footer-inference job), and the next
+stage reads a few thousand checkpointed rows instead of re-running the
+source scan, filter and transform. ``run_partition`` and the Dagster
+asset graph (whose transfer and load assets re-read the lake
+partition) thus feed every stage the same data.
+
 Spark-first differences, by design:
 * the extract partition predicate is composed with ``.filter`` —
   Catalyst pushes it into the scan — instead of string-appending WHERE
   to the source SQL (which breaks on queries that already have WHERE /
   ORDER BY; reference bug at etl/resources/rdb.py:97);
-* within a run, the handoff dict also carries the live DataFrame, so
-  downstream stages reuse the in-memory plan and the lake write is a
-  checkpoint, not the data path (the reference round-trips pandas
-  through S3 between every stage);
+* stages hand off Spark plans over the checkpoint, not pandas frames
+  round-tripped through S3;
 * the load stage is the distributed keyed-upsert writer, not per-row
   DELETE + 1000-row INSERT literals.
 """
@@ -99,11 +106,10 @@ class PipelineRunner:
         lake_date = partition_date if p.date_column is not None else None
         if p.date_column is not None and partition_date is not None:
             df = df.filter(F.to_date(F.col(p.date_column)) == F.lit(partition_date))
-        path = lake.write_partition(
+        path, n = lake.write_partition(
             df, self.lake_base, self.tenant.tenant_id, "extract", p.name, lake_date
         )
-        out = self._handoff(df, path, p, "extract", t0)
-        return out
+        return self._handoff(df, path, n, p, "extract", t0)
 
     def transfer(
         self,
@@ -111,8 +117,9 @@ class PipelineRunner:
         partition_date: str | None,
         upstream: dict[str, dict[str, Any]],
     ) -> dict[str, Any]:
-        """U1 transfer function over named inputs; reads the in-run
-        DataFrames when available, else re-reads the lake checkpoint."""
+        """U1 transfer function over named inputs: the in-run extract
+        handoffs when given (already reads of their checkpoints), else
+        the extract checkpoints read from the lake."""
         t0 = time.time()
         inputs: dict[str, DataFrame] = {}
         for name in p.input_names:
@@ -134,10 +141,10 @@ class PipelineRunner:
         fn = resolve_transfer(self.tenant.tenant_id, p.transfer_fn_name)
         df = fn(inputs, partition_date or "latest", self.tenant.tenant_id)
         lake_date = partition_date if p.date_column is not None else None
-        path = lake.write_partition(
+        path, n = lake.write_partition(
             df, self.lake_base, self.tenant.tenant_id, "transfer", p.name, lake_date
         )
-        return self._handoff(df, path, p, "transfer", t0)
+        return self._handoff(df, path, n, p, "transfer", t0)
 
     def load(
         self, p: PipelineConfig, partition_date: str | None, staged: dict[str, Any]
@@ -155,9 +162,7 @@ class PipelineRunner:
         elif cfg.mode == "append":
             stats = {"deleted": 0, "inserted": append_parquet(df, target)}
         else:
-            n = df.count()
-            df.write.mode("overwrite").parquet(target)
-            stats = {"deleted": -1, "inserted": n}
+            stats = {"deleted": -1, "inserted": lake.write_counted(df, target)}
         rec = {"df": df, "path": target, "row_count": stats["inserted"],
                "tenant_id": self.tenant.tenant_id, **stats}
         self.ctx.record(
@@ -217,11 +222,14 @@ class PipelineRunner:
     # -- internals ------------------------------------------------------------
 
     def _handoff(
-        self, df: DataFrame, path: str, p: PipelineConfig, stage: str, t0: float
+        self, df: DataFrame, path: str, n: int, p: PipelineConfig, stage: str, t0: float
     ) -> dict[str, Any]:
-        n = self.spark.read.parquet(path).count()  # count the checkpoint, not the plan
+        """Record the stage and hand downstream the checkpoint just
+        written at ``path`` (``n`` rows, counted in the write)."""
         self.ctx.record(
             tenant=self.tenant.tenant_id, pipeline=p.name, stage=stage,
             status="success", rows=n, elapsed_sec=round(time.time() - t0, 3),
         )
-        return {"df": df, "path": path, "row_count": n, "tenant_id": self.tenant.tenant_id}
+        checkpoint = self.spark.read.schema(df.schema).parquet(path)
+        return {"df": checkpoint, "path": path, "row_count": n,
+                "tenant_id": self.tenant.tenant_id}

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -70,6 +70,24 @@ def swap_in(spark: SparkSession, staging: str, path: str) -> None:
     fs.delete(old_p, True)
 
 
+def observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with its row count attached as an observed metric: the
+    count is taken by whichever action runs the returned plan, and read
+    afterwards with ``obs.get["rows"]``. An Observation serves one
+    DataFrame, so every call makes a new one."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
+def write_counted(df: DataFrame, path: str, mode: str = "overwrite") -> int:
+    """Write ``df`` as Parquet at ``path`` and return its row count,
+    measured inside the write job — write-then-``count()`` would run the
+    lineage a second time."""
+    out, obs = observe_rows(df)
+    out.write.mode(mode).parquet(path)
+    return int(obs.get["rows"])
+
+
 def write_partition(
     df: DataFrame,
     base: str,
@@ -79,11 +97,12 @@ def write_partition(
     date: str | None,
     mode: str = "overwrite",
     single_file: bool = False,
-) -> str:
+) -> tuple[str, int]:
+    """Write one tenant/stage/job partition; returns its path and the
+    number of rows written."""
     path = partition_path(base, tenant_id, stage, job_name, date)
     out = df.coalesce(1) if single_file else df
-    out.write.mode(mode).parquet(path)
-    return path
+    return path, write_counted(out, path, mode)
 
 
 def read_partition(

@@ -24,7 +24,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dagster_etl_spark.sources.lake import check_exists, swap_in
+from dagster_etl_spark.sources.lake import check_exists, observe_rows, swap_in, write_counted
 
 
 def with_tenant(df: DataFrame, tenant_id: str, column: str = "project_id") -> DataFrame:
@@ -40,21 +40,27 @@ def null_safe_key_condition(left: DataFrame, right: DataFrame, keys: list[str]):
     )
 
 
+def _kept_rows(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:
+    """Target rows whose key is absent from ``source`` (null-safe).
+
+    The anti-join's right side is the distinct key set only — tiny
+    relative to the batch, so Spark broadcasts it and the target scan
+    never shuffles."""
+    src_keys = source.select(*keys).distinct()
+    return target.join(
+        F.broadcast(src_keys), on=null_safe_key_condition(target, src_keys, keys), how="left_anti"
+    )
+
+
 def upsert_keys_plan(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:
     """Pure-plan upsert: target rows whose key is absent from source,
     plus ALL source rows (delete-then-insert semantics, S9).
 
-    The anti-join's right side is the distinct key set only — tiny
-    relative to the batch, so Spark broadcasts it and the target scan
-    never shuffles. At cluster scale with Iceberg this becomes
+    At cluster scale with Iceberg this becomes
     ``MERGE INTO t USING s ON <null-safe keys> WHEN MATCHED THEN DELETE``
     + append, with partition-level file pruning.
     """
-    src_keys = source.select(*keys).distinct()
-    kept = target.join(
-        F.broadcast(src_keys), on=null_safe_key_condition(target, src_keys, keys), how="left_anti"
-    )
-    return kept.unionByName(source.select(*target.columns))
+    return _kept_rows(target, source, keys).unionByName(source.select(*target.columns))
 
 
 def upsert_parquet(
@@ -69,30 +75,34 @@ def upsert_parquet(
     Parquet is not transactional, so the merge materializes to a
     staging dir and swaps via rename — readers never see a partial
     state under the final path.
-    """
-    inserted = source.count()
-    if not check_exists(spark, path):
-        source.write.mode("overwrite").parquet(path)
-        return {"deleted": 0, "inserted": inserted}
 
-    target = spark.read.parquet(path)
-    before = target.count()
-    merged = upsert_keys_plan(target, source, keys)
+    The merge is the only write, and its statistics come out of it:
+    three counts observed inside the write job (target rows, target
+    rows kept by the anti-join, source rows), with
+    ``deleted = target - kept``. No separate count job re-runs the
+    source lineage or re-reads the target. A first write (no target
+    yet) is a plain counted write.
+    """
+    if not check_exists(spark, path):
+        return {"deleted": 0, "inserted": write_counted(source, path)}
+
+    target, n_target = observe_rows(spark.read.parquet(path))
+    kept, n_kept = observe_rows(_kept_rows(target, source, keys))
+    batch, n_batch = observe_rows(source.select(*target.columns))
     staging = path.rstrip("/") + "__staging"
-    merged.write.mode("overwrite").parquet(staging)
+    kept.unionByName(batch).write.mode("overwrite").parquet(staging)
     # Iceberg/Delta MERGE is the atomic production path (merge_delete_sql)
     swap_in(spark, staging, path)
-
-    after = spark.read.parquet(path).count()
-    deleted = before + inserted - after
-    return {"deleted": int(deleted), "inserted": int(inserted)}
+    return {
+        "deleted": int(n_target.get["rows"] - n_kept.get["rows"]),
+        "inserted": int(n_batch.get["rows"]),
+    }
 
 
 def append_parquet(source: DataFrame, path: str) -> int:
-    """S8 batch insert -> distributed append (no literal rendering)."""
-    n = source.count()
-    source.write.mode("append").parquet(path)
-    return n
+    """S8 batch insert -> distributed append (no literal rendering);
+    returns the rows appended, counted inside the write."""
+    return write_counted(source, path, mode="append")
 
 
 def merge_delete_sql(catalog_table: str, keys: list[str]) -> str:

@@ -4,6 +4,7 @@ keyed upsert writer (S9) including the reference's edge semantics."""
 from __future__ import annotations
 
 import datetime as dt
+import threading
 
 import pytest
 from pyspark.sql import Row
@@ -134,6 +135,57 @@ def test_upsert_duplicate_source_keys_insert_duplicates(spark, target_path):
     assert stats == {"deleted": 1, "inserted": 2}
     vals = sorted(r.val for r in spark.read.parquet(target_path).collect())
     assert vals == ["x", "y"]
+
+
+# case -> (target rows before the upsert, None when there is no target; source rows)
+UPSERT_CASES = {
+    "first_write": (None, [("a", 1, "v1"), ("b", 2, "v2")]),
+    "idempotent_rerun": ([("a", 1, "v1"), ("b", 2, "v2")], [("a", 1, "v1"), ("b", 2, "v2")]),
+    "null_keys": ([(None, 1, "old"), ("b", 2, "keep")], [(None, 1, "new")]),
+    "duplicate_source_keys": ([("a", 1, "old")], [("a", 1, "x"), ("a", 1, "y")]),
+    "empty_source": ([("a", 1, "v1")], []),
+    "empty_target": ([], [("a", 1, "v1")]),
+}
+
+
+def _within(seconds: float, fn):
+    """``fn()`` on a daemon thread, failing instead of hanging when it
+    blocks — an Observation whose plan never ran blocks in ``get``."""
+    out: dict = {}
+
+    def run():
+        try:
+            out["value"] = fn()
+        except BaseException as exc:  # re-raised on the test thread
+            out["error"] = exc
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"still running after {seconds}s"
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
+
+
+@pytest.mark.parametrize("case", list(UPSERT_CASES))
+def test_upsert_statistics_match_outside_counts(spark, target_path, case):
+    """The statistics observed inside the merge write equal counts taken
+    outside it: ``inserted`` is the source's rows and ``deleted`` is
+    ``before + inserted - after``."""
+    target_rows, source_rows = UPSERT_CASES[case]
+    if target_rows is not None:
+        spark.createDataFrame(_rows(*target_rows), UPSERT_SCHEMA).write.parquet(target_path)
+    before = 0 if target_rows is None else spark.read.parquet(target_path).count()
+    source = spark.createDataFrame(_rows(*source_rows), UPSERT_SCHEMA)
+    n_source = source.count()
+
+    stats = _within(120, lambda: upsert_parquet(spark, source, target_path, ["k1", "k2"]))
+
+    after = spark.read.parquet(target_path).count()
+    assert stats == {"deleted": before + n_source - after, "inserted": n_source}
+    if not source_rows:
+        assert stats == {"deleted": 0, "inserted": 0}
 
 
 def test_with_tenant_injection(spark):
