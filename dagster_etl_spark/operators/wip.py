@@ -7,15 +7,16 @@ count / mean qty, optionally graft a HIGH-priority conditional count.
 
 Spark-first notes
 -----------------
-* One shuffle total: the conditional count is folded into the same
-  ``groupBy`` as a ``sum(when(...))`` instead of the reference's
-  aggregate-then-left-join (the join variant is kept for J1 parity and
-  as a broadcast-join test bed).
+* One shuffle total: ``wip_aggregate`` has one exact plan (repartition
+  by the group keys, then both aggregation phases exchange-free) and
+  one approximate plan (``approx_distinct``); the conditional count is
+  folded into the same ``groupBy`` as a ``sum(when(...))`` instead of
+  the reference's aggregate-then-left-join (the join variant is kept
+  for J1 parity and as a broadcast-join test bed).
 * pandas ``groupby`` drops null group keys; Spark keeps them. We filter
   null keys to mirror the reference (SURVEY §7.2).
 * All aggregates stay in built-in Catalyst expressions: partial (map-side)
-  aggregation + whole-stage codegen for free; ``countDistinct`` expands
-  to the standard two-phase distinct aggregate. At 100 TB swap in
+  aggregation + whole-stage codegen for free. At 100 TB swap in
   ``approx_count_distinct`` via the ``approx_distinct`` knob.
 """
 
@@ -34,11 +35,6 @@ from dagster_etl_spark.functions import (
     sql_in_list,
 )
 
-# rows sampled by the single_shuffle auto-probe; enough that any key
-# wide enough to feed a cluster shows ≥ cores distinct values in it
-_AUTO_PROBE_ROWS = 10_000
-
-
 def wip_aggregate(
     df: DataFrame,
     group_cols: Sequence[str] = ("process_step", "product_code"),
@@ -48,44 +44,34 @@ def wip_aggregate(
     active_statuses: Sequence[str] = ("IN_PROGRESS", "COMPLETED"),
     snapshot_date: str | None = None,
     approx_distinct: bool = False,
-    extra_aggs: Sequence[Column] = (),
     extra_sums: Sequence[tuple[Column, str]] = (),
-    single_shuffle: bool | None = None,
 ) -> DataFrame:
     """A1/A2: status filter -> group -> {sum, distinct count, mean}.
 
-    Exact-distinct path is a MANUAL two-phase aggregate: pre-aggregate
-    on (group_cols, lot_col), then ``count(lot_col)`` over the
-    distinct-lot rows — measured ~25% faster than Catalyst's planned
-    distinct aggregate (which stacks an extra merge layer) at sf0.1.
+    Two plans. The exact one is a MANUAL two-phase aggregate over ONE
+    shuffle: the input is repartitioned by ``group_cols`` first, which
+    co-locates every (group, lot) tuple, so the pre-aggregate on
+    (group_cols, lot_col) and the final ``count(lot_col)`` per group
+    both run exchange-free on top of it — one Exchange total (pinned in
+    the plan tests). Against Catalyst's planned distinct aggregate it
+    measured ~25% faster at sf0.1, and the one-exchange shape won at
+    every probed scale (BASELINE.md, r8 re-audit). With
+    ``approx_distinct`` the lot count is ``approx_count_distinct`` in a
+    single planned aggregate whose exchange carries per-group sketches.
 
-    With ``single_shuffle`` the input is repartitioned by
-    ``group_cols`` FIRST: hash(group) co-locates every (group, lot)
-    tuple, so BOTH aggregation phases run exchange-free on top of that
-    one shuffle — one Exchange total vs two (asserted in plan tests;
-    another ~30% at sf0.1, above-floor compute ~3x down). The trade is
-    parallelism bounded by group-key cardinality: right when groups ≥
-    cluster cores (the WIP shape — step x product grows with the
-    fleet), wrong for handful-of-groups rollups, where the fine-key
-    shuffle's balance is worth the second Exchange.
+    Limitation: the exact plan's parallelism after the shuffle is the
+    number of groups. A rollup with only a few groups over a large
+    input runs its pre-aggregation on that many tasks; use
+    ``approx_distinct=True`` there.
 
-    The default ``None`` resolves the regime at build time with a
-    bounded probe: distinct group keys within the first
-    ``_AUTO_PROBE_ROWS`` rows (a LIMIT-pushed mini-job, milliseconds at
-    any input size). The sample distinct count is a LOWER bound on the
-    true cardinality, so the only possible mis-pick is the safe one
-    (two balanced exchanges for a genuinely wide key). Callers that
-    know their shape pass True/False and skip the probe.
-
-    Semantics are identical incl. nulls: ``count(lot_col)`` skips the
-    null-lot row exactly like ``countDistinct``, while its measure
-    partials still land in the sums.
+    Semantics incl. nulls match ``countDistinct``: ``count(lot_col)``
+    skips the null-lot row, while its measure partials still land in
+    the sums.
 
     ``extra_sums`` are (per-row expression, alias) pairs aggregated as
     sums — decomposable across both phases; each expression may be a
     Column or a SQL string (the string form builds in one py4j round
-    trip). Arbitrary ``extra_aggs`` Columns (or ``approx_distinct``)
-    fall back to the single-pass planned aggregate.
+    trip).
     """
     # ONE parsed predicate string for the whole filter block (not one
     # Column op per term): same analyzed tree, a fraction of the py4j
@@ -100,63 +86,39 @@ def wip_aggregate(
     if preds:
         df = df.filter(" AND ".join(preds))
 
-    if approx_distinct or extra_aggs:
-        lot_count = (
-            F.approx_count_distinct(lot_col)
-            if approx_distinct
-            else F.countDistinct(lot_col)
-        ).alias("lot_count")
+    if approx_distinct:
         out = df.groupBy(*group_cols).agg(
             money_sum(f"`{qty_col}`", "wip_qty"),
-            lot_count,
+            F.approx_count_distinct(lot_col).alias("lot_count"),
             exact_avg(f"`{qty_col}`", "avg_qty_per_lot"),
-            *extra_aggs,
             *[
                 (F.expr(f"SUM({e})") if isinstance(e, str) else F.sum(e)).alias(name)
                 for e, name in extra_sums
             ],
         )
     else:
-        if single_shuffle is None:
-            sampled = (
-                df.select(*group_cols).limit(_AUTO_PROBE_ROWS).distinct().count()
-            )
-            single_shuffle = (
-                sampled >= df.sparkSession.sparkContext.defaultParallelism
-            )
-        if single_shuffle:
-            # evaluate per-row expressions BEFORE the shuffle and prune
-            # to exactly the shuffled columns: the repartition then
-            # ships (keys, lot, int, flags) instead of raw rows — at
-            # cluster scale the difference between shuffling a CASE'd
-            # string column and shuffling its 0/1 outcome
-            df = df.select(
-                *group_cols,
-                lot_col,
-                F.expr(scaled_long_sql(f"`{qty_col}`")).alias("__q100r"),
-                *[
-                    (F.expr(e) if isinstance(e, str) else e).alias(f"__e{i}")
-                    for i, (e, _) in enumerate(extra_sums)
-                ],
-            ).repartition(*group_cols)
-            qty_scaled = "`__q100r`"
-            extra_exprs = [f"`__e{i}`" for i in range(len(extra_sums))]
-        else:
-            qty_scaled = scaled_long_sql(f"`{qty_col}`")
-            extra_exprs = [
-                e if isinstance(e, str) else e
-                for e, _ in extra_sums
-            ]
+        # evaluate per-row expressions BEFORE the shuffle and prune to
+        # exactly the shuffled columns: the repartition then ships
+        # (keys, lot, int, flags) instead of raw rows — at cluster
+        # scale the difference between shuffling a CASE'd string
+        # column and shuffling its 0/1 outcome
+        df = df.select(
+            *group_cols,
+            lot_col,
+            F.expr(scaled_long_sql(f"`{qty_col}`")).alias("__q100r"),
+            *[
+                (F.expr(e) if isinstance(e, str) else e).alias(f"__e{i}")
+                for i, (e, _) in enumerate(extra_sums)
+            ],
+        ).repartition(*group_cols)
         pre = df.groupBy(*group_cols, lot_col).agg(
-            F.expr(f"SUM({qty_scaled})").alias("__q100"),
+            F.expr("SUM(`__q100r`)").alias("__q100"),
             # scaled_long is null exactly when qty is null, so counting
             # the scaled column preserves count(qty_col) semantics
-            F.expr(f"COUNT({qty_scaled})").alias("__qcnt"),
+            F.expr("COUNT(`__q100r`)").alias("__qcnt"),
             *[
-                (F.expr(f"SUM({e})") if isinstance(e, str) else F.sum(e)).alias(
-                    f"__x{i}"
-                )
-                for i, e in enumerate(extra_exprs)
+                F.expr(f"SUM(`__e{i}`)").alias(f"__x{i}")
+                for i in range(len(extra_sums))
             ],
         )
         # same IEEE sequence as money_sum/exact_avg: exact integer total,
@@ -202,88 +164,6 @@ def priority_wip_aggregate(
     )
 
 
-def priority_wip_preagg(
-    df: DataFrame,
-    priority_dim: DataFrame,
-    dim_key: str,
-    priority_col: str = "priority",
-    high_value: str = "HIGH",
-    group_cols: Sequence[str] = ("process_step", "product_code"),
-    qty_col: str = "quantity",
-    lot_col: str = "lot_id",
-    status_col: str | None = "status",
-    active_statuses: Sequence[str] = ("IN_PROGRESS", "COMPLETED"),
-) -> DataFrame:
-    """A7, aggregate-before-join: the fastest plan for the priority
-    graft when the priority attribute lives on a lot-level dimension
-    (reference shape: project_01/assets/transfer.py:14-91, priority is
-    an attribute of the lot/order).
-
-    Two plan moves over the join-then-aggregate form, measured −30%
-    wall clock at sf0.1 (1.23s -> 0.84s best-of-4):
-
-    * the fact side is pre-aggregated to (group, lot) grain FIRST —
-      same single shuffle as ``wip_aggregate(single_shuffle=True)`` —
-      so the join probes pre-aggregated tuples of narrow ints instead
-      of raw rows, and the priority string never enters the fact
-      pipeline;
-    * the dimension's priority column is reduced to a 0/1 byte BEFORE
-      the join: the join build side and output both carry one tinyint
-      instead of a categorical string, and the per-group count folds
-      in as ``sum(row_count * flag)``.
-
-    Inner-join semantics on ``dim_key`` (lots without a dimension row
-    drop), identical to the join-then-aggregate form. The join is NOT
-    hinted: the lot-keyed dim grows with the fact, so Catalyst's
-    threshold decides broadcast vs shuffle (r8 scale trend — a forced
-    broadcast cost seconds at 50x). While it broadcasts, the plan is
-    one Exchange plus one BroadcastExchange, and the final aggregate
-    reuses the pre-shuffle partitioning, so it is exchange-free.
-    """
-    from dagster_etl_spark.functions import sql_str_literal
-
-    preds = []
-    if status_col is not None:
-        preds.append(sql_in_list(f"`{status_col}`", active_statuses))
-    preds.extend(f"`{k}` IS NOT NULL" for k in group_cols)
-    if preds:
-        df = df.filter(" AND ".join(preds))
-    pre = (
-        df.select(
-            *group_cols,
-            lot_col,
-            F.expr(scaled_long_sql(f"`{qty_col}`")).alias("__q100r"),
-        )
-        .repartition(*group_cols)
-        .groupBy(*group_cols, lot_col)
-        .agg(
-            F.expr("SUM(`__q100r`)").alias("__q100"),
-            F.expr("COUNT(`__q100r`)").alias("__qcnt"),
-            F.expr("COUNT(1)").alias("__n"),
-        )
-    )
-    dim = priority_dim.select(
-        dim_key,
-        F.expr(
-            f"CAST({flag_sql(f'`{priority_col}` = {sql_str_literal(high_value)}')}"
-            " AS TINYINT)"
-        ).alias("__urgent"),
-    )
-    # no broadcast hint: the priority dim is lot-keyed, so it GROWS
-    # with the fact — forcing a broadcast turned into a scale bug at
-    # 50x sf0.1 (7.5M-row broadcast build; r8 scale trend). Catalyst
-    # auto-broadcasts while the reduced (key, tinyint) dim fits the
-    # threshold and shifts to a shuffle join beyond it.
-    joined = pre.join(dim, pre[lot_col] == dim[dim_key])
-    total_sql = "CAST(SUM(`__q100`) AS DOUBLE) / 100.0D"
-    return joined.groupBy(*group_cols).agg(
-        F.expr(total_sql).alias("wip_qty"),
-        F.expr(f"COUNT(`{lot_col}`)").alias("lot_count"),
-        F.expr(f"({total_sql}) / SUM(`__qcnt`)").alias("avg_qty_per_lot"),
-        F.expr("CAST(SUM(`__n` * `__urgent`) AS BIGINT)").alias("high_priority_count"),
-    )
-
-
 def priority_wip_split(
     df: DataFrame,
     priority_dim: DataFrame,
@@ -305,8 +185,9 @@ def priority_wip_split(
     etl/tenants/project_01/assets/transfer.py:55-64), so a lot without
     an order row is a pipeline bug, not a case to aggregate around;
     the fixtures satisfy it at every SF (0 orphan lots). Without RI the
-    inner-join forms (``priority_wip_preagg`` / ``priority_wip_join``)
-    are the correct choice: they drop orphan lots, this one keeps them.
+    inner-join forms (``priority_wip_aggregate`` over the fact joined to
+    the dim, or ``priority_wip_join`` over that join) are the correct
+    choice: they drop orphan lots, this one keeps them.
 
     Why splitting wins (probe_priority_plan_r9.json, x50 = 30 M fact rows /
     7.5 M dim rows, interleaved DuckDB pairs): the join-then-aggregate
@@ -326,7 +207,9 @@ def priority_wip_split(
       ``group_cols``, so the final left join plans exchange-free.
 
     Measured x50 (probe_priority_plan_r9.json, 64MB-threshold probe):
-    approx form 2.9 s vs 7.2 s current; exact form 4.7 s vs 8.4 s. On
+    approx form 2.9 s vs 7.2 s join-then-aggregate; exact form 4.7 s
+    vs 8.36 s aggregate-before-join (the fact pre-aggregated to (group,
+    lot) grain, then joined to the dim), a shape deleted since. On
     the SHIPPED config (Spark-default 10MB broadcast threshold — the
     urgent slice SMJs once it outgrows 10MB, see the r9 addendum in
     BASELINE.md) the final trend is 4.3x -> 2.07x -> 1.42x
@@ -350,7 +233,6 @@ def priority_wip_split(
         lot_col=lot_col,
         status_col=None,
         approx_distinct=approx_distinct,
-        single_shuffle=None if approx_distinct else True,
     )
     from dagster_etl_spark.functions import sql_str_literal
 
@@ -377,7 +259,6 @@ def priority_wip_join(
     group_cols: Sequence[str] = ("process_step", "product_code"),
     priority_col: str = "priority",
     high_value: str = "HIGH",
-    broadcast_priority: bool = True,
     **kwargs,
 ) -> DataFrame:
     """A7/J1 join variant — faithful to the reference's two-step shape:
@@ -385,8 +266,10 @@ def priority_wip_join(
     aggregate, fill missing counts with 0 (P10).
 
     The priority side aggregates a filtered subset (small), so it is
-    broadcast by default — at cluster scale this keeps the graft from
-    shuffling the large aggregate a second time.
+    always broadcast — at cluster scale this keeps the graft from
+    shuffling the large aggregate a second time. Building it launches
+    no Spark job: the WIP aggregate has one exact plan, chosen without
+    looking at the data.
     """
     # status-filter once, up front: both the WIP aggregate and the priority
     # count read the filtered frame (reference computes the count from
@@ -401,9 +284,7 @@ def priority_wip_join(
         .groupBy(*group_cols)
         .agg(F.count(F.lit(1)).alias("high_priority_count"))
     )
-    if broadcast_priority:
-        pri = F.broadcast(pri)
-    joined = base.join(pri, on=list(group_cols), how="left")
+    joined = base.join(F.broadcast(pri), on=list(group_cols), how="left")
     return joined.withColumn(
         "high_priority_count", F.coalesce(F.col("high_priority_count"), F.lit(0)).cast("long")
     )

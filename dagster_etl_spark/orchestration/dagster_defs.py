@@ -209,16 +209,7 @@ def build_definitions(
 
                 def _load(context, tenant=tenant, p=p):
                     date = context.partition_key if p.date_column else None
-                    r = runner_for(tenant)
-                    staged_path_stage = "transfer" if p.has_transfer else "extract"
-                    from dagster_etl_spark.sources import lake
-
-                    df = lake.read_partition(
-                        r.spark, lake_base, tenant.tenant_id,
-                        staged_path_stage, p.name,
-                        date if p.date_column else None,
-                    )
-                    out = r.load(p, date, {"df": df})
+                    out = runner_for(tenant).load(p, date)
                     return dg.MaterializeResult(
                         metadata={"inserted": out["inserted"], "deleted": out["deleted"]}
                     )

@@ -26,6 +26,7 @@ Spark-first differences, by design:
 
 from __future__ import annotations
 
+import functools
 import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -62,6 +63,31 @@ class RunContext:
             h(kw)
 
 
+def _recorded(stage_fn: Callable[..., dict[str, Any]]) -> Callable[..., dict[str, Any]]:
+    """The runner's one stage recorder: a stage method's call becomes a
+    ``RunContext`` record named after the method — ``success`` with the
+    handoff's rows, or ``failure`` with the error (failure hook parity,
+    reference: etl_hooks.py:19-82) before the exception propagates. Both
+    run paths and the Dagster assets call the stages through it."""
+
+    @functools.wraps(stage_fn)
+    def run(self: PipelineRunner, p: PipelineConfig, *args: Any, **kw: Any) -> dict[str, Any]:
+        t0 = time.time()
+        rec = {"tenant": self.tenant.tenant_id, "pipeline": p.name,
+               "stage": stage_fn.__name__}
+        try:
+            out = stage_fn(self, p, *args, **kw)
+        except Exception as exc:
+            self.ctx.record(**rec, status="failure", error=str(exc)[:500],
+                            elapsed_sec=round(time.time() - t0, 3))
+            raise
+        self.ctx.record(**rec, status="success", rows=out["row_count"],
+                        elapsed_sec=round(time.time() - t0, 3))
+        return out
+
+    return run
+
+
 class PipelineRunner:
     """Runs a tenant's configured pipelines for one partition date."""
 
@@ -90,12 +116,12 @@ class PipelineRunner:
 
     # -- stages ---------------------------------------------------------------
 
+    @_recorded
     def extract(self, p: PipelineConfig, partition_date: str | None) -> dict[str, Any]:
         """Source scan (S1/S2): fixture Parquet (or JDBC behind the same
         interface), custom-query override (U2) > config.query > full
         scan, explicit column list (P1), composed partition predicate
         (P5), lake checkpoint write (S4)."""
-        t0 = time.time()
         sql = resolve_extract_query(self.tenant.tenant_id, p.name) or p.query
         df = load_table(self.spark, self.source_dir, p.source_table)
         if sql is not None:
@@ -109,8 +135,9 @@ class PipelineRunner:
         path, n = lake.write_partition(
             df, self.lake_base, self.tenant.tenant_id, "extract", p.name, lake_date
         )
-        return self._handoff(df, path, n, p, "extract", t0)
+        return self._handoff(df, path, n)
 
+    @_recorded
     def transfer(
         self,
         p: PipelineConfig,
@@ -120,7 +147,6 @@ class PipelineRunner:
         """U1 transfer function over named inputs: the in-run extract
         handoffs when given (already reads of their checkpoints), else
         the extract checkpoints read from the lake."""
-        t0 = time.time()
         inputs: dict[str, DataFrame] = {}
         for name in p.input_names:
             if name in upstream:
@@ -144,18 +170,29 @@ class PipelineRunner:
         path, n = lake.write_partition(
             df, self.lake_base, self.tenant.tenant_id, "transfer", p.name, lake_date
         )
-        return self._handoff(df, path, n, p, "transfer", t0)
+        return self._handoff(df, path, n)
 
+    @_recorded
     def load(
-        self, p: PipelineConfig, partition_date: str | None, staged: dict[str, Any]
+        self,
+        p: PipelineConfig,
+        partition_date: str | None,
+        staged: dict[str, Any] | None = None,
     ) -> dict[str, Any]:
         """S8-S12: tenant-column injection + keyed upsert (or append /
-        overwrite) into the warehouse path."""
-        t0 = time.time()
+        overwrite) into the warehouse path. ``staged`` is the upstream
+        stage's handoff; without it, load reads the checkpoint that feeds
+        it (transfer's when the pipeline has one, else extract's) from
+        the lake, as transfer does for inputs not handed in."""
         cfg = self.load_config(self.tenant.tenant_id, p)
         if cfg is None:  # explicit raise, not assert: survives python -O
             raise ValueError(f"load stage without load config: {p.name}")
-        df = with_tenant(staged["df"], self.tenant.tenant_id)
+        src = staged["df"] if staged is not None else lake.read_partition(
+            self.spark, self.lake_base, self.tenant.tenant_id,
+            "transfer" if p.has_transfer else "extract", p.name,
+            partition_date if p.date_column is not None else None,
+        )
+        df = with_tenant(src, self.tenant.tenant_id)
         target = f"{self.warehouse_base.rstrip('/')}/{cfg.table}"
         if cfg.mode == "upsert":
             stats = upsert_parquet(self.spark, df, target, cfg.key_columns)
@@ -163,13 +200,8 @@ class PipelineRunner:
             stats = {"deleted": 0, "inserted": append_parquet(df, target)}
         else:
             stats = {"deleted": -1, "inserted": lake.write_counted(df, target)}
-        rec = {"df": df, "path": target, "row_count": stats["inserted"],
-               "tenant_id": self.tenant.tenant_id, **stats}
-        self.ctx.record(
-            tenant=self.tenant.tenant_id, pipeline=p.name, stage="load",
-            status="success", rows=stats["inserted"], elapsed_sec=round(time.time() - t0, 3),
-        )
-        return rec
+        return {"df": df, "path": target, "row_count": stats["inserted"],
+                "tenant_id": self.tenant.tenant_id, **stats}
 
     # -- orchestration --------------------------------------------------------
 
@@ -182,54 +214,40 @@ class PipelineRunner:
         """extract → [transfer] → [load] for one pipeline; returns the
         stage handoffs keyed by stage."""
         p = self.tenant.pipeline(name)
-        upstream = dict(upstream or {})
-        out: dict[str, dict[str, Any]] = {}
-        try:
-            out["extract"] = self.extract(p, partition_date)
-            upstream[p.name] = out["extract"]
-            staged = out["extract"]
-            if p.has_transfer:
-                out["transfer"] = self.transfer(p, partition_date, upstream)
-                staged = out["transfer"]
-            if self.load_config(self.tenant.tenant_id, p) is not None:
-                out["load"] = self.load(p, partition_date, staged)
-        except Exception as exc:  # failure hook parity (etl_hooks.py:19-82)
-            self.ctx.record(
-                tenant=self.tenant.tenant_id, pipeline=name, stage="run",
-                status="failure", error=str(exc)[:500],
-            )
-            raise
-        return out
+        extracts = {**(upstream or {}), p.name: self.extract(p, partition_date)}
+        return self._after_extract(p, partition_date, extracts)
 
     def run_partition(self, partition_date: str | None) -> dict[str, dict[str, Any]]:
         """All configured pipelines, extracts first (shared inputs),
         then transfers/loads — the per-partition daily job."""
-        handoffs: dict[str, dict[str, Any]] = {}
-        results: dict[str, dict[str, Any]] = {}
-        for p in self.tenant.pipelines:
-            handoffs[p.name] = self.extract(p, partition_date)
-        for p in self.tenant.pipelines:
-            staged = handoffs[p.name]
-            stages = {"extract": staged}
-            if p.has_transfer:
-                stages["transfer"] = self.transfer(p, partition_date, handoffs)
-                staged = stages["transfer"]
-            if self.load_config(self.tenant.tenant_id, p) is not None:
-                stages["load"] = self.load(p, partition_date, staged)
-            results[p.name] = stages
-        return results
+        extracts = {p.name: self.extract(p, partition_date) for p in self.tenant.pipelines}
+        return {
+            p.name: self._after_extract(p, partition_date, extracts)
+            for p in self.tenant.pipelines
+        }
 
     # -- internals ------------------------------------------------------------
 
-    def _handoff(
-        self, df: DataFrame, path: str, n: int, p: PipelineConfig, stage: str, t0: float
-    ) -> dict[str, Any]:
-        """Record the stage and hand downstream the checkpoint just
-        written at ``path`` (``n`` rows, counted in the write)."""
-        self.ctx.record(
-            tenant=self.tenant.tenant_id, pipeline=p.name, stage=stage,
-            status="success", rows=n, elapsed_sec=round(time.time() - t0, 3),
-        )
+    def _after_extract(
+        self,
+        p: PipelineConfig,
+        partition_date: str | None,
+        extracts: dict[str, dict[str, Any]],
+    ) -> dict[str, dict[str, Any]]:
+        """[transfer] → [load] for ``p`` over the extract handoffs
+        (``p``'s own among them); returns the stage handoffs keyed by
+        stage."""
+        stages = {"extract": extracts[p.name]}
+        staged = stages["extract"]
+        if p.has_transfer:
+            staged = stages["transfer"] = self.transfer(p, partition_date, extracts)
+        if self.load_config(self.tenant.tenant_id, p) is not None:
+            stages["load"] = self.load(p, partition_date, staged)
+        return stages
+
+    def _handoff(self, df: DataFrame, path: str, n: int) -> dict[str, Any]:
+        """Hand downstream the checkpoint just written at ``path`` (``n``
+        rows, counted in the write)."""
         checkpoint = self.spark.read.schema(df.schema).parquet(path)
         return {"df": checkpoint, "path": path, "row_count": n,
                 "tenant_id": self.tenant.tenant_id}

@@ -16,7 +16,6 @@ from dagster_etl_spark.operators.equipment import equipment_utilization
 from dagster_etl_spark.operators.item_master import enrich_item_master, stage_item_master
 from dagster_etl_spark.operators.wip import (
     priority_wip_join,
-    priority_wip_preagg,
     priority_wip_split,
     wip_aggregate,
 )
@@ -55,8 +54,6 @@ def q_wip_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
         lot_col="l_orderkey",
         status_col="l_returnflag",
         active_statuses=("N", "A"),
-        # known-wide key (status x supplier): skip the regime probe
-        single_shuffle=True,
     )
 
 

@@ -8,8 +8,7 @@ Differences by design: the reference writes a single ``data.parquet``
 file per partition (single-process pandas); we keep the directory
 layout but let Spark write one file per task — at 100 TB a single file
 per partition is the bottleneck, and every reader here consumes paths,
-not file names. ``coalesce(1)`` is available via ``single_file=True``
-for byte-layout parity at tiny scale only.
+not file names.
 
 Works against any Hadoop-supported filesystem (local, s3a, hdfs) —
 the driver environment uses local paths.
@@ -95,14 +94,11 @@ def write_partition(
     stage: str,
     job_name: str,
     date: str | None,
-    mode: str = "overwrite",
-    single_file: bool = False,
 ) -> tuple[str, int]:
-    """Write one tenant/stage/job partition; returns its path and the
-    number of rows written."""
+    """Overwrite one tenant/stage/job partition; returns its path and
+    the number of rows written."""
     path = partition_path(base, tenant_id, stage, job_name, date)
-    out = df.coalesce(1) if single_file else df
-    return path, write_counted(out, path, mode)
+    return path, write_counted(df, path)
 
 
 def read_partition(

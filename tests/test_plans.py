@@ -555,13 +555,12 @@ EXCHANGE_BUDGET = {
 }
 
 # Queries whose BUILD legitimately launches bounded Spark jobs, with the
-# measured job count: priority_wip_join's wip auto-probe (LIMIT-pushed
-# distinct over 10k rows), curation_pipeline's localCheckpoint of the
-# dedup edge set, validation_report's one-row rule aggregate. Everything
-# else must launch ZERO jobs at build time — an eager count()/collect()
-# on a build path is exactly the shape of the r8 scale bugs.
+# measured job count: curation_pipeline's localCheckpoint of the dedup
+# edge set, validation_report's one-row rule aggregate. Everything else,
+# the WIP family included (its exact plan is fixed, not probed), must
+# launch ZERO jobs at build time — an eager count()/collect() on a build
+# path is exactly the shape of the r8 scale bugs.
 BUILD_JOB_BUDGET = {
-    "priority_wip_join": 3,
     "curation_pipeline": 2,
     "validation_report": 3,
     # bounded build-time actions, documented per operator: the

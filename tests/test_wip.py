@@ -126,129 +126,72 @@ def test_twostage_money_sums_equals_single_stage(spark):
     assert one == two  # exact float equality included
 
 
-def test_wip_single_shuffle_plan_and_equivalence(spark):
-    """The default exact-distinct path must plan exactly ONE shuffle
-    Exchange (repartition by group keys feeds both aggregation phases
-    exchange-free), and single_shuffle=False must give identical
-    results through the two-Exchange fine-key plan."""
-    from dagster_etl_spark.sources.fixtures import load_table
-
-    li = load_table(spark, "/root/testdata/sf0.001", "lineitem")
-    kw = dict(
-        group_cols=("l_linestatus", "l_suppkey"), qty_col="l_quantity",
-        lot_col="l_orderkey", status_col="l_returnflag",
-        active_statuses=("N", "A"),
-    )
-    one = wip_aggregate(li, **kw)
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    two = wip_aggregate(li, single_shuffle=False, **kw)
-    assert plan.count("BatchEvalPython") == 0
-    key = lambda r: (r.l_linestatus, r.l_suppkey)
-    a = {key(r): (r.wip_qty, r.lot_count, r.avg_qty_per_lot) for r in one.collect()}
-    b = {key(r): (r.wip_qty, r.lot_count, r.avg_qty_per_lot) for r in two.collect()}
-    assert a == b
-
-
-def test_wip_single_shuffle_auto_regime(spark):
-    """single_shuffle=None probes the group-key width and picks the
-    right shape: a handful-of-groups rollup must NOT serialize onto
-    group-cardinality tasks (two balanced Exchanges), a wide key must
-    keep the one-Exchange plan."""
+def test_wip_exact_plan_one_exchange_and_equivalence(spark):
+    """The exact-distinct path must plan exactly ONE shuffle Exchange
+    (repartition by group keys feeds both aggregation phases
+    exchange-free), and its results must equal a planned
+    ``groupBy`` + ``countDistinct`` aggregate bit for bit."""
     from pyspark.sql import functions as F
 
-    wide = spark.range(5000).select(
-        (F.col("id") % 1000).alias("g1"), (F.col("id") % 7).alias("g2"),
-        (F.col("id") % 97).alias("lot"), (F.col("id") % 5 + 1.0).alias("qty"),
-    )
-    # 2 x 1 = 2 distinct groups, below the 4 cores of the test session
-    narrow = wide.withColumn("g1", F.col("g1") % 2).withColumn(
-        "g2", F.col("g2") * 0
-    )
-    kw = dict(group_cols=("g1", "g2"), qty_col="qty", lot_col="lot",
-              status_col=None)
-    plan_wide = wip_aggregate(wide, **kw)._jdf.queryExecution().executedPlan().toString()
-    plan_narrow = wip_aggregate(narrow, **kw)._jdf.queryExecution().executedPlan().toString()
-    assert plan_wide.count("Exchange hashpartitioning") == 1, plan_wide
-    assert plan_narrow.count("Exchange hashpartitioning") == 2, plan_narrow
-
-
-def test_priority_wip_preagg_equals_single_pass(spark):
-    """Aggregate-before-join (priority_wip_preagg) must equal the
-    join-then-aggregate single-pass form on a fixture with multi-row
-    lots, mixed priorities, and a lot missing from the dimension
-    (inner-join semantics: its rows drop from both)."""
-    from dagster_etl_spark.operators.wip import priority_wip_preagg
-
-    rows = [
-        ("A", "p1", 10, 2.0, "IN_PROGRESS"),
-        ("A", "p1", 10, 3.0, "IN_PROGRESS"),
-        ("A", "p1", 11, 5.0, "COMPLETED"),
-        ("B", "p2", 12, 7.0, "IN_PROGRESS"),
-        ("B", "p2", 99, 1.0, "IN_PROGRESS"),  # lot 99 absent from dim
-        ("B", "p2", 12, 4.0, "SCRAPPED"),     # filtered by status
-    ]
-    df = spark.createDataFrame(
-        rows, "process_step string, product_code string, lot_id int, quantity double, status string"
-    )
-    dim = spark.createDataFrame(
-        [(10, "HIGH"), (11, "LOW"), (12, "HIGH")], "lot_key int, priority string"
-    )
-    a = priority_wip_preagg(df, dim, dim_key="lot_key")
-    # the join is unhinted since r8 (a lot-keyed dim grows with the
-    # fact; a forced broadcast was a scale bug) — the static plan may
-    # start as a sort-merge join, but AQE must still CONVERT it to a
-    # broadcast join at this dim size once runtime stats arrive
-    a.collect()
-    # the executed-plan string appends the pre-adaptive "Initial Plan"
-    # section — audit only the final one
-    final_plan = (
-        a._jdf.queryExecution().executedPlan().toString()
-        .split("== Initial Plan ==")[0]
-    )
-    assert "BroadcastHashJoin" in final_plan, final_plan
-    fact_shuffles = [
-        ln for ln in final_plan.splitlines()
-        if "Exchange hashpartitioning" in ln and "REPARTITION_BY_COL" in ln
-    ]
-    assert len(fact_shuffles) == 1, final_plan  # the one fact shuffle
-    joined = df.join(dim, df.lot_id == dim.lot_key)
-    b = priority_wip_aggregate(joined, priority_col="priority")
-    key = lambda r: (r.process_step, r.product_code)
-    fa = {key(r): (r.wip_qty, r.lot_count, r.avg_qty_per_lot, r.high_priority_count)
-          for r in a.collect()}
-    fb = {key(r): (r.wip_qty, r.lot_count, r.avg_qty_per_lot, r.high_priority_count)
-          for r in b.collect()}
-    assert fa == fb
-
-
-def test_wip_probe_job_only_on_auto_path(spark):
-    """The regime probe is an eager LIMIT-distinct mini-job at BUILD
-    time. Library callers that pass single_shuffle explicitly must not
-    pay it: building the DataFrame with an explicit regime launches
-    ZERO Spark jobs, while the auto (None) path launches the probe."""
+    from dagster_etl_spark.functions import exact_avg, money_sum
     from dagster_etl_spark.sources.fixtures import load_table
 
     li = load_table(spark, "/root/testdata/sf0.001", "lineitem")
-    kw = dict(
-        group_cols=("l_linestatus", "l_suppkey"), qty_col="l_quantity",
+    one = wip_aggregate(
+        li, group_cols=("l_linestatus", "l_suppkey"), qty_col="l_quantity",
         lot_col="l_orderkey", status_col="l_returnflag",
         active_statuses=("N", "A"),
     )
+    plan = one._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert plan.count("BatchEvalPython") == 0
+    ref = (
+        li.filter("l_returnflag IN ('N', 'A')")
+        .groupBy("l_linestatus", "l_suppkey")
+        .agg(
+            money_sum("`l_quantity`", "wip_qty"),
+            F.countDistinct("l_orderkey").alias("lot_count"),
+            exact_avg("`l_quantity`", "avg_qty_per_lot"),
+        )
+    )
+    key = lambda r: (r.l_linestatus, r.l_suppkey)  # noqa: E731
+    a = {key(r): (r.wip_qty, r.lot_count, r.avg_qty_per_lot) for r in one.collect()}
+    b = {key(r): (r.wip_qty, r.lot_count, r.avg_qty_per_lot) for r in ref.collect()}
+    assert a == b and len(a) > 0
+
+
+def test_wip_family_builds_launch_no_jobs(spark):
+    """Building a WIP-family registry query or transfer is plan
+    construction only: the exact plan is fixed, so no build-time job
+    looks at the data to choose one."""
+    import dagster_etl_spark.tenants.project_01  # noqa: F401 — registers plugins
+    from dagster_etl_spark.orchestration.transfers import (
+        priority_wip_transfer,
+        wip_transfer,
+    )
+    from dagster_etl_spark.registry import queries
+    from dagster_etl_spark.sources.fixtures import load_table
+
+    sf = "/root/testdata/sf0.001"
+    li, orders = load_table(spark, sf, "lineitem"), load_table(spark, sf, "orders")
+    qs = queries()
+    builds = {
+        name: (lambda name=name: qs[name](spark, sf))
+        for name in (
+            "wip_aggregate", "wip_aggregate_approx", "priority_wip",
+            "priority_wip_approx", "priority_wip_join",
+        )
+    }
+    builds["wip_transfer"] = lambda: wip_transfer({"lot_history": li}, "d", "t")
+    builds["priority_wip_transfer"] = lambda: priority_wip_transfer(
+        {"lot_history": li, "orders_dim": orders}, "d", "t"
+    )
     tracker = spark.sparkContext.statusTracker()
-
-    def last_job():
-        ids = tracker.getJobIdsForGroup(None)
-        return max(ids) if ids else -1
-
-    # warm the fixture read (load_table may probe parquet metadata)
-    li.schema
-    before = last_job()
-    wip_aggregate(li, single_shuffle=True, **kw)   # build only, no action
-    wip_aggregate(li, single_shuffle=False, **kw)
-    assert last_job() == before, "explicit single_shuffle ran a probe job"
-    wip_aggregate(li, **kw)  # single_shuffle=None -> bounded probe
-    assert last_job() > before, "auto path did not run its probe job"
+    last_job = lambda: max(tracker.getJobIdsForGroup(None) or [-1])  # noqa: E731
+    for name, build in builds.items():
+        before = last_job()
+        build()
+        assert last_job() == before, f"building {name} launched a Spark job"
 
 
 def test_approx_bench_queries_bound_checked_vs_exact(spark):
@@ -284,12 +227,13 @@ def test_approx_bench_queries_bound_checked_vs_exact(spark):
 
 def test_priority_wip_split_equals_inner_forms_under_ri(spark):
     """The r9 split shape (join-free main aggregate + narrow urgent
-    count) must equal both inner-join forms whenever referential
-    integrity holds — the documented precondition. Also pins the
+    count) must equal the inner-join form (``priority_wip_aggregate``
+    over the fact joined to the dim) whenever referential integrity
+    holds — the documented precondition. Also pins the
     divergence WITHOUT RI: split keeps an orphan lot that the inner
-    forms drop, so this test is the executable form of the operator's
+    form drops, so this test is the executable form of the operator's
     precondition docs."""
-    from dagster_etl_spark.operators.wip import priority_wip_preagg, priority_wip_split
+    from dagster_etl_spark.operators.wip import priority_wip_split
 
     rows = [
         ("A", "p1", 10, 2.0, "IN_PROGRESS"),
@@ -311,19 +255,22 @@ def test_priority_wip_split_equals_inner_forms_under_ri(spark):
         key(r): (r.wip_qty, r.lot_count, r.avg_qty_per_lot, r.high_priority_count)
         for r in out.collect()
     }
+    inner_form = lambda fact: priority_wip_aggregate(  # noqa: E731
+        fact.join(dim, fact.lot_id == dim.lot_key)
+    )
     split = vals(priority_wip_split(df, dim, dim_key="lot_key"))
-    inner = vals(priority_wip_preagg(df, dim, dim_key="lot_key"))
+    inner = vals(inner_form(df))
     assert split == inner
 
     # orphan lot (99 absent from dim): split keeps it in the quantity
-    # aggregates with a 0 priority contribution; inner forms drop it
+    # aggregates with a 0 priority contribution; the inner form drops it
     df_orphan = df.unionByName(
         spark.createDataFrame(
             [("B", "p2", 99, 1.0, "IN_PROGRESS")], df.schema.simpleString()[7:-1]
         )
     )
     s = vals(priority_wip_split(df_orphan, dim, dim_key="lot_key"))
-    i = vals(priority_wip_preagg(df_orphan, dim, dim_key="lot_key"))
+    i = vals(inner_form(df_orphan))
     assert s[("B", "p2")][0] == 8.0 and s[("B", "p2")][1] == 2
     assert i[("B", "p2")][0] == 7.0 and i[("B", "p2")][1] == 1
     assert s[("A", "p1")] == i[("A", "p1")]
