@@ -835,6 +835,10 @@ class IncrementalBM25Index(StandingState):
     * ``{name}_bm25_totals`` (n_docs, total_tokens) — one row appended
       per slice; query time sums them into the global (N, avgdl).
 
+    A read (:meth:`topk`) has one plan for every batch size: the query
+    terms semi-join both term-bucketed scans, and building it launches
+    no Spark job.
+
     Exactness invariant (property-tested): because tf, df, and the
     totals are all ADDITIVE over disjoint slices and the fixed-point
     quantization happens at query time from the summed state,
@@ -905,84 +909,42 @@ class IncrementalBM25Index(StandingState):
             store.write("totals", slice_id, _bm25_totals(g))
             yield "totals"
 
-    def topk(
-        self,
-        queries: DataFrame,
-        k: int = 10,
-        push_terms: int | None = 20_000,
-        isin_terms: int = 256,
-    ) -> DataFrame:
+    def topk(self, queries: DataFrame, k: int = 10) -> DataFrame:
         """Fixed-point BM25 top-k against the standing index.
         ``queries`` = (id_col, text_col); each query's distinct token
         set scores the accumulated corpus through :func:`_bm25_rank`,
         the read :func:`bm25_topk_docs` runs, with (N, total_tokens,
-        df) read from the summed standing state. The probe join
-        shuffles only the query term set; postings and partial dfs read
-        co-located on their term bucketing.
+        df) read from the summed standing state.
 
-        TERM PUSHDOWN (r15 — what makes the probe BOUNDED instead of
-        corpus-linear): without it, the probe join must SCAN the whole
-        postings table even though only query-term rows survive — the
-        r15 30-day soak's first run measured exactly that, probe time
-        growing 1:1 with the corpus. When the query batch's distinct
-        term count is <= ``push_terms`` (collected via a LIMIT-capped
-        bounded job — the query batch is bounded by the same contract
-        as every ANN probe), the term set is pushed into BOTH corpus
-        scans. Two mechanisms by size (r15 ADVICE — a 20k-literal
-        isin() bloats plan strings/codegen and degrades parquet IN
-        pushdown): up to ``isin_terms`` the set goes in as an IN
-        literal (parquet row-group stats skip + bucket pruning at the
-        scan itself); between that and ``push_terms`` (default 20k —
-        the broadcast semi-join branch has no plan-string problem, so
-        ``isin_terms`` is the only literal-IN cutoff; r16 ADVICE
-        restored the 2k–20k window a too-cautious default had silently
-        demoted to a full corpus scan) it becomes a
-        broadcast LEFT SEMI join on the term set — no giant plan
-        string, rows drop at the first post-scan stage with zero
-        corpus-side shuffle. Semantics-preserving by construction
-        either way (the probe join on the query term set discards
-        every filtered row anyway); ``push_terms=None`` disables (and
-        any batch over the cap falls back to the full-scan plan
-        rather than erroring — the collect is bounded at
-        ``push_terms + 1`` rows).
+        Term pushdown: the batch's exploded tokens are broadcast into
+        a LEFT SEMI join on ``term`` against BOTH corpus scans
+        (postings and the partial dfs), so rows of non-query terms drop
+        in the scan's own stage, before any exchange, and the probe
+        costs the matching postings instead of the whole corpus. The
+        build side keeps duplicate terms (harmless in a semi-join; a
+        ``distinct`` would add two exchanges), and the query batch is
+        bounded by the same contract as every ANN probe. The semi-join
+        keeps the scans' term bucketing, so the probe join and the df
+        sum stay exchange-free on the corpus side and only the query
+        term set shuffles. Building the read launches no Spark job.
         """
         spark = queries.sparkSession
-        postings = self._state("postings", spark)
-        raw_df = self._state("df", spark)
-        totals_state = self._state("totals", spark)
-        qt = (
-            queries.selectExpr(
-                f"{self.id_col} AS query_id",
-                f"explode({x.tokens(self.text_col, x.SPARK)}) AS term",
-            )
-            .distinct()
+        tokens = f"explode({x.tokens(self.text_col, x.SPARK)}) AS term"
+        term_set = F.broadcast(queries.selectExpr(tokens))
+        postings = self._state("postings", spark).join(
+            term_set, on="term", how="left_semi"
         )
-        if push_terms is not None:
-            terms = [
-                r.term
-                for r in qt.select("term")
-                .distinct()
-                .limit(push_terms + 1)
-                .collect()
-            ]
-            if len(terms) <= isin_terms:
-                postings = postings.filter(F.col("term").isin(terms))
-                raw_df = raw_df.filter(F.col("term").isin(terms))
-            elif len(terms) <= push_terms:
-                term_set = F.broadcast(
-                    spark.createDataFrame(
-                        [(t,) for t in terms], "term STRING"
-                    )
-                )
-                postings = postings.join(term_set, on="term", how="left_semi")
-                raw_df = raw_df.join(term_set, on="term", how="left_semi")
-        dfq = raw_df.groupBy("term").agg(
-            F.sum("df").cast("long").alias("df")
+        dfq = (
+            self._state("df", spark)
+            .join(term_set, on="term", how="left_semi")
+            .groupBy("term")
+            .agg(F.sum("df").cast("long").alias("df"))
         )
-        tot = totals_state.agg(
+        tot = self._state("totals", spark).agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             F.sum("total_tokens").cast("long").alias("total_tokens"),
         )
+        qt = queries.selectExpr(f"{self.id_col} AS query_id", tokens).distinct()
         return _bm25_rank(postings, dfq, tot, qt, k, self.id_col, self.scale)
 
 

@@ -1,5 +1,6 @@
 """Tenant plug-in registries — the engine's table-level UDF surface
-(SURVEY §2.8 U1-U4).
+(SURVEY §2.8 U1-U3; U4 custom validation rules are
+``DataValidator.check_custom``).
 
 The extension contract is the reference's: a *transfer function* is a
 whole-table transform ``fn(input_dfs: dict[str, DataFrame],
@@ -34,9 +35,6 @@ class TenantPlugins:
     transfer_functions: dict[str, TransferFn] = field(default_factory=dict)  # U1
     extract_queries: dict[str, str] = field(default_factory=dict)  # U2
     load_configs: dict[str, LoadConfig] = field(default_factory=dict)  # U3
-    validation_rules: dict[str, Callable[[DataFrame], tuple[bool, str]]] = field(
-        default_factory=dict
-    )  # U4
 
 
 _TENANT_PLUGINS: dict[str, TenantPlugins] = {}

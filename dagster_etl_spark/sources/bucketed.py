@@ -112,8 +112,8 @@ def append_bucketed(df: DataFrame, table: str) -> None:
     scan reports HashPartitioning over the bucket columns regardless
     of how many files each bucket accumulated; with multiple files per
     bucket the planner re-inserts only a local per-task Sort, never a
-    shuffle). Compact with plans/layout.py when small appended files
-    accumulate."""
+    shuffle). Compact with :func:`compact_bucketed` when small appended
+    files accumulate."""
     spark = df.sparkSession
     if not spark.catalog.tableExists(table):
         raise ValueError(
@@ -187,15 +187,6 @@ class BucketedPipeline:
             append_bucketed(fact, self.fact_table)
         if dim is not None:
             append_bucketed(dim, self.dim_table)
-
-    def compact(self) -> dict[str, tuple[int, int]]:
-        """Maintenance cadence: collapse the per-append files both
-        tables accumulate (see compact_bucketed). Returns
-        {table: (files_before, files_after)}."""
-        return {
-            t: compact_bucketed(self.spark, t)
-            for t in (self.fact_table, self.dim_table)
-        }
 
     def join(self, how: str = "inner") -> DataFrame:
         """The co-located fact-dim join (exchange-free on both sides

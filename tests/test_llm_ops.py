@@ -1296,6 +1296,54 @@ def test_incremental_bm25_equals_one_shot(spark):
     assert inc == ref and len(inc) > 0
 
 
+@pytest.mark.parametrize(
+    "n_docs, window, stride",
+    [(200, 8, 3), (400, 40, 10), (1100, 200, 50)],
+    ids=["le256_terms", "257_to_20k_terms", "over_20k_terms"],
+)
+def test_incremental_bm25_equals_one_shot_at_every_term_count(
+    spark, n_docs, window, stride
+):
+    """topk has one plan whatever the query batch's term count: over a
+    synthetic vocabulary whose seed docs carry <=256, 257-20,000 and
+    >20,000 distinct terms, the standing read still equals the one-shot
+    bm25_topk_docs integer-for-integer. Doc i holds the terms of the
+    window [i*stride, i*stride + window), with its first term repeated
+    i % 3 extra times so tf and dl vary; every tenth doc is a seed."""
+    from dagster_etl_spark.operators.text import (
+        IncrementalBM25Index,
+        bm25_topk_docs,
+    )
+
+    def text(i):
+        terms = [f"w{i * stride + j}" for j in range(window)]
+        return " ".join(terms + terms[:1] * (i % 3))
+
+    docs = spark.createDataFrame(
+        [(i, text(i)) for i in range(n_docs)], "doc_id BIGINT, text STRING"
+    )
+    seed_terms = {t for i in range(0, n_docs, 10) for t in text(i).split()}
+    # 160, 1,600 and 22,000 distinct seed terms
+    assert len(seed_terms) == n_docs // 10 * window
+    idx = IncrementalBM25Index(spark, "t_bm25_regime")
+    idx.drop()
+    try:
+        for day in range(3):
+            idx.ingest(docs.filter(f"doc_id % 3 = {day}"))
+        seeds = docs.filter("doc_id % 10 = 0")
+        inc = sorted(
+            (r.query_id, r.doc_id, r.score_scaled, r.rank)
+            for r in idx.topk(seeds, k=10).collect()
+        )
+        ref = sorted(
+            (r.query_id, r.doc_id, r.score_scaled, r.rank)
+            for r in bm25_topk_docs(docs, k=10, seed_mod=10).collect()
+        )
+    finally:
+        idx.drop()
+    assert inc == ref and len(inc) > 0
+
+
 def test_incremental_bm25_probe_plan_and_compact(spark):
     """100 TB posture of the standing BM25 index: (1) the topk probe
     plans NO shuffle on the postings side — the term-bucketed scan's
@@ -1333,22 +1381,20 @@ def test_incremental_bm25_probe_plan_and_compact(spark):
     assert n_shuffles <= 5, f"probe plans {n_shuffles} shuffles:\n{plan[:2000]}"
     assert "t_bm25_plan_bm25_postings" in plan
     assert "ShuffledHashJoin" in plan
-    # r15 term pushdown: the bounded query batch's term set must reach
-    # BOTH corpus scans as an IN filter (bucket pruning + row-group
-    # skipping — what turns the probe from corpus-linear to
-    # matching-postings-bounded; first r15 soak run measured the
-    # difference)
-    scan_lines = [
-        l for l in plan.splitlines()
-        if "FileScan" in l and ("_bm25_postings" in l or "_bm25_df" in l)
-    ]
-    assert scan_lines and all("INSET" in l or " IN (" in l for l in scan_lines), (
-        "query term set not pushed into the corpus scans"
-    )
-    # the bucketed postings scan feeds its join with no Exchange
+    # term pushdown: each corpus scan feeds a broadcast LEFT SEMI join
+    # on the query batch's terms with no Exchange in between, so rows
+    # of non-query terms drop before anything shuffles
     lines = plan.splitlines()
+    for table in ("_bm25_postings", "_bm25_df"):
+        si = next(i for i, l in enumerate(lines) if table in l and "FileScan" in l)
+        ji = max(i for i in range(si) if "Join" in lines[i])
+        assert re.search(r"BroadcastHashJoin \[term#\d+\], \[term#\d+\], LeftSemi", lines[ji]), (
+            f"{table} scan does not feed a term semi-join:\n{plan[:3000]}"
+        )
+        assert not any("Exchange" in l for l in lines[ji:si]), (table, plan[:3000])
+    # the bucketed postings scan reaches the probe join with no Exchange
     pi = next(i for i, l in enumerate(lines) if "_bm25_postings" in l and "FileScan" in l)
-    ji = max(i for i in range(pi) if "Join" in lines[i])
+    ji = max(i for i in range(pi) if "ShuffledHashJoin" in lines[i])
     assert not any("Exchange" in l for l in lines[ji:pi]), (
         "postings scan shuffles despite term bucketing"
     )

@@ -3,8 +3,6 @@ skew helpers (salted join/groupby equivalence, approx distinct)."""
 
 from __future__ import annotations
 
-import pytest
-
 from tests.conftest import SF_SMALL
 
 
@@ -140,6 +138,32 @@ def test_salted_join_splits_hot_partition(spark):
     assert got == want
 
 
+def _max_task_shuffle_records(spark, group: str, df) -> int:
+    """Run ``df`` to a noop sink under job group ``group`` and return
+    the most shuffle records one task read, from Spark's status store.
+    Only the join stage reads a shuffle, so this is its hottest task."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store, tracker = jsc.statusStore(), sc.statusTracker()
+    most = 0
+    for job_id in tracker.getJobIdsForGroup(group):
+        for stage_id in tracker.getJobInfo(job_id).stageIds:
+            attempt = store.lastStageAttempt(stage_id).attemptId()
+            tasks = store.taskList(stage_id, attempt, 1 << 30)
+            for i in range(tasks.size()):
+                metrics = tasks.apply(i).taskMetrics()
+                if metrics.isDefined():
+                    read = metrics.get().shuffleReadMetrics().recordsRead()
+                    most = max(most, read)
+    return most
+
+
 def test_aqe_splits_skewed_join_and_salting_beats_disabled_aqe(spark):
     """Two proofs on the zipf fixture:
 
@@ -147,9 +171,12 @@ def test_aqe_splits_skewed_join_and_salting_beats_disabled_aqe(spark):
        partition at runtime and splits it — ``skew=true`` in the final
        adaptive sort-merge-join plan;
     2. with AQE's skew handling OFF (the pathological regime salting
-       exists for), ``salted_join`` beats the plain join wall-clock.
+       exists for), ``salted_join`` splits the hot key: its hottest
+       join task reads a fraction of the rows the plain join's does.
     """
-    import time
+    import re
+
+    from pyspark.sql import functions as F
 
     from dagster_etl_spark.operators.skew import salted_join
 
@@ -178,8 +205,6 @@ def test_aqe_splits_skewed_join_and_salting_beats_disabled_aqe(spark):
         # aggregate on top so the same QueryExecution can be driven by a
         # 1-row collect (a .write would execute a separate plan object);
         # summing v+w keeps the wide payload un-pruned through the join
-        from pyspark.sql import functions as F
-
         joined = (
             large.join(small, on="k")
             .groupBy()
@@ -190,93 +215,27 @@ def test_aqe_splits_skewed_join_and_salting_beats_disabled_aqe(spark):
         assert "skew=true" in final_plan, final_plan[:2000]
 
         conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-
-        def one(build) -> float:
-            t0 = time.perf_counter()
-            build().write.format("noop").mode("overwrite").save()
-            return time.perf_counter() - t0
-
-        # the timing leg needs the hot task to DOMINATE: at 4M rows the
-        # hot sort (~3.6M rows) finishes inside scheduler noise and the
-        # comparison flip-flops (r10 flake); at 8M the hot task's
-        # superlinear sort/spill makes the split a measured 2.4x win
-        # (plain ~5.4s vs salted ~2.2s median, probed r10)
-        large8, _ = _zipf_join_inputs(spark, n_large=8_000_000)
-        plain_b = lambda: large8.join(small, on="k")  # noqa: E731
-        salted_b = lambda: salted_join(  # noqa: E731
-            large8, small, on=["k"], salt=16
+        # With skew handling off, the plain join's hot task reads all
+        # ~3.6M hot-key rows. salt=16 spreads them over 16 (k, _salt)
+        # cells; on the session's 4 shuffle partitions the fullest one
+        # holds 7 of them, measured at 0.44 of the plain maximum (0.45
+        # at 8M rows); salt=1 measures 0.98. Record counts do not
+        # jitter with host load the way wall-clock medians do.
+        plain_max = _max_task_shuffle_records(
+            spark, "skew_plain", large.join(small, on="k")
         )
-        # interleaved pairs + median, the same protocol as the repo's
-        # trend tools: this box sees external CPU steal spikes that can
-        # swallow sequential best-of-N samples (BASELINE.md host drift)
-        one(plain_b), one(salted_b)  # warm codegen for both shapes
-        # r14 verdict task 7: the timing comparison documented ONE
-        # inversion under external box load (CPU steal swallowed the
-        # interleaved medians). Load-guard it: on an inverted result,
-        # retry once; if still inverted AND the 1-min load average says
-        # the box is externally contended (our local[4] session plus
-        # pytest contributes ~5 runnable threads; anything well past
-        # that is not ours), soft-skip like the round-boundary
-        # tripwires instead of burning the suite's signal. An inversion
-        # on an idle box still FAILS — that would be a real regression.
-        import os
-
-        plain_s = salted_s = None
-        load_seen = 0.0
-        for _attempt in range(2):
-            plains, salteds = [], []
-            for _ in range(3):
-                plains.append(one(plain_b))
-                salteds.append(one(salted_b))
-                load_seen = max(load_seen, os.getloadavg()[0])
-            plains.sort(), salteds.sort()
-            plain_s, salted_s = plains[1], salteds[1]
-            if salted_s < plain_s:
-                break
-        # one task sorts/probes 7.2M rows vs ~450k with salt=16; require
-        # a real win on the medians. The contention gate scales with the
-        # box (r15 ADVICE): this session's local[4] accounts for ~5 of
-        # the load; anything past cpu_count/2 + 5 means genuinely
-        # contended timings on small AND large boxes alike.
-        contended = (os.cpu_count() or 4) / 2 + 5.0
-        if salted_s >= plain_s and load_seen > contended:
-            pytest.skip(
-                "salted-vs-plain timing inverted twice under external "
-                f"load (1-min loadavg peaked at {load_seen:.1f} on "
-                f"{os.cpu_count()} cpus, gate {contended:.1f}; this "
-                "session accounts for ~5) "
-                f"— medians plain={plain_s:.2f}s salted={salted_s:.2f}s"
-            )
-        # Noise band (r17): three-run medians on a shared JVM carry a
-        # few percent of jitter the loadavg gate cannot see (the
-        # full-suite run inverted by 1.4% at loadavg 2.4 while the
-        # standalone run wins by >15% every time — the contention was
-        # the suite's OWN in-process work, which loadavg attributes to
-        # "us"). A real salting regression reverts to one task sorting
-        # 7.2M rows vs ~450k — that shows up as a MULTIPLE, never as
-        # five percent — so fail hard only outside the band.
-        assert salted_s < plain_s * 1.05, (plains, salteds, load_seen)
-        # Structural companion (r17 ADVICE): the band alone cannot
-        # catch a regression that degenerates salted_join to the PLAIN
-        # join — then salted_s ~= plain_s sits comfortably inside it.
-        # Timing-free teeth: the salted plan must SHUFFLE on the salt
-        # column (hot-key rows split across `salt` partitions by
-        # construction); if _salt ever drops out of the exchange
-        # partitioning, salting is off no matter what the clock says.
-        import re as _re
-
+        salted_max = _max_task_shuffle_records(
+            spark, "skew_salted", salted_join(large, small, on=["k"], salt=16)
+        )
+        assert plain_max >= 0.9 * 3_600_000, plain_max
+        assert salted_max <= 0.6 * plain_max, (plain_max, salted_max)
+        # the salted plan shuffles on the salt column: if _salt drops
+        # out of the exchange partitioning, salting is off
         splan = (
-            salted_join(large8, small, on=["k"], salt=16)
+            salted_join(large, small, on=["k"], salt=16)
             ._jdf.queryExecution().executedPlan().toString()
         )
-        assert _re.search(r"hashpartitioning\([^)]*_salt", splan), splan[:2000]
-        # Strict standalone mode (r17 ADVICE): the >15% win claim is
-        # measured OUTSIDE the suite's in-process contention. Run
-        #   SPARK_GRAFT_SKEW_STRICT=1 python -m pytest \
-        #       tests/test_partitions_skew.py -k salted
-        # on an idle box to hold the gate at the claimed multiple.
-        if os.environ.get("SPARK_GRAFT_SKEW_STRICT") == "1":
-            assert salted_s < plain_s * 0.9, (plains, salteds, load_seen)
+        assert re.search(r"hashpartitioning\([^)]*_salt", splan), splan[:2000]
     finally:
         for k, v in saved.items():
             if v is None:

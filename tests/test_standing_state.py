@@ -132,3 +132,48 @@ def test_slice_file_budget_falls_back_to_partitions(spark, tmp_path):
     assert slice_file_budget(rows.repartition(par + 5)) == par
     rows.repartition(2).write.parquet(str(tmp_path / "two"))
     assert slice_file_budget(spark.read.parquet(str(tmp_path / "two"))) == 2
+
+
+def test_standing_read_builds_launch_no_jobs(spark):
+    """Building a standing read is plan construction only: no read
+    collects anything to the driver to choose its plan. The one
+    exception is IVF-PQ ``topk``, whose probe collect picks the
+    buckets to scan, and it launches exactly that one job."""
+    docs, emb = _docs(spark), _emb(spark)
+    seeds = docs.filter("doc_id % 97 = 0").select("doc_id", "text")
+    q = emb.filter("vec_id < 5")
+    reads = {
+        _neardup: {
+            "pairs": (lambda i: i.pairs(), 0),
+            "probe_external": (lambda i: i.probe_external(docs), 0),
+        },
+        _bm25: {"topk": (lambda i: i.topk(seeds, k=10), 0)},
+        _lm: {
+            "score": (lambda i: i.score(docs), 0),
+            "drift": (lambda i: i.drift(docs), 0),
+        },
+        _dsir: {"select": (lambda i: i.select(docs), 0)},
+        _ann: {"topk": (lambda i: i.topk(q, k=10), 0)},
+        _ivfpq: {"topk": (lambda i: i.topk(q, k=10), 1)},
+    }
+    tracker = spark.sparkContext.statusTracker()
+    jobs = lambda: set(tracker.getJobIdsForGroup(None))  # noqa: E731
+    for make, builds in reads.items():
+        idx, load, opts = make(spark)
+        idx.drop()
+        try:
+            first = load(spark).filter(f"{idx.id_col} % 2 = 0")
+            if hasattr(idx, "init"):
+                idx.init(first)
+            else:
+                idx.ingest(first, **opts)
+            for name, (build, want) in builds.items():
+                before = jobs()
+                build(idx)
+                launched = len(jobs() - before)
+                assert launched == want, (
+                    f"building {type(idx).__name__}.{name} launched "
+                    f"{launched} Spark jobs, want {want}"
+                )
+        finally:
+            idx.drop()
